@@ -62,11 +62,7 @@ object AnnIngest {
        |       true AS matches_batch_index""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val p = P
-    val out = {
-      val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val fp = FileSources.fingerprint(new java.io.File(s"$dir/embeddings.parquet"))
-      s"/tmp/graft_annstream${sf}_${fp}b${FileSources.buildFingerprint}"
-    }
+    val out = FileSources.outputCacheDir("annstream", dir, "embeddings.parquet")
     FileSources.writeOnce(out) { o =>
       val work = new java.io.File(o, "work")
       FileSources.deleteRecursively(work)
@@ -96,31 +92,21 @@ object AnnIngest {
               .select(col("vec_id"), col("embedding")),
             work, in, s"arrivals_$c", baseMtime + c * 60000L)
         }
-        val q = spark.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "vec_id LONG, embedding ARRAY<FLOAT>"))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.toString)
-          .writeStream
-          .foreachBatch {
+        StreamRun(width = None, trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .run(spark) {
+            spark.readStream
+              .schema(org.apache.spark.sql.types.StructType.fromDDL(
+                "vec_id LONG, embedding ARRAY<FLOAT>"))
+              .option("maxFilesPerTrigger", "1")
+              .parquet(in.toString)
+          }(_.foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-              assign(batch
+              StreamRun.writeBatch(assign(batch
                 .withColumn("features",
                   org.apache.spark.ml.functions.array_to_vector(col("embedding")))
-                .withColumn("norm2", expr("dot_product(embedding, embedding)")))
-                .withColumn("batch", lit(batchId))
-                .write
-                .partitionBy("batch")
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(s"$o/ingest")
-              ()
-          }
-          .option("checkpointLocation", s"$work/chk")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
+                .withColumn("norm2", expr("dot_product(embedding, embedding)"))),
+                batchId, s"$o/ingest")
+          }.option("checkpointLocation", s"$work/chk"))
         // "incremental" must be real: each staged file became its own batch
         val batchDirs = Option(new java.io.File(o, "ingest").listFiles())
           .getOrElse(Array.empty).count(f => f.isDirectory && f.getName.startsWith("batch="))

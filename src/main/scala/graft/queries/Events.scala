@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Event-stream operators over the `events` table: tumbling-window
   * aggregation as a batch query, and the identical pipeline executed through
@@ -53,17 +54,17 @@ object Events {
     * session this library constructs pins both at construction (VERDICT
     * r7 #3); this remains as a fallback for externally-built sessions.
     */
-  private def pinEventReadConfs(spark: SparkSession): Unit = {
+  private[graft] def pinEventReadConfs(spark: SparkSession): Unit = {
     if (!spark.conf.getOption(NanosKey).contains("true")) spark.conf.set(NanosKey, "true")
     if (!spark.conf.getOption(NtzKey).contains("false")) spark.conf.set(NtzKey, "false")
   }
 
-  /** Set-and-restore wrapper for the event read confs (ADVICE r6 #4): used
-    * by the STREAMING queries, whose execution completes inside the body,
-    * so restoring cannot break anything downstream.
+  /** The event read confs as a set-and-restore scope (ADVICE r6 #4): the
+    * STREAMING rows pin them through [[StreamRun]], whose execution
+    * completes inside the scope, so restoring breaks nothing downstream.
     */
-  private def withEventReadConfs[T](spark: SparkSession)(body: => T): T =
-    Confs.withConfs(spark, NanosKey -> "true", NtzKey -> "false")(body)
+  private[graft] val eventReadConfs: Seq[(String, String)] =
+    Seq(NanosKey -> "true", NtzKey -> "false")
 
 
   /** Schema-adaptive normalization of `ts` to the canonical `tus` column:
@@ -116,8 +117,8 @@ object Events {
     * the returned frame is lazy, and the parquet scan re-reads conf when
     * the plan executes (file-source readers capture SQLConf at physical
     * planning, i.e. action time), so a restore would make later execution
-    * of the returned frame fail. The fully-executed streaming queries use
-    * [[withEventReadConfs]] instead and leak nothing.
+    * of the returned frame fail. The fully-executed streaming queries scope
+    * [[eventReadConfs]] through [[StreamRun]] instead and leak nothing.
     */
   private[graft] def readEvents(spark: SparkSession, dir: String): DataFrame = {
     pinEventReadConfs(spark)
@@ -126,10 +127,14 @@ object Events {
 
   /** File-source stream over events.parquet with the same `tus`
     * normalization as [[readEvents]] — schema resolved under the pinned
-    * confs, one file per micro-batch. Callers run inside
-    * [[withEventReadConfs]].
+    * confs, one file per micro-batch. The one event-stream reader: the
+    * gate rows run it under [[StreamRun]]'s `eventReads` scope, and the
+    * graft.streaming operators (Sessionize, SessionizeTws, FunnelTws) call
+    * it after [[pinEventReadConfs]]. `maxFilesPerTrigger=1` cannot split a
+    * batch while events.parquet is one file, which holds at every testdata
+    * scale (the single-file rows check it with requireSingleEventsFile).
     */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val schema = spark.read.parquet(t(dir, "events")).schema
     // The file source wants a directory; a [t] character class turns the
     // exact file path into a glob so basePath resolves to the parent dir.
@@ -138,23 +143,6 @@ object Events {
       .option("maxFilesPerTrigger", "1")
       .option("basePath", dir)
       .parquet(s"$dir/events.parque[t]"))
-  }
-
-  /** Streaming executions pin shuffle partitions (= state-store count) to a
-    * small constant for the duration of the query (round-3 verdict #3): a
-    * stateful micro-batch commits one state store per shuffle partition, so
-    * 32 session-level partitions meant 32 store commits per micro-batch of
-    * toy-scale input — pure overhead with 5× run-to-run spread. The gate
-    * semantics are partition-independent by construction (fixed-point sums,
-    * per-key state), so the constant only affects cost. On a real cluster
-    * the stream's partition count is sized to keyspace × executor count at
-    * stream definition time, exactly as done here.
-    */
-  private def withStreamPartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
   }
 
   private def windowAgg(df: DataFrame): DataFrame =
@@ -173,19 +161,9 @@ object Events {
     * On bounded input this must hash-match the batch oracle exactly.
     */
   val streamWindows: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      val stream = eventsStream(spark, dir)
-      withStreamPartitions(spark, 4) {
-        val q = windowAgg(stream).writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName("graft_stream_windows")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    StreamRun(mode = "complete", eventReads = true).memory(spark, "graft_stream_windows") {
+      windowAgg(eventsStream(spark, dir))
     }
-    spark.table("graft_stream_windows")
   }
 
   /** Gap-based sessionization (30-minute gap) in its batch form: a
@@ -285,34 +263,23 @@ object Events {
       |      FROM ($sessionCoreSql) g) s,
       |     (SELECT max(epoch_us(ts) // 1000) AS wm_ms FROM events) w
       |WHERE s.end_gap_us <= w.wm_ms * 1000""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      val stream = eventsStream(spark, dir)
-        .select(col("user_id"), timestamp_micros(col("tus")).as("tts"), col("value"))
-        .withWatermark("tts", "0 seconds")
-      withStreamPartitions(spark, 4) {
-        val q = stream
+    // AvailableNow, not processAllAvailable polling (VERDICT r10 #1): the
+    // trigger snapshots the file list at start, runs exactly that plan (one
+    // data batch per file + the watermark-commit batch) and self-terminates
+    // — a deterministic batch count with no 100 ms poll loop in the timed
+    // path.
+    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+      .memory(spark, "graft_session_window_stream") {
+        eventsStream(spark, dir)
+          .select(col("user_id"), timestamp_micros(col("tus")).as("tts"), col("value"))
+          .withWatermark("tts", "0 seconds")
           .groupBy(session_window(col("tts"), "30 minutes").as("sw"), col("user_id"))
           .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
           .select(col("user_id"),
             unix_micros(col("sw.start")).as("start_us"),
             unix_micros(col("sw.end")).as("end_gap_us"),
             col("n"), col("sum_value"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_session_window_stream")
-          // AvailableNow, not processAllAvailable polling (VERDICT r10 #1):
-          // the trigger snapshots the file list at start, runs exactly that
-          // plan (one data batch per file + the watermark-commit batch) and
-          // self-terminates — a deterministic batch count with no 100 ms
-          // poll loop in the timed path.
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
       }
-    }
-    spark.table("graft_session_window_stream")
   }
 
   /** The stateful-streaming twin of [[sessionize]] as a driver-gate row:
@@ -347,21 +314,11 @@ object Events {
 
   val sessionizeStream: QueryDef = QueryDef(sessionizeStreamOracle) {
     (spark, dir) =>
-    // withEventReadConfs wraps the whole execution: Sessionize.sessions
-    // pins the confs itself (for direct callers), but the wrapper's restore
+    // the eventReads scope wraps the whole execution: Sessionize.sessions
+    // pins the confs itself (for direct callers), but the scope's restore
     // here means this query leaves no session-conf residue either way.
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        val q = graft.streaming.Sessionize.sessions(spark, dir).writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_sessionize_stream")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-    }
-    spark.table("graft_sessionize_stream")
+    StreamRun(eventReads = true)
+      .memory(spark, "graft_sessionize_stream")(graft.streaming.Sessionize.sessions(spark, dir))
       .select(col("user_id"), col("n"), col("start_us"), col("end_us"),
         round(col("sum_fixed") / 10000.0, 2).as("sum_value"))
   }
@@ -375,21 +332,8 @@ object Events {
     * move a single session boundary.
     */
   val sessionizeTws: QueryDef = QueryDef(sessionizeStreamOracle) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        withStateStoreProvider(spark,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          val q = graft.streaming.SessionizeTws.sessions(spark, dir).writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName("graft_sessionize_tws")
-            .start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
-      }
-    }
-    spark.table("graft_sessionize_tws")
+    StreamRun(rocksDb = true, eventReads = true)
+      .memory(spark, "graft_sessionize_tws")(graft.streaming.SessionizeTws.sessions(spark, dir))
       .select(col("user_id"), col("n"), col("start_us"), col("end_us"),
         round(col("sum_fixed") / 10000.0, 2).as("sum_value"))
   }
@@ -436,21 +380,10 @@ object Events {
     */
   val streamDedup: QueryDef = QueryDef(
     "SELECT DISTINCT user_id, event_type FROM events") { (spark, dir) =>
-    withEventReadConfs(spark) {
-      val stream = eventsStream(spark, dir)
-      withStreamPartitions(spark, 4) {
-        val q = stream.select(col("user_id"), col("event_type"))
-          .dropDuplicates("user_id", "event_type")
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_dedup")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    StreamRun(eventReads = true).memory(spark, "graft_stream_dedup") {
+      eventsStream(spark, dir).select(col("user_id"), col("event_type"))
+        .dropDuplicates("user_id", "event_type")
     }
-    spark.table("graft_stream_dedup")
   }
 
   /** Chunk width for the bounded-state streaming dedup: 10 days of event
@@ -546,23 +479,15 @@ object Events {
     val out = prepareWmChunks(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id LONG, event_type STRING, ts TIMESTAMP")
-    withStreamPartitions(spark, 4) {
-      val q = spark.readStream
+    StreamRun().memory(spark, "graft_stream_dedup_wm") {
+      spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(out)
         .withWatermark("ts", "48 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("emit_tus"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName("graft_stream_dedup_wm")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
     }
-    spark.table("graft_stream_dedup_wm")
   }
 
   /** Write-once preparation of the per-chunk rep dataset: one parquet FILE
@@ -690,17 +615,6 @@ object Events {
     out
   }
 
-  /** Set-and-restore the state-store provider class for the duration of a
-    * fully-executed streaming query. `transformWithState` REQUIRES the
-    * RocksDB provider in OSS Spark (typed state handles ride its column
-    * families); the default HDFS-backed store stays in force for every
-    * other row, so this wrapper keeps the requirement local to the query
-    * that has it.
-    */
-  private def withStateStoreProvider[T](spark: SparkSession, cls: String)(body: => T): T =
-    Confs.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" -> cls)(body)
-
-
   /** Cumulative per-user totals on Spark 4's `transformWithState` API —
     * the arbitrary-state StatefulProcessor surface (typed ValueState in a
     * RocksDB store, successor to flatMapGroupsWithState). Four micro-
@@ -726,31 +640,20 @@ object Events {
     val out = prepareTwsChunks(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id LONG, value DOUBLE")
-    withStreamPartitions(spark, 4) {
-      withStateStoreProvider(spark,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        import spark.implicits._
-        val src = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(out)
-          .select(col("user_id"), floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
-          .as[(Long, Long)]
-        val q = src.groupByKey(_._1)
-          .transformWithState(new graft.streaming.RunningTotals,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "n", "sum_v4")
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName("graft_transform_state")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    import spark.implicits._
+    StreamRun(mode = "update", rocksDb = true).memory(spark, "graft_transform_state") {
+      spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(out)
+        .select(col("user_id"), floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
+        .as[(Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.RunningTotals,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF("user_id", "n", "sum_v4")
     }
-    spark.table("graft_transform_state")
       .groupBy(col("user_id"))
       .agg(max(struct(col("n"), col("sum_v4"))).as("m"))
       .select(col("user_id"), col("m.n").as("n"),
@@ -992,56 +895,42 @@ object Events {
       project: DataFrame => DataFrame = intervalPairProjection,
       skipNoDataBatch: Boolean = false,
       streamPartitions: Int = 4): DataFrame = {
-    withEventReadConfs(spark) {
-      // Precondition (ADVICE r8): the eviction-replay oracles assume ALL
-      // input arrives in ONE micro-batch, so only the final watermark's
-      // eviction matters. With maxFilesPerTrigger=1, a multi-file events
-      // dataset would advance the watermark BETWEEN micro-batches — dropping
-      // late rows and emitting early null rows the batch oracle cannot
-      // replay. Fail loudly if a generator change ever splits the file.
-      requireSingleEventsFile(dir, "stream interval-join",
-        "the batch oracle cannot replay per-micro-batch watermark eviction")
-      def side(tpe: String, pre: String): DataFrame =
-        eventsStream(spark, dir)
-          .filter(col("event_type") === tpe)
-          .select(
-            col("event_id").as(s"${pre}_event_id"),
-            col("user_id").as(s"${pre}_user_id"),
-            col("tus").as(s"${pre}_tus"),
-            timestamp_micros(col("tus")).as(s"${pre}_tsw"))
-          .withWatermark(s"${pre}_tsw", "1 hour")
-      // Optimization r16: a caller whose projection emits every output
-      // row DURING data batches (plain inner and left-semi joins — matches
-      // emit on arrival; neither type emits at watermark eviction) opts
-      // out of the trailing NO-DATA micro-batch Spark schedules after the
-      // watermark advances: on a bounded stream that is about to stop it
-      // is pure state-eviction overhead — measured ~0.5-0.6 s of addBatch
-      // per row (STREAMBATCH probe: batch 1 with getBatch=0). It stays ON
-      // wherever eviction IS the emission: outer/full joins (null rows)
-      // and any append-mode AGGREGATION over the join (streamJoinAgg's
-      // windows finalize only when a later batch observes the advanced
-      // watermark — skipping the no-data batch there would emit nothing).
-      val ndConfs: Seq[(String, String)] =
-        if (skipNoDataBatch)
-          Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-        else Seq.empty
-      Confs.withConfs(spark, ndConfs: _*) { withStreamPartitions(spark, streamPartitions) {
-        val joined = side("click", "c").join(
-          side("purchase", "p"),
-          col("c_user_id") === col("p_user_id") &&
-            col("p_tsw") >= col("c_tsw") &&
-            col("p_tsw") <= col("c_tsw") + expr("INTERVAL 1 HOUR"),
-          joinType)
-        val q = project(joined)
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(sinkName)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } }
-      spark.table(sinkName)
+    // Precondition (ADVICE r8): the eviction-replay oracles assume ALL
+    // input arrives in ONE micro-batch, so only the final watermark's
+    // eviction matters. With maxFilesPerTrigger=1, a multi-file events
+    // dataset would advance the watermark BETWEEN micro-batches — dropping
+    // late rows and emitting early null rows the batch oracle cannot
+    // replay. Fail loudly if a generator change ever splits the file.
+    requireSingleEventsFile(dir, "stream interval-join",
+      "the batch oracle cannot replay per-micro-batch watermark eviction")
+    def side(tpe: String, pre: String): DataFrame =
+      eventsStream(spark, dir)
+        .filter(col("event_type") === tpe)
+        .select(
+          col("event_id").as(s"${pre}_event_id"),
+          col("user_id").as(s"${pre}_user_id"),
+          col("tus").as(s"${pre}_tus"),
+          timestamp_micros(col("tus")).as(s"${pre}_tsw"))
+        .withWatermark(s"${pre}_tsw", "1 hour")
+    // Optimization r16: a caller whose projection emits every output
+    // row DURING data batches (plain inner and left-semi joins — matches
+    // emit on arrival; neither type emits at watermark eviction) opts
+    // out of the trailing NO-DATA micro-batch Spark schedules after the
+    // watermark advances: on a bounded stream that is about to stop it
+    // is pure state-eviction overhead — measured ~0.5-0.6 s of addBatch
+    // per row (STREAMBATCH probe: batch 1 with getBatch=0). It stays ON
+    // wherever eviction IS the emission: outer/full joins (null rows)
+    // and any append-mode AGGREGATION over the join (streamJoinAgg's
+    // windows finalize only when a later batch observes the advanced
+    // watermark — skipping the no-data batch there would emit nothing).
+    StreamRun(width = Some(streamPartitions), eventReads = true,
+        noDataBatches = !skipNoDataBatch).memory(spark, sinkName) {
+      project(side("click", "c").join(
+        side("purchase", "p"),
+        col("c_user_id") === col("p_user_id") &&
+          col("p_tsw") >= col("c_tsw") &&
+          col("p_tsw") <= col("c_tsw") + expr("INTERVAL 1 HOUR"),
+        joinType))
     }
   }
 
@@ -1160,8 +1049,8 @@ object Events {
       // 0.66+0.13 s), which partition count cannot reach. Width 2 keeps a
       // genuinely partitioned state layout (1 would serialize the join at
       // any scale); on a real cluster this is sized per operator-chain
-      // keyspace at stream definition time, as the withStreamPartitions
-      // doc states.
+      // keyspace at stream definition time, as StreamRun's width doc
+      // states.
       streamPartitions = 2,
       project = _.groupBy(window(col("c_tsw"), "1 hour"), col("c_user_id"))
         .agg(count(lit(1)).as("u_pairs"))
@@ -1430,25 +1319,15 @@ object Events {
       |             max(value) AS max_value
       |      FROM events GROUP BY user_id) u
       |  ON e.user_id = u.user_id""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
+    StreamRun(eventReads = true).memory(spark, "graft_stream_static") {
       val users = readEvents(spark, dir)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_user"), max(col("value")).as("max_value"))
-      val stream = eventsStream(spark, dir)
+      eventsStream(spark, dir)
         .select(col("event_id"), col("user_id"), col("value"))
-      withStreamPartitions(spark, 4) {
-        val q = stream.join(broadcast(users), Seq("user_id"))
-          .select(col("event_id"), col("user_id"), col("n_user"),
-            (col("value") === col("max_value")).as("is_user_max"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_static")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      spark.table("graft_stream_static")
+        .join(broadcast(users), Seq("user_id"))
+        .select(col("event_id"), col("user_id"), col("n_user"),
+          (col("value") === col("max_value")).as("is_user_max"))
     }
   }
 
@@ -1474,22 +1353,12 @@ object Events {
       |       CAST(sum(event_id) AS BIGINT) AS sum_id
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamsink", dir, "events.parquet")
-    withEventReadConfs(spark) {
-      FileSources.writeOnce(out) { o =>
-        val stream = eventsStream(spark, dir).select(col("event_id"), col("event_type"))
-        withStreamPartitions(spark, 4) {
-          val q = stream.writeStream
-            .format("parquet")
-            .option("path", s"$o/data")
-            .option("checkpointLocation", s"$o/chk")
-            .outputMode("append")
-            .start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
-      }
+    val out = FileSources.outputCacheDir("streamsink", dir, "events.parquet")
+    FileSources.writeOnce(out) { o =>
+      StreamRun(eventReads = true).run(spark) {
+        eventsStream(spark, dir).select(col("event_id"), col("event_type"))
+      }(_.format("parquet").option("path", s"$o/data").option("checkpointLocation", s"$o/chk"))
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.parquet(s"$out/data")
       .groupBy(col("event_type"))
@@ -1645,33 +1514,22 @@ object Events {
     val out = prepareCdcChunks(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id LONG, tus LONG, event_id LONG, event_type STRING, value DOUBLE")
-    withStreamPartitions(spark, 4) {
-      withStateStoreProvider(spark,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        import spark.implicits._
-        val src = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(out)
-          .select(col("user_id"), col("tus"), col("event_id"),
-            col("event_type"), col("value"))
-          .as[(Long, Long, Long, String, Double)]
-        val q = src.groupByKey(_._1)
-          .transformWithState(new graft.streaming.CdcState,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "last_tus", "last_eid", "last_type", "last_value",
-            "n_changes")
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName("graft_cdc_stream")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    import spark.implicits._
+    StreamRun(mode = "update", rocksDb = true).memory(spark, "graft_cdc_stream") {
+      spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(out)
+        .select(col("user_id"), col("tus"), col("event_id"),
+          col("event_type"), col("value"))
+        .as[(Long, Long, Long, String, Double)]
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.CdcState,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF("user_id", "last_tus", "last_eid", "last_type", "last_value",
+          "n_changes")
     }
-    spark.table("graft_cdc_stream")
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_changes"), col("last_tus"), col("last_eid"),
         col("last_type"), col("last_value"))).as("m"))
@@ -1968,26 +1826,16 @@ object Events {
     requireSingleEventsFile(dir, "streaming funnel",
       "the cross-batch per-user ordering precondition only holds when the " +
         "whole stream is one micro-batch")
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        import spark.implicits._
-        val q = eventsStream(spark, dir)
+    import spark.implicits._
+    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+      .memory(spark, "graft_funnel_stream") {
+        eventsStream(spark, dir)
           .select(col("user_id"), col("event_type"), col("tus"))
           .as[FunnelStream.FunnelEvent]
           .groupByKey(_.user_id)
           .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
             FunnelStream.advance)
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_funnel_stream")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
       }
-    }
-    spark.table("graft_funnel_stream")
   }
 
   /** The funnel on `transformWithState` — [[funnelStream]]'s twin on the
@@ -2001,22 +1849,8 @@ object Events {
     requireSingleEventsFile(dir, "streaming funnel",
       "the cross-batch per-user ordering precondition only holds when the " +
         "whole stream is one micro-batch")
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        withStateStoreProvider(spark,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          val q = graft.streaming.FunnelTws.stages(spark, dir).writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName("graft_funnel_tws")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
-        }
-      }
-    }
-    spark.table("graft_funnel_tws")
+    StreamRun(rocksDb = true, eventReads = true, trigger = Trigger.AvailableNow())
+      .memory(spark, "graft_funnel_tws")(graft.streaming.FunnelTws.stages(spark, dir))
   }
 
   /** Seasonal traffic heatmap: event counts by (day-of-week, hour-of-day)
@@ -2222,9 +2056,9 @@ object Events {
        |            FROM events) r) f""".stripMargin) { (spark, dir) =>
     import graft.functions.PolyHash
     PolyHash.register(spark)
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        val q = eventsStream(spark, dir)
+    StreamRun(mode = "complete", eventReads = true, trigger = Trigger.AvailableNow())
+      .memory(spark, "graft_stream_checksum") {
+        eventsStream(spark, dir)
           .select(concat_ws("|",
             col("event_id").cast("string"), col("user_id").cast("string"),
             col("event_type"), col("tus").cast("string"),
@@ -2232,17 +2066,7 @@ object Events {
           .select(expr("poly_hash(s)").as("fp"))
           .agg(count(lit(1)).as("n_rows"), expr("bit_xor(fp)").as("xor_fp"),
             min(col("fp")).as("min_fp"), max(col("fp")).as("max_fp"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName("graft_stream_checksum")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
       }
-    }
-    spark.table("graft_stream_checksum")
   }
 
 
@@ -2270,38 +2094,15 @@ object Events {
       |       CAST(sum(event_id) AS BIGINT) AS sum_id
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    val out = FileSources.cacheDir("foreachbatch", dir, "events.parquet")
-    withEventReadConfs(spark) {
-      FileSources.writeOnce(out) { o =>
-        withStreamPartitions(spark, 4) {
-          val q = eventsStream(spark, dir)
-            .select(col("event_id"), col("event_type"))
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-              // idempotent per batchId: replays overwrite their own
-              // partition directory, never append beside it
-              batch.groupBy(col("event_type"))
-                .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"))
-                .withColumn("batch", lit(batchId))
-                .write
-                .partitionBy("batch")
-                // Overwrite + dynamic = replace ONLY the partitions this
-                // batch carries (its own batch=<id> dir); Append would
-                // duplicate on replay, static Overwrite would erase
-                // every earlier batch
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(s"$o/data")
-              ()
-            }
-            .option("checkpointLocation", s"$o/chk")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
-        }
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
-      }
+    val out = FileSources.outputCacheDir("foreachbatch", dir, "events.parquet")
+    FileSources.writeOnce(out) { o =>
+      StreamRun(eventReads = true, trigger = Trigger.AvailableNow()).run(spark) {
+        eventsStream(spark, dir).select(col("event_id"), col("event_type"))
+      }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        StreamRun.writeBatch(batch.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id")), batchId, s"$o/data")
+      }.option("checkpointLocation", s"$o/chk"))
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.parquet(s"$out/data")
       .groupBy(col("event_type"))
@@ -2743,25 +2544,15 @@ object Events {
       |       CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_fixed
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    val out = FileSources.cacheDir("statereader", dir, "events.parquet")
-    withEventReadConfs(spark) {
-      FileSources.writeOnce(out) { o =>
-        withStreamPartitions(spark, 4) {
-          val q = eventsStream(spark, dir)
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(floor(col("value") * 10000 + 0.5).cast("long")).as("sum_fixed"))
-            .writeStream
-            .outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", s"$o/chk")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
-        }
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
-      }
+    val out = FileSources.outputCacheDir("statereader", dir, "events.parquet")
+    FileSources.writeOnce(out) { o =>
+      StreamRun(mode = "update", eventReads = true, trigger = Trigger.AvailableNow()).run(spark) {
+        eventsStream(spark, dir)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(floor(col("value") * 10000 + 0.5).cast("long")).as("sum_fixed"))
+      }(_.format("noop").option("checkpointLocation", s"$o/chk"))
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.format("statestore").load(s"$out/chk")
       .select(col("key.event_type").as("event_type"),
@@ -2797,9 +2588,9 @@ object Events {
       |         CAST(count(*) AS BIGINT) AS n_buckets
       |  FROM b GROUP BY 1) g, wm
       |WHERE g.w_start_us + 7200000000 <= wm.w""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        val chained = eventsStream(spark, dir)
+    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+      .memory(spark, "graft_stream_chained") {
+        eventsStream(spark, dir)
           .select(timestamp_micros(col("tus")).as("tts"), col("event_type"))
           .withWatermark("tts", "0 seconds")
           .groupBy(window(col("tts"), "30 minutes"), col("event_type"))
@@ -2808,17 +2599,7 @@ object Events {
           .agg(sum(col("n")).as("total"), count(lit(1)).as("n_buckets"))
           .select(unix_micros(col("window.start")).as("w_start_us"),
             col("total"), col("n_buckets"))
-        val q = chained.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_chained")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
       }
-    }
-    spark.table("graft_stream_chained")
   }
 
   /** Two independent event streams with DIFFERENT watermark delays,
@@ -2860,30 +2641,20 @@ object Events {
        |      FROM f GROUP BY 1, 2)
        |SELECT w_start_us, event_type, n, sum_value
        |FROM b, wm WHERE b.w_start_us + 900000000 <= wm.w""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        def branch(tpe: String, delay: String): DataFrame =
-          eventsStream(spark, dir)
-            .filter(col("event_type") === tpe)
-            .select(timestamp_micros(col("tus")).as("tts"), col("event_type"), col("value"))
-            .withWatermark("tts", delay)
-        val unioned = branch("click", "10 minutes")
+    def branch(tpe: String, delay: String): DataFrame =
+      eventsStream(spark, dir)
+        .filter(col("event_type") === tpe)
+        .select(timestamp_micros(col("tus")).as("tts"), col("event_type"), col("value"))
+        .withWatermark("tts", delay)
+    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+      .memory(spark, "graft_stream_union") {
+        branch("click", "10 minutes")
           .unionByName(branch("view", "30 minutes"))
           .groupBy(window(col("tts"), "15 minutes"), col("event_type"))
           .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
           .select(unix_micros(col("window.start")).as("w_start_us"),
             col("event_type"), col("n"), col("sum_value"))
-        val q = unioned.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_union")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
       }
-    }
-    spark.table("graft_stream_union")
   }
 
   /** Feed pairs compared by [[ksDrift]] (name, side A, side B). */
@@ -3005,11 +2776,7 @@ object Events {
     // row's own result, so the key folds in the compiled library's
     // fingerprint — any code fix re-runs the dance instead of serving
     // stale pre-fix results.
-    val out = {
-      val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val fp = FileSources.fingerprint(new java.io.File(t(dir, "events")))
-      s"/tmp/graft_ckptrestart${sf}_${fp}b${FileSources.buildFingerprint}"
-    }
+    val out = FileSources.outputCacheDir("ckptrestart", dir, "events.parquet")
     FileSources.writeOnce(out) { o =>
       // The work dir lives INSIDE the cache dir and is cleaned in a
       // finally (code-review r15): as a sibling, a dance that failed
@@ -3032,17 +2799,10 @@ object Events {
           org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
-        def runPhase(queryName: String)(spelling: DataFrame => DataFrame): Unit = {
-          val src = spark.readStream.schema(schema).parquet(in.toString)
-          val q = spelling(src).writeStream
-            .outputMode("complete")
-            .format("memory")
-            .queryName(queryName)
-            .option("checkpointLocation", chk)
-            .start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
+        def runPhase(queryName: String)(spelling: DataFrame => DataFrame): Unit =
+          StreamRun(mode = "complete", width = None).run(spark) {
+            spelling(spark.readStream.schema(schema).parquet(in.toString))
+          }(_.format("memory").queryName(queryName).option("checkpointLocation", chk))
         val baseMtime = 1600000000000L
         stage("half_even", col("event_id") % 2 === 0, baseMtime)
         // phase A: the Column-DSL spelling ("the r(N-1) code")
@@ -3136,11 +2896,7 @@ object Events {
        |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     pinEventReadConfs(spark)
-    val out = {
-      val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val fp = FileSources.fingerprint(new java.io.File(t(dir, "events")))
-      s"/tmp/graft_twsrestart${sf}_${fp}b${FileSources.buildFingerprint}"
-    }
+    val out = FileSources.outputCacheDir("twsrestart", dir, "events.parquet")
     FileSources.writeOnce(out) { o =>
       val work = new java.io.File(o, "work")
       FileSources.deleteRecursively(work)
@@ -3160,31 +2916,13 @@ object Events {
         // is the epoch in the offsets log), so the two phases' batches
         // never collide.
         val emit = s"$work/emit"
-        def runPhase(
-            spelling: DataFrame => org.apache.spark.sql.Dataset[(Long, Long, Long)]): Unit =
-          withStreamPartitions(spark, 4) {
-            withStateStoreProvider(spark,
-              "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-              val src = spark.readStream.schema(schema).parquet(in.toString)
-              val q = spelling(src).toDF("user_id", "n", "sum_v4")
-                .writeStream
-                .foreachBatch {
-                  (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-                    batch.withColumn("batch", lit(batchId))
-                      .write
-                      .partitionBy("batch")
-                      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                      .option("partitionOverwriteMode", "dynamic")
-                      .parquet(emit)
-                    ()
-                }
-                .outputMode("update")
-                .option("checkpointLocation", chk)
-                .start()
-              try q.processAllAvailable()
-              finally q.stop()
-            }
-          }
+        def runPhase(spelling: DataFrame => Dataset[(Long, Long, Long)]): Unit =
+          StreamRun(mode = "update", rocksDb = true).run(spark) {
+            spelling(spark.readStream.schema(schema).parquet(in.toString))
+              .toDF("user_id", "n", "sum_v4")
+          }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+            StreamRun.writeBatch(batch, batchId, emit)
+          }.option("checkpointLocation", chk))
         import spark.implicits._
         val baseMtime = 1600000000000L
         stageSingleFile(ev.filter(col("event_id") % 2 === 0)

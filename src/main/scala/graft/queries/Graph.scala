@@ -77,10 +77,7 @@ object Graph {
       // overhead; the whole loop executes inside this call (eager
       // checkpoints), so the restore cannot strand a lazy consumer. On a
       // real cluster this constant is sized to |E| / executor memory.
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = spark.conf.get(spKey)
-      spark.conf.set(spKey, "8")
-      try {
+      Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       val e0 = spark.read.parquet(t(dir, "orders"))
         .select(col("o_orderkey"), (col("o_custkey") * 2).as("u"))
         .join(spark.read.parquet(t(dir, "lineitem"))
@@ -124,7 +121,7 @@ object Graph {
       deg.unpersist(false)
       ranks.select(col("node"), col("rank"))
         .orderBy(col("rank").desc, col("node")).limit(20)
-      } finally spark.conf.set(spKey, spPrev)
+      }
     }
   }
 

@@ -184,19 +184,13 @@ object ReferenceOps {
     * range mechanics directly.
     */
   val stencilStream: QueryDef = QueryDef(stencilPrefix.oracle.get) { (spark, _) =>
-    val q = spark.readStream.format("graft.sources.StencilSource")
-      .option("dims", 2).option("maxHalvings", 7)
-      .option("pointsPerBatch", 100).option("maxPoints", stencilN)
-      .load()
-      .selectExpr("idx", "offset[0] AS x", "offset[1] AS y", "halvings")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("graft_stencil_stream")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table("graft_stencil_stream")
+    StreamRun(width = None).memory(spark, "graft_stencil_stream") {
+      spark.readStream.format("graft.sources.StencilSource")
+        .option("dims", 2).option("maxHalvings", 7)
+        .option("pointsPerBatch", 100).option("maxPoints", stencilN)
+        .load()
+        .selectExpr("idx", "offset[0] AS x", "offset[1] AS y", "halvings")
+    }
   }
 
   /** The reference's ACTUAL workload as ONE structured-streaming program
@@ -250,43 +244,30 @@ object ReferenceOps {
     try {
       val objective = Objective(x => x.map(v => v * v).sum)
       val (dims, mh, perBatch, (cx, cy)) = SearchStreamConf
-      val q = spark.readStream.format("graft.sources.StencilSource")
-        .option("dims", dims).option("maxHalvings", mh)
-        .option("pointsPerBatch", perBatch).option("maxPoints", maxPoints)
-        .load()
-        .selectExpr("idx", "offset[0] AS ox", "offset[1] AS oy")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val rows = batch.collect() // one wave: pointsPerBatch rows
-          if (rows.nonEmpty) {
-            val pts: IndexedSeq[Array[Double]] = rows.toIndexedSeq
-              .map(r => Array(cx + r.getDouble(1), cy + r.getDouble(2)))
-            val id = client.submit(objective, pts)
-            var costs: Array[Double] = null
-            while (costs == null)
-              client.nextBatch(block = true).foreach {
-                case (rid, cs) => if (rid == id) costs = cs
-              }
-            val sess = batch.sparkSession
-            import sess.implicits._
-            rows.toIndexedSeq.zipWithIndex.map { case (r, i) =>
-              (r.getInt(0), pts(i)(0), pts(i)(1), costs(i))
+      StreamRun(width = None).run(spark) {
+        spark.readStream.format("graft.sources.StencilSource")
+          .option("dims", dims).option("maxHalvings", mh)
+          .option("pointsPerBatch", perBatch).option("maxPoints", maxPoints)
+          .load()
+          .selectExpr("idx", "offset[0] AS ox", "offset[1] AS oy")
+      }(_.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        val rows = batch.collect() // one wave: pointsPerBatch rows
+        if (rows.nonEmpty) {
+          val pts: IndexedSeq[Array[Double]] = rows.toIndexedSeq
+            .map(r => Array(cx + r.getDouble(1), cy + r.getDouble(2)))
+          val id = client.submit(objective, pts)
+          var costs: Array[Double] = null
+          while (costs == null)
+            client.nextBatch(block = true).foreach {
+              case (rid, cs) => if (rid == id) costs = cs
             }
-              .toDF("idx", "x", "y", "cost")
-              .withColumn("batch", lit(batchId))
-              .coalesce(1)
-              .write
-              .partitionBy("batch")
-              .mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .parquet(s"$out/data")
-          }
-          ()
+          val sess = batch.sparkSession
+          import sess.implicits._
+          StreamRun.writeBatch(rows.toIndexedSeq.zipWithIndex.map { case (r, i) =>
+            (r.getInt(0), pts(i)(0), pts(i)(1), costs(i))
+          }.toDF("idx", "x", "y", "cost").coalesce(1), batchId, s"$out/data")
         }
-        .option("checkpointLocation", s"$out/chk")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      }.option("checkpointLocation", s"$out/chk"))
     } finally client.shutdown()
   }
 

@@ -422,10 +422,7 @@ object TextOps {
       spark: SparkSession,
       dir: String): (Seq[(Long, String, String, Long)], DataFrame) = {
       import org.apache.spark.sql.expressions.Window
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = spark.conf.get(spKey)
-      spark.conf.set(spKey, "4")
-      try {
+      Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "4") {
       val words = spark.read.parquet(t(dir, "documents"))
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(col("word") =!= "")
@@ -502,7 +499,7 @@ object TextOps {
         }
       }
       (merges.toSeq, syms)
-      } finally spark.conf.set(spKey, spPrev)
+      }
   }
 
   val bpeTrain: QueryDef = QueryDef({

@@ -88,6 +88,16 @@ object FileSources {
     s"/tmp/graft_$tag${sf}_$fp"
   }
 
+  /** [[cacheDir]] for a row whose cached artifact is its own OUTPUT (a
+    * sink it wrote, a checkpoint, a result table) rather than a copy of the
+    * source: the key also folds in [[buildFingerprint]], so a code fix
+    * re-runs the row instead of serving its pre-fix result (ADVICE r13 #1).
+    * The suffix stays hex, so writeOnce's stale-sibling eviction still
+    * reclaims the dirs of earlier builds.
+    */
+  private[graft] def outputCacheDir(tag: String, dir: String, srcName: String): String =
+    s"${cacheDir(tag, dir, srcName)}b$buildFingerprint"
+
   /** Write-once guard shared by every round-trip: the sink is exercised the
     * first time a (format, source-fingerprint) pair is requested and reused
     * afterwards — re-writing an identical dataset on every timed execution

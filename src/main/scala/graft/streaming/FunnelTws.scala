@@ -50,16 +50,11 @@ object FunnelTws {
     */
   def stages(spark: SparkSession, dir: String): Dataset[StageRow] = {
     import spark.implicits._
-    // conf pins mirror SessionizeTws.sessions: set for direct callers, not
+    // conf pins as in SessionizeTws.sessions: set for direct callers, not
     // restored here because the returned stream is lazy — the gate row
-    // wraps execution in withEventReadConfs, which restores them
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.queries.Events.normalizeTs(spark.readStream
-      .schema(schema)
-      .option("basePath", dir)
-      .parquet(s"$dir/events.parque[t]"))
+    // runs under StreamRun's eventReads scope, which restores them
+    graft.queries.Events.pinEventReadConfs(spark)
+    graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("event_type"), col("tus"))
       .as[FunnelEvent]
       .groupByKey(_.user_id)

@@ -76,17 +76,11 @@ object Sessionize {
     */
   def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
     import spark.implicits._
-    // Schema-adaptive ts → micros `tus` (graft.queries.Events.normalizeTs):
-    // the physical encoding of events.ts is a generator detail; confs for
-    // reading it are pinned here for direct callers (the gate row wraps the
+    // The one event-stream reader (schema-adaptive ts → micros `tus`); the
+    // read confs are pinned here for direct callers (the gate row wraps the
     // whole execution in a set-and-restore).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.queries.Events.normalizeTs(spark.readStream
-      .schema(schema)
-      .option("basePath", dir)
-      .parquet(s"$dir/events.parque[t]"))
+    graft.queries.Events.pinEventReadConfs(spark)
+    graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("tus"), col("value"),
         timestamp_micros(col("tus")).as("event_time"))
       .withWatermark("event_time", "0 seconds")

@@ -84,13 +84,8 @@ object SessionizeTws {
     */
   def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.queries.Events.normalizeTs(spark.readStream
-      .schema(schema)
-      .option("basePath", dir)
-      .parquet(s"$dir/events.parque[t]"))
+    graft.queries.Events.pinEventReadConfs(spark)
+    graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("tus"), col("value"),
         timestamp_micros(col("tus")).as("event_time"))
       .withWatermark("event_time", "0 seconds")

@@ -26,10 +26,32 @@ class QueriesSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  // Rows that start a streaming query (StreamRun) or scope confs around an
+  // eager loop (Confs.withConfs): each must leave the session's explicit
+  // confs exactly as it found them.
+  private val scopedRows = Set(
+    "q_stream_windows", "q_session_window_stream", "q_sessionize_stream",
+    "q_sessionize_tws", "q_stream_dedup", "q_stream_dedup_wm", "q_transform_state",
+    "q_stream_join", "q_stream_join_semi", "q_stream_join_agg", "q_stream_join_outer",
+    "q_stream_join_full", "q_stream_static_join", "q_stream_sink_files",
+    "q_cdc_apply_stream", "q_funnel_stream", "q_funnel_tws", "q_stream_checksum",
+    "q_foreach_batch", "q_state_reader", "q_stream_chained", "q_stream_union",
+    "q_checkpoint_restart", "q_tws_restart", "q_stencil_stream", "q_search_stream",
+    "q_ann_stream_ingest", "q_pagerank", "q_bpe_train", "q_bpe_apply")
+
   test("every registered query runs and returns rows at sf0.001") {
     spark.sparkContext.setLogLevel("WARN")
+    assert(scopedRows.subsetOf(SparkEntry.queries.keySet))
     val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val confs = spark.conf.getAll
       val n = fn(spark, sf).count()
+      assert(spark.streams.active.isEmpty, s"$name left a streaming query active")
+      if (scopedRows(name)) {
+        val after = spark.conf.getAll
+        assert(after == confs, s"$name changed session confs: " +
+          (confs.keySet ++ after.keySet).filter(k => confs.get(k) != after.get(k))
+            .map(k => s"$k: ${confs.get(k)} -> ${after.get(k)}").mkString(", "))
+      }
       if (n == 0) Some(name) else None
     }
     assert(empties.isEmpty, s"queries with empty results: $empties")
