@@ -7,6 +7,11 @@ import scala.collection.immutable.ArraySeq
   * `apply` is the scalar form; `applyBatch` is the hook for vectorized
   * objectives (the reference's `vectorize=True`): override it when a whole
   * batch can be evaluated at once. The default loops.
+  *
+  * A NaN cost ranks as worst: the driver reads it as +Inf when it collects
+  * the wave, so the point is recorded with cost +Inf, is never accepted and
+  * never hides a better point of the same wave. An objective answering NaN
+  * drives exactly the search the same objective answering +Inf drives.
   */
 trait Objective extends Serializable {
   def apply(x: Array[Double]): Double

@@ -275,7 +275,9 @@ object Search {
             var i = 0
             while (i < points.length) {
               val p = points(i)
-              val c = costs(i)
+              // NaN ranks as worst (see Objective): `c < NaN` is always
+              // false, so a NaN candidate would hide the rest of its wave.
+              val c = if (costs(i).isNaN) Double.PositiveInfinity else costs(i)
               p.stopTime = stopT
               if (nextPoint == null) { nextPoint = p; nextCost = c }
               else if (c < nextCost) {

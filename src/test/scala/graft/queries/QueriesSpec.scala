@@ -3,16 +3,21 @@ package graft.queries
 import graft.SparkEntry
 import graft.functions.PolyHash
 import graft.multimodal.Media
+import graft.spark.Leftovers
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
+import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Query-surface guards at sf0.001: every registered query executes and
   * returns rows; every query key with an oracle also appears in oracleSql;
   * plus unit coverage of PolyHash (interpreted vs codegen paths) and the
   * media decode stub.
   */
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with Eventually {
+
+  implicit override val patienceConfig: PatienceConfig = PatienceConfig(timeout = Span(10, Seconds))
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -42,10 +47,17 @@ class QueriesSpec extends AnyFunSuite {
   test("every registered query runs and returns rows at sf0.001") {
     spark.sparkContext.setLogLevel("WARN")
     assert(scopedRows.subsetOf(SparkEntry.queries.keySet))
-    val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    // the flagship entry rides along: it drives SparkClient like
+    // q_search_stream, and both must tear their evaluation pool down
+    val entry = "SparkEntry.entry" -> ((s: SparkSession, _: String) => SparkEntry.entry(s))
+    val empties = (SparkEntry.queries.toSeq.sortBy(_._1) :+ entry).flatMap { case (name, fn) =>
       val confs = spark.conf.getAll
       val n = fn(spark, sf).count()
       assert(spark.streams.active.isEmpty, s"$name left a streaming query active")
+      eventually {
+        assert(Leftovers.activeJobs(spark.sparkContext).isEmpty, s"$name left a Spark job active")
+      }
+      assert(Leftovers.evalThreads.isEmpty, s"$name left a graft-spark-eval thread alive")
       if (scopedRows(name)) {
         val after = spark.conf.getAll
         assert(after == confs, s"$name changed session confs: " +
