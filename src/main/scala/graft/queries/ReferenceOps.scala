@@ -205,8 +205,8 @@ object ReferenceOps {
     * the flagship start (10, 15) with unit steps — the first-wave
     * geometry of [[searchEvals]]' reference run; costs are the sphere
     * objective evaluated ON EXECUTORS by `Objective.applyBatch` inside a
-    * SparkClient wave (the same mapPartitions path every convergence
-    * test exercises). The oracle derives (x, y, cost) in SQL from the
+    * SparkClient wave (the same `runJob` path every convergence test
+    * exercises). The oracle derives (x, y, cost) in SQL from the
     * SAME golden VALUES as [[stencilPrefix]]: identical IEEE double
     * literals, identical add/multiply order on both engines.
     *

@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.search.{EvalClient, Objective}
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, LinkedBlockingQueue, TimeUnit}
@@ -35,6 +35,14 @@ import scala.util.control.NonFatal
   * would get in a job of its own. Waves are small (1..batchsize points), so
   * the default of one slice per wave amortizes task overhead while
   * concurrent jobs fill the cluster.
+  *
+  * A job is one `SparkContext.runJob` call whose task closure is declared
+  * here, not `mapPartitions(...).collect()`. Spark cleans every closure a
+  * job carries by parsing the bytecode of its declaring class, and
+  * `collect` adds two declared in `RDD` and `SparkContext`; with evaluation
+  * jobs this small that parsing was most of the driver's CPU. So one
+  * closure is cleaned per job, and the companion object that declares it
+  * is kept small.
   *
   * Teardown: every job runs under this client's own job group with
   * interrupt-on-cancel; a failed job fails every wave it carried, and
@@ -174,9 +182,11 @@ object SparkClient {
     val flat = perWave.flatten
     sc.setJobGroup(group, s"graft SparkClient: ${waves.length} wave(s), ${flat.length} slice(s)",
       interruptOnCancel = true)
-    val costs = sc.parallelize(flat, flat.length)
-      .mapPartitions(_.map(slice => objective.applyBatch(ArraySeq.unsafeWrapArray(slice))))
-      .collect()
+    // runJob with this closure only, not mapPartitions(...).collect(): see
+    // the class doc. Each partition holds one slice.
+    val costs = sc.runJob(sc.parallelize(flat, flat.length),
+      (_: TaskContext, it: Iterator[Array[Array[Double]]]) =>
+        it.flatMap(slice => objective.applyBatch(ArraySeq.unsafeWrapArray(slice))).toArray)
     var k = 0
     perWave.map { s =>
       val c = costs.slice(k, k + s.length).flatten

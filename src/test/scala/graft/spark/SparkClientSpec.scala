@@ -1,6 +1,10 @@
 package graft.spark
 
 import graft.search.{Objective, Search, SearchOptions}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 import org.apache.spark.{SparkContext, TaskContext, TestListenerBus}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -52,6 +56,36 @@ final class Tagged(tag: Int, hold: Boolean) extends Objective {
       .add(tag)
     if (hold) { JobGate.entered.release(); JobGate.release.await() }
     code(x)
+  }
+}
+
+/** Collects the lines (DEBUG and up) one logger writes on `graft-spark-eval`
+  * threads while `body` runs; the logger's config is removed afterwards.
+  */
+object EvalThreadLog {
+  private final class Lines extends AbstractAppender(
+      "graft-eval-thread-log", null, null, false, Property.EMPTY_ARRAY) {
+    val lines = new ConcurrentLinkedQueue[String]()
+    override def append(e: LogEvent): Unit =
+      if (e.getThreadName == "graft-spark-eval") lines.add(e.getMessage.getFormattedMessage)
+  }
+
+  def capture[A](logger: String)(body: => A): (A, Seq[String]) = {
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val appender = new Lines
+    appender.start()
+    val config = new LoggerConfig(logger, Level.DEBUG, false)
+    config.addAppender(appender, Level.DEBUG, null)
+    ctx.getConfiguration.addLogger(logger, config)
+    ctx.updateLoggers()
+    try {
+      val a = body
+      (a, appender.lines.asScala.toSeq)
+    } finally {
+      ctx.getConfiguration.removeLogger(logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
   }
 }
 
@@ -180,5 +214,34 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     }
     assert((System.nanoTime() - t0) / 1e9 < 30, "the hung waves were waited out, not cancelled")
     spark.sparkContext.setLogLevel("WARN")
+  }
+
+  test("each wave slice reaches applyBatch whole, in wave order") {
+    // cost = 100 * size of the batch the point arrived in + its index
+    val batchSizes = Objective.vectorized(xs => xs.map(x => 100.0 * xs.length + x(1)).toArray)
+    val client = new SparkClient(spark, evalPartitions = 3)
+    try {
+      val id = client.submit(batchSizes, wave(0, 7))
+      val costs = Iterator.continually(client.nextBatch(block = true)).flatten.next()
+      // ParallelCollectionRDD's positional split of 7 points into 3 slices
+      assert(costs._1 == id)
+      assert(costs._2.toSeq == Seq(200, 201, 202, 203, 304, 305, 306).map(_.toDouble))
+    } finally client.shutdown()
+  }
+
+  test("an evaluation job has Spark clean one closure: graft's own") {
+    val tagged = new Tagged(3, hold = false)
+    val client = new SparkClient(spark)
+    def run(j: Int): Array[Double] = {
+      client.submit(tagged, wave(j, 2))
+      Iterator.continually(client.nextBatch(block = true)).flatten.next()._2
+    }
+    try {
+      run(0) // warm
+      val (costs, lines) = EvalThreadLog.capture("org.apache.spark.util.ClosureCleaner")(run(1))
+      assert(costs.toSeq == wave(1, 2).map(tagged.code))
+      val cleaned = lines.filter(_.startsWith("Cleaning indylambda closure"))
+      assert(cleaned.size == 1, s"closures cleaned for one evaluation job: ${cleaned.mkString("; ")}")
+    } finally client.shutdown()
   }
 }
