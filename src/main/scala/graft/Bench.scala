@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
 import scala.sys.process.{Process, ProcessLogger}
@@ -96,8 +96,25 @@ object Bench {
     * default locale, and a comma decimal separator would make every emitted
     * line invalid JSON and break the driver's tail parse (ADVICE r7 #3).
     */
-  private def d3(v: Double): String =
+  private[graft] def d3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in builder-authored SQL or a Spark stage name
+    * would otherwise make a consumer's json.load fail on the whole line.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Core count for every harness main (Bench, Verify, Profile). */
+  private[graft] def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** Idle-box cost of [[calibrate]] is ~0.32 s steady-state (measured round
     * 6 on the reference box; the job is sized per core, so local[4] and
@@ -230,7 +247,7 @@ object Bench {
 
   private def parentMain(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = envCpus
     val names = SparkEntry.queries.keys.toSeq.sorted :+ EntryBenchName
     val groups = names.groupBy(groupOf).toSeq.sortBy(_._1)
     val pins = pinsFor(sfDir)
@@ -425,10 +442,9 @@ object Bench {
     println(s"""$CalibMarker{"before":${d3(run.calibBefore)},"after":${d3(run.calibAfter)}}""")
   }
 
-  /** The bench-child session builder, shared with the diagnostic tools
-    * (StreamBand, TaskMetricsProbe): a conf pin added here is
-    * automatically in force in every harness whose numbers get compared
-    * against bench pins.
+  /** The bench-child session builder, shared with Verify and
+    * graft.tools.Profile: a conf pin added here is automatically in force
+    * in every harness whose numbers get compared against bench pins.
     */
   private[graft] def benchSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -446,27 +462,48 @@ object Bench {
     spark
   }
 
+  /** A benched row by name: the registry rows plus the end-to-end search. */
+  private[graft] def row(name: String): (SparkSession, String) => DataFrame =
+    if (name == EntryBenchName) SparkEntry.entryAt else SparkEntry.queries(name)
+
+  /** Outcome of one [[execute]]: wall seconds, and the failure if any. */
+  private[graft] final case class Execution(wallS: Double, failure: Option[Throwable]) {
+    def ok: Boolean = failure.isEmpty
+  }
+
+  /** One execution of a row, the only run protocol of Bench and
+    * graft.tools.Profile: `fn(spark, sfDir).count()`, timed, then every
+    * cache dropped in a `finally`, so the next execution starts cold even
+    * when this one threw.
+    *
+    * Failure rule: ANY `Throwable` from the row — fatal errors included —
+    * marks this execution as failed and the caller carries on with the next
+    * one. A fatal error escaping a bench child would leave the parent with
+    * no group line, turning one failed row into a whole missing group.
+    */
+  private[graft] def execute(
+      spark: SparkSession,
+      sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Execution = {
+    val t0 = System.nanoTime()
+    try {
+      val failure =
+        try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(e) }
+      Execution((System.nanoTime() - t0) / 1e9, failure)
+    } finally dropAllCaches(spark)
+  }
+
   private def runGroupInProcess(
       qnames: Seq[String],
       sfDir: String,
       cpus: String): GroupRun = {
     val spark = benchSession(cpus)
     val calibBefore = calibrate(spark)
-    val queries = SparkEntry.queries
     val out = qnames.map { name =>
-      val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-        if (name == EntryBenchName) SparkEntry.entryAt else queries(name)
-      try { fn(spark, sfDir).count(); dropAllCaches(spark) } // warm-up
-      catch { case _: Throwable => () }
-      val times = (1 to TimedRuns).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        dropAllCaches(spark)
-        if (ok) Some(dt) else None
-      }
+      val fn = row(name)
+      execute(spark, sfDir, fn) // warm-up
+      val times = (1 to TimedRuns).map(_ => execute(spark, sfDir, fn)).filter(_.ok).map(_.wallS)
       name -> (if (times.isEmpty) -1.0 else median(times))
     }
     val calibAfter = calibrate(spark)
@@ -476,8 +513,8 @@ object Bench {
 
   /** Dataset cache + persistent RDDs (MLlib KMeans persists RDDs that
     * `catalog.clearCache()` does not touch — the round-2 bench leak).
-    * Shared with the diagnostic tools (StreamBand, TaskMetricsProbe) so
-    * their cold-run semantics cannot drift from the bench they adjudicate.
+    * Bench and graft.tools.Profile drop through [[execute]], so Profile's
+    * cold-run semantics cannot drift from the bench it adjudicates.
     */
   private[graft] def dropAllCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
@@ -485,7 +522,7 @@ object Bench {
       .foreach(_.unpersist(blocking = true))
   }
 
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,9 @@ object Verify {
     // those queries (targeted local re-checks); driver always passes two.
     val (sfDir, outDir) = (args(0), args(1))
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Event-read confs pinned at session construction so query bodies
-      // need no session-conf mutation (VERDICT r7 #3 — readEvents keeps a
-      // defensive set only for externally-built sessions): NANOS ts reads
-      // as raw longs, MICROS/MILLIS ts reads as TimestampType (not NTZ).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session: the event-read confs are pinned at construction so
+    // query bodies need no session-conf mutation (VERDICT r7 #3).
+    val spark = Bench.benchSession(Bench.envCpus)
     new java.io.File(outDir).mkdirs()
     // Queries that throw are recorded in errors.json beside the parquet
     // dumps (ADVICE r9: an absent result dir alone made the evidence
@@ -49,18 +37,7 @@ object Verify {
         System.err.println(s"[verify] drop metrics failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Bench.{jsonString => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

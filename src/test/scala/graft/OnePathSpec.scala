@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard for the one-path rule: streaming runs start only in
-  * `queries/StreamRun.scala`, and session confs are scoped only through
-  * `queries/Confs.scala`. Keeps hand-rolled copies from growing back.
+  * `queries/StreamRun.scala`, session confs are scoped only through
+  * `queries/Confs.scala`, and listener-based profiling lives only in
+  * `tools/Profile.scala`. Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
 
@@ -40,5 +41,18 @@ class OnePathSpec extends AnyFunSuite {
   test("the retired scoping wrappers stay gone") {
     assert(filesWith("withStreamPartitions").isEmpty)
     assert(filesWith("withStateStoreProvider").isEmpty)
+  }
+
+  test("the folded probe mains stay gone; Profile is the one listener") {
+    val probes = Seq("BenchProbe", "StageProbe", "TaskMetricsProbe", "StreamBand", "ScaleSample")
+    assert(sources.exists(_._1.endsWith("graft/tools/Profile.scala")))
+    assert(sources.map(_._1).filter(p => probes.exists(n => p.endsWith(s"/$n.scala"))).isEmpty)
+    assert(filesWith("addSparkListener", "graft/tools/Profile.scala").isEmpty)
+  }
+
+  test("no tool waits on Spark with Thread.sleep") {
+    assert(sources.collect {
+      case (p, s) if p.startsWith("graft/tools/") && s.contains("Thread.sleep") => p
+    }.isEmpty)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-import org.apache.spark.{SparkContext, TaskContext, TestListenerBus}
+import org.apache.spark.{SparkContext, TaskContext, GraftListenerBus}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.concurrent.Eventually
@@ -20,7 +20,7 @@ import scala.jdk.CollectionConverters._
   */
 object Leftovers {
   def activeJobs(sc: SparkContext): Seq[Int] = {
-    TestListenerBus.drain(sc)
+    GraftListenerBus.drain(sc)
     sc.statusTracker.getActiveJobIds().toSeq
   }
   def evalThreads: Seq[Thread] =
@@ -140,7 +140,7 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
       val waves = (held ++ queued).toMap
       val costs = Iterator.continually(client.nextBatch(block = true))
         .flatten.take(waves.size).toMap
-      TestListenerBus.drain(spark.sparkContext)
+      GraftListenerBus.drain(spark.sparkContext)
       (costs, waves, jobs.starts.asScala.toSeq)
     } finally {
       JobGate.release.countDown()
