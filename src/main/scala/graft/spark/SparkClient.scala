@@ -20,21 +20,40 @@ import scala.util.control.NonFatal
   * fed to a scheduler, clients.py:9-24) on Spark's job/wave execution model,
   * with one coalescing rule: at most `defaultParallelism` jobs are in flight
   * (the figure `capacityHint` reports), one per `graft-spark-eval` thread,
-  * and a thread that comes free takes *every* wave queued at that moment
-  * into one job. So while fewer waves than slots are queued each wave is its
-  * own job, and when the queue is deeper the per-job overhead is paid once
-  * per free slot, not once per wave. Only waves holding the same `Objective`
-  * instance share a job. Completion is reported per wave, in submission
-  * order within a job; completion order across jobs is free, as in the
-  * reference (search.py:299-345).
+  * and a thread whose job has ended takes *every* wave queued at that moment
+  * into one job. An idle thread, woken by a submit, takes its share of the
+  * queue, `ceil(queued / free slots)` waves, so a burst of submits while
+  * several threads are idle is spread over them, not folded into one job.
+  * So while fewer waves than free slots are queued each wave is its own
+  * job, and when the queue is deeper the per-job overhead is paid once per
+  * free slot, not once per wave. Folding a burst would report its waves to
+  * the search at once, and the greedy asynchronous acceptance converges
+  * less often the more completions arrive together. Only waves holding
+  * the same `Objective` instance share a job. Completion is reported per
+  * wave, in submission order within a job; completion order across jobs
+  * is free, as in the reference (search.py:299-345).
   *
   * Inside a job each wave keeps its own fan-out: it is cut into
   * `min(evalPartitions, |wave|)` positional slices (ParallelCollectionRDD's
-  * split), one partition per slice, and `Objective.applyBatch` (the
-  * vectorized form) receives exactly one slice — the same slices the wave
-  * would get in a job of its own. Waves are small (1..batchsize points), so
-  * the default of one slice per wave amortizes task overhead while
-  * concurrent jobs fill the cluster.
+  * split), and `Objective.applyBatch` (the vectorized form) receives exactly
+  * one slice — the same slices the wave would get in a job of its own.
+  *
+  * How many tasks carry those slices follows one rule, from measured cost.
+  * Each task times its `applyBatch` calls and returns the nanos with the
+  * costs. The client keeps two running estimates: objective time per point,
+  * per `Objective` instance, and job overhead, the least of its jobs' wall
+  * time minus the longest task's objective time (a wait for a free core
+  * only adds to that sample, so the least one leaves the wait out). A job
+  * of `n` points in `s` slices, whose widest wave has `w` slices, then runs
+  * in `clamp(ceil(n * perPoint / overhead), w, s)` tasks, its slices laid
+  * contiguously in wave order. The floor `w` keeps the fan-out a wave asks
+  * for: a wave alone in its job always runs one task per slice, so packing
+  * only removes the tasks that coalescing waves added. A microsecond
+  * objective packs a job of one-slice waves into one task, so per-task
+  * deserialization is paid once per job; an objective that costs more than
+  * the overhead keeps one task per slice. Until both estimates exist for an
+  * objective (cold start), every slice is its own task. The estimates are
+  * dropped by `shutdown()`.
   *
   * A job is one `SparkContext.runJob` call whose task closure is declared
   * here, not `mapPartitions(...).collect()`. Spark cleans every closure a
@@ -52,7 +71,7 @@ final class SparkClient(
     spark: SparkSession,
     evalPartitions: Int = 1) extends EvalClient {
 
-  import SparkClient.Wave
+  import SparkClient.{Packing, Wave}
 
   private val sc = spark.sparkContext
   private[spark] val jobGroup = s"graft-spark-eval-${SparkClient.clients.incrementAndGet()}"
@@ -60,6 +79,7 @@ final class SparkClient(
   private val pendingCount = new AtomicInteger(0)
   private val jobsInFlight = new AtomicInteger(0)
   private val queued = new java.util.ArrayDeque[Wave]()
+  private val packing = new Packing
   private val completed = new LinkedBlockingQueue[(Long, Try[Array[Double]])]()
   private val threads = new ConcurrentLinkedQueue[Thread]()
   private val pool = Executors.newFixedThreadPool(math.max(1, sc.defaultParallelism), { r =>
@@ -77,30 +97,35 @@ final class SparkClient(
     id
   }
 
-  /** The oldest queued wave and every later one holding the same objective;
-    * nothing once the client is shut down. */
-  private def take(): Seq[Wave] = queued.synchronized {
+  /** The oldest queued wave and later ones holding the same objective,
+    * counted as one job in flight: all of them if `all`, else a free slot's
+    * share, `ceil(queued / free slots)`. Nothing once the client is shut
+    * down. */
+  private def take(all: Boolean): Seq[Wave] = queued.synchronized {
     if (pool.isShutdown || queued.isEmpty) Nil
     else {
+      val free = math.max(1, sc.defaultParallelism - jobsInFlight.get())
+      val limit = if (all) Int.MaxValue else (queued.size + free - 1) / free
       val objective = queued.peekFirst().objective
       val out = mutable.ArrayBuffer.empty[Wave]
       val it = queued.iterator()
-      while (it.hasNext) {
+      while (it.hasNext && out.size < limit) {
         val w = it.next()
         if (w.objective eq objective) { out += w; it.remove() }
       }
+      jobsInFlight.incrementAndGet()
       out.toSeq
     }
   }
 
-  /** Runs one job per take until the queue is empty. Every submit schedules
-    * a drain after queueing its wave, so no wave is left behind. */
+  /** Runs one job per take until the queue is empty: first a free slot's
+    * share, then, each time a job ends, every queued wave. Every submit
+    * schedules a drain after queueing its wave, so no wave is left behind. */
   private def drain(): Unit = {
-    var waves = take()
+    var waves = take(all = false)
     while (waves.nonEmpty) {
-      jobsInFlight.incrementAndGet()
       val costs =
-        try Success(SparkClient.evaluate(sc, jobGroup, evalPartitions, waves))
+        try Success(SparkClient.evaluate(sc, jobGroup, evalPartitions, packing, waves))
         catch {
           case e: InterruptedException =>
             // shutdown() interrupted the wait: make sure the job it was
@@ -110,7 +135,7 @@ final class SparkClient(
           case NonFatal(e) => Failure(e)
         } finally jobsInFlight.decrementAndGet()
       waves.indices.foreach(i => completed.put((waves(i).id, costs.map(_(i)))))
-      waves = take()
+      waves = take(all = true)
     }
   }
 
@@ -151,6 +176,7 @@ final class SparkClient(
     pool.shutdownNow()
     if (pool.awaitTermination(SparkClient.ShutdownWaitSeconds, TimeUnit.SECONDS))
       threads.forEach(_.join())
+    packing.clear()
   }
 }
 
@@ -170,23 +196,70 @@ object SparkClient {
     (0 until k).map(i => points.slice(i * n / k, (i + 1) * n / k).toArray)
   }
 
-  /** Evaluates waves sharing one objective in one job under `group`, one
-    * partition per slice; returns each wave's costs in wave order. */
+  /** The running estimates behind the packing rule (see the class doc):
+    * objective nanos per point, per `Objective` instance, and the client's
+    * job overhead in nanos. */
+  private final class Packing {
+    private val pointNs = new java.util.IdentityHashMap[Objective, java.lang.Double]()
+    private var overheadNs = Long.MaxValue
+
+    /** Tasks for a job of `points` points cut into `slices` slices, the
+      * widest wave's `widest` of them. */
+    def tasks(objective: Objective, points: Int, widest: Int, slices: Int): Int = synchronized {
+      val perPoint = pointNs.get(objective)
+      if (perPoint == null || overheadNs == Long.MaxValue) slices
+      else math.max(widest, math.min(slices, math.ceil(perPoint * points / overheadNs).toInt))
+    }
+
+    /** Folds in one job: its points, each task's objective nanos and the
+      * job's wall nanos. The per-point time moves a quarter of the way to
+      * the job's. Wall time less the longest task's objective time is the
+      * overhead plus any wait for a free core; the wait only adds, so the
+      * overhead kept is the least such sample. */
+    def record(objective: Objective, points: Int, taskNs: Array[Long], wallNs: Long): Unit =
+      synchronized {
+        if (points > 0)
+          pointNs.merge(objective, taskNs.sum.toDouble / points, (old, sample) => old + (sample - old) / 4)
+        overheadNs = math.min(overheadNs, math.max(1L, wallNs - taskNs.max))
+      }
+
+    def clear(): Unit = synchronized { pointNs.clear(); overheadNs = Long.MaxValue }
+  }
+
+  /** Evaluates waves sharing one objective in one job under `group`, their
+    * slices packed into as many tasks as `packing` rules; returns each
+    * wave's costs in wave order. */
   private def evaluate(
       sc: SparkContext,
       group: String,
       evalPartitions: Int,
+      packing: Packing,
       waves: Seq[Wave]): Seq[Array[Double]] = {
     val objective = waves.head.objective
     val perWave = waves.map(w => slices(w.points, math.max(1, math.min(evalPartitions, w.points.length))))
     val flat = perWave.flatten
-    sc.setJobGroup(group, s"graft SparkClient: ${waves.length} wave(s), ${flat.length} slice(s)",
+    val points = waves.map(_.points.length).sum
+    val tasks = packing.tasks(objective, points, perWave.map(_.length).max, flat.length)
+    sc.setJobGroup(group,
+      s"graft SparkClient: ${waves.length} wave(s), ${flat.length} slice(s), $tasks task(s)",
       interruptOnCancel = true)
     // runJob with this closure only, not mapPartitions(...).collect(): see
-    // the class doc. Each partition holds one slice.
-    val costs = sc.runJob(sc.parallelize(flat, flat.length),
-      (_: TaskContext, it: Iterator[Array[Array[Double]]]) =>
-        it.flatMap(slice => objective.applyBatch(ArraySeq.unsafeWrapArray(slice))).toArray)
+    // the class doc. parallelize's positional split keeps each task's
+    // slices contiguous and in wave order.
+    val t0 = System.nanoTime()
+    val results = sc.runJob(sc.parallelize(flat, tasks),
+      (_: TaskContext, it: Iterator[Array[Array[Double]]]) => {
+        var ns = 0L
+        val costs = it.map { slice =>
+          val t = System.nanoTime()
+          val c = objective.applyBatch(ArraySeq.unsafeWrapArray(slice))
+          ns += System.nanoTime() - t
+          c
+        }.toArray
+        (costs, ns)
+      })
+    packing.record(objective, points, results.map(_._2), System.nanoTime() - t0)
+    val costs = results.flatMap(_._1)
     var k = 0
     perWave.map { s =>
       val c = costs.slice(k, k + s.length).flatten

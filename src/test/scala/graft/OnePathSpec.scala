@@ -4,8 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard for the one-path rule: streaming runs start only in
   * `queries/StreamRun.scala`, session confs are scoped only through
-  * `queries/Confs.scala`, and listener-based profiling lives only in
-  * `tools/Profile.scala`. Keeps hand-rolled copies from growing back.
+  * `queries/Confs.scala`, listener-based profiling lives only in
+  * `tools/Profile.scala`, `graft.spark` reads no conf or environment
+  * variable, and one helper is graft's only code in `org.apache.spark.sql`.
+  * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
 
@@ -48,6 +50,20 @@ class OnePathSpec extends AnyFunSuite {
     assert(sources.exists(_._1.endsWith("graft/tools/Profile.scala")))
     assert(sources.map(_._1).filter(p => probes.exists(n => p.endsWith(s"/$n.scala"))).isEmpty)
     assert(filesWith("addSparkListener", "graft/tools/Profile.scala").isEmpty)
+  }
+
+  test("nothing in graft.spark reads a conf or an environment variable") {
+    val reads = Seq("spark.conf", "getConf", "sys.env", "System.getenv", "sys.props")
+    assert(sources.exists(_._1.startsWith("graft/spark/")))
+    assert(sources.collect {
+      case (p, s) if p.startsWith("graft/spark/") && reads.exists(s.contains) => p
+    }.isEmpty)
+  }
+
+  test("GraftDataFrames is graft's only file in org.apache.spark.sql") {
+    assert(sources.collect {
+      case (p, s) if p.startsWith("org/apache/spark/sql/") || s.contains("package org.apache.spark.sql") => p
+    } == Seq("org/apache/spark/sql/GraftDataFrames.scala"))
   }
 
   test("no tool waits on Spark with Thread.sleep") {

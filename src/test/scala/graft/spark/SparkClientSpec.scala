@@ -46,15 +46,20 @@ object JobGate {
 
 /** Encodes a point (wave j, index i) as `tag * 1e6 + 1000 j + i`, records
   * its tag against the stage evaluating it and, when `hold`, blocks until
-  * the gate opens.
+  * the gate opens. A positive `sleepMs` makes each point take that long,
+  * counted in [[ConcurrencyGauge]].
   */
-final class Tagged(tag: Int, hold: Boolean) extends Objective {
+final class Tagged(tag: Int, hold: Boolean, sleepMs: Long = 0) extends Objective {
   def code(x: Array[Double]): Double = tag * 1e6 + 1000 * x(0) + x(1)
   def apply(x: Array[Double]): Double = {
     JobGate.tagsByStage
       .computeIfAbsent(TaskContext.get().stageId(), _ => new ConcurrentLinkedQueue[Int]())
       .add(tag)
     if (hold) { JobGate.entered.release(); JobGate.release.await() }
+    if (sleepMs > 0) {
+      ConcurrencyGauge.enter()
+      try Thread.sleep(sleepMs) finally ConcurrencyGauge.exit()
+    }
     code(x)
   }
 }
@@ -115,11 +120,26 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
   private def wave(j: Int, n: Int): IndexedSeq[Array[Double]] =
     (0 until n).map(i => Array(j.toDouble, i.toDouble))
 
-  /** Fills every slot with a held one-point wave, queues `queuedWaves`
-    * behind them, opens the gate and returns every wave's costs plus the
-    * client's job starts.
+  private def tasks(start: SparkListenerJobStart): Int = start.stageInfos.map(_.numTasks).sum
+
+  /** Evaluates `waves` one at a time, each once the last has completed. */
+  private def oneByOne(client: SparkClient, waves: Seq[(Objective, IndexedSeq[Array[Double]])])
+      : Seq[Array[Double]] =
+    waves.map { case (objective, points) =>
+      val id = client.submit(objective, points)
+      val (done, costs) = Iterator.continually(client.nextBatch(block = true)).flatten.next()
+      assert(done == id)
+      costs
+    }
+
+  /** Runs the `warm` waves one by one, then fills every slot with a held
+    * one-point wave, queues `queuedWaves` behind them, opens the gate and
+    * returns every queued and held wave's costs plus the job starts after
+    * the warm-up.
     */
-  private def coalesce(queuedWaves: Seq[(Tagged, IndexedSeq[Array[Double]])])
+  private def coalesce(
+      queuedWaves: Seq[(Tagged, IndexedSeq[Array[Double]])],
+      warm: Seq[(Tagged, IndexedSeq[Array[Double]])] = Nil)
       : (Map[Long, Array[Double]], Map[Long, (Tagged, IndexedSeq[Array[Double]])],
         Seq[SparkListenerJobStart]) = {
     spark.sparkContext.setLogLevel("WARN")
@@ -127,9 +147,11 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     val slots = spark.sparkContext.defaultParallelism
     val client = new SparkClient(spark, evalPartitions = 3)
     val jobs = new GroupJobs(client.jobGroup)
-    spark.sparkContext.addSparkListener(jobs)
     val holder = new Tagged(0, hold = true)
     try {
+      oneByOne(client, warm)
+      GraftListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(jobs)
       val held = (1 to slots).map { j =>
         val id = client.submit(holder, wave(100 + j, 1))
         JobGate.entered.acquire() // its job holds a slot before the next
@@ -166,6 +188,93 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     assert(jobs == slots + 1, s"expected ${slots + 1} jobs, got $jobs")
     // the coalesced job keeps each wave's min(evalPartitions, |wave|) slices
     assert(starts.map(_.stageInfos.map(_.numTasks).sum).max == sizes.map(math.min(3, _)).sum)
+    assertAligned(costs, waves)
+  }
+
+  test("a burst of submits to idle threads runs each wave as its own job") {
+    spark.sparkContext.setLogLevel("WARN")
+    JobGate.reset()
+    val sc = spark.sparkContext
+    val burst = sc.defaultParallelism - 1
+    val client = new SparkClient(spark)
+    val jobs = new GroupJobs(client.jobGroup)
+    sc.addSparkListener(jobs)
+    val holder = new Tagged(0, hold = true)
+    try {
+      // back to back, so an idle thread wakes only after later waves are
+      // queued; every job holds until all have started
+      val ids = (1 to burst).map(j => client.submit(holder, wave(j, 1)))
+      (1 to burst).foreach(_ => JobGate.entered.acquire())
+      GraftListenerBus.drain(sc)
+      assert(jobs.starts.size == burst, s"expected $burst jobs, got ${jobs.starts.size}")
+      JobGate.release.countDown()
+      val done = Iterator.continually(client.nextBatch(block = true)).flatten.take(burst).toMap
+      assert(done.keySet == ids.toSet)
+    } finally {
+      JobGate.release.countDown()
+      sc.removeSparkListener(jobs)
+      client.shutdown()
+    }
+  }
+
+  test("once estimated, a microsecond objective packs a coalesced job down to its widest wave") {
+    val slots = spark.sparkContext.defaultParallelism
+    // (queued wave sizes, tasks for their job): one-point waves pack into
+    // one task; 12 slices whose widest wave has 3 (evalPartitions) pack
+    // into 3
+    Seq(Seq(1, 1, 1, 1) -> 1, Seq(1, 5, 2, 7, 3) -> 3).foreach { case (sizes, packed) =>
+      val tagged = new Tagged(4, hold = false)
+      val queued = sizes.zipWithIndex.map { case (n, j) => tagged -> wave(j, n) }
+      val (costs, waves, starts) = coalesce(queued, warm = Seq(tagged -> wave(50, 6)))
+      // the queued waves shared one job; the held one-point waves ran one
+      // task each
+      assert(starts.size == slots + 1, s"expected ${slots + 1} jobs, got ${starts.size}")
+      assert(starts.map(tasks).max == packed, s"tasks per job: ${starts.map(tasks)}")
+      assertAligned(costs, waves)
+    }
+  }
+
+  test("once estimated, a costly wave keeps one task per slice, run concurrently") {
+    spark.sparkContext.setLogLevel("WARN")
+    val sleepy = Objective { x =>
+      ConcurrencyGauge.enter()
+      try { Thread.sleep(15); 1000 * x(0) + x(1) }
+      finally ConcurrencyGauge.exit()
+    }
+    val sc = spark.sparkContext
+    val client = new SparkClient(spark, evalPartitions = 4)
+    val jobs = new GroupJobs(client.jobGroup)
+    try {
+      oneByOne(client, Seq(sleepy -> wave(0, 8))) // warm: both estimates exist
+      GraftListenerBus.drain(sc)
+      ConcurrencyGauge.reset()
+      sc.addSparkListener(jobs)
+      val costs = oneByOne(client, Seq(sleepy -> wave(1, 8))).head
+      GraftListenerBus.drain(sc)
+      assert(costs.toSeq == wave(1, 8).map(x => 1000 * x(0) + x(1)))
+      assert(jobs.starts.asScala.toSeq.map(tasks) == Seq(4))
+      assert(ConcurrencyGauge.maxSeen.get() >= 2,
+        s"no overlap: max in-flight evaluations = ${ConcurrencyGauge.maxSeen.get()}")
+    } finally {
+      sc.removeSparkListener(jobs)
+      client.shutdown()
+    }
+  }
+
+  test("once estimated, a costly objective's coalesced job keeps one task per slice") {
+    // Packing to the widest wave alone would run these four one-slice waves
+    // as one task, one point after another. The warm waves also take the
+    // job overhead estimate past a cold JVM's first, slow jobs.
+    val slots = spark.sparkContext.defaultParallelism
+    val costly = new Tagged(5, hold = false, sleepMs = 100)
+    val queued = (0 until 4).map(j => costly -> wave(j, 1))
+    ConcurrencyGauge.reset()
+    val (costs, waves, starts) =
+      coalesce(queued, warm = (0 until 8).map(j => costly -> wave(50 + j, 1)))
+    assert(starts.size == slots + 1, s"expected ${slots + 1} jobs, got ${starts.size}")
+    assert(starts.map(tasks).max == 4, s"tasks per job: ${starts.map(tasks)}")
+    assert(ConcurrencyGauge.maxSeen.get() >= 2,
+      s"no overlap: max in-flight evaluations = ${ConcurrencyGauge.maxSeen.get()}")
     assertAligned(costs, waves)
   }
 
