@@ -121,10 +121,9 @@ object Bench {
     * local[32] agree). The threshold is ~2× that: the r5-style contention
     * this defends against distorted queries 3-9×, far above it. Above the
     * threshold a group's numbers are contention-suspect and the group is
-    * re-run once. Overridable for boxes with different idle cost.
+    * re-run once.
     */
-  private val CalibThresholdSec =
-    sys.env.getOrElse("SPARK_GRAFT_CALIB_MAX_SEC", "0.65").toDouble
+  private val CalibThresholdSec = 0.65
 
   /** A query running slower than this factor times its pinned clean median
     * is treated as contention-distorted and re-run in a fresh child JVM.
@@ -135,8 +134,7 @@ object Bench {
     * round-over-round pin diff catches instead) and far below the 5-30×
     * distortions the r5/r6 contended runs produced.
     */
-  private val PinDistortionFactor =
-    sys.env.getOrElse("SPARK_GRAFT_PIN_FACTOR", "3.0").toDouble
+  private val PinDistortionFactor = 3.0
 
   /** The relative pin check alone misfires on sub-0.3 s queries, where 3×
     * the pin is inside ordinary fresh-JVM jitter (JIT, GC, page cache); a
@@ -144,8 +142,7 @@ object Bench {
     * distorted. Real contention distortions are multi-second; a 0.15 s
     * query drifting to 0.45 s is noise, not signal.
     */
-  private val PinDistortionFloorSec =
-    sys.env.getOrElse("SPARK_GRAFT_PIN_FLOOR_SEC", "0.75").toDouble
+  private val PinDistortionFloorSec = 0.75
 
   /** Second, heavier band closing the dead zone AT the 3× boundary
     * (VERDICT r13 #1: q_bpe_train measured 2.98× its 1.92 s pin — +3.78 s
@@ -156,10 +153,8 @@ object Bench {
     * stays exempt under the higher floor (r13's q_cdc_apply 2.98×/+0.39 s
     * and q_bucketed_join 2.44×/+0.29 s correctly pass both bands).
     */
-  private val PinDistortionFactorHeavy =
-    sys.env.getOrElse("SPARK_GRAFT_PIN_FACTOR_HEAVY", "2.0").toDouble
-  private val PinDistortionFloorHeavySec =
-    sys.env.getOrElse("SPARK_GRAFT_PIN_FLOOR_HEAVY_SEC", "1.5").toDouble
+  private val PinDistortionFactorHeavy = 2.0
+  private val PinDistortionFloorHeavySec = 1.5
 
   /** Shared distortion predicate: either band trips the re-run/flag. */
   private def distorted(v: Double, pin: Double): Boolean =

@@ -221,13 +221,14 @@ object ReferenceOps {
     * driver-side orchestration step, not a data-plane collect); the
     * objective evaluation and the sink write are executor-side. Stated
     * honestly: `foreachBatch` SERIALIZES waves — one wave is in flight
-    * per micro-batch, so occupancy inside a wave comes from
-    * `pointsPerBatch` (its partitions fan out across executors), not
-    * from SparkClient's multi-wave queue; the batch path
+    * per micro-batch, and a wave is one SparkClient task, so each
+    * `pointsPerBatch`-point wave runs on one core in one `applyBatch`
+    * call (SearchStreamSpec pins this). Raising pointsPerBatch makes
+    * waves bigger, not wider; the batch path
     * ([[searchEvals]]/q_search_e2e) is where concurrent-wave occupancy
     * lives. That is the right trade HERE: the stream buys exactly-once
-    * restartable evaluation accounting, and a slow objective scales
-    * inside the wave by raising pointsPerBatch/evalPartitions.
+    * restartable evaluation accounting, not throughput; a slow objective
+    * belongs on the batch path, or vectorizes inside `applyBatch`.
     */
   /** (dims, maxHalvings, pointsPerBatch, start point). dims and
     * maxHalvings are additionally PINNED BY THE ORACLE's shape (it reuses

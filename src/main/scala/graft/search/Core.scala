@@ -127,6 +127,7 @@ final case class SearchOptions(
     /** Observability hook: receives one line per recenter/termination event. */
     trace: Option[String => Unit] = None) {
   require(stopratio > 0 && stopratio < 1, s"stopratio must be in (0,1), got $stopratio")
+  require(maxQueueSize.forall(_ >= 1), s"maxQueueSize must be >= 1, got ${maxQueueSize.get}")
 }
 
 /** Result of a search: the best point plus every evaluation in insertion

@@ -59,6 +59,11 @@ object Search {
 
     val dims = stepsize.length
     require(x0.length == dims, s"x0 and stepsize lengths differ: ${x0.length} vs $dims")
+    // A non-finite start, or a zero or non-finite step, snaps points to a
+    // NaN or infinite grid cell, which the search would return as its best.
+    require(x0.forall(_.isFinite), s"x0 must be finite, got ${x0.mkString("[", ", ", "]")}")
+    require(stepsize.forall(s => s.isFinite && s != 0),
+      s"each stepsize must be finite and non-zero, got ${stepsize.mkString("[", ", ", "]")}")
     val batchsize = opts.batchsize
     require(batchsize.forall(_ >= 1), "batchsize must be >= 1")
 

@@ -14,46 +14,42 @@ import scala.util.control.NonFatal
 /** Spark-backed evaluation client: submitted waves (one trial point, or
   * `batchsize` points — reference search.py:185-201) are evaluated by
   * asynchronous Spark jobs; completed waves land on a completion queue the
-  * driver loop drains.
+  * driver loop drains. This preserves the reference's occupancy model (dask
+  * futures continuously fed to a scheduler, clients.py:9-24) on Spark's job
+  * and task model, in three layers.
   *
-  * This preserves the reference's occupancy model (dask futures continuously
-  * fed to a scheduler, clients.py:9-24) on Spark's job/wave execution model,
-  * with one coalescing rule: at most `defaultParallelism` jobs are in flight
-  * (the figure `capacityHint` reports), one per `graft-spark-eval` thread,
-  * and a thread whose job has ended takes *every* wave queued at that moment
-  * into one job. An idle thread, woken by a submit, takes its share of the
-  * queue, `ceil(queued / free slots)` waves, so a burst of submits while
-  * several threads are idle is spread over them, not folded into one job.
-  * So while fewer waves than free slots are queued each wave is its own
-  * job, and when the queue is deeper the per-job overhead is paid once per
-  * free slot, not once per wave. Folding a burst would report its waves to
-  * the search at once, and the greedy asynchronous acceptance converges
-  * less often the more completions arrive together. Only waves holding
-  * the same `Objective` instance share a job. Completion is reported per
-  * wave, in submission order within a job; completion order across jobs
-  * is free, as in the reference (search.py:299-345).
+  * Waves. A wave is the unit of evaluation: it is one RDD element, and
+  * `Objective.applyBatch` (the vectorized form) receives it whole, in one
+  * call, as the reference hands one batch to one future.
   *
-  * Inside a job each wave keeps its own fan-out: it is cut into
-  * `min(evalPartitions, |wave|)` positional slices (ParallelCollectionRDD's
-  * split), and `Objective.applyBatch` (the vectorized form) receives exactly
-  * one slice — the same slices the wave would get in a job of its own.
-  *
-  * How many tasks carry those slices follows one rule, from measured cost.
-  * Each task times its `applyBatch` calls and returns the nanos with the
-  * costs. The client keeps two running estimates: objective time per point,
-  * per `Objective` instance, and job overhead, the least of its jobs' wall
-  * time minus the longest task's objective time (a wait for a free core
-  * only adds to that sample, so the least one leaves the wait out). A job
-  * of `n` points in `s` slices, whose widest wave has `w` slices, then runs
-  * in `clamp(ceil(n * perPoint / overhead), w, s)` tasks, its slices laid
-  * contiguously in wave order. The floor `w` keeps the fan-out a wave asks
-  * for: a wave alone in its job always runs one task per slice, so packing
-  * only removes the tasks that coalescing waves added. A microsecond
-  * objective packs a job of one-slice waves into one task, so per-task
+  * Tasks. A job's waves, in wave order, are laid contiguously over `k`
+  * tasks, a rule from measured cost. Each task times its `applyBatch` calls
+  * and returns the nanos with the costs. The client keeps two running
+  * estimates: objective time per point, per `Objective` instance, and job
+  * overhead, the least of its jobs' wall time minus the longest task's
+  * objective time (a wait for a free core only adds to that sample, so the
+  * least one leaves the wait out). A job of `n` points in `waves` waves then
+  * runs in `k = clamp(ceil(n * perPoint / overhead), 1, waves)` tasks. A
+  * microsecond objective packs a job into one task, so per-task
   * deserialization is paid once per job; an objective that costs more than
-  * the overhead keeps one task per slice. Until both estimates exist for an
-  * objective (cold start), every slice is its own task. The estimates are
+  * the overhead keeps one task per wave. Until both estimates exist for an
+  * objective (cold start), every wave is its own task. The estimates are
   * dropped by `shutdown()`.
+  *
+  * Jobs. At most `defaultParallelism` jobs are in flight (the figure
+  * `capacityHint` reports), one per `graft-spark-eval` thread. A thread
+  * whose job has ended takes *every* wave queued at that moment into one
+  * job. An idle thread, woken by a submit, takes its share of the queue,
+  * `ceil(queued / free slots)` waves, so a burst of submits while several
+  * threads are idle is spread over them, not folded into one job. So while
+  * fewer waves than free slots are queued each wave is its own job, and
+  * when the queue is deeper the per-job overhead is paid once per free
+  * slot, not once per wave. Folding a burst would report its waves to the
+  * search at once, and the greedy asynchronous acceptance converges less
+  * often the more completions arrive together. Only waves holding the same
+  * `Objective` instance share a job. Completion is reported per wave, in
+  * submission order within a job; completion order across jobs is free,
+  * as in the reference (search.py:299-345).
   *
   * A job is one `SparkContext.runJob` call whose task closure is declared
   * here, not `mapPartitions(...).collect()`. Spark cleans every closure a
@@ -67,9 +63,7 @@ import scala.util.control.NonFatal
   * interrupt-on-cancel; a failed job fails every wave it carried, and
   * `shutdown()` cancels the group, then stops and joins the pool.
   */
-final class SparkClient(
-    spark: SparkSession,
-    evalPartitions: Int = 1) extends EvalClient {
+final class SparkClient(spark: SparkSession) extends EvalClient {
 
   import SparkClient.{Packing, Wave}
 
@@ -125,7 +119,7 @@ final class SparkClient(
     var waves = take(all = false)
     while (waves.nonEmpty) {
       val costs =
-        try Success(SparkClient.evaluate(sc, jobGroup, evalPartitions, packing, waves))
+        try Success(SparkClient.evaluate(sc, jobGroup, packing, waves))
         catch {
           case e: InterruptedException =>
             // shutdown() interrupted the wait: make sure the job it was
@@ -189,13 +183,6 @@ object SparkClient {
   /** Bound on how long `shutdown()` waits for the pool's threads. */
   private val ShutdownWaitSeconds = 10L
 
-  /** `ParallelCollectionRDD`'s positional split of `n` elements into `k`
-    * slices: slice i holds [i*n/k, (i+1)*n/k). */
-  private def slices(points: IndexedSeq[Array[Double]], k: Int): Seq[Array[Array[Double]]] = {
-    val n = points.length
-    (0 until k).map(i => points.slice(i * n / k, (i + 1) * n / k).toArray)
-  }
-
   /** The running estimates behind the packing rule (see the class doc):
     * objective nanos per point, per `Objective` instance, and the client's
     * job overhead in nanos. */
@@ -203,12 +190,11 @@ object SparkClient {
     private val pointNs = new java.util.IdentityHashMap[Objective, java.lang.Double]()
     private var overheadNs = Long.MaxValue
 
-    /** Tasks for a job of `points` points cut into `slices` slices, the
-      * widest wave's `widest` of them. */
-    def tasks(objective: Objective, points: Int, widest: Int, slices: Int): Int = synchronized {
+    /** Tasks for a job of `points` points in `waves` waves. */
+    def tasks(objective: Objective, points: Int, waves: Int): Int = synchronized {
       val perPoint = pointNs.get(objective)
-      if (perPoint == null || overheadNs == Long.MaxValue) slices
-      else math.max(widest, math.min(slices, math.ceil(perPoint * points / overheadNs).toInt))
+      if (perPoint == null || overheadNs == Long.MaxValue) waves
+      else math.max(1, math.min(waves, math.ceil(perPoint * points / overheadNs).toInt))
     }
 
     /** Folds in one job: its points, each task's objective nanos and the
@@ -226,45 +212,34 @@ object SparkClient {
     def clear(): Unit = synchronized { pointNs.clear(); overheadNs = Long.MaxValue }
   }
 
-  /** Evaluates waves sharing one objective in one job under `group`, their
-    * slices packed into as many tasks as `packing` rules; returns each
-    * wave's costs in wave order. */
+  /** Evaluates waves sharing one objective in one job under `group`, in as
+    * many tasks as `packing` rules; returns each wave's costs in wave order. */
   private def evaluate(
       sc: SparkContext,
       group: String,
-      evalPartitions: Int,
       packing: Packing,
       waves: Seq[Wave]): Seq[Array[Double]] = {
     val objective = waves.head.objective
-    val perWave = waves.map(w => slices(w.points, math.max(1, math.min(evalPartitions, w.points.length))))
-    val flat = perWave.flatten
     val points = waves.map(_.points.length).sum
-    val tasks = packing.tasks(objective, points, perWave.map(_.length).max, flat.length)
-    sc.setJobGroup(group,
-      s"graft SparkClient: ${waves.length} wave(s), ${flat.length} slice(s), $tasks task(s)",
+    val tasks = packing.tasks(objective, points, waves.length)
+    sc.setJobGroup(group, s"graft SparkClient: ${waves.length} wave(s), $tasks task(s)",
       interruptOnCancel = true)
     // runJob with this closure only, not mapPartitions(...).collect(): see
     // the class doc. parallelize's positional split keeps each task's
-    // slices contiguous and in wave order.
+    // waves contiguous and in wave order.
     val t0 = System.nanoTime()
-    val results = sc.runJob(sc.parallelize(flat, tasks),
+    val results = sc.runJob(sc.parallelize(waves.map(_.points.toArray), tasks),
       (_: TaskContext, it: Iterator[Array[Array[Double]]]) => {
         var ns = 0L
-        val costs = it.map { slice =>
+        val costs = it.map { wave =>
           val t = System.nanoTime()
-          val c = objective.applyBatch(ArraySeq.unsafeWrapArray(slice))
+          val c = objective.applyBatch(ArraySeq.unsafeWrapArray(wave))
           ns += System.nanoTime() - t
           c
         }.toArray
         (costs, ns)
       })
     packing.record(objective, points, results.map(_._2), System.nanoTime() - t0)
-    val costs = results.flatMap(_._1)
-    var k = 0
-    perWave.map { s =>
-      val c = costs.slice(k, k + s.length).flatten
-      k += s.length
-      c
-    }
+    results.flatMap(_._1).toSeq
   }
 }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `queries/StreamRun.scala`, session confs are scoped only through
   * `queries/Confs.scala`, listener-based profiling lives only in
   * `tools/Profile.scala`, `graft.spark` reads no conf or environment
-  * variable, and one helper is graft's only code in `org.apache.spark.sql`.
+  * variable, one helper is graft's only code in `org.apache.spark.sql`,
+  * and no option splits a `SparkClient` wave.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
@@ -58,6 +59,11 @@ class OnePathSpec extends AnyFunSuite {
     assert(sources.collect {
       case (p, s) if p.startsWith("graft/spark/") && reads.exists(s.contains) => p
     }.isEmpty)
+  }
+
+  test("a wave is SparkClient's one task unit: no evalPartitions option comes back") {
+    assert(sources.exists(_._1.endsWith("graft/spark/SparkClient.scala")))
+    assert(filesWith("evalPartitions").isEmpty)
   }
 
   test("GraftDataFrames is graft's only file in org.apache.spark.sql") {

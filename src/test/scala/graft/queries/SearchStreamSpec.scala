@@ -60,17 +60,16 @@ class SearchStreamSpec extends AnyFunSuite {
     }
   }
 
-  test("intra-wave occupancy: pointsPerBatch=64 with evalPartitions=8 executes 8 partitions per wave") {
-    // VERDICT r14 #2 (carried r13 #4): SCALE.md claims "occupancy inside a
-    // wave comes from pointsPerBatch (its partitions fan out across
-    // executors)" — measure it instead of narrating it. A stencil stream
-    // with a raised pointsPerBatch feeds SparkClient waves whose objective
-    // RETURNS its task's partition id; the distinct ids that come back are
-    // the evaluation partitions that actually EXECUTED executor-side (a
-    // TaskContext only exists inside a running task). Every full 64-point
-    // wave must fan out to all 8 requested partitions.
+  test("every stream wave is evaluated executor-side, in one task") {
+    // A stencil stream at a raised pointsPerBatch feeds SparkClient waves
+    // whose objective RETURNS its task's partition id; the distinct ids that
+    // come back are the evaluation partitions that actually EXECUTED
+    // executor-side (a TaskContext only exists inside a running task). A
+    // wave is one RDD element, so every wave, 64 points or fewer, comes back
+    // from partition 0 alone: occupancy comes from waves in flight, not
+    // from fan-out inside a wave.
     spark.sparkContext.setLogLevel("WARN")
-    val client = new graft.spark.SparkClient(spark, evalPartitions = 8)
+    val client = new graft.spark.SparkClient(spark)
     val waves = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Int], Int)]
     try {
       val objective = graft.search.Objective { _ =>
@@ -108,12 +107,10 @@ class SearchStreamSpec extends AnyFunSuite {
       try q.processAllAvailable()
       finally q.stop()
     } finally client.shutdown()
-    val full = waves.filter(_._3 == 64)
-    assert(full.nonEmpty, s"no full 64-point wave ran (waves: $waves)")
-    full.foreach { case (bid, parts, n) =>
+    assert(waves.exists(_._3 == 64), s"no full 64-point wave ran (waves: $waves)")
+    waves.foreach { case (bid, parts, n) =>
       assert(!parts.contains(-1), s"wave $bid evaluated driver-side, not in tasks")
-      assert(parts == (0 until 8).toSet,
-        s"wave $bid ($n points) executed partitions $parts, expected all of 0..7")
+      assert(parts == Set(0), s"wave $bid ($n points) executed partitions $parts, expected only 0")
     }
   }
 }

@@ -2,6 +2,33 @@ package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Runs waves serially on the caller's thread, like [[SerialClient]], but
+  * reports them `k` at a time: a blocking `nextBatch` evaluates and returns
+  * the `k` oldest queued waves (fewer only when fewer are queued). With
+  * `capacityHint` (4, 1) the default queue holds 5 waves, as on a
+  * four-core SparkClient, so `k` scripts how completions clump.
+  */
+final class ClumpedClient(k: Int) extends EvalClient {
+  private var counter = 0L
+  private val queue =
+    scala.collection.mutable.Queue.empty[(Long, Objective, IndexedSeq[Array[Double]])]
+
+  override def submit(objective: Objective, points: IndexedSeq[Array[Double]]): Long = {
+    counter += 1
+    queue.enqueue((counter, objective, points))
+    counter
+  }
+
+  override def hasResults: Boolean = false
+
+  override def nextBatch(block: Boolean): Seq[(Long, Array[Double])] =
+    if (!block) Nil
+    else Seq.fill(math.min(k, queue.size))(queue.dequeue())
+      .map { case (id, obj, points) => (id, obj.applyBatch(points)) }
+
+  override def capacityHint: Option[(Int, Int)] = Some((4, 1))
+}
+
 /** Port of the reference's convergence tests
   * (/root/reference/dask_patternsearch/tests/test_search.py) against the
   * SerialClient, plus the measured baselines from BASELINE.md.
@@ -198,6 +225,41 @@ class SearchSpec extends AnyFunSuite {
     assert(Search.maxHalvingsFor(0.01) == 7)
     assert(Search.maxHalvingsFor(1e-4) == 14)
     assert(Search.maxHalvingsFor(0.5) == 2)
+  }
+
+  test("completion clumping: seed 14 converges one wave at a time, not four at a time") {
+    // Greedy asynchronous acceptance (search.py:299-345) depends on how
+    // completions arrive together. Over seeds 1-400 of this search, 1 fails
+    // to converge when waves complete one at a time and 42 when they
+    // complete four at a time; seed 14 is one of the 42.
+    def search(k: Int): SearchResult =
+      Search.minimize(sphere, x0, ones, new ClumpedClient(k),
+        SearchOptions(stopratio = stopratio, batchsize = Some(6), seed = Some(14)))
+    val alone = search(1)
+    assertConverged(alone, Array(0.0, 0.0), 2 * stopratio)
+    assert(alone.evaluations.size % 6 == 0)
+    val clumped = search(4)
+    assertGlobalBest(clumped)
+    assert(clumped.evaluations.size % 6 == 0)
+    assert(clumped.best.point.exists(v => math.abs(v) >= 2 * stopratio),
+      s"four-at-a-time completions converged: best=${clumped.best}")
+  }
+
+  test("malformed inputs are rejected, not searched") {
+    for (q <- Seq(0, -3))
+      intercept[IllegalArgumentException](SearchOptions(maxQueueSize = Some(q)))
+    val opts = SearchOptions(stopratio = stopratio, seed = Some(83))
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      intercept[IllegalArgumentException](
+        Search.minimize(sphere, Array(bad, 15.0), ones, new SerialClient, opts))
+      intercept[IllegalArgumentException](
+        Search.minimize(sphere, x0, Array(bad, 1.0), new SerialClient, opts))
+    }
+    intercept[IllegalArgumentException](
+      Search.minimize(sphere, x0, Array(0.0, 1.0), new SerialClient, opts))
+    // a negative step is a direction, not an error
+    val res = Search.minimize(sphere, x0, Array(-1.0, 1.0), new SerialClient, opts)
+    assertConverged(res, Array(0.0, 0.0), 2 * stopratio)
   }
 
   test("feasibility hook: sphere under a box constraint (search.py:281-283 TODO)") {

@@ -44,13 +44,20 @@ object JobGate {
   }
 }
 
+/** An objective whose costs for a wave, evaluated in one `applyBatch`
+  * call, are known on the driver. */
+trait Known extends Objective {
+  def expected(wave: IndexedSeq[Array[Double]]): Seq[Double]
+}
+
 /** Encodes a point (wave j, index i) as `tag * 1e6 + 1000 j + i`, records
   * its tag against the stage evaluating it and, when `hold`, blocks until
   * the gate opens. A positive `sleepMs` makes each point take that long,
   * counted in [[ConcurrencyGauge]].
   */
-final class Tagged(tag: Int, hold: Boolean, sleepMs: Long = 0) extends Objective {
+final class Tagged(tag: Int, hold: Boolean, sleepMs: Long = 0) extends Known {
   def code(x: Array[Double]): Double = tag * 1e6 + 1000 * x(0) + x(1)
+  def expected(wave: IndexedSeq[Array[Double]]): Seq[Double] = wave.map(code)
   def apply(x: Array[Double]): Double = {
     JobGate.tagsByStage
       .computeIfAbsent(TaskContext.get().stageId(), _ => new ConcurrentLinkedQueue[Int]())
@@ -62,6 +69,16 @@ final class Tagged(tag: Int, hold: Boolean, sleepMs: Long = 0) extends Objective
     }
     code(x)
   }
+}
+
+/** Costs a point 100 times the size of the batch it arrived in, plus its
+  * index: a wave reaching `applyBatch` whole in one call costs
+  * `100 |wave| + i`. */
+final class BatchSizes extends Known {
+  def apply(x: Array[Double]): Double = applyBatch(IndexedSeq(x))(0)
+  override def applyBatch(xs: IndexedSeq[Array[Double]]): Array[Double] =
+    xs.map(x => 100.0 * xs.length + x(1)).toArray
+  def expected(wave: IndexedSeq[Array[Double]]): Seq[Double] = applyBatch(wave).toSeq
 }
 
 /** Collects the lines (DEBUG and up) one logger writes on `graft-spark-eval`
@@ -138,14 +155,14 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     * the warm-up.
     */
   private def coalesce(
-      queuedWaves: Seq[(Tagged, IndexedSeq[Array[Double]])],
-      warm: Seq[(Tagged, IndexedSeq[Array[Double]])] = Nil)
-      : (Map[Long, Array[Double]], Map[Long, (Tagged, IndexedSeq[Array[Double]])],
+      queuedWaves: Seq[(Known, IndexedSeq[Array[Double]])],
+      warm: Seq[(Known, IndexedSeq[Array[Double]])] = Nil)
+      : (Map[Long, Array[Double]], Map[Long, (Known, IndexedSeq[Array[Double]])],
         Seq[SparkListenerJobStart]) = {
     spark.sparkContext.setLogLevel("WARN")
     JobGate.reset()
     val slots = spark.sparkContext.defaultParallelism
-    val client = new SparkClient(spark, evalPartitions = 3)
+    val client = new SparkClient(spark)
     val jobs = new GroupJobs(client.jobGroup)
     val holder = new Tagged(0, hold = true)
     try {
@@ -173,9 +190,9 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
 
   private def assertAligned(
       costs: Map[Long, Array[Double]],
-      waves: Map[Long, (Tagged, IndexedSeq[Array[Double]])]): Unit =
+      waves: Map[Long, (Known, IndexedSeq[Array[Double]])]): Unit =
     waves.foreach { case (id, (objective, points)) =>
-      assert(costs(id).toSeq == points.map(objective.code), s"wave $id costs do not match its points")
+      assert(costs(id).toSeq == objective.expected(points), s"wave $id costs do not match its points")
     }
 
   test("queued waves coalesce into one job per free slot, each wave sliced as alone") {
@@ -186,8 +203,9 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     val slots = spark.sparkContext.defaultParallelism
     val jobs = starts.size
     assert(jobs == slots + 1, s"expected ${slots + 1} jobs, got $jobs")
-    // the coalesced job keeps each wave's min(evalPartitions, |wave|) slices
-    assert(starts.map(_.stageInfos.map(_.numTasks).sum).max == sizes.map(math.min(3, _)).sum)
+    // with no estimate yet (cold start) the coalesced job runs one task per
+    // wave, each wave in one applyBatch call as it would be alone
+    assert(starts.map(tasks).max == sizes.length, s"tasks per job: ${starts.map(tasks)}")
     assertAligned(costs, waves)
   }
 
@@ -219,52 +237,23 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
 
   test("once estimated, a microsecond objective packs a coalesced job down to its widest wave") {
     val slots = spark.sparkContext.defaultParallelism
-    // (queued wave sizes, tasks for their job): one-point waves pack into
-    // one task; 12 slices whose widest wave has 3 (evalPartitions) pack
-    // into 3
-    Seq(Seq(1, 1, 1, 1) -> 1, Seq(1, 5, 2, 7, 3) -> 3).foreach { case (sizes, packed) =>
+    // one-point waves and waves of several points alike pack into one task
+    Seq(Seq(1, 1, 1, 1), Seq(1, 5, 2, 7, 3)).foreach { sizes =>
       val tagged = new Tagged(4, hold = false)
       val queued = sizes.zipWithIndex.map { case (n, j) => tagged -> wave(j, n) }
       val (costs, waves, starts) = coalesce(queued, warm = Seq(tagged -> wave(50, 6)))
       // the queued waves shared one job; the held one-point waves ran one
       // task each
       assert(starts.size == slots + 1, s"expected ${slots + 1} jobs, got ${starts.size}")
-      assert(starts.map(tasks).max == packed, s"tasks per job: ${starts.map(tasks)}")
+      assert(starts.map(tasks).max == 1, s"tasks per job: ${starts.map(tasks)}")
       assertAligned(costs, waves)
     }
   }
 
-  test("once estimated, a costly wave keeps one task per slice, run concurrently") {
-    spark.sparkContext.setLogLevel("WARN")
-    val sleepy = Objective { x =>
-      ConcurrencyGauge.enter()
-      try { Thread.sleep(15); 1000 * x(0) + x(1) }
-      finally ConcurrencyGauge.exit()
-    }
-    val sc = spark.sparkContext
-    val client = new SparkClient(spark, evalPartitions = 4)
-    val jobs = new GroupJobs(client.jobGroup)
-    try {
-      oneByOne(client, Seq(sleepy -> wave(0, 8))) // warm: both estimates exist
-      GraftListenerBus.drain(sc)
-      ConcurrencyGauge.reset()
-      sc.addSparkListener(jobs)
-      val costs = oneByOne(client, Seq(sleepy -> wave(1, 8))).head
-      GraftListenerBus.drain(sc)
-      assert(costs.toSeq == wave(1, 8).map(x => 1000 * x(0) + x(1)))
-      assert(jobs.starts.asScala.toSeq.map(tasks) == Seq(4))
-      assert(ConcurrencyGauge.maxSeen.get() >= 2,
-        s"no overlap: max in-flight evaluations = ${ConcurrencyGauge.maxSeen.get()}")
-    } finally {
-      sc.removeSparkListener(jobs)
-      client.shutdown()
-    }
-  }
-
-  test("once estimated, a costly objective's coalesced job keeps one task per slice") {
-    // Packing to the widest wave alone would run these four one-slice waves
-    // as one task, one point after another. The warm waves also take the
-    // job overhead estimate past a cold JVM's first, slow jobs.
+  test("once estimated, a costly objective's coalesced job keeps one task per wave") {
+    // Packing every job into one task would run these four one-point waves
+    // one after another. The warm waves also take the job overhead
+    // estimate past a cold JVM's first, slow jobs.
     val slots = spark.sparkContext.defaultParallelism
     val costly = new Tagged(5, hold = false, sleepMs = 100)
     val queued = (0 until 4).map(j => costly -> wave(j, 1))
@@ -326,16 +315,23 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
   }
 
   test("each wave slice reaches applyBatch whole, in wave order") {
-    // cost = 100 * size of the batch the point arrived in + its index
-    val batchSizes = Objective.vectorized(xs => xs.map(x => 100.0 * xs.length + x(1)).toArray)
-    val client = new SparkClient(spark, evalPartitions = 3)
+    // A wave is one slice: alone, a 7-point wave is one call.
+    val sizes = new BatchSizes
+    val client = new SparkClient(spark)
     try {
-      val id = client.submit(batchSizes, wave(0, 7))
+      val id = client.submit(sizes, wave(0, 7))
       val costs = Iterator.continually(client.nextBatch(block = true)).flatten.next()
-      // ParallelCollectionRDD's positional split of 7 points into 3 slices
       assert(costs._1 == id)
-      assert(costs._2.toSeq == Seq(200, 201, 202, 203, 304, 305, 306).map(_.toDouble))
+      assert(costs._2.toSeq == (700 to 706).map(_.toDouble))
     } finally client.shutdown()
+    // Packed: a coalesced job of five waves runs in one task, and each wave
+    // still arrives whole, in its own call.
+    val slots = spark.sparkContext.defaultParallelism
+    val queued = Seq(1, 5, 2, 7, 3).zipWithIndex.map { case (n, j) => sizes -> wave(j, n) }
+    val (packed, waves, starts) = coalesce(queued, warm = Seq(sizes -> wave(50, 6)))
+    assert(starts.size == slots + 1, s"expected ${slots + 1} jobs, got ${starts.size}")
+    assert(starts.map(tasks).max == 1, s"tasks per job: ${starts.map(tasks)}")
+    assertAligned(packed, waves)
   }
 
   test("an evaluation job has Spark clean one closure: graft's own") {
