@@ -113,7 +113,7 @@ object Bench {
     case c => c.toString
   } + "\""
 
-  /** Core count for every harness main (Bench, Verify, Profile). */
+  /** Core count for every harness main (Bench, Verify, Profile, PlanDump). */
   private[graft] def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** Idle-box cost of [[calibrate]] is ~0.32 s steady-state (measured round

@@ -128,6 +128,7 @@ final case class SearchOptions(
     trace: Option[String => Unit] = None) {
   require(stopratio > 0 && stopratio < 1, s"stopratio must be in (0,1), got $stopratio")
   require(maxQueueSize.forall(_ >= 1), s"maxQueueSize must be >= 1, got ${maxQueueSize.get}")
+  require(maxTasks.forall(_ >= 1), s"maxTasks must be >= 1, got ${maxTasks.get}")
 }
 
 /** Result of a search: the best point plus every evaluation in insertion

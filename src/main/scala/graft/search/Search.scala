@@ -64,8 +64,12 @@ object Search {
     require(x0.forall(_.isFinite), s"x0 must be finite, got ${x0.mkString("[", ", ", "]")}")
     require(stepsize.forall(s => s.isFinite && s != 0),
       s"each stepsize must be finite and non-zero, got ${stepsize.mkString("[", ", ", "]")}")
+    require(opts.integerDimensions.forall(i => i >= 0 && i < dims),
+      s"integerDimensions must lie in [0, $dims), got ${opts.integerDimensions.mkString("[", ", ", "]")}")
     val batchsize = opts.batchsize
     require(batchsize.forall(_ >= 1), "batchsize must be >= 1")
+    // Unbatched points go out one per wave.
+    val waveSize = batchsize.getOrElse(1)
 
     // Queue-size defaults tied to cluster capacity (search.py:133-141).
     var maxQueueSize = opts.maxQueueSize.getOrElse {
@@ -86,24 +90,12 @@ object Search {
     // Per-dimension evaluation lattice (search.py:151, 159-160); snapping
     // makes point identity exact so memoization is sound.
     val gridsize = stepsize.map(_ / math.pow(2.0, maxHalvings))
-    def toGrid(x: Array[Double]): Array[Double] = {
-      val out = new Array[Double](dims)
-      var i = 0
-      while (i < dims) { out(i) = math.rint(x(i) / gridsize(i)) * gridsize(i) + 0.0; i += 1 }
-      out
-    }
+    def snap(x: Double, i: Int): Double = math.rint(x / gridsize(i)) * gridsize(i) + 0.0
+    def toGrid(x: Array[Double]): Array[Double] = Array.tabulate(dims)(i => snap(x(i), i))
 
-    val intDims: Array[Boolean] = {
-      val m = new Array[Boolean](dims)
-      opts.integerDimensions.foreach(i => m(i) = true)
-      m
-    }
-    val hasIntDims = opts.integerDimensions.nonEmpty
-    val start0 = x0.clone()
-    if (hasIntDims) {
-      var i = 0
-      while (i < dims) { if (intDims(i)) start0(i) = math.rint(start0(i)); i += 1 }
-    }
+    val intDims = new Array[Boolean](dims)
+    opts.integerDimensions.foreach(i => intDims(i) = true)
+    val start0 = Array.tabulate(dims)(i => if (intDims(i)) math.rint(x0(i)) else x0(i))
 
     def now(): Double = System.nanoTime() / 1e9
 
@@ -118,31 +110,26 @@ object Search {
     val endTime = opts.maxTime.map(now() + _)
     val currentBatch = mutable.ArrayBuffer.empty[TrialPoint]
     val running = mutable.HashMap.empty[Long, IndexedSeq[TrialPoint]]
-    val processing = mutable.ArrayBuffer.empty[(TrialPoint, Double)]
+    // Collected (point, cost) pairs not yet committed, in arrival order.
+    val completed = mutable.ArrayBuffer.empty[(TrialPoint, Double)]
     val results = mutable.LinkedHashMap.empty[ArraySeq[Double], TrialPoint]
     val contractConditions = mutable.HashSet.empty[ArraySeq[Double]]
-    var nextPoint: TrialPoint = null
-    var nextCost = Double.NaN
+    var isFinished = false
 
+    // Every point, x0 included, joins the current wave and counts toward
+    // maxTasks, which caps submitted waves.
     def submitPoint(p: TrialPoint): Unit = {
       results(p.key) = p
-      batchsize match {
-        case None =>
-          val id = client.submit(objective, IndexedSeq(p.point))
-          running(id) = IndexedSeq(p)
-        case Some(b) =>
-          currentBatch += p
-          if (currentBatch.length >= b) {
-            val batch = currentBatch.toIndexedSeq
-            val id = client.submit(objective, batch.map(_.point))
-            running(id) = batch
-            currentBatch.clear()
-          }
+      currentBatch += p
+      if (currentBatch.length >= waveSize) {
+        val batch = currentBatch.toIndexedSeq
+        running(client.submit(objective, batch.map(_.point))) = batch
+        currentBatch.clear()
       }
+      if (opts.maxTasks.exists(results.size / waveSize >= _)) isFinished = true
     }
 
     submitPoint(curPoint)
-    var isFinished = false
     var curStepsize: Array[Double] = null
     var stencilIter: Iterator[StencilStep] = Iterator.empty
     var stencilIndex = 0L
@@ -150,7 +137,7 @@ object Search {
 
     val loopBreaks = new Breaks
 
-    while (!isFinished || running.nonEmpty || nextPoint != null || newPoint != null) {
+    while (!isFinished || running.nonEmpty || completed.nonEmpty || newPoint != null) {
       if (endTime.exists(now() > _)) isFinished = true
 
       // (Re)center on acceptance or contraction (search.py:209-238)
@@ -178,15 +165,9 @@ object Search {
         newCost = Double.NaN
         curStepsize = toGrid(Array.tabulate(dims)(i =>
           orientation(i) * stepsize(i) / math.pow(2.0, curPoint.halvings)))
-        if (hasIntDims) {
-          // Integer dims never step finer than 1 (search.py:226-229)
-          var i = 0
-          while (i < dims) {
-            if (intDims(i) && curStepsize(i) < 0 && curStepsize(i) > -1) curStepsize(i) = -1
-            else if (intDims(i) && curStepsize(i) > 0 && curStepsize(i) < 1) curStepsize(i) = 1
-            i += 1
-          }
-        }
+        // Integer dims never step finer than 1 (search.py:226-229)
+        for (i <- 0 until dims if intDims(i) && math.abs(curStepsize(i)) < 1)
+          curStepsize(i) = math.signum(curStepsize(i))
         curAdded = 0
         contractConditions.clear()
         var it: Iterator[StencilStep] = stencil.stencilPoints
@@ -197,71 +178,57 @@ object Search {
       }
 
       // Fill the task queue with trial points (search.py:240-297)
-      if (!isFinished) {
-        loopBreaks.breakable {
-          while (running.size < maxQueueSize && stencilIndex < maxStencilSize &&
-            (running.size < minQueueSize || curAdded < opts.minNewSubmit ||
-              (nextPoint == null && !client.hasResults))) {
-            if (!stencilIter.hasNext) {
-              // Stencil exhausted (search.py:253-257) — freeze its size
-              if (stencilIndex < 2 * dims)
-                throw new IllegalStateException("stencil exhausted before 2*dims points")
-              maxStencilSize = stencilIndex
-              loopBreaks.break()
-            }
-            val step = stencilIter.next()
-            stencilIndex += 1
-            if (curAdded >= opts.minNewSubmit && stencilIndex > 2 * dims &&
-              contractConditions.isEmpty) {
-              // All 2d axial probes evaluated, no improvement: contract
-              // (search.py:259-265)
-              isContraction = true
-              loopBreaks.break()
-            }
-            var halvings = step.halvings + curPoint.halvings
-            val dx = new Array[Double](dims)
-            var i = 0
-            while (i < dims) { dx(i) = step.offset(i) * curStepsize(i); i += 1 }
-            val trial: Array[Double] =
-              if (hasIntDims) {
-                // Integer steps round away from zero (search.py:268-276)
-                i = 0
-                while (i < dims) {
-                  if (intDims(i)) dx(i) = Math.copySign(math.ceil(math.abs(dx(i))), dx(i))
-                  i += 1
-                }
-                val t = toGrid(Array.tabulate(dims)(j => curPoint.point(j) + dx(j)))
-                var intOnly = true
-                i = 0
-                while (i < dims) {
-                  if (intDims(i)) t(i) = math.rint(t(i))
-                  else if (dx(i) != 0) intOnly = false
-                  i += 1
-                }
-                // An all-integer step must not shrink the stencil scale
-                if (step.halvings > 0 && intOnly) halvings = curPoint.halvings
-                t
-              } else toGrid(Array.tabulate(dims)(j => curPoint.point(j) + dx(j)))
+      loopBreaks.breakable {
+        while (!isFinished && running.size < maxQueueSize && stencilIndex < maxStencilSize &&
+          (running.size < minQueueSize || curAdded < opts.minNewSubmit ||
+            (completed.isEmpty && !client.hasResults))) {
+          if (!stencilIter.hasNext) {
+            // Stencil exhausted (search.py:253-257) — freeze its size
+            if (stencilIndex < 2 * dims)
+              throw new IllegalStateException("stencil exhausted before 2*dims points")
+            maxStencilSize = stencilIndex
+            loopBreaks.break()
+          }
+          val step = stencilIter.next()
+          stencilIndex += 1
+          if (curAdded >= opts.minNewSubmit && stencilIndex > 2 * dims &&
+            contractConditions.isEmpty) {
+            // All 2d axial probes evaluated, no improvement: contract
+            // (search.py:259-265)
+            isContraction = true
+            loopBreaks.break()
+          }
+          // Integer steps round away from zero and land on integers; an
+          // all-integer step must not shrink the stencil scale
+          // (search.py:268-276).
+          var halvings = step.halvings + curPoint.halvings
+          var intOnly = true
+          val trial = new Array[Double](dims)
+          var i = 0
+          while (i < dims) {
+            var dx = step.offset(i) * curStepsize(i)
+            if (intDims(i)) dx = Math.copySign(math.ceil(math.abs(dx)), dx)
+            else if (dx != 0) intOnly = false
+            trial(i) = snap(curPoint.point(i) + dx, i)
+            if (intDims(i)) trial(i) = math.rint(trial(i))
+            i += 1
+          }
+          if (step.halvings > 0 && intOnly) halvings = curPoint.halvings
 
-            // Feasibility hook (search.py:281-283's commented-out TODO):
-            // an infeasible trial is skipped before it can become a
-            // contract condition or a submission.
-            if (halvings <= maxHalvings && opts.feasible.forall(_(trial))) {
-              val key = ArraySeq.unsafeWrapArray(trial)
-              val existing = results.get(key)
-              val pending = existing.isEmpty || !existing.get.isDone
-              if (stencilIndex <= 2 * dims && pending) contractConditions += key
-              if (existing.isEmpty) {
-                val tp = new TrialPoint(trial, halvings)
-                tp.parent = curPoint
-                tp.startTime = now()
-                submitPoint(tp)
-                curAdded += 1
-                if (opts.maxTasks.exists(results.size / batchsize.getOrElse(1) >= _)) {
-                  isFinished = true
-                  loopBreaks.break()
-                }
-              }
+          // Feasibility hook (search.py:281-283's commented-out TODO):
+          // an infeasible trial is skipped before it can become a
+          // contract condition or a submission.
+          if (halvings <= maxHalvings && opts.feasible.forall(_(trial))) {
+            val key = ArraySeq.unsafeWrapArray(trial)
+            val existing = results.get(key)
+            val pending = existing.isEmpty || !existing.get.isDone
+            if (stencilIndex <= 2 * dims && pending) contractConditions += key
+            if (existing.isEmpty) {
+              val tp = new TrialPoint(trial, halvings)
+              tp.parent = curPoint
+              tp.startTime = now()
+              submitPoint(tp)
+              curAdded += 1
             }
           }
         }
@@ -272,59 +239,50 @@ object Search {
         // nothing else to do (search.py:299-324)
         if (running.nonEmpty) {
           val block = running.size >= maxQueueSize ||
-            (nextPoint == null && (isFinished || stencilIndex >= maxStencilSize))
+            (completed.isEmpty && (isFinished || stencilIndex >= maxStencilSize))
           for ((id, costs) <- client.nextBatch(block)) {
             val stopT = now()
             val points = running.remove(id).getOrElse(
               throw new IllegalStateException(s"unknown future id $id"))
-            var i = 0
-            while (i < points.length) {
-              val p = points(i)
+            for (i <- points.indices) {
+              points(i).stopTime = stopT
               // NaN ranks as worst (see Objective): `c < NaN` is always
               // false, so a NaN candidate would hide the rest of its wave.
-              val c = if (costs(i).isNaN) Double.PositiveInfinity else costs(i)
-              p.stopTime = stopT
-              if (nextPoint == null) { nextPoint = p; nextCost = c }
-              else if (c < nextCost) {
-                processing += ((nextPoint, nextCost)); nextPoint = p; nextCost = c
-              } else processing += ((p, c))
-              i += 1
+              completed += ((points(i), if (costs(i).isNaN) Double.PositiveInfinity else costs(i)))
             }
           }
         }
 
-        // Greedy commit: lowest completed cost becomes the center candidate
-        // (search.py:326-358)
-        if (nextPoint != null && (curAdded >= opts.minNewSubmit ||
+        // Greedy commit: the first lowest completed cost becomes the center
+        // candidate (search.py:326-358). IEEE `<`, not a total ordering: a
+        // later -0.0 does not displace an earlier 0.0.
+        if (completed.nonEmpty && (curAdded >= opts.minNewSubmit ||
           stencilIndex >= maxStencilSize || isFinished)) {
-          nextPoint.cost = nextCost
-          nextPoint.isDone = true
-          contractConditions -= nextPoint.key
-          if (nextCost < curCost) {
-            nextPoint.isAccepted = true
+          var (best, bestCost) = completed.head
+          for ((p, c) <- completed) {
+            p.cost = c
+            p.isDone = true
+            contractConditions -= p.key
+            if (c < bestCost) { best = p; bestCost = c }
+          }
+          completed.clear()
+          if (bestCost < curCost) {
+            best.isAccepted = true
             // Orient the asymmetric stencil toward expected descent
             // (search.py:336-343): sign vote from both parent deltas.
             var i = 0
             while (i < dims) {
-              val diff = (nextPoint.point(i) - nextPoint.parent.point(i)) +
+              val diff = (best.point(i) - best.parent.point(i)) +
                 (curPoint.point(i) - curPoint.parent.point(i))
               if (diff != 0) orientation(i) = Math.copySign(orientation(i), diff)
               i += 1
             }
-            newPoint = nextPoint
-            newCost = nextCost
-          }
-          for ((p, c) <- processing) {
-            p.cost = c
-            p.isDone = true
-            contractConditions -= p.key
+            newPoint = best
+            newCost = bestCost
           }
           if (newPoint == null && contractConditions.isEmpty && stencilIndex > 2 * dims)
             isContraction = true
-          nextPoint = null
-          nextCost = Double.NaN
-          processing.clear()
-        } else if (nextPoint == null && stencilIndex >= maxStencilSize &&
+        } else if (completed.isEmpty && stencilIndex >= maxStencilSize &&
           running.isEmpty && !isFinished) {
           // Nothing running, nothing to process, nothing to submit: contract
           isContraction = true

@@ -46,13 +46,6 @@ final class RightHandedSimplexStencil(val dims: Int, val maxHalvings: Int) {
     */
   def toGrid(x: Double): Double = math.rint(x / gridsize) * gridsize + 0.0
 
-  private def toGrid(xs: Array[Double]): Array[Double] = {
-    val out = new Array[Double](xs.length)
-    var i = 0
-    while (i < xs.length) { out(i) = toGrid(xs(i)); i += 1 }
-    out
-  }
-
   // A simplex is a (dims+1) x dims matrix of small ints, stored flat
   // row-major and interned so structural identity checks are cheap
   // (the reference interns raw int8 bytes, stencil.py:100-110).
@@ -109,60 +102,40 @@ final class RightHandedSimplexStencil(val dims: Int, val maxHalvings: Int) {
     def toStep: StencilStep = StencilStep(point, halvings)
   }
 
-  private def mkNode(
-      coords: Array[Double],
-      parentSimplex: Simplex, parentStep: Double, parentHalvings: Int,
-      parentIsReflect: Boolean, parentIsDoubled: Boolean,
-      index: Int, isReflect: Boolean, isContract: Boolean): Node = {
+  /** Vertex `i` of `p`'s simplex scaled about `p`:
+    * `point + scale * stepsize * simplex[i]`, grid-snapped. Scale 1 is a
+    * child (stencil.py:32-34), -1 a reflection (stencil.py:36-40) and 0.5 a
+    * contraction (stencil.py:42-46).
+    */
+  private def vertex(p: Node, i: Int, scale: Double): Node = {
+    val step = scale * p.stepsize
+    val coords = Array.tabulate(dims)(c => toGrid(p.point(c) + step * p.simplex(i * dims + c)))
+    val isReflect = scale < 0
     // Step doubling: a reflect-of-reflect at vertex 1 expands the step
     // (stencil.py:17-23) — this is why halvings can go negative.
-    val isDoubled = isReflect && parentIsReflect && index == 1 && !parentIsDoubled
-    var stepsize = parentStep
-    var halvings = parentHalvings
-    if (isContract) { stepsize = toGrid(0.5 * stepsize); halvings += 1 }
+    val isDoubled = isReflect && p.isReflect && i == 1 && !p.isDoubled
+    var stepsize = p.stepsize
+    var halvings = p.halvings
+    if (scale == 0.5) { stepsize = toGrid(step); halvings += 1 }
     else if (isDoubled) { stepsize = toGrid(2.0 * stepsize); halvings -= 1 }
-    val simplex = childSimplex(parentSimplex, index, isReflect)
-    val snapped = coords // callers pass already-snapped coords
-    new Node(snapped, ArraySeq.unsafeWrapArray(snapped), stepsize, halvings,
-      index, isReflect, isDoubled, simplex)
+    new Node(coords, ArraySeq.unsafeWrapArray(coords), stepsize, halvings,
+      i, isReflect, isDoubled, childSimplex(p.simplex, i, isReflect))
   }
 
-  private def row(s: Simplex, r: Int): Int => Int = c => s(r * dims + c)
+  /** Non-origin vertices of the simplex (stencil.py:32-34). */
+  private def childPoints(p: Node): IndexedSeq[Node] = (1 to dims).map(vertex(p, _, 1.0))
 
-  /** Non-origin vertices of the simplex: `point + stepsize * simplex[1..d]`
-    * (stencil.py:32-34).
-    */
-  private def childPoints(p: Node): IndexedSeq[Node] =
-    (1 to dims).map { i =>
-      val rw = row(p.simplex, i)
-      val coords = toGrid(Array.tabulate(dims)(c => p.point(c) + p.stepsize * rw(c)))
-      mkNode(coords, p.simplex, p.stepsize, p.halvings, p.isReflect, p.isDoubled,
-        i, isReflect = false, isContract = false)
-    }
-
-  /** Mirror children `point - stepsize * simplex[i]`; a pure re-reflection at
-    * vertex 0 of an (undoubled) reflection is suppressed (stencil.py:36-40).
+  /** Mirror children; a pure re-reflection at vertex 0 of an (undoubled)
+    * reflection is suppressed (stencil.py:36-40).
     */
   private def reflections(p: Node): IndexedSeq[Node] =
     if (p.index == 0 && p.isReflect && !p.isDoubled) IndexedSeq.empty
-    else (0 to dims).map { i =>
-      val rw = row(p.simplex, i)
-      val coords = toGrid(Array.tabulate(dims)(c => p.point(c) - p.stepsize * rw(c)))
-      mkNode(coords, p.simplex, p.stepsize, p.halvings, p.isReflect, p.isDoubled,
-        i, isReflect = true, isContract = false)
-    }
+    else (0 to dims).map(vertex(p, _, -1.0))
 
-  /** Half-step children `point + 0.5 * stepsize * simplex[i]`, bounded by
-    * `maxHalvings` (stencil.py:42-46).
-    */
+  /** Half-step children, bounded by `maxHalvings` (stencil.py:42-46). */
   private def contractions(p: Node): IndexedSeq[Node] =
     if (p.halvings > maxHalvings) IndexedSeq.empty
-    else (0 to dims).map { i =>
-      val rw = row(p.simplex, i)
-      val coords = toGrid(Array.tabulate(dims)(c => p.point(c) + 0.5 * p.stepsize * rw(c)))
-      mkNode(coords, p.simplex, p.stepsize, p.halvings, p.isReflect, p.isDoubled,
-        i, isReflect = false, isContract = true)
-    }
+    else (0 to dims).map(vertex(p, _, 0.5))
 
   /** Round-robin across children sequences, column by column — the order
     * toolz.interleave produces (stencil.py:156-161 fairness across queues).
@@ -187,75 +160,47 @@ final class RightHandedSimplexStencil(val dims: Int, val maxHalvings: Int) {
     private val seen = mutable.HashSet.empty[(ArraySeq[Double], Simplex, Int, Int, Boolean, Boolean)]
     private val firstSeen = mutable.HashSet.empty[ArraySeq[Double]]
 
-    private var selfReflect = List.empty[Node]
-    private var mirrorReflect = List.empty[Node]
-    private var reflect = List.empty[Node]
-    private var selfContract = List.empty[Node]
-    private var contract = List.empty[Node]
+    // The five BFS queues, in round order: self-reflections (vertex 0),
+    // mirror reflections (vertex 1), other reflections, self-contractions
+    // (vertex 0), other contractions.
+    private var queues: IndexedSeq[List[Node]] = IndexedSeq.fill(5)(Nil)
 
     private var out: Iterator[StencilStep] = Iterator.empty
 
     locally {
-      val origin = toGrid(new Array[Double](dims))
-      val root = mkNode(origin, initialSimplex, 1.0, 0,
-        parentIsReflect = false, parentIsDoubled = false,
-        index = 0, isReflect = false, isContract = false)
+      val origin = new Array[Double](dims)
+      val root = new Node(origin, ArraySeq.unsafeWrapArray(origin), 1.0, 0,
+        index = 0, isReflect = false, isDoubled = false, initialSimplex)
       seen += root.identity
       firstSeen += root.pointKey
       val first = childPoints(root) // the d positive axial steps
       first.foreach { p => firstSeen += p.pointKey; seen += p.identity }
-      selfContract = List(root)
+      queues = IndexedSeq(Nil, Nil, Nil, List(root), Nil) // root seeds self-contractions
       out = first.iterator.map(_.toStep)
     }
 
     private def advanceRound(): Unit = {
-      val queues = Seq(selfReflect, mirrorReflect, reflect, selfContract, contract)
       val emitted = mutable.ArrayBuffer.empty[StencilStep]
-      val nextSelfReflect = mutable.ListBuffer.empty[Node]
-      val nextMirrorReflect = mutable.ListBuffer.empty[Node]
-      val nextReflect = mutable.ListBuffer.empty[Node]
-      val nextSelfContract = mutable.ListBuffer.empty[Node]
-      val nextContract = mutable.ListBuffer.empty[Node]
-
-      // Reflections pass (stencil.py:156-176)
-      for (q <- queues; p <- interleaved(q.map(reflections))) {
-        if (!firstSeen.contains(p.pointKey)) {
-          emitted += p.toStep
-          firstSeen += p.pointKey
-          seen += p.identity
-          nextReflect += p
-        } else if (seen.add(p.identity)) {
-          if (p.index == 0) nextSelfReflect += p
-          else if (p.index == 1) nextMirrorReflect += p
-          else nextReflect += p
+      val next = IndexedSeq.fill(5)(mutable.ListBuffer.empty[Node])
+      // A spatially new point is emitted and queued last in `into`; a seen
+      // point on a structurally new simplex is queued by vertex index
+      // (stencil.py:156-195). Both passes read the old queues.
+      def pass(moves: Node => IndexedSeq[Node], into: IndexedSeq[mutable.ListBuffer[Node]]): Unit =
+        for (q <- queues; p <- interleaved(q.map(moves))) {
+          if (firstSeen.add(p.pointKey)) {
+            emitted += p.toStep
+            seen += p.identity
+            into.last += p
+          } else if (seen.add(p.identity)) into(math.min(p.index, into.length - 1)) += p
         }
-      }
-      // Contractions pass over the same (old) queues (stencil.py:177-195)
-      for (q <- queues; p <- interleaved(q.map(contractions))) {
-        if (!firstSeen.contains(p.pointKey)) {
-          emitted += p.toStep
-          firstSeen += p.pointKey
-          seen += p.identity
-          nextContract += p
-        } else if (seen.add(p.identity)) {
-          if (p.index == 0) nextSelfContract += p
-          else nextContract += p
-        }
-      }
-      selfReflect = nextSelfReflect.toList
-      mirrorReflect = nextMirrorReflect.toList
-      reflect = nextReflect.toList
-      selfContract = nextSelfContract.toList
-      contract = nextContract.toList
+      pass(reflections, next.take(3))
+      pass(contractions, next.drop(3))
+      queues = next.map(_.toList)
       out = emitted.iterator
     }
 
-    private def queuesEmpty: Boolean =
-      selfReflect.isEmpty && mirrorReflect.isEmpty && reflect.isEmpty &&
-        selfContract.isEmpty && contract.isEmpty
-
     override def hasNext: Boolean = {
-      while (!out.hasNext && !queuesEmpty) advanceRound()
+      while (!out.hasNext && queues.exists(_.nonEmpty)) advanceRound()
       out.hasNext
     }
 

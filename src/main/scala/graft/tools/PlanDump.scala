@@ -23,7 +23,7 @@ object PlanDump {
     val tag = args(1)
     val dir = args(2)
     val names = args(3).split(',').toSeq
-    val spark = graft.Bench.benchSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Bench.benchSession(graft.Bench.envCpus)
     Files.createDirectories(Paths.get(outDir))
     for (n <- names) {
       try {

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `queries/Confs.scala`, listener-based profiling lives only in
   * `tools/Profile.scala`, `graft.spark` reads no conf or environment
   * variable, one helper is graft's only code in `org.apache.spark.sql`,
-  * and no option splits a `SparkClient` wave.
+  * no option splits a `SparkClient` wave, and `Bench.envCpus` is the one
+  * reader of `SPARK_GRAFT_CPUS`.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
@@ -70,6 +71,10 @@ class OnePathSpec extends AnyFunSuite {
     assert(sources.collect {
       case (p, s) if p.startsWith("org/apache/spark/sql/") || s.contains("package org.apache.spark.sql") => p
     } == Seq("org/apache/spark/sql/GraftDataFrames.scala"))
+  }
+
+  test("Bench is the only reader of SPARK_GRAFT_CPUS") {
+    assert(filesWith("\"SPARK_GRAFT_CPUS\"") == Seq("graft/Bench.scala"))
   }
 
   test("no tool waits on Spark with Thread.sleep") {

@@ -107,6 +107,21 @@ class SearchSpec extends AnyFunSuite {
     assertGlobalBest(res)
   }
 
+  test("maxTasks counts x0: a cap of n tasks submits exactly n waves") {
+    for (n <- Seq(1, 2, 10)) {
+      val res = run(opts = SearchOptions(stopratio = stopratio, maxTasks = Some(n), seed = Some(17)))
+      assert(res.evaluations.size == n, s"maxTasks=$n: got ${res.evaluations.size}")
+      assert(res.evaluations.head.point.sameElements(x0))
+      assertGlobalBest(res)
+    }
+    for (n <- Seq(1, 2)) {
+      val res = run(sphereVectorized, SearchOptions(stopratio = stopratio, batchsize = Some(5),
+        maxTasks = Some(n), seed = Some(37)))
+      assert(res.evaluations.size == 5 * n, s"batchsize=5 maxTasks=$n: got ${res.evaluations.size}")
+      assertGlobalBest(res)
+    }
+  }
+
   test("maxStencilSize=4 (test_search.py:62-70)") {
     val res = run(opts = SearchOptions(stopratio = stopratio, maxStencilSize = 4, seed = Some(19)))
     assertConverged(res, Array(0.0, 0.0), 2 * stopratio)
@@ -248,6 +263,8 @@ class SearchSpec extends AnyFunSuite {
   test("malformed inputs are rejected, not searched") {
     for (q <- Seq(0, -3))
       intercept[IllegalArgumentException](SearchOptions(maxQueueSize = Some(q)))
+    for (n <- Seq(0L, -3L))
+      intercept[IllegalArgumentException](SearchOptions(maxTasks = Some(n)))
     val opts = SearchOptions(stopratio = stopratio, seed = Some(83))
     for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
       intercept[IllegalArgumentException](
@@ -257,6 +274,11 @@ class SearchSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException](
       Search.minimize(sphere, x0, Array(0.0, 1.0), new SerialClient, opts))
+    for (dims <- Seq(Seq(5), Seq(2), Seq(-1), Seq(0, 2))) {
+      val e = intercept[IllegalArgumentException](Search.minimize(sphere, x0, ones, new SerialClient,
+        opts.copy(integerDimensions = dims)))
+      assert(e.getMessage.contains("integerDimensions"), e.getMessage)
+    }
     // a negative step is a direction, not an error
     val res = Search.minimize(sphere, x0, Array(-1.0, 1.0), new SerialClient, opts)
     assertConverged(res, Array(0.0, 0.0), 2 * stopratio)
