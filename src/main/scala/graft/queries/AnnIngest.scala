@@ -62,59 +62,50 @@ object AnnIngest {
        |       true AS matches_batch_index""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val p = P
-    val out = FileSources.outputCacheDir("annstream", dir, "embeddings.parquet")
-    FileSources.writeOnce(out) { o =>
-      val work = new java.io.File(o, "work")
-      FileSources.deleteRecursively(work)
-      val in = new java.io.File(work, "in"); in.mkdirs()
-      try {
-        graft.functions.VectorOps.register(spark)
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"),
-            org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("features"),
-            expr("dot_product(embedding, embedding)").as("norm2"))
-        val arrivalPred = pmod(col("vec_id"), lit(4)) === 3
-        val model = AnnIvf.fitModel(emb.filter(!arrivalPred), p.nCells)
-        def assign(df: DataFrame): DataFrame = model.transform(df)
-          .select(col("vec_id"), col("embedding"), col("norm2"),
-            col("prediction").as("cell"))
-        // Overwrite (code-review r16): a dance that died mid-write leaves
-        // these dirs without the _SUCCESS sentinel; the retry re-enters
-        // writeOnce and ErrorIfExists would wedge the row forever.
-        val ow = org.apache.spark.sql.SaveMode.Overwrite
-        assign(emb.filter(!arrivalPred)).write.mode(ow).parquet(s"$o/base")
-        assign(emb).write.mode(ow).parquet(s"$o/batch") // batch twin, same frozen model
-        AnnIvf.centroidsOf(spark, model).write.mode(ow).parquet(s"$o/centroids")
-        val baseMtime = 1600000000000L
-        (0 until ArrivalChunks).foreach { c =>
-          Events.stageSingleFile(
-            emb.filter(arrivalPred && pmod(col("vec_id"), lit(ArrivalChunks)) === c)
-              .select(col("vec_id"), col("embedding")),
-            work, in, s"arrivals_$c", baseMtime + c * 60000L)
-        }
-        StreamRun(width = None, trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .run(spark) {
-            spark.readStream
-              .schema(org.apache.spark.sql.types.StructType.fromDDL(
-                "vec_id LONG, embedding ARRAY<FLOAT>"))
-              .option("maxFilesPerTrigger", "1")
-              .parquet(in.toString)
-          }(_.foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-              StreamRun.writeBatch(assign(batch
-                .withColumn("features",
-                  org.apache.spark.ml.functions.array_to_vector(col("embedding")))
-                .withColumn("norm2", expr("dot_product(embedding, embedding)"))),
-                batchId, s"$o/ingest")
-          }.option("checkpointLocation", s"$work/chk"))
-        // "incremental" must be real: each staged file became its own batch
-        val batchDirs = Option(new java.io.File(o, "ingest").listFiles())
-          .getOrElse(Array.empty).count(f => f.isDirectory && f.getName.startsWith("batch="))
-        require(batchDirs == ArrivalChunks,
-          s"expected $ArrivalChunks arrival micro-batches, saw $batchDirs — " +
-            "the ingest collapsed into a single batch and exercises nothing incremental")
-      } finally FileSources.deleteRecursively(work)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
+    val out = FileSources.cacheDir("annstream", dir, "embeddings.parquet")
+    FileSources.writeOnce(out) { (o, scratch) =>
+      val in = s"$scratch/in"
+      graft.functions.VectorOps.register(spark)
+      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding"),
+          org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("features"),
+          expr("dot_product(embedding, embedding)").as("norm2"))
+      val arrivalPred = pmod(col("vec_id"), lit(4)) === 3
+      val model = AnnIvf.fitModel(emb.filter(!arrivalPred), p.nCells)
+      def assign(df: DataFrame): DataFrame = model.transform(df)
+        .select(col("vec_id"), col("embedding"), col("norm2"),
+          col("prediction").as("cell"))
+      assign(emb.filter(!arrivalPred)).write.parquet(s"$o/base")
+      assign(emb).write.parquet(s"$o/batch") // batch twin, same frozen model
+      AnnIvf.centroidsOf(spark, model).write.parquet(s"$o/centroids")
+      val baseMtime = 1600000000000L
+      (0 until ArrivalChunks).foreach { c =>
+        FileSources.stageFiles(
+          emb.filter(arrivalPred && pmod(col("vec_id"), lit(ArrivalChunks)) === c)
+            .select(col("vec_id"), col("embedding")),
+          scratch, in, s"arrivals_$c", baseMtime + c * 60000L)
+      }
+      StreamRun(width = None, trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .run(spark) {
+          spark.readStream
+            .schema(org.apache.spark.sql.types.StructType.fromDDL(
+              "vec_id LONG, embedding ARRAY<FLOAT>"))
+            .option("maxFilesPerTrigger", "1")
+            .parquet(in)
+        }(_.foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+            StreamRun.writeBatch(assign(batch
+              .withColumn("features",
+                org.apache.spark.ml.functions.array_to_vector(col("embedding")))
+              .withColumn("norm2", expr("dot_product(embedding, embedding)"))),
+              batchId, s"$o/ingest")
+        }.option("checkpointLocation", s"$scratch/chk"))
+      // "incremental" must be real: each staged file became its own batch
+      val batchDirs = Option(new java.io.File(o, "ingest").listFiles())
+        .getOrElse(Array.empty).count(f => f.isDirectory && f.getName.startsWith("batch="))
+      require(batchDirs == ArrivalChunks,
+        s"expected $ArrivalChunks arrival micro-batches, saw $batchDirs — " +
+          "the ingest collapsed into a single batch and exercises nothing incremental")
     }
     graft.functions.VectorOps.register(spark)
     val centDF = spark.read.parquet(s"$out/centroids")

@@ -490,11 +490,6 @@ object Events {
     }
   }
 
-  /** Write-once preparation of the per-chunk rep dataset: one parquet FILE
-    * per 10-day chunk, named in chunk order with strictly increasing
-    * mtimes (the file stream source takes files oldest-first). Exposed
-    * private[graft] so StreamDedupWmSpec can replay the same input.
-    */
   /** The chunk-prep aggregation itself: one map-side-combinable groupBy of
     * the raw events projected to (user_id, event_type, ts) — PlanSpec pins
     * the single-exchange hash-aggregate shape and the 3-column read.
@@ -508,53 +503,28 @@ object Events {
       .select(col("user_id"), col("event_type"),
         timestamp_micros(col("rep_tus")).as("ts"), col("chunk"))
 
-  private[graft] def prepareWmChunks(spark: SparkSession, dir: String): String = {
+  /** Write-once preparation of the per-chunk rep dataset: one parquet FILE
+    * per 10-day chunk, named in chunk order with strictly increasing
+    * mtimes (the file stream source takes files oldest-first). Exposed
+    * private[graft] so StreamDedupWmSpec can replay the same input.
+    */
+  private[graft] def prepareWmChunks(spark: SparkSession, dir: String): String =
+    chunkedEvents("streamwm", dir)(wmChunkPrepFrame(spark, dir))
+
+  /** The write-once, multi-micro-batch input the chunked streaming rows
+    * share: `frame` (derived from events, with an integer `chunk` column)
+    * lands in a cache dir as ordered single files `chunk_000.parquet`, ...
+    * with fixed, strictly increasing mtimes, so the file stream source
+    * replays the chunks in order and the files are byte-stable across
+    * rebuilds.
+    */
+  private def chunkedEvents(tag: String, dir: String)(frame: => DataFrame): String = {
     import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamwm", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
-      val raw = o + ".raw"
-      wmChunkPrepFrame(spark, dir)
-        // one shuffle partition per chunk value -> exactly one data file
-        // under each chunk= directory of the dynamic-partitioned write
-        .repartition(col("chunk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("chunk").parquet(raw)
-      flattenChunkDirs(new java.io.File(raw), o)
+    val out = FileSources.cacheDir(tag, dir, "events.parquet")
+    FileSources.writeOnce(out) { (o, scratch) =>
+      FileSources.stageFiles(frame, scratch, o, "chunk", chunked = true)
     }
     out
-  }
-
-  /** Flatten a `chunk=N` dynamic-partitioned write into ordered single
-    * files `chunk_000.parquet`, ... with deterministic, strictly
-    * increasing mtimes (the file stream source takes files oldest-first,
-    * so this fixes the micro-batch order). Shared by every
-    * multi-micro-batch input preparation.
-    */
-  private def flattenChunkDirs(rawDir: java.io.File, o: String): Unit = {
-    import graft.sources.FileSources
-    val chunkDirs = Option(rawDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("chunk="))
-      .sortBy(_.getName.stripPrefix("chunk=").toLong)
-    require(chunkDirs.length >= 2, s"expected >=2 time chunks, got ${chunkDirs.length}")
-    new java.io.File(o).mkdirs()
-    val baseMtime = 1600000000000L // fixed -> byte-stable across rebuilds
-    chunkDirs.zipWithIndex.foreach { case (cd, i) =>
-      val part = cd.listFiles().filter(_.getName.endsWith(".parquet")) match {
-        case Array(single) => single
-        case parts => throw new IllegalStateException(
-          s"chunk ${cd.getName}: expected 1 part file, got ${parts.length}")
-      }
-      val dest = new java.io.File(o, f"chunk_$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // The stream source orders files by mtime; a silently-failed set
-      // would process chunks out of event-time order and corrupt the
-      // gate's eviction replay — fail loudly instead (ADVICE r7 #1).
-      require(dest.setLastModified(baseMtime + i * 60000L),
-        s"failed to set mtime on $dest — chunk order would be undefined")
-    }
-    FileSources.deleteRecursively(rawDir)
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
   }
 
   /** Data-quality audit — the constraint gate a pipeline runs before
@@ -598,22 +568,11 @@ object Events {
     * integer state is order-insensitive by design, and the gate asserts
     * exactly that.
     */
-  private[graft] def prepareTwsChunks(spark: SparkSession, dir: String): String = {
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamtws", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
-      val raw = o + ".raw"
+  private[graft] def prepareTwsChunks(spark: SparkSession, dir: String): String =
+    chunkedEvents("streamtws", dir) {
       readEvents(spark, dir)
         .select(col("user_id"), col("value"), pmod(col("event_id"), lit(4)).as("chunk"))
-        // one shuffle partition per chunk value -> exactly one data file
-        // under each chunk= directory of the dynamic-partitioned write
-        .repartition(col("chunk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("chunk").parquet(raw)
-      flattenChunkDirs(new java.io.File(raw), o)
     }
-    out
-  }
 
   /** Cumulative per-user totals on Spark 4's `transformWithState` API —
     * the arbitrary-state StatefulProcessor surface (typed ValueState in a
@@ -1239,7 +1198,7 @@ object Events {
       |GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val out = FileSources.cacheDir("variantshred", dir, "events.parquet")
-    def build(): Unit = FileSources.writeOnce(out) { o =>
+    FileSources.writeOnce(out) { (o, _) =>
       Confs.withConfs(spark,
         "spark.sql.variant.writeShredding.enabled" -> "true",
         "spark.sql.variant.inferShreddingSchema" -> "true") {
@@ -1251,7 +1210,7 @@ object Events {
     }
     // writer-side proof, pure footer metadata: EVERY data file's physical
     // schema must carry the shredding spec's typed_value field
-    def footerShredded(): Boolean = {
+    val shredded = {
       val dataFiles = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet"))
       require(dataFiles.nonEmpty, s"no parquet data files under $out")
@@ -1263,19 +1222,6 @@ object Events {
         try reader.getFooter.getFileMetaData.getSchema.toString.contains("typed_value")
         finally reader.close()
       }
-    }
-    build()
-    val shredded = footerShredded() || {
-      // self-heal a stale cache (code-review r13 #5): the fingerprint is
-      // conf-blind, so a dir written by a pre-shredding build has _SUCCESS
-      // but no typed_value and would fail the gate forever. Rebuild ONCE;
-      // if the fresh write still isn't shredded, that is a real regression
-      // and the hash gate should see it.
-      FileSources.deleteRecursively(new java.io.File(out))
-      require(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS")),
-        s"could not clear stale variant-shred cache at $out; remove it by hand")
-      build()
-      footerShredded()
     }
     val rows = Confs.withConfs(spark, "spark.sql.variant.allowReadingShredded" -> "true") {
       spark.read.parquet(out)
@@ -1353,12 +1299,11 @@ object Events {
       |       CAST(sum(event_id) AS BIGINT) AS sum_id
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    val out = FileSources.outputCacheDir("streamsink", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
+    val out = FileSources.cacheDir("streamsink", dir, "events.parquet")
+    FileSources.writeOnce(out) { (o, _) =>
       StreamRun(eventReads = true).run(spark) {
         eventsStream(spark, dir).select(col("event_id"), col("event_type"))
       }(_.format("parquet").option("path", s"$o/data").option("checkpointLocation", s"$o/chk"))
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.parquet(s"$out/data")
       .groupBy(col("event_type"))
@@ -1477,21 +1422,12 @@ object Events {
     * micro-batches. Same fingerprint-keyed write-once cache as
     * [[prepareTwsChunks]].
     */
-  private[graft] def prepareCdcChunks(spark: SparkSession, dir: String): String = {
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamcdc", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
-      val raw = o + ".raw"
+  private[graft] def prepareCdcChunks(spark: SparkSession, dir: String): String =
+    chunkedEvents("streamcdc", dir) {
       readEvents(spark, dir)
         .select(col("user_id"), col("tus"), col("event_id"), col("event_type"),
           col("value"), pmod(col("event_id"), lit(4)).as("chunk"))
-        .repartition(col("chunk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("chunk").parquet(raw)
-      flattenChunkDirs(new java.io.File(raw), o)
     }
-    out
-  }
 
   /** Streaming CDC materialized-view maintenance — the live twin of
     * [[cdcApply]], same oracle: the change log arrives as 4 micro-batches,
@@ -2094,15 +2030,14 @@ object Events {
       |       CAST(sum(event_id) AS BIGINT) AS sum_id
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    val out = FileSources.outputCacheDir("foreachbatch", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
+    val out = FileSources.cacheDir("foreachbatch", dir, "events.parquet")
+    FileSources.writeOnce(out) { (o, _) =>
       StreamRun(eventReads = true, trigger = Trigger.AvailableNow()).run(spark) {
         eventsStream(spark, dir).select(col("event_id"), col("event_type"))
       }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         StreamRun.writeBatch(batch.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id")), batchId, s"$o/data")
       }.option("checkpointLocation", s"$o/chk"))
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.parquet(s"$out/data")
       .groupBy(col("event_type"))
@@ -2544,15 +2479,14 @@ object Events {
       |       CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_fixed
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    val out = FileSources.outputCacheDir("statereader", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
+    val out = FileSources.cacheDir("statereader", dir, "events.parquet")
+    FileSources.writeOnce(out) { (o, _) =>
       StreamRun(mode = "update", eventReads = true, trigger = Trigger.AvailableNow()).run(spark) {
         eventsStream(spark, dir)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(floor(col("value") * 10000 + 0.5).cast("long")).as("sum_fixed"))
       }(_.format("noop").option("checkpointLocation", s"$o/chk"))
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.format("statestore").load(s"$out/chk")
       .select(col("key.event_type").as("event_type"),
@@ -2772,90 +2706,52 @@ object Events {
       |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     pinEventReadConfs(spark)
-    // Self-output cache (the searchStream rule): the artifact is this
-    // row's own result, so the key folds in the compiled library's
-    // fingerprint — any code fix re-runs the dance instead of serving
-    // stale pre-fix results.
-    val out = FileSources.outputCacheDir("ckptrestart", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
-      // The work dir lives INSIDE the cache dir and is cleaned in a
-      // finally (code-review r15): as a sibling, a dance that failed
-      // mid-phase stranded the checkpoint + staged halves in /tmp forever
-      // once the build fingerprint moved on — writeOnce's stale-sibling
-      // eviction only matches pure-hex suffixes, never ".work". Inside
-      // `o`, an orphan from a killed JVM is reclaimed when the stale
-      // cache dir itself is evicted.
-      val work = new java.io.File(o, "work")
-      FileSources.deleteRecursively(work)
-      val in = new java.io.File(work, "in"); in.mkdirs()
-      val chk = s"$work/chk"
-      try {
-        val cents = expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents")
-        val ev = spark.read.parquet(t(dir, "events"))
-          .select(col("event_id"), col("user_id"), cents)
-        def stage(name: String, predicate: org.apache.spark.sql.Column, mtime: Long): Unit =
-          stageSingleFile(ev.filter(predicate), work, in, name, mtime)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
-        def runPhase(queryName: String)(spelling: DataFrame => DataFrame): Unit =
-          StreamRun(mode = "complete", width = None).run(spark) {
-            spelling(spark.readStream.schema(schema).parquet(in.toString))
-          }(_.format("memory").queryName(queryName).option("checkpointLocation", chk))
-        val baseMtime = 1600000000000L
-        stage("half_even", col("event_id") % 2 === 0, baseMtime)
-        // phase A: the Column-DSL spelling ("the r(N-1) code")
-        runPhase("graft_ckpt_phase_a") { src =>
-          src.groupBy(col("user_id"))
-            .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
-        }
-        stage("half_odd", col("event_id") % 2 =!= 0, baseMtime + 60000L)
-        // phase B: the re-spelled query ("the shipped refactor") on the
-        // SAME checkpoint — pruned projection + expr-route aggregates;
-        // same grouping key, buffer types, and output schema.
-        runPhase("graft_ckpt_phase_b") { src =>
-          src.select(col("user_id"), col("cents"))
-            .groupBy("user_id")
-            .agg(expr("count(1)").as("n"), expr("sum(cents)").as("cents"))
-        }
-        // pin the state format the compatibility claim is made for
-        val offsetsDir = new java.io.File(chk, "offsets")
-        val offsetConfs = Option(offsetsDir.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.forall(_.isDigit)) // skip binary .crc sidecars
-          .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
-        require(offsetConfs.contains("\"spark.sql.streaming.aggregation.stateFormatVersion\":\"2\""),
-          "checkpoint offset log does not pin aggregation stateFormatVersion 2 — " +
-            "the restart-compatibility contract changed underneath this row")
-        spark.table("graft_ckpt_phase_b")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$o/result")
-      } finally FileSources.deleteRecursively(work)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
+    val out = FileSources.cacheDir("ckptrestart", dir, "events.parquet")
+    FileSources.writeOnce(out) { (o, scratch) =>
+      // the staged halves and the checkpoint live in writeOnce's scratch
+      val in = s"$scratch/in"
+      val chk = s"$scratch/chk"
+      val cents = expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents")
+      val ev = spark.read.parquet(t(dir, "events"))
+        .select(col("event_id"), col("user_id"), cents)
+      def stage(name: String, predicate: org.apache.spark.sql.Column, mtime: Long): Unit =
+        FileSources.stageFiles(ev.filter(predicate), scratch, in, name, mtime)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
+      def runPhase(queryName: String)(spelling: DataFrame => DataFrame): Unit =
+        StreamRun(mode = "complete", width = None).run(spark) {
+          spelling(spark.readStream.schema(schema).parquet(in))
+        }(_.format("memory").queryName(queryName).option("checkpointLocation", chk))
+      val baseMtime = 1600000000000L
+      stage("half_even", col("event_id") % 2 === 0, baseMtime)
+      // phase A: the Column-DSL spelling ("the r(N-1) code")
+      runPhase("graft_ckpt_phase_a") { src =>
+        src.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
+      }
+      stage("half_odd", col("event_id") % 2 =!= 0, baseMtime + 60000L)
+      // phase B: the re-spelled query ("the shipped refactor") on the
+      // SAME checkpoint — pruned projection + expr-route aggregates;
+      // same grouping key, buffer types, and output schema.
+      runPhase("graft_ckpt_phase_b") { src =>
+        src.select(col("user_id"), col("cents"))
+          .groupBy("user_id")
+          .agg(expr("count(1)").as("n"), expr("sum(cents)").as("cents"))
+      }
+      // pin the state format the compatibility claim is made for
+      val offsetsDir = new java.io.File(chk, "offsets")
+      val offsetConfs = Option(offsetsDir.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.forall(_.isDigit)) // skip binary .crc sidecars
+        .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
+      require(offsetConfs.contains("\"spark.sql.streaming.aggregation.stateFormatVersion\":\"2\""),
+        "checkpoint offset log does not pin aggregation stateFormatVersion 2 — " +
+          "the restart-compatibility contract changed underneath this row")
+      spark.table("graft_ckpt_phase_b")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$o/result")
     }
     spark.read.parquet(s"$out/result").select(col("user_id"), col("n"), col("cents"))
-  }
-
-  /** Single-file parquet staging shared by the checkpoint-restart rows: a
-    * filtered projection lands as exactly ONE part file with a pinned
-    * mtime, so the file stream source sees a deterministic per-phase
-    * batch and the offsets log is reproducible.
-    */
-  private[queries] def stageSingleFile(df: DataFrame, work: java.io.File,
-      in: java.io.File, name: String, mtime: Long): Unit = {
-    import graft.sources.FileSources
-    val raw = new java.io.File(work, name + ".raw")
-    df.coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(raw.toString)
-    val part = raw.listFiles().filter(_.getName.endsWith(".parquet")) match {
-      case Array(single) => single
-      case parts => throw new IllegalStateException(
-        s"$name: expected 1 part file, got ${parts.length}")
-    }
-    val dest = new java.io.File(in, name + ".parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    require(dest.setLastModified(mtime), s"failed to set mtime on $dest")
-    FileSources.deleteRecursively(raw)
   }
 
   /** [[checkpointRestart]]'s sibling over `transformWithState` (VERDICT
@@ -2896,77 +2792,72 @@ object Events {
        |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     pinEventReadConfs(spark)
-    val out = FileSources.outputCacheDir("twsrestart", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
-      val work = new java.io.File(o, "work")
-      FileSources.deleteRecursively(work)
-      val in = new java.io.File(work, "in"); in.mkdirs()
-      val chk = s"$work/chk"
-      try {
-        val ev = spark.read.parquet(t(dir, "events"))
-          .select(col("event_id"), col("user_id"),
-            floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id LONG, v4 LONG")
-        // Emissions land via foreachBatch as batchId-idempotent parquet
-        // (the q_foreach_batch discipline): the memory sink REFUSES to
-        // recover a non-complete-mode query from a checkpoint, and
-        // foreachBatch-to-files is the production shape of a restartable
-        // TWS pipeline anyway. batchId continues across the restart (it
-        // is the epoch in the offsets log), so the two phases' batches
-        // never collide.
-        val emit = s"$work/emit"
-        def runPhase(spelling: DataFrame => Dataset[(Long, Long, Long)]): Unit =
-          StreamRun(mode = "update", rocksDb = true).run(spark) {
-            spelling(spark.readStream.schema(schema).parquet(in.toString))
-              .toDF("user_id", "n", "sum_v4")
-          }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            StreamRun.writeBatch(batch, batchId, emit)
-          }.option("checkpointLocation", chk))
-        import spark.implicits._
-        val baseMtime = 1600000000000L
-        stageSingleFile(ev.filter(col("event_id") % 2 === 0)
-          .select(col("user_id"), col("v4")), work, in, "half_even", baseMtime)
-        // phase A: the Column-DSL spelling ("the r(N-1) code")
-        runPhase { src =>
-          src.select(col("user_id"), col("v4")).as[(Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new graft.streaming.RunningTotals,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-        }
-        stageSingleFile(ev.filter(col("event_id") % 2 =!= 0)
-          .select(col("user_id"), col("v4")), work, in, "half_odd", baseMtime + 60000L)
-        // phase B: the re-spelled query ("the shipped refactor") on the
-        // SAME checkpoint — selectExpr-route projection; same key type,
-        // same processor state schema, same output shape.
-        runPhase { src =>
-          src.selectExpr("user_id", "v4").as[(Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new graft.streaming.RunningTotals,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-        }
-        // pin the state machinery the compatibility claim is made for
-        val metaDir = new java.io.File(chk, "state/0/_metadata/v2")
-        val opMeta = Option(metaDir.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.forall(_.isDigit)) // skip binary .crc sidecars
-          .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
-        require(opMeta.contains("transformWithStateExec") &&
-            opMeta.contains("ValueState") && opMeta.contains("totals"),
-          "checkpoint operator metadata does not record the transformWithState " +
-            "ValueState contract — the restart-compatibility claim changed underneath this row")
-        // n strictly increases per key, so the per-key max over both
-        // phases' emissions is the final state; phase A's batches cover
-        // users whose events all landed in the even half.
-        spark.read.parquet(emit)
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("n"), col("sum_v4"))).as("m"))
-          .select(col("user_id"), col("m.n").as("n"),
-            round(col("m.sum_v4") / 10000.0, 2).as("sum_value"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$o/result")
-      } finally FileSources.deleteRecursively(work)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
+    val out = FileSources.cacheDir("twsrestart", dir, "events.parquet")
+    FileSources.writeOnce(out) { (o, scratch) =>
+      val in = s"$scratch/in"
+      val chk = s"$scratch/chk"
+      val ev = spark.read.parquet(t(dir, "events"))
+        .select(col("event_id"), col("user_id"),
+          floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id LONG, v4 LONG")
+      // Emissions land via foreachBatch as batchId-idempotent parquet
+      // (the q_foreach_batch discipline): the memory sink REFUSES to
+      // recover a non-complete-mode query from a checkpoint, and
+      // foreachBatch-to-files is the production shape of a restartable
+      // TWS pipeline anyway. batchId continues across the restart (it
+      // is the epoch in the offsets log), so the two phases' batches
+      // never collide.
+      val emit = s"$scratch/emit"
+      def runPhase(spelling: DataFrame => Dataset[(Long, Long, Long)]): Unit =
+        StreamRun(mode = "update", rocksDb = true).run(spark) {
+          spelling(spark.readStream.schema(schema).parquet(in))
+            .toDF("user_id", "n", "sum_v4")
+        }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          StreamRun.writeBatch(batch, batchId, emit)
+        }.option("checkpointLocation", chk))
+      import spark.implicits._
+      val baseMtime = 1600000000000L
+      FileSources.stageFiles(ev.filter(col("event_id") % 2 === 0)
+        .select(col("user_id"), col("v4")), scratch, in, "half_even", baseMtime)
+      // phase A: the Column-DSL spelling ("the r(N-1) code")
+      runPhase { src =>
+        src.select(col("user_id"), col("v4")).as[(Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new graft.streaming.RunningTotals,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+      }
+      FileSources.stageFiles(ev.filter(col("event_id") % 2 =!= 0)
+        .select(col("user_id"), col("v4")), scratch, in, "half_odd", baseMtime + 60000L)
+      // phase B: the re-spelled query ("the shipped refactor") on the
+      // SAME checkpoint — selectExpr-route projection; same key type,
+      // same processor state schema, same output shape.
+      runPhase { src =>
+        src.selectExpr("user_id", "v4").as[(Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new graft.streaming.RunningTotals,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+      }
+      // pin the state machinery the compatibility claim is made for
+      val metaDir = new java.io.File(chk, "state/0/_metadata/v2")
+      val opMeta = Option(metaDir.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.forall(_.isDigit)) // skip binary .crc sidecars
+        .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
+      require(opMeta.contains("transformWithStateExec") &&
+          opMeta.contains("ValueState") && opMeta.contains("totals"),
+        "checkpoint operator metadata does not record the transformWithState " +
+          "ValueState contract — the restart-compatibility claim changed underneath this row")
+      // n strictly increases per key, so the per-key max over both
+      // phases' emissions is the final state; phase A's batches cover
+      // users whose events all landed in the even half.
+      spark.read.parquet(emit)
+        .groupBy(col("user_id"))
+        .agg(max(struct(col("n"), col("sum_v4"))).as("m"))
+        .select(col("user_id"), col("m.n").as("n"),
+          round(col("m.sum_v4") / 10000.0, 2).as("sum_value"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$o/result")
     }
     spark.read.parquet(s"$out/result").select(col("user_id"), col("n"), col("sum_value"))
   }

@@ -279,27 +279,17 @@ object ReferenceOps {
        |FROM (${stencilPrefix.oracle.get}) sp""".stripMargin
   }) { (spark, dir) =>
     import graft.sources.FileSources
-    // The result is dataset-independent (pure generator), but the cache
-    // path still embeds the sf DIR like every cacheDir row (code-review
-    // r13): two concurrent JVMs verifying different SFs — the driver's
-    // normal mode — would otherwise share one checkpoint dir with no
-    // cross-JVM locking (interleaved offset logs, raced batch=N
-    // partitions). The fingerprint also hashes every run parameter
-    // (dims, maxHalvings, pointsPerBatch, n, start point), so editing any
-    // of them invalidates the cache instead of silently reusing it — and,
-    // because the cached artifact is this row's own OUTPUT (not a copy of
-    // a source file), it additionally folds in the compiled library's
-    // [[FileSources.buildFingerprint]]: a behavior fix anywhere in graft
-    // (StencilSource, the objective, runSearchStream) mints a new key
-    // instead of serving stale pre-fix results to the gate (ADVICE r13 #1).
-    val out = {
-      val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val fp = s"$SearchStreamConf,$stencilN".hashCode.toLong & 0xffffffffL
-      s"/tmp/graft_searchstream${sf}_${java.lang.Long.toHexString(fp)}b${FileSources.buildFingerprint}"
-    }
-    FileSources.writeOnce(out) { o =>
+    // The result reads no file (pure generator), so its key is the build
+    // fingerprint alone: the run parameters are compiled constants, and a
+    // behavior fix anywhere in graft (StencilSource, the objective,
+    // runSearchStream) mints a new key instead of serving stale pre-fix
+    // results to the gate. The path still embeds the sf DIR like every
+    // cacheDir row: two concurrent JVMs verifying different SFs would
+    // otherwise share one checkpoint dir with no cross-JVM locking
+    // (interleaved offset logs, raced batch=N partitions).
+    val out = FileSources.cacheDir("searchstream", dir)
+    FileSources.writeOnce(out) { (o, _) =>
       runSearchStream(spark, o, stencilN)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.parquet(s"$out/data")
       .select(col("idx"), col("x"), col("y"), col("cost"))

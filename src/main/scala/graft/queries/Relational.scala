@@ -274,36 +274,20 @@ object Relational {
     val out = FileSources.cacheDir("rangelayout", dir, "orders.parquet")
     val marker = java.nio.file.Paths.get(out, "_DISJOINT")
     // Disjointness is a property of the WRITTEN layout and the dir is
-    // immutable once fingerprint-cached, so prove it once (a
-    // files-count-sized driver frame) and persist the verdict as an
-    // underscore-prefixed marker beside the data (non-underscore
-    // siblings would be read as parquet) — re-verifying on every timed
-    // invocation would re-scan the copy for an invariant that cannot
-    // change (code-review r12).
-    def proveDisjoint(): Boolean = {
-      val ok = spansDisjoint(spark, out, "o_orderkey")
-      java.nio.file.Files.write(marker, ok.toString.getBytes)
-      ok
-    }
-    FileSources.writeOnce(out) { o =>
+    // immutable once cached, so prove it once (a files-count-sized driver
+    // frame) and persist the verdict as an underscore-prefixed marker
+    // beside the data (non-underscore siblings would be read as parquet)
+    // — re-verifying on every timed invocation would re-scan the copy for
+    // an invariant that cannot change. The verdict is part of the body,
+    // so a cache that writeOnce marks complete always carries it.
+    FileSources.writeOnce(out) { (o, _) =>
       spark.read.parquet(t(dir, "orders"))
         .repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions(col("o_orderkey"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(o)
-      proveDisjoint(): Unit
+      java.nio.file.Files.writeString(marker, spansDisjoint(spark, o, "o_orderkey").toString): Unit
     }
-    // Torn-cache repair (ADVICE r12 #2): the parquet write itself drops
-    // `_SUCCESS`, so a crash between it and the marker write leaves a dir
-    // writeOnce considers complete but with no verdict. A MISSING marker
-    // and a GARBLED one (created-but-empty after a disk-full/power-loss
-    // inside Files.write — code-review r13) are the same torn state:
-    // recompute (and persist) instead of failing on every invocation.
-    val disjoint = (
-      if (java.nio.file.Files.exists(marker))
-        scala.util.Try(
-          new String(java.nio.file.Files.readAllBytes(marker)).trim.toBoolean).toOption
-      else None
-    ).getOrElse(proveDisjoint())
+    val disjoint = java.nio.file.Files.readString(marker).trim.toBoolean
     spark.read.parquet(out)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("rev_c"))
@@ -334,9 +318,8 @@ object Relational {
     * `gens_ok` asserts every surviving generation is internally
     * span-disjoint (each generation prunes like [[rangeLayout]]; cross-gen
     * overlap is the accepted liquid trade until the next full rewrite).
-    * Proven once at write time, persisted in a `_LIQUID` marker; `_SUCCESS`
-    * is created LAST so there is no torn-cache window at all (the
-    * rangeLayout lesson, closed by ordering instead of repair).
+    * Proven once at write time and persisted in a `_LIQUID` marker inside
+    * the write-once body, so a complete cache always carries its verdict.
     *
     * Scale shape: the base write is one range exchange; the optimize is
     * one delta-sized range exchange plus driver-side fs metadata; the
@@ -369,28 +352,7 @@ object Relational {
     }
     def genDisjoint(gen: Int): Boolean =
       spansDisjoint(spark, s"$out/data/gen=$gen", "o_orderkey")
-    def parseMarker(): Option[(Boolean, Boolean)] =
-      if (!java.nio.file.Files.exists(marker)) None
-      else scala.util.Try {
-        val Array(a, b) = new String(java.nio.file.Files.readAllBytes(marker))
-          .trim.split(",").map(_.toBoolean)
-        (a, b)
-      }.toOption
-    // The _SUCCESS-last ordering makes a TORN marker impossible, but a
-    // garbled one (bit rot, manual edit) beside _SUCCESS would otherwise
-    // throw forever — its verdict can't be recomputed post-hoc (gen=0
-    // mtimes are gone), so clear the cache and let writeOnce rebuild
-    // (code-review r13, the rangeLayout repair's sibling).
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS")) &&
-        parseMarker().isEmpty) {
-      FileSources.deleteRecursively(new java.io.File(out))
-      // deleteRecursively ignores per-file failures (shared-/tmp permission
-      // edge): if _SUCCESS survived, writeOnce would skip the rebuild and
-      // the sys.error below would throw forever — fail HERE with the cause.
-      require(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS")),
-        s"could not clear corrupt liquid-layout cache at $out; remove it by hand")
-    }
-    FileSources.writeOnce(out) { _ =>
+    FileSources.writeOnce(out) { (_, _) =>
       val orders = spark.read.parquet(t(dir, "orders"))
       def writeGen(df: DataFrame, gen: Int, nParts: Int, sorted: Boolean): Unit = {
         val ranged =
@@ -415,16 +377,15 @@ object Relational {
       // The retirement MUST be verified (code-review r13 #3):
       // deleteRecursively ignores per-file failures, and a surviving gen=1
       // file would double-count the delta in every future read — with the
-      // marker and _SUCCESS still written, permanently. Fail before either.
+      // cache marked complete, permanently. Fail inside the body instead.
       require(!new java.io.File(s"$out/data/gen=1").exists(),
         s"could not retire $out/data/gen=1; clear the dir by hand and re-run")
       val stableOk = fileState(0) == stableBefore && stableBefore.nonEmpty
       val gensOk = genDisjoint(0) && genDisjoint(2)
-      java.nio.file.Files.write(marker, s"$stableOk,$gensOk".getBytes)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(out, "_SUCCESS")): Unit
+      java.nio.file.Files.writeString(marker, s"$stableOk,$gensOk"): Unit
     }
-    val (stableOk, gensOk) = parseMarker().getOrElse(
-      sys.error(s"unreadable _LIQUID marker at $out after rebuild"))
+    val Array(stableOk, gensOk) =
+      java.nio.file.Files.readString(marker).trim.split(",").map(_.toBoolean)
     spark.read.parquet(s"$out/data")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("rev_c"))

@@ -62,7 +62,7 @@ object Sources {
       |            AS BIGINT) AS sum_bytes
       |FROM documents""".stripMargin) { (spark, dir) =>
     val out = FileSources.cacheDir("binstore", dir, "documents.parquet")
-    FileSources.writeOnce(out) { o =>
+    FileSources.writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
         .coalesce(2)
@@ -163,7 +163,7 @@ object Sources {
       |       CAST(sum(CASE WHEN doc_id % 7 <> 0 THEN n_chars END) AS BIGINT) AS sum_chars_good
       |FROM documents""".stripMargin) { (spark, dir) =>
     val out = FileSources.cacheDir("csvbad", dir, "documents.parquet")
-    FileSources.writeOnce(out) { o =>
+    FileSources.writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(concat(
           when(col("doc_id") % 7 === 0, concat(lit("x"), col("doc_id").cast("string")))
@@ -255,7 +255,8 @@ object Sources {
       .observe(obs,
         count(lit(1)).as("n_rows"), sum(col("n_chars")).as("sum_chars"),
         min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
-    val out = FileSources.cacheDir("observe", dir, "documents.parquet")
+    // rewritten on every run (the write IS the metrics job), so no cache key
+    val out = FileSources.datasetPath("observe", dir)
     pass.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
     val m = obs.get
     // When the filter passes zero rows, sum/min/max observe as SQL NULL;
@@ -333,7 +334,7 @@ object Sources {
       |FROM m GROUP BY lang""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val out = FileSources.cacheDir("schemamerge", dir, "documents.parquet")
-    FileSources.writeOnce(out) { o =>
+    FileSources.writeOnce(out) { (o, _) =>
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       docs.select(col("doc_id"), col("lang"), col("n_chars"))
         .coalesce(2)
@@ -341,9 +342,6 @@ object Sources {
       docs.select(col("doc_id"), col("lang"), col("source"))
         .coalesce(2)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$o/batch=2")
-      // writeOnce keys on a TOP-LEVEL _SUCCESS; the per-batch writers only
-      // mark their own subdirs, so create it last (write-then-publish).
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.option("mergeSchema", "true").parquet(out)
       .groupBy(col("lang"))

@@ -396,7 +396,7 @@ object SqlSurface {
       |FROM customer GROUP BY c_nationkey""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val out = FileSources.cacheDir("nested", dir, "customer.parquet")
-    FileSources.writeOnce(out) { o =>
+    FileSources.writeOnce(out) { (o, _) =>
       spark.read.parquet(t(dir, "customer"))
         .select(col("c_custkey"),
           struct(col("c_name"), col("c_mktsegment"),

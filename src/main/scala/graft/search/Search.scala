@@ -95,12 +95,16 @@ object Search {
 
     val intDims = new Array[Boolean](dims)
     opts.integerDimensions.foreach(i => intDims(i) = true)
-    val start0 = Array.tabulate(dims)(i => if (intDims(i)) math.rint(x0(i)) else x0(i))
+    // Snapped, then rounded on integer dims, as every trial point is
+    // (search.py:268-278); the reference rounds x0 before snapping
+    // (search.py:153-157, 162-166), which leaves it off the integers when
+    // the lattice step does not divide 1.
+    def onLattice(x: Double, i: Int): Double = if (intDims(i)) math.rint(snap(x, i)) else snap(x, i)
 
     def now(): Double = System.nanoTime() / 1e9
 
     val orientation = Array.fill(dims)(1.0)
-    var curPoint = new TrialPoint(toGrid(start0), -1)
+    var curPoint = new TrialPoint(Array.tabulate(dims)(i => onLattice(x0(i), i)), -1)
     curPoint.startTime = now()
     var curCost = Double.PositiveInfinity
     var isContraction = true
@@ -209,8 +213,7 @@ object Search {
             var dx = step.offset(i) * curStepsize(i)
             if (intDims(i)) dx = Math.copySign(math.ceil(math.abs(dx)), dx)
             else if (dx != 0) intOnly = false
-            trial(i) = snap(curPoint.point(i) + dx, i)
-            if (intDims(i)) trial(i) = math.rint(trial(i))
+            trial(i) = onLattice(curPoint.point(i) + dx, i)
             i += 1
           }
           if (step.halvings > 0 && intOnly) halvings = curPoint.halvings

@@ -7,23 +7,17 @@ import org.apache.spark.sql.functions._
   * CSV and JSON are exercised as full write-then-read round-trips so the
   * driver gate verifies the format paths end-to-end (the round-tripped
   * aggregate must hash-match the oracle computed straight from parquet).
+  *
+  * Also the one owner of graft's on-disk caches: every derived dataset a
+  * row reuses is written through [[writeOnce]] under a [[cacheDir]] key,
+  * so the key, the completion marker and the scratch space are decided
+  * here and nowhere else.
   */
 object FileSources {
 
-  /** The cache key embeds a fingerprint (length + mtime) of the SOURCE
-    * parquet: if the testdata is regenerated at the same path, the stale
-    * round-trip is abandoned rather than silently reused — a stale cache
-    * would fail the correctness gate on a correct implementation and make
-    * Bench measure old data. Distinct fingerprints also mean concurrent
-    * JVMs over different datasets never share (or race on) a directory.
-    */
   private def roundtripDir(fmt: String, dir: String): String =
     cacheDir(s"roundtrip_$fmt", dir, "documents.parquet")
 
-  /** Generalized fingerprinted cache path (same contract as roundtripDir)
-    * for any derived-dataset writer keyed on a source parquet — also used
-    * by the streaming-dedup chunk preparation (graft.queries.Events).
-    */
   /** Source-file fingerprint shared by every cache/table-identity consumer
     * (cacheDir here; the CBO table name in Relational): one formula, so a
     * future scheme change (e.g. content hashing) updates every consumer.
@@ -33,20 +27,16 @@ object FileSources {
 
   /** Fingerprint of the COMPILED LIBRARY itself (SHA-256 over every
     * `.class` file under `graft/` at this code source, names + bytes,
-    * sorted): the
-    * cache-key component for rows whose cached artifact is their own
-    * OUTPUT rather than a transformed copy of a source file (ADVICE r13
-    * #1 — q_search_stream keyed only on constant run parameters, so a fix
-    * to StencilSource/the objective would keep serving stale pre-fix
-    * results to the gate until /tmp was cleared by hand). Any recompile
-    * that changes any graft class mints a new key; a manual bump constant
-    * would rot the first time someone forgets it. Directory and jar code
-    * sources both supported; an unreadable code source degrades to a
-    * per-JVM unique key (cache rebuilt every run — fail open toward
-    * correctness, not staleness). The fallback is HEX-ONLY (code-review
-    * r14): consumers append this value to cache-dir names, and
-    * writeOnce's stale-sibling eviction only matches pure-hex suffixes —
-    * a non-hex marker would make every degraded run's dir permanent.
+    * sorted), the build half of every [[cacheDir]] key: any recompile that
+    * changes any graft class mints a new key, so a code fix re-runs the
+    * rows that cache derived data instead of serving what older code wrote;
+    * a manual bump constant would rot the first time someone forgets it.
+    * Directory and jar code sources both supported; an unreadable code
+    * source degrades to a per-JVM unique key (cache rebuilt every run —
+    * fail open toward correctness, not staleness). The fallback is
+    * HEX-ONLY: writeOnce's stale-sibling eviction only matches pure-hex
+    * suffixes, and a non-hex marker would make every degraded run's dir
+    * permanent.
     */
   private[graft] lazy val buildFingerprint: String =
     try {
@@ -82,53 +72,125 @@ object FileSources {
       java.lang.Long.toHexString(System.nanoTime())
     }
 
-  private[graft] def cacheDir(tag: String, dir: String, srcName: String): String = {
-    val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = fingerprint(new java.io.File(s"$dir/$srcName"))
-    s"/tmp/graft_$tag${sf}_$fp"
+  /** The per-dataset path of artifact `tag` over the data in `dir`: the
+    * sanitized dir is part of the name, so JVMs working on different
+    * datasets never share (or race on) a directory. Unkeyed, so it suits
+    * only an artifact rewritten on every run.
+    */
+  private[graft] def datasetPath(tag: String, dir: String): String =
+    s"/tmp/graft_$tag${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+
+  /** The cache key of artifact `tag` derived from `sources` (file names
+    * under `dir`; none for an artifact that reads no file): the
+    * [[datasetPath]], then the hex fingerprint of each source and the
+    * [[buildFingerprint]]. Regenerated testdata or a rebuilt library mints
+    * a new key, so a cache is reused only for the computation that wrote
+    * it — the inputs AND the code — and never fails the correctness gate
+    * on a correct implementation or makes Bench measure old data.
+    */
+  private[graft] def cacheDir(tag: String, dir: String, sources: String*): String = {
+    val fp = sources.map(s => fingerprint(new java.io.File(s"$dir/$s"))).mkString
+    s"${datasetPath(tag, dir)}_${fp}b$buildFingerprint"
   }
 
-  /** [[cacheDir]] for a row whose cached artifact is its own OUTPUT (a
-    * sink it wrote, a checkpoint, a result table) rather than a copy of the
-    * source: the key also folds in [[buildFingerprint]], so a code fix
-    * re-runs the row instead of serving its pre-fix result (ADVICE r13 #1).
-    * The suffix stays hex, so writeOnce's stale-sibling eviction still
-    * reclaims the dirs of earlier builds.
+  /** The completion marker [[writeOnce]] drops after its body returns. Not
+    * Spark's `_SUCCESS`: a write job leaves that as soon as IT commits, so
+    * it reads complete when a later step of the body failed, and it never
+    * lands at the top of a directory whose body writes only subdirectories.
+    * Underscore-prefixed, so Spark's readers skip it like `_SUCCESS`.
     */
-  private[graft] def outputCacheDir(tag: String, dir: String, srcName: String): String =
-    s"${cacheDir(tag, dir, srcName)}b$buildFingerprint"
+  private val CompleteMarker = "_GRAFT_COMPLETE"
 
-  /** Write-once guard shared by every round-trip: the sink is exercised the
-    * first time a (format, source-fingerprint) pair is requested and reused
-    * afterwards — re-writing an identical dataset on every timed execution
-    * measures sink overhead, not the query. Writes coalesce to a few files:
-    * the source table is a single parquet file, so a 32-way write is all
-    * small-file and task-launch overhead (at warehouse scale the writer
-    * parallelism follows the upstream partitioning instead).
+  /** The write-once contract every on-disk cache shares: `body(out,
+    * scratch)` runs unless `out` carries the completion marker, and the
+    * marker is written only after the body returns. Reusing the derived
+    * data measures the query, not the sink, on every timed execution.
     *
-    * Before a fresh write, sibling dirs for the same (format, sf) with a
-    * DIFFERENT fingerprint are best-effort deleted — every testdata
-    * regeneration mints a new fingerprint and the stale dirs would
-    * otherwise accumulate in /tmp unboundedly (ADVICE r3 #5).
+    *   - A partial `out` (no marker: a body that threw, or a killed JVM) is
+    *     cleared before the body runs, and `out` is deleted if the body
+    *     throws.
+    *   - `scratch` is an empty directory beside `out` for raw writes,
+    *     checkpoints and staged inputs; it is removed when the body ends,
+    *     either way.
+    *   - Before a fresh write, sibling dirs of the same [[datasetPath]]
+    *     with a DIFFERENT hex key are best-effort deleted, scratch dirs
+    *     included: every testdata regeneration or rebuild mints a new key,
+    *     and the stale dirs would otherwise accumulate in /tmp unboundedly.
+    *
+    * Writes coalesce to a few files: the source table is a single parquet
+    * file, so a 32-way write is all small-file and task-launch overhead (at
+    * warehouse scale the writer parallelism follows the upstream
+    * partitioning instead).
     */
-  private[graft] def writeOnce(out: String)(write: String => Unit): Unit =
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-      val dir = new java.io.File(out)
-      // Siblings must match (fmt, sf) EXACTLY: prefix + a hex fingerprint and
-      // nothing else. A bare startsWith would let /root/testdata/sf0.1 delete
-      // the in-use dir of /root/testdata/sf0.1_v2 (whose sanitized name
-      // extends the shorter one) from a concurrent JVM (ADVICE r4 #3).
+  private[graft] def writeOnce(out: String)(body: (String, String) => Unit): Unit = {
+    val dir = new java.io.File(out)
+    if (!new java.io.File(dir, CompleteMarker).exists()) {
+      val scratch = new java.io.File(s"$out.scratch")
+      // Siblings must match (tag, dir) EXACTLY: prefix + a hex key and
+      // nothing else. A bare startsWith would let a dataset at `.../sf0.1`
+      // delete the in-use dir of one at `.../sf0.1_v2` (whose sanitized
+      // name extends the shorter one) from a concurrent JVM.
       val prefix = out.substring(out.lastIndexOf('/') + 1, out.lastIndexOf('_') + 1)
-      val sibling = (java.util.regex.Pattern.quote(prefix) + "[0-9a-f]+").r
+      val sibling = (java.util.regex.Pattern.quote(prefix) + "[0-9a-f]+(\\.scratch)?").r
       Option(dir.getParentFile.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && sibling.matches(f.getName) && f.getName != dir.getName)
         .foreach(deleteRecursively)
-      write(out)
+      deleteRecursively(dir)
+      scratch.mkdirs()
+      try body(out, scratch.getPath)
+      catch { case t: Throwable => deleteRecursively(dir); throw t }
+      finally deleteRecursively(scratch)
+      dir.mkdirs()
+      java.nio.file.Files.createFile(new java.io.File(dir, CompleteMarker).toPath): Unit
     }
+  }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(): Unit
+  }
+
+  /** Lands `df` in `dest` as single parquet files with pinned, strictly
+    * increasing mtimes: the input a file stream source replays as
+    * deterministic micro-batches, since it takes files oldest-first.
+    * Unchunked, the frame lands as ONE file `$name.parquet` at `mtime`.
+    * `chunked`, `df` carries an integer `chunk` column and lands as one
+    * file per chunk value, `${name}_000.parquet`, ... in chunk order, a
+    * minute apart from `mtime` on (one shuffle partition per chunk value,
+    * so the dynamic-partitioned write leaves exactly one data file under
+    * each `chunk=` dir). The raw write goes under `scratch`.
+    */
+  private[graft] def stageFiles(df: DataFrame, scratch: String, dest: String, name: String,
+      mtime: Long = 1600000000000L, chunked: Boolean = false): Unit = {
+    val raw = new java.io.File(scratch, s"$name.raw")
+    val write = if (chunked) df.repartition(col("chunk")).write.partitionBy("chunk")
+      else df.coalesce(1).write
+    write.mode(SaveMode.Overwrite).parquet(raw.getPath)
+    val parts =
+      if (!chunked) Seq(raw -> s"$name.parquet")
+      else {
+        val chunks = Option(raw.listFiles()).getOrElse(Array.empty)
+          .filter(f => f.isDirectory && f.getName.startsWith("chunk="))
+          .sortBy(_.getName.stripPrefix("chunk=").toLong)
+        require(chunks.length >= 2, s"expected >=2 chunks, got ${chunks.length}")
+        chunks.toSeq.zipWithIndex.map { case (c, i) => c -> f"${name}_$i%03d.parquet" }
+      }
+    new java.io.File(dest).mkdirs()
+    parts.zipWithIndex.foreach { case ((from, file), i) =>
+      val part = from.listFiles().filter(_.getName.endsWith(".parquet")) match {
+        case Array(single) => single
+        case many => throw new IllegalStateException(
+          s"$from: expected 1 part file, got ${many.length}")
+      }
+      val to = new java.io.File(dest, file)
+      java.nio.file.Files.move(part.toPath, to.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // The stream source orders files by mtime; a silently-failed set
+      // would replay batches out of order — fail loudly instead.
+      require(to.setLastModified(mtime + i * 60000L),
+        s"failed to set mtime on $to — batch order would be undefined")
+    }
+    deleteRecursively(raw)
   }
 
   /** documents -> CSV -> read back. Text is single-line ASCII; quoting is
@@ -136,7 +198,7 @@ object FileSources {
     */
   def documentsViaCsv(spark: SparkSession, dir: String): DataFrame = {
     val out = roundtripDir("csv", dir)
-    writeOnce(out) { o =>
+    writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
         .coalesce(2)
@@ -153,7 +215,7 @@ object FileSources {
   /** documents -> JSON lines -> read back with explicit schema. */
   def documentsViaJson(spark: SparkSession, dir: String): DataFrame = {
     val out = roundtripDir("json", dir)
-    writeOnce(out) { o =>
+    writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .coalesce(2)
         .write.mode(SaveMode.Overwrite).json(o)
@@ -166,7 +228,7 @@ object FileSources {
   /** documents -> ORC -> read back (columnar sibling format). */
   def documentsViaOrc(spark: SparkSession, dir: String): DataFrame = {
     val out = roundtripDir("orc", dir)
-    writeOnce(out) { o =>
+    writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .coalesce(2)
         .write.mode(SaveMode.Overwrite).orc(o)
@@ -198,7 +260,7 @@ object FileSources {
     */
   def documentsViaXml(spark: SparkSession, dir: String): DataFrame = {
     val out = roundtripDir("xml", dir)
-    writeOnce(out) { o =>
+    writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .coalesce(2)
         .write.mode(SaveMode.Overwrite)
@@ -214,7 +276,7 @@ object FileSources {
 
   def documentsViaText(spark: SparkSession, dir: String): DataFrame = {
     val out = roundtripDir("text", dir)
-    writeOnce(out) { o =>
+    writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(concat_ws("", col("doc_id"), col("lang"), col("source"),
           col("n_chars"), col("text")).as("value"))
@@ -243,7 +305,7 @@ object FileSources {
     */
   def compactedDocuments(spark: SparkSession, dir: String): DataFrame = {
     val out = roundtripDir("compact", dir)
-    writeOnce(out) { o =>
+    writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .repartition(16) // fragment: the problem state being fixed
         .write.mode(SaveMode.Overwrite).parquet(s"$o/small")
@@ -272,7 +334,7 @@ object FileSources {
     */
   def partitionedDocuments(spark: SparkSession, dir: String): DataFrame = {
     val out = roundtripDir("part", dir)
-    writeOnce(out) { o =>
+    writeOnce(out) { (o, _) =>
       spark.read.parquet(s"$dir/documents.parquet")
         .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(o)
     }

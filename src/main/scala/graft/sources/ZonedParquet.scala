@@ -75,7 +75,7 @@ object ZonedParquet {
     val (xmin, xmax, ymin, ymax) =
       (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
     val out = FileSources.cacheDir("zorder", dir, s"$table.parquet")
-    FileSources.writeOnce(out) { o =>
+    FileSources.writeOnce(out) { (o, _) =>
       src
         .withColumn("xq", expr(s"($xCol - $xmin) * 256 div ${xmax - xmin + 1}"))
         .withColumn("yq", expr(s"($yCol - $ymin) * 256 div ${ymax - ymin + 1}"))

@@ -1,13 +1,8 @@
 package graft.spark
 
 import graft.search.{SearchResult, TrialPoint}
-import org.apache.spark.sql.{DataFrame, Encoders, GraftDataFrames, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Row form of a [[TrialPoint]] — the durable provenance analog of the
   * reference's results dict (search.py:175, SURVEY §1.1 Spark mapping).
@@ -47,9 +42,10 @@ object Provenance {
     * This is the queryable surface over a finished search (top-k, lineage
     * self-joins, accepted-center chains — SURVEY §2.5).
     *
-    * The rows of [[toRows]], in order, are written straight into the
-    * internal rows of a `LocalRelation`, so no encoder is derived per call.
-    * The table is one partition, so an aggregate over it (`count()`) plans
+    * The rows of [[toRows]], in order, become the external rows of
+    * `createDataFrame(java.util.List[Row], schema)`, which converts them
+    * into one `LocalRelation` with no encoder derived per call. The table
+    * is one partition, so an aggregate over it (`count()`) plans
     * no Exchange. The cost: a plain `collect()` runs a one-task job, where a
     * bare `LocalRelation` is read on the driver with none. On a 4-core
     * machine (`local[4]`, a 204-row table, `toDF` included, median of 40
@@ -59,13 +55,11 @@ object Provenance {
     * 17 and `select(...).collect()` 35 against 15.
     */
   def toDF(spark: SparkSession, res: SearchResult): DataFrame = {
-    val rows: Seq[InternalRow] = toRows(res).map { r =>
-      new GenericInternalRow(Array[Any](UTF8String.fromString(r.key),
-        UnsafeArrayData.fromPrimitiveArray(r.point), r.halvings,
-        UTF8String.fromString(r.parentKey), r.isAccepted, r.isBest, r.startTime,
-        r.stopTime, r.cost))
+    val rows = toRows(res).map { r =>
+      Row(r.key, r.point, r.halvings, r.parentKey, r.isAccepted, r.isBest,
+        r.startTime, r.stopTime, r.cost)
     }
-    GraftDataFrames.ofPlan(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
-      .coalesce(1)
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
   }
 }

@@ -139,10 +139,12 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
     val out = mutable.ArrayBuffer.empty[(Long, Try[Array[Double]])]
     var first = completed.poll()
     if (first == null && block && pendingCount.get() > 0) {
-      // Block for the next completion; bounded poll so a dead job cannot
-      // wedge the driver loop forever.
-      while (first == null && pendingCount.get() > 0)
-        first = completed.poll(100, TimeUnit.MILLISECONDS)
+      // Wait for the next completion; drain() posts one for every wave it
+      // takes, success or failure. pendingCount moves only on this
+      // caller's thread (submit and the decrements below), so it cannot
+      // drop during the wait, and the wait is unbounded: a job that never
+      // ends, or a wave left queued by shutdown(), blocks it.
+      first = completed.take()
     } else if (first == null && !block) {
       // Tiny pause so the driver loop does not hot-spin while waiting
       Thread.sleep(1)

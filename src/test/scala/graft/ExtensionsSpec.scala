@@ -1,5 +1,6 @@
 package graft
 
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,22 +72,23 @@ class ExtensionsSpec extends AnyFunSuite {
     // `end <= Int.MaxValue` check after ~2^31 points. Streaming now
     // requires an explicit cap, refused when the query starts.
     spark.sparkContext.setLogLevel("ERROR")
-    val chk = java.nio.file.Files.createTempDirectory("stencil_uncapped").toString
-    val e = intercept[Exception] {
-      val q = spark.readStream.format("graft.sources.StencilSource")
-        .option("dims", 2).option("maxHalvings", 7)
-        .option("pointsPerBatch", 100) // maxPoints deliberately unset
-        .load()
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", s"$chk/chk")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    withTempDir("stencil_uncapped") { chk =>
+      val e = intercept[Exception] {
+        val q = spark.readStream.format("graft.sources.StencilSource")
+          .option("dims", 2).option("maxHalvings", 7)
+          .option("pointsPerBatch", 100) // maxPoints deliberately unset
+          .load()
+          .writeStream.outputMode("append").format("noop")
+          .option("checkpointLocation", s"$chk/chk")
+          .start()
+        try q.processAllAvailable()
+        finally q.stop()
+      }
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+      assert(msgs.contains("require an explicit maxPoints"),
+        s"expected the uncapped-stream refusal, got: ${msgs.take(300)}")
     }
-    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
-    assert(msgs.contains("require an explicit maxPoints"),
-      s"expected the uncapped-stream refusal, got: ${msgs.take(300)}")
   }
 
   test("StencilSource: the limit is pushed into the V2 scan and rows match the generator") {
@@ -108,32 +110,33 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("StencilSource streaming: deterministic offset ranges resume exactly-once across restart") {
     spark.sparkContext.setLogLevel("ERROR")
-    val root = java.nio.file.Files.createTempDirectory("stencil_stream").toString
-    def run(maxPts: Int): Unit = {
-      val q = spark.readStream.format("graft.sources.StencilSource")
-        .option("dims", 2).option("maxHalvings", 7)
-        .option("pointsPerBatch", 100).option("maxPoints", maxPts)
-        .load()
-        .selectExpr("idx", "halvings", "offset[0] AS x", "offset[1] AS y")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$root/data").option("checkpointLocation", s"$root/chk")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    withTempDir("stencil_stream") { root =>
+      def run(maxPts: Int): Unit = {
+        val q = spark.readStream.format("graft.sources.StencilSource")
+          .option("dims", 2).option("maxHalvings", 7)
+          .option("pointsPerBatch", 100).option("maxPoints", maxPts)
+          .load()
+          .selectExpr("idx", "halvings", "offset[0] AS x", "offset[1] AS y")
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", s"$root/data").option("checkpointLocation", s"$root/chk")
+          .start()
+        try q.processAllAvailable()
+        finally q.stop()
+      }
+      // first run consumes [0, 300); the restarted query must resume at
+      // offset 300 from the checkpoint and append ONLY [300, 500) — the
+      // deterministic generator + offset log IS the exactly-once story
+      run(300)
+      run(500)
+      val got = spark.read.parquet(s"$root/data")
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
+        .sortBy(_._1)
+      val want = new graft.stencil.RightHandedSimplexStencil(2, 7)
+        .stencilPoints.take(500).zipWithIndex
+        .map { case (st, i) => (i + 1, st.halvings, st.offset(0), st.offset(1)) }.toArray
+      assert(got.length == 500, s"expected exactly-once 500 rows, got ${got.length}")
+      assert(got.sameElements(want))
     }
-    // first run consumes [0, 300); the restarted query must resume at
-    // offset 300 from the checkpoint and append ONLY [300, 500) — the
-    // deterministic generator + offset log IS the exactly-once story
-    run(300)
-    run(500)
-    val got = spark.read.parquet(s"$root/data")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
-      .sortBy(_._1)
-    val want = new graft.stencil.RightHandedSimplexStencil(2, 7)
-      .stencilPoints.take(500).zipWithIndex
-      .map { case (st, i) => (i + 1, st.halvings, st.offset(0), st.offset(1)) }.toArray
-    assert(got.length == 500, s"expected exactly-once 500 rows, got ${got.length}")
-    assert(got.sameElements(want))
   }
 
   test("StencilSource streaming: Trigger.AvailableNow consumes to maxPoints, not one batch") {

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `queries/StreamRun.scala`, session confs are scoped only through
   * `queries/Confs.scala`, listener-based profiling lives only in
   * `tools/Profile.scala`, `graft.spark` reads no conf or environment
-  * variable, one helper is graft's only code in `org.apache.spark.sql`,
-  * no option splits a `SparkClient` wave, and `Bench.envCpus` is the one
-  * reader of `SPARK_GRAFT_CPUS`.
+  * variable, graft has no code in `org.apache.spark.sql`, no option splits
+  * a `SparkClient` wave, `Bench.envCpus` is the one reader of
+  * `SPARK_GRAFT_CPUS`, and `FileSources` alone decides the key and the
+  * completion marker of an on-disk cache.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
@@ -67,10 +68,19 @@ class OnePathSpec extends AnyFunSuite {
     assert(filesWith("evalPartitions").isEmpty)
   }
 
-  test("GraftDataFrames is graft's only file in org.apache.spark.sql") {
+  test("graft has no file in org.apache.spark.sql") {
     assert(sources.collect {
       case (p, s) if p.startsWith("org/apache/spark/sql/") || s.contains("package org.apache.spark.sql") => p
-    } == Seq("org/apache/spark/sql/GraftDataFrames.scala"))
+    }.isEmpty)
+  }
+
+  test("no main source outside FileSources.scala names _SUCCESS") {
+    assert(sources.exists(_._1.endsWith("graft/sources/FileSources.scala")))
+    assert(filesWith("_SUCCESS", "graft/sources/FileSources.scala").isEmpty)
+  }
+
+  test("a cache key is FileSources.cacheDir: outputCacheDir stays gone") {
+    assert(filesWith("outputCacheDir").isEmpty)
   }
 
   test("Bench is the only reader of SPARK_GRAFT_CPUS") {

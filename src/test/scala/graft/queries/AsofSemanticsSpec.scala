@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.TempDirs.withTempDir
 import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,18 +49,19 @@ class AsofSemanticsSpec extends AnyFunSuite {
     (40L, 1000L, 4L, "purchase", 2.0),
     (41L, 1000L + HourUs + 1L, 4L, "click", 1.0))
 
-  private lazy val dir: String = {
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-asof-sem").toString
-    rows.toDF("event_id", "us", "user_id", "event_type", "value")
-      .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id",
-        "event_type", "value")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$d/events.parquet")
-    d
-  }
+  /** Runs `q` over `rows` written as the events table of a fresh dir. */
+  private def fixtureResult(q: String): Map[Long, (Option[Long], Option[Long])] =
+    withTempDir("graft-asof-sem") { d =>
+      import spark.implicits._
+      rows.toDF("event_id", "us", "user_id", "event_type", "value")
+        .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id",
+          "event_type", "value")
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .write.mode("overwrite").parquet(s"$d/events.parquet")
+      resultMap(q, d)
+    }
 
-  private def resultMap(q: String, inDir: String = dir): Map[Long, (Option[Long], Option[Long])] =
+  private def resultMap(q: String, inDir: String): Map[Long, (Option[Long], Option[Long])] =
     graft.SparkEntry.queries(q)(spark, inDir).collect().map { r =>
       val id = r.getLong(0)
       val prevId = if (r.isNullAt(1)) None else Some(r.getLong(1))
@@ -73,7 +75,7 @@ class AsofSemanticsSpec extends AnyFunSuite {
 
   test("q_asof_tolerance: strict ties, NULL-value coherence, stale cutoff") {
     spark.sparkContext.setLogLevel("ERROR")
-    val m = resultMap("q_asof_tolerance")
+    val m = fixtureResult("q_asof_tolerance")
     assert(m(11L) == (None, None), "tied purchase must not match (strict <)")
     assert(m(21L) == (Some(20L), None), "matched NULL-value purchase keeps NULL cents")
     assert(m(32L) == (Some(31L), None),
@@ -83,7 +85,7 @@ class AsofSemanticsSpec extends AnyFunSuite {
 
   test("q_asof_join: same strict/NULL carry, no tolerance cutoff") {
     spark.sparkContext.setLogLevel("ERROR")
-    val m = resultMap("q_asof_join")
+    val m = fixtureResult("q_asof_join")
     assert(m(11L) == (None, None))
     assert(m(21L) == (Some(20L), None))
     assert(m(32L) == (Some(31L), None))
@@ -96,21 +98,22 @@ class AsofSemanticsSpec extends AnyFunSuite {
     // pick the highest event_id, every run, regardless of file layout.
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-asof-tie").toString
-    // two single-row files in OPPOSITE id order so file order cannot fake
-    // determinism, plus the click after the tie
-    Seq((51L, 1000L, 5L, "purchase", 7.0))
-      .toDF("event_id", "us", "user_id", "event_type", "value")
-      .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id", "event_type", "value")
-      .write.parquet(s"$d/events.parquet")
-    Seq((50L, 1000L, 5L, "purchase", 3.0), (52L, 2000L, 5L, "click", 1.0))
-      .toDF("event_id", "us", "user_id", "event_type", "value")
-      .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id", "event_type", "value")
-      .write.mode("append").parquet(s"$d/events.parquet")
-    (1 to 3).foreach { _ =>
-      val m = resultMap("q_asof_join", d)
-      assert(m(52L) == (Some(51L), Some(700L)),
-        "tie must break by highest event_id (51), deterministically")
+    withTempDir("graft-asof-tie") { d =>
+      // two single-row files in OPPOSITE id order so file order cannot fake
+      // determinism, plus the click after the tie
+      Seq((51L, 1000L, 5L, "purchase", 7.0))
+        .toDF("event_id", "us", "user_id", "event_type", "value")
+        .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id", "event_type", "value")
+        .write.parquet(s"$d/events.parquet")
+      Seq((50L, 1000L, 5L, "purchase", 3.0), (52L, 2000L, 5L, "click", 1.0))
+        .toDF("event_id", "us", "user_id", "event_type", "value")
+        .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id", "event_type", "value")
+        .write.mode("append").parquet(s"$d/events.parquet")
+      (1 to 3).foreach { _ =>
+        val m = resultMap("q_asof_join", d)
+        assert(m(52L) == (Some(51L), Some(700L)),
+          "tie must break by highest event_id (51), deterministically")
+      }
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
@@ -35,9 +36,8 @@ class EventsReadSpec extends AnyFunSuite {
     1710054000123000L, // 2024-03-10T07:00:00.123Z (US DST spring-forward day)
     1735689599999000L) // 2024-12-31T23:59:59.999Z
 
-  private def writeFixture(tag: String)(build: DataFrame => DataFrame): String = {
+  private def writeFixture(dir: String)(build: DataFrame => DataFrame): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-evread-$tag").toString
     val base = instantsUs.zipWithIndex.toDF("us", "event_id")
     build(base).write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -48,29 +48,31 @@ class EventsReadSpec extends AnyFunSuite {
 
   test("readEvents yields identical micros tus for MICROS, NTZ, and MILLIS ts") {
     spark.sparkContext.setLogLevel("WARN")
-    val outKey = "spark.sql.parquet.outputTimestampType"
-    val prevOut = spark.conf.get(outKey)
-    try {
-      spark.conf.set(outKey, "TIMESTAMP_MICROS")
-      val microsDir = writeFixture("micros") { df =>
-        df.select(col("event_id"), timestamp_micros(col("us")).as("ts"))
-      }
-      // TIMESTAMP_NTZ columns write as INT64 micros with isAdjustedToUTC
-      // = false — byte-compatible with the round-9 regenerated testdata.
-      // (Written under the UTC session zone pinned by this spec's builder,
-      // so the stored wall clock is the UTC rendering of each instant.)
-      val ntzDir = writeFixture("ntz") { df =>
-        df.select(col("event_id"),
-          timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
-      }
-      spark.conf.set(outKey, "TIMESTAMP_MILLIS")
-      val millisDir = writeFixture("millis") { df =>
-        df.select(col("event_id"), timestamp_micros(col("us")).as("ts"))
-      }
-      assert(tusVia(microsDir) == instantsUs.sorted, "MICROS path")
-      assert(tusVia(ntzDir) == instantsUs.sorted, "NTZ-encoded path")
-      assert(tusVia(millisDir) == instantsUs.sorted, "MILLIS path")
-    } finally spark.conf.set(outKey, prevOut)
+    withTempDir("graft-evread") { root =>
+      val outKey = "spark.sql.parquet.outputTimestampType"
+      val prevOut = spark.conf.get(outKey)
+      try {
+        spark.conf.set(outKey, "TIMESTAMP_MICROS")
+        val microsDir = writeFixture(s"$root/micros") { df =>
+          df.select(col("event_id"), timestamp_micros(col("us")).as("ts"))
+        }
+        // TIMESTAMP_NTZ columns write as INT64 micros with isAdjustedToUTC
+        // = false — byte-compatible with the round-9 regenerated testdata.
+        // (Written under the UTC session zone pinned by this spec's builder,
+        // so the stored wall clock is the UTC rendering of each instant.)
+        val ntzDir = writeFixture(s"$root/ntz") { df =>
+          df.select(col("event_id"),
+            timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
+        }
+        spark.conf.set(outKey, "TIMESTAMP_MILLIS")
+        val millisDir = writeFixture(s"$root/millis") { df =>
+          df.select(col("event_id"), timestamp_micros(col("us")).as("ts"))
+        }
+        assert(tusVia(microsDir) == instantsUs.sorted, "MICROS path")
+        assert(tusVia(ntzDir) == instantsUs.sorted, "NTZ-encoded path")
+        assert(tusVia(millisDir) == instantsUs.sorted, "MILLIS path")
+      } finally spark.conf.set(outKey, prevOut)
+    }
   }
 
   test("normalizeTs handles the nanos-as-long frame shape") {
@@ -81,25 +83,27 @@ class EventsReadSpec extends AnyFunSuite {
   }
 
   test("normalizeTs NTZ branch is independent of the session timezone") {
-    val ntzDir = writeFixture("ntz-tz") { df =>
-      df.select(col("event_id"),
-        timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
-    }
-    val tzKey = "spark.sql.session.timeZone"
-    val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    val prevTz = spark.conf.get(tzKey)
-    try {
-      spark.conf.set(ntzKey, "true")
-      for (tz <- Seq("UTC", "America/New_York", "Asia/Kolkata")) {
-        spark.conf.set(tzKey, tz)
-        val df = spark.read.parquet(s"$ntzDir/events.parquet")
-        assert(df.schema("ts").dataType == TimestampNTZType, s"fixture not NTZ under $tz")
-        val tus = Events.normalizeTs(df).select("tus").collect().map(_.getLong(0)).toSeq.sorted
-        assert(tus == instantsUs.sorted, s"NTZ branch under session tz $tz: $tus")
+    withTempDir("graft-evread-ntz-tz") { dir =>
+      val ntzDir = writeFixture(dir) { df =>
+        df.select(col("event_id"),
+          timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
       }
-    } finally {
-      spark.conf.set(tzKey, prevTz)
-      spark.conf.set(ntzKey, "false")
+      val tzKey = "spark.sql.session.timeZone"
+      val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
+      val prevTz = spark.conf.get(tzKey)
+      try {
+        spark.conf.set(ntzKey, "true")
+        for (tz <- Seq("UTC", "America/New_York", "Asia/Kolkata")) {
+          spark.conf.set(tzKey, tz)
+          val df = spark.read.parquet(s"$ntzDir/events.parquet")
+          assert(df.schema("ts").dataType == TimestampNTZType, s"fixture not NTZ under $tz")
+          val tus = Events.normalizeTs(df).select("tus").collect().map(_.getLong(0)).toSeq.sorted
+          assert(tus == instantsUs.sorted, s"NTZ branch under session tz $tz: $tus")
+        }
+      } finally {
+        spark.conf.set(tzKey, prevTz)
+        spark.conf.set(ntzKey, "false")
+      }
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.TempDirs.withTempDir
 import graft.SparkEntry
 import graft.functions.PolyHash
 import graft.multimodal.Media
@@ -418,17 +419,18 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     //   r3: (ab,ab) 2 -> abab = [abab]
     //   r4: (aa,a) 1 -> aaa = [aaa]
     //   r5: no pairs left -> no row (the exhaustion guard)
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
-    Seq((0L, "abab abab aaa", "en", "src0", 13L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("q_bpe_train")(spark, dir)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1)
-    assert(out.toSeq == Seq(
-      (1L, "a", "b", 4L), (2L, "a", "a", 2L),
-      (3L, "ab", "ab", 2L), (4L, "aa", "a", 1L)))
+    withTempDir("bpe") { dir =>
+      Seq((0L, "abab abab aaa", "en", "src0", 13L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("q_bpe_train")(spark, dir)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .sortBy(_._1)
+      assert(out.toSeq == Seq(
+        (1L, "a", "b", 4L), (2L, "a", "a", 2L),
+        (3L, "ab", "ab", 2L), (4L, "aa", "a", 1L)))
+    }
   }
 
   test("zorder: the div/mod bit interleave computes the textbook Morton code") {
@@ -473,20 +475,21 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     // cluster_id, keep) frame instead of NPE-ing on sum() over zero rows
     // (VERDICT r5 wrong-list #1).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nodups").toString
-    val texts = Seq(
-      "alpha bravo charlie delta echo foxtrot",
-      "golf hotel india juliet kilo lima",
-      "mike november oscar papa quebec romeo",
-      "sierra tango uniform victor whiskey xray",
-      "yankee zulu apple banana cherry date",
-      "elder fig grape honey iris jasmine")
-    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Dedup.clusters.fn(spark, dir)
-    assert(out.columns.toSeq == Seq("doc_id", "cluster_id", "keep"))
-    assert(out.count() == 0L)
+    withTempDir("graft-nodups") { dir =>
+      val texts = Seq(
+        "alpha bravo charlie delta echo foxtrot",
+        "golf hotel india juliet kilo lima",
+        "mike november oscar papa quebec romeo",
+        "sierra tango uniform victor whiskey xray",
+        "yankee zulu apple banana cherry date",
+        "elder fig grape honey iris jasmine")
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = Dedup.clusters.fn(spark, dir)
+      assert(out.columns.toSeq == Seq("doc_id", "cluster_id", "keep"))
+      assert(out.count() == 0L)
+    }
   }
 
   test("decontaminate excludes the eval slice and reports positive overlap") {
@@ -514,41 +517,43 @@ class QueriesSpec extends AnyFunSuite with Eventually {
   test("repetition ratio is bounded and exact on a handcrafted doc") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-rep").toString
-    // "a b a b a b": 5 bigrams, 2 distinct -> dup_10k = 3*10000/5 = 6000
-    Seq((0L, "a b a b a b"), (1L, "x y z w"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = Pipeline.repetition.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(rows(0L) == ((5L, 2L, 6000L)))
-    assert(rows(1L) == ((3L, 3L, 0L)))
-    val bounds = Pipeline.repetition.fn(spark, sf)
-      .filter(col("dup_10k") < 0 || col("dup_10k") > 10000 ||
-        col("n_distinct") > col("n_bigrams"))
-    assert(bounds.count() == 0L)
+    withTempDir("graft-rep") { dir =>
+      // "a b a b a b": 5 bigrams, 2 distinct -> dup_10k = 3*10000/5 = 6000
+      Seq((0L, "a b a b a b"), (1L, "x y z w"))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = Pipeline.repetition.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+      assert(rows(0L) == ((5L, 2L, 6000L)))
+      assert(rows(1L) == ((3L, 3L, 0L)))
+      val bounds = Pipeline.repetition.fn(spark, sf)
+        .filter(col("dup_10k") < 0 || col("dup_10k") > 10000 ||
+          col("n_distinct") > col("n_bigrams"))
+      assert(bounds.count() == 0L)
+    }
   }
 
   test("fine dup spans see 4-word and within-doc repeats that q_dup_spans cannot") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-finespan").toString
-    // doc 0 repeats "red fox jumps high" INSIDE itself (within-doc, 4 words:
-    // both dupSpans gaps at once); docs 1 and 2 share the same 4 words
-    // cross-doc. All words are otherwise unique so no accidental marks.
-    Seq(
-      (0L, "red fox jumps high aa bb cc dd red fox jumps high"),
-      (1L, "ee ff red fox jumps high gg hh"),
-      (2L, "red fox jumps high ii jj kk ll"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // width-8 cross-doc spans: none (no 8-gram repeats across docs)
-    assert(Pipeline.dupSpans.fn(spark, dir).count() == 0L)
-    val fine = Pipeline.dupSpansFine.fn(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    // every occurrence of the repeated 4 words is a 1-gram island -> a
-    // 4-word span at each position: doc 0 pos 1 and 9, doc 1 pos 3, doc 2 pos 1
-    assert(fine == Set((0L, 1L, 4L), (0L, 9L, 4L), (1L, 3L, 4L), (2L, 1L, 4L)))
+    withTempDir("graft-finespan") { dir =>
+      // doc 0 repeats "red fox jumps high" INSIDE itself (within-doc, 4 words:
+      // both dupSpans gaps at once); docs 1 and 2 share the same 4 words
+      // cross-doc. All words are otherwise unique so no accidental marks.
+      Seq(
+        (0L, "red fox jumps high aa bb cc dd red fox jumps high"),
+        (1L, "ee ff red fox jumps high gg hh"),
+        (2L, "red fox jumps high ii jj kk ll"))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      // width-8 cross-doc spans: none (no 8-gram repeats across docs)
+      assert(Pipeline.dupSpans.fn(spark, dir).count() == 0L)
+      val fine = Pipeline.dupSpansFine.fn(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
+      // every occurrence of the repeated 4 words is a 1-gram island -> a
+      // 4-word span at each position: doc 0 pos 1 and 9, doc 1 pos 3, doc 2 pos 1
+      assert(fine == Set((0L, 1L, 4L), (0L, 9L, 4L), (1L, 3L, 4L), (2L, 1L, 4L)))
+    }
   }
 
   test("split assignment is content-addressed: invariant to corpus changes") {
@@ -557,50 +562,53 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     // the defining property: a doc's split depends only on its own text,
     // so doubling the corpus with new docs doubles counts per cell without
     // ever moving an existing doc across splits
-    val dirA = java.nio.file.Files.createTempDirectory("graft-splitA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-splitB").toString
-    val base = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text"), col("lang")).limit(100).cache()
-    base.write.mode("overwrite").parquet(s"$dirA/documents.parquet")
-    val shifted = base.withColumn("doc_id", col("doc_id") + 1000000L)
-    base.union(shifted).write.mode("overwrite").parquet(s"$dirB/documents.parquet")
-    def cells(d: String) = Pipeline.splitAssign.fn(spark, d)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
-    val a = cells(dirA); val b = cells(dirB)
-    assert(b == a.map { case (k, (d, t)) => k -> ((2 * d, 2 * t)) })
-    val total = a.values.map(_._1).sum
-    assert(total == 100 && a.keys.map(_._1).toSet.subsetOf(Set("train", "val", "test")))
+    withTempDir("graft-splitA") { dirA =>
+      withTempDir("graft-splitB") { dirB =>
+        val base = spark.read.parquet(s"$sf/documents.parquet")
+          .select(col("doc_id"), col("text"), col("lang")).limit(100).cache()
+        base.write.mode("overwrite").parquet(s"$dirA/documents.parquet")
+        val shifted = base.withColumn("doc_id", col("doc_id") + 1000000L)
+        base.union(shifted).write.mode("overwrite").parquet(s"$dirB/documents.parquet")
+        def cells(d: String) = Pipeline.splitAssign.fn(spark, d)
+          .collect().map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
+        val a = cells(dirA); val b = cells(dirB)
+        assert(b == a.map { case (k, (d, t)) => k -> ((2 * d, 2 * t)) })
+        val total = a.values.map(_._1).sum
+        assert(total == 100 && a.keys.map(_._1).toSet.subsetOf(Set("train", "val", "test")))
+      }
+    }
   }
 
   test("span scrubbing removes exactly the mined spans and refingerprints") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-scrub").toString
-    // docs 0 and 1 share the 8-gram f1..f8 (at pos 1 and pos 2); doc 2 is
-    // untouched. Scrubbing must remove exactly the 8-word spans dupSpans
-    // reports and keep the remainder in order.
-    Seq(
-      (0L, "f1 f2 f3 f4 f5 f6 f7 f8 tail0a tail0b"),
-      (1L, "pre1 f1 f2 f3 f4 f5 f6 f7 f8"),
-      (2L, "u1 u2 u3 u4 u5 u6 u7 u8 u9"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def fp(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(8), 16)
+    withTempDir("graft-scrub") { dir =>
+      // docs 0 and 1 share the 8-gram f1..f8 (at pos 1 and pos 2); doc 2 is
+      // untouched. Scrubbing must remove exactly the 8-word spans dupSpans
+      // reports and keep the remainder in order.
+      Seq(
+        (0L, "f1 f2 f3 f4 f5 f6 f7 f8 tail0a tail0b"),
+        (1L, "pre1 f1 f2 f3 f4 f5 f6 f7 f8"),
+        (2L, "u1 u2 u3 u4 u5 u6 u7 u8 u9"))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def fp(s: String): Long = {
+        val hex = java.security.MessageDigest.getInstance("MD5")
+          .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        java.lang.Long.parseLong(hex.take(8), 16)
+      }
+      val got = Pipeline.scrubSpans.fn(spark, dir)
+        .collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+        .toMap
+      assert(got(0L) == ((2L, 8L, fp("tail0a tail0b"))))
+      assert(got(1L) == ((1L, 8L, fp("pre1"))))
+      assert(got(2L) == ((9L, 0L, fp("u1 u2 u3 u4 u5 u6 u7 u8 u9"))))
+      // consistency with the miner: per-doc removed = sum of reported span widths
+      val spans = Pipeline.dupSpans.fn(spark, dir)
+        .collect().groupBy(_.getLong(0))
+        .view.mapValues(_.map(_.getLong(3)).sum).toMap
+      assert(spans == Map(0L -> 8L, 1L -> 8L))
     }
-    val got = Pipeline.scrubSpans.fn(spark, dir)
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-      .toMap
-    assert(got(0L) == ((2L, 8L, fp("tail0a tail0b"))))
-    assert(got(1L) == ((1L, 8L, fp("pre1"))))
-    assert(got(2L) == ((9L, 0L, fp("u1 u2 u3 u4 u5 u6 u7 u8 u9"))))
-    // consistency with the miner: per-doc removed = sum of reported span widths
-    val spans = Pipeline.dupSpans.fn(spark, dir)
-      .collect().groupBy(_.getLong(0))
-      .view.mapValues(_.map(_.getLong(3)).sum).toMap
-    assert(spans == Map(0L -> 8L, 1L -> 8L))
   }
 
   test("global index is the exact (lang, doc_id) rank with contiguous ids") {
@@ -621,47 +629,49 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     // the documents-parquet fingerprint, so a rewrite at the SAME dir must
     // produce ranks over the NEW rows, not the persisted stale frame.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rankfp").toString
-    def write(rows: Seq[(Long, String)]): Unit = rows
-      .toDF("doc_id", "lang")
-      .withColumn("text", org.apache.spark.sql.functions.lit("w"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    write(Seq((10L, "en"), (11L, "de")))
-    val first = Pipeline.globalIndex.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(first == Map(11L -> 0L, 10L -> 1L)) // (lang, doc_id) order: de < en
-    write(Seq((10L, "en"), (11L, "de"), (12L, "aa")))
-    val second = Pipeline.globalIndex.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(second == Map(12L -> 0L, 11L -> 1L, 10L -> 2L),
-      "stale rank frame served after the source parquet was regenerated")
-    // code-review r15: the stale generation must be EVICTED, not just
-    // bypassed — grouped by dir alone the old persisted frame leaked for
-    // the session's lifetime, once per regeneration.
-    val liveGroups = Pipeline.rankMemo.keysFor(spark)
-      .map(_._1).filter(_.startsWith(dir)).toSet
-    assert(liveGroups.size <= 1,
-      s"regeneration left stale rank-frame generations alive: $liveGroups")
+    withTempDir("graft-rankfp") { dir =>
+      def write(rows: Seq[(Long, String)]): Unit = rows
+        .toDF("doc_id", "lang")
+        .withColumn("text", org.apache.spark.sql.functions.lit("w"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      write(Seq((10L, "en"), (11L, "de")))
+      val first = Pipeline.globalIndex.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(first == Map(11L -> 0L, 10L -> 1L)) // (lang, doc_id) order: de < en
+      write(Seq((10L, "en"), (11L, "de"), (12L, "aa")))
+      val second = Pipeline.globalIndex.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(second == Map(12L -> 0L, 11L -> 1L, 10L -> 2L),
+        "stale rank frame served after the source parquet was regenerated")
+      // code-review r15: the stale generation must be EVICTED, not just
+      // bypassed — grouped by dir alone the old persisted frame leaked for
+      // the session's lifetime, once per regeneration.
+      val liveGroups = Pipeline.rankMemo.keysFor(spark)
+        .map(_._1).filter(_.startsWith(dir)).toSet
+      assert(liveGroups.size <= 1,
+        s"regeneration left stale rank-frame generations alive: $liveGroups")
+    }
   }
 
   test("gram novelty counts distinct 8-grams first seen in each document") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-novelty").toString
-    // doc 0: 9 words -> 2 distinct 8-grams, both first-seen.
-    // doc 1: identical text -> same 2 grams, zero first-seen.
-    // doc 2: repeats its own leading 8-gram at pos 9 -> 9 positional grams
-    //        but 8 DISTINCT ones (within-doc dups collapse), all first-seen.
-    // doc 3: 7 words -> below gram width, no output row.
-    Seq(
-      (0L, "a b c d e f g h i"),
-      (1L, "a b c d e f g h i"),
-      (2L, "x1 x2 x3 x4 x5 x6 x7 x8 x1 x2 x3 x4 x5 x6 x7 x8"),
-      (3L, "s1 s2 s3 s4 s5 s6 s7"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = Pipeline.gramNovelty.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got == Map(0L -> ((2L, 2L)), 1L -> ((2L, 0L)), 2L -> ((8L, 8L))))
+    withTempDir("graft-novelty") { dir =>
+      // doc 0: 9 words -> 2 distinct 8-grams, both first-seen.
+      // doc 1: identical text -> same 2 grams, zero first-seen.
+      // doc 2: repeats its own leading 8-gram at pos 9 -> 9 positional grams
+      //        but 8 DISTINCT ones (within-doc dups collapse), all first-seen.
+      // doc 3: 7 words -> below gram width, no output row.
+      Seq(
+        (0L, "a b c d e f g h i"),
+        (1L, "a b c d e f g h i"),
+        (2L, "x1 x2 x3 x4 x5 x6 x7 x8 x1 x2 x3 x4 x5 x6 x7 x8"),
+        (3L, "s1 s2 s3 s4 s5 s6 s7"))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = Pipeline.gramNovelty.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(got == Map(0L -> ((2L, 2L)), 1L -> ((2L, 0L)), 2L -> ((8L, 8L))))
+    }
   }
 
   test("embedding centroids: exact fixed-point mean incl. a .5-boundary cell") {
@@ -671,42 +681,44 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     // ending in 5 at the 5th decimal where Spark's round(HALF_UP) and
     // DuckDB's binary-double round disagree. The query now emits the raw
     // IEEE quotient, which must equal 435.0/20000.0 bit-for-bit.
-    val dir = java.nio.file.Files.createTempDirectory("graft-centroid").toString
-    Seq(
-      (0L, Array(0.0217f, 1.0f), 0),
-      (1L, Array(0.0218f, 2.0f), 0),
-      (2L, Array(-1.0f, -3.0f), 1))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val got = Similarity.embedCentroids.fn(spark, dir)
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    assert(got((0, 0)) == 435.0 / 20000.0) // 0.02175 exactly, NOT rounded
-    assert(got((0, 1)) == 1.5)
-    assert(got((1, 0)) == -1.0 && got((1, 1)) == -3.0)
-    assert(got.size == 4)
+    withTempDir("graft-centroid") { dir =>
+      Seq(
+        (0L, Array(0.0217f, 1.0f), 0),
+        (1L, Array(0.0218f, 2.0f), 0),
+        (2L, Array(-1.0f, -3.0f), 1))
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val got = Similarity.embedCentroids.fn(spark, dir)
+        .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      assert(got((0, 0)) == 435.0 / 20000.0) // 0.02175 exactly, NOT rounded
+      assert(got((0, 1)) == 1.5)
+      assert(got((1, 0)) == -1.0 && got((1, 1)) == -3.0)
+      assert(got.size == 4)
+    }
   }
 
   test("top-k terms per language ranks by count with token tie-break") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-topkterms").toString
-    Seq(
-      (0L, "a a a b b c", "en"),
-      (1L, "c b a", "en"),
-      (2L, "x y x", "de"))
-      .toDF("doc_id", "text", "lang")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = TextOps.topkTermsPerLang.fn(spark, dir)
-      .collect()
-      .map(r => (r.getString(0), r.getInt(3)) -> ((r.getString(1), r.getLong(2))))
-      .toMap
-    // en: a=4, b=3, c=2; de: x=2, y=1 (tie-break never needed here except
-    // proving rank order is (cnt desc, token asc))
-    assert(got(("en", 1)) == (("a", 4L)))
-    assert(got(("en", 2)) == (("b", 3L)))
-    assert(got(("en", 3)) == (("c", 2L)))
-    assert(got(("de", 1)) == (("x", 2L)))
-    assert(got(("de", 2)) == (("y", 1L)))
-    assert(got.size == 5)
+    withTempDir("graft-topkterms") { dir =>
+      Seq(
+        (0L, "a a a b b c", "en"),
+        (1L, "c b a", "en"),
+        (2L, "x y x", "de"))
+        .toDF("doc_id", "text", "lang")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = TextOps.topkTermsPerLang.fn(spark, dir)
+        .collect()
+        .map(r => (r.getString(0), r.getInt(3)) -> ((r.getString(1), r.getLong(2))))
+        .toMap
+      // en: a=4, b=3, c=2; de: x=2, y=1 (tie-break never needed here except
+      // proving rank order is (cnt desc, token asc))
+      assert(got(("en", 1)) == (("a", 4L)))
+      assert(got(("en", 2)) == (("b", 3L)))
+      assert(got(("en", 3)) == (("c", 2L)))
+      assert(got(("de", 1)) == (("x", 2L)))
+      assert(got(("de", 2)) == (("y", 1L)))
+      assert(got.size == 5)
+    }
   }
 
   test("int8 quantization: exact codes, error fold, and constant-dim guard") {
@@ -715,22 +727,23 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     // 0.5 -> floor(127.5 + 0.5) = 128, recon 128/255 = 0.50196...,
     // err_fp7 = floor(0.0019607843 * 1e7 + 0.5) = 19608.
     // dim 1 is CONSTANT: mx = mn must quantize to 0, not divide by zero.
-    val dir = java.nio.file.Files.createTempDirectory("graft-quant").toString
-    Seq(
-      (0L, Array(0.0f, 5.0f), 0),
-      (1L, Array(1.0f, 5.0f), 0),
-      (2L, Array(0.5f, 5.0f), 1))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val got = Similarity.embedQuantize.fn(spark, dir)
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
-      .toMap
-    assert(got((0, 0)) == ((2L, 255L, 0L)))
-    assert(got((0, 1)) == ((2L, 0L, 0L)))
-    assert(got((1, 0)) == ((1L, 128L, 19608L)))
-    assert(got((1, 1)) == ((1L, 0L, 0L)))
-    assert(got.size == 4)
+    withTempDir("graft-quant") { dir =>
+      Seq(
+        (0L, Array(0.0f, 5.0f), 0),
+        (1L, Array(1.0f, 5.0f), 0),
+        (2L, Array(0.5f, 5.0f), 1))
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val got = Similarity.embedQuantize.fn(spark, dir)
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
+        .toMap
+      assert(got((0, 0)) == ((2L, 255L, 0L)))
+      assert(got((0, 1)) == ((2L, 0L, 0L)))
+      assert(got((1, 0)) == ((1L, 128L, 19608L)))
+      assert(got((1, 1)) == ((1L, 0L, 0L)))
+      assert(got.size == 4)
+    }
   }
 
   test("quantized ANN keeps most of the float top-10 and full rank structure") {
@@ -775,21 +788,22 @@ class QueriesSpec extends AnyFunSuite with Eventually {
 
   test("incremental dedup keeps only batch content unseen in the corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-incr").toString
-    // corpus (src1) holds "dup text"; batch (src0) has an in-batch double
-    // of the new text plus one doc duplicating corpus content
-    Seq(
-      (0L, "brand new text", "src0"),
-      (1L, "brand new text", "src0"),
-      (2L, "dup text", "src0"),
-      (3L, "dup text", "src1"),
-      (4L, "other corpus text", "src1"))
-      .toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = Dedup.incremental.fn(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    // only the new text survives, canonicalized to its minimum doc_id
-    assert(rows.map(_._1) == Seq(0L))
+    withTempDir("graft-incr") { dir =>
+      // corpus (src1) holds "dup text"; batch (src0) has an in-batch double
+      // of the new text plus one doc duplicating corpus content
+      Seq(
+        (0L, "brand new text", "src0"),
+        (1L, "brand new text", "src0"),
+        (2L, "dup text", "src0"),
+        (3L, "dup text", "src1"),
+        (4L, "other corpus text", "src1"))
+        .toDF("doc_id", "text", "source")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = Dedup.incremental.fn(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      // only the new text survives, canonicalized to its minimum doc_id
+      assert(rows.map(_._1) == Seq(0L))
+    }
   }
 
   test("dedup drop metrics are pinned at sf0.001") {
@@ -859,101 +873,105 @@ class QueriesSpec extends AnyFunSuite with Eventually {
   test("pii scrub counts and redacts exactly, and is identity on clean docs") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-pii").toString
-    Seq((0L, "hello customer alice more text"),
-        (1L, "no match here"),
-        (2L, "customer bob and customer carol"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = Pipeline.piiScrub.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(rows(0L) == ((1L, PolyHash.hash(UTF8String.fromString("hello <PII> more text")))))
-    assert(rows(1L) == ((0L, PolyHash.hash(UTF8String.fromString("no match here")))))
-    assert(rows(2L) == ((2L, PolyHash.hash(UTF8String.fromString("<PII> and <PII>")))))
-    // corpus: both classes populated, and zero-hit docs keep their original
-    // fingerprint (redaction is an identity there)
-    val out = Pipeline.piiScrub.fn(spark, sf).persist()
-    try {
-      assert(out.filter(col("n_pii") > 0).count() > 0L)
-      val clean = out.filter(col("n_pii") === 0L)
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-        .select(col("doc_id"), PolyHash.polyHash(spark, "text").as("fp_orig"))
-      assert(clean.join(docs, "doc_id")
-        .filter(col("fp_redacted") =!= col("fp_orig")).count() == 0L)
-    } finally out.unpersist()
+    withTempDir("graft-pii") { dir =>
+      Seq((0L, "hello customer alice more text"),
+          (1L, "no match here"),
+          (2L, "customer bob and customer carol"))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = Pipeline.piiScrub.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(rows(0L) == ((1L, PolyHash.hash(UTF8String.fromString("hello <PII> more text")))))
+      assert(rows(1L) == ((0L, PolyHash.hash(UTF8String.fromString("no match here")))))
+      assert(rows(2L) == ((2L, PolyHash.hash(UTF8String.fromString("<PII> and <PII>")))))
+      // corpus: both classes populated, and zero-hit docs keep their original
+      // fingerprint (redaction is an identity there)
+      val out = Pipeline.piiScrub.fn(spark, sf).persist()
+      try {
+        assert(out.filter(col("n_pii") > 0).count() > 0L)
+        val clean = out.filter(col("n_pii") === 0L)
+        val docs = spark.read.parquet(s"$sf/documents.parquet")
+          .select(col("doc_id"), PolyHash.polyHash(spark, "text").as("fp_orig"))
+        assert(clean.join(docs, "doc_id")
+          .filter(col("fp_redacted") =!= col("fp_orig")).count() == 0L)
+      } finally out.unpersist()
+    }
   }
 
   test("sequence packing assigns each doc to the pack where it starts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pack").toString
-    val docs = Seq(
-      (0L, Seq.fill(300)("alpha").mkString(" "), "en"),
-      (1L, Seq.fill(300)("beta").mkString(" "), "en"),
-      (2L, Seq.fill(100)("gamma").mkString(" "), "en"),
-      (3L, Seq.fill(700)("delta").mkString(" "), "de"))
-    docs.toDF("doc_id", "text", "lang")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // independent driver-side reference: concatenate per lang in
-    // (poly-hash, doc_id) order, pack = starting-offset div 512
-    val expected = docs
-      .map { case (id, text, lang) =>
-        (id, lang, text.split(" ").length.toLong,
-          PolyHash.hash(UTF8String.fromString(text)))
-      }
-      .groupBy(_._2)
-      .flatMap { case (_, ds) =>
-        val ordered = ds.sortBy(d => (d._4, d._1))
-        val offsets = ordered.scanLeft(0L)(_ + _._3)
-        ordered.zip(offsets).map { case (d, off) => d._1 -> (off / 512L) }
-      }
-    val got = Pipeline.packSequences.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    assert(got == expected.toMap, s"got $got, expected $expected")
-    // every doc assigned exactly once at corpus scale, pack ids non-negative
-    val out = Pipeline.packSequences.fn(spark, sf).persist()
-    try {
-      val total = spark.read.parquet(s"$sf/documents.parquet").count()
-      assert(out.count() == total)
-      assert(out.filter(org.apache.spark.sql.functions.col("pack_id") < 0).count() == 0L)
-    } finally out.unpersist()
+    withTempDir("graft-pack") { dir =>
+      val docs = Seq(
+        (0L, Seq.fill(300)("alpha").mkString(" "), "en"),
+        (1L, Seq.fill(300)("beta").mkString(" "), "en"),
+        (2L, Seq.fill(100)("gamma").mkString(" "), "en"),
+        (3L, Seq.fill(700)("delta").mkString(" "), "de"))
+      docs.toDF("doc_id", "text", "lang")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      // independent driver-side reference: concatenate per lang in
+      // (poly-hash, doc_id) order, pack = starting-offset div 512
+      val expected = docs
+        .map { case (id, text, lang) =>
+          (id, lang, text.split(" ").length.toLong,
+            PolyHash.hash(UTF8String.fromString(text)))
+        }
+        .groupBy(_._2)
+        .flatMap { case (_, ds) =>
+          val ordered = ds.sortBy(d => (d._4, d._1))
+          val offsets = ordered.scanLeft(0L)(_ + _._3)
+          ordered.zip(offsets).map { case (d, off) => d._1 -> (off / 512L) }
+        }
+      val got = Pipeline.packSequences.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
+      assert(got == expected.toMap, s"got $got, expected $expected")
+      // every doc assigned exactly once at corpus scale, pack ids non-negative
+      val out = Pipeline.packSequences.fn(spark, sf).persist()
+      try {
+        val total = spark.read.parquet(s"$sf/documents.parquet").count()
+        assert(out.count() == total)
+        assert(out.filter(org.apache.spark.sql.functions.col("pack_id") < 0).count() == 0L)
+      } finally out.unpersist()
+    }
   }
 
   test("dsir weight is the exact quantized target/raw unigram ratio sum") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
-    // counts: a -> raw 3 / tgt 2, b -> raw 3 / tgt 1
-    // per-token: a -> 6666, b -> 3333
-    Seq((0L, "a a b", "en"), (1L, "a b b", "de"))
-      .toDF("doc_id", "text", "lang")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = Pipeline.dsirWeight.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(rows(0L) == ((3L, 6666L + 6666L + 3333L)))
-    assert(rows(1L) == ((3L, 6666L + 3333L + 3333L)))
-    // corpus invariants: every doc scored, 0 <= score <= 10000 * n_tokens
-    val out = Pipeline.dsirWeight.fn(spark, sf).persist()
-    try {
-      assert(out.count() == spark.read.parquet(s"$sf/documents.parquet").count())
-      assert(out.filter(col("dsir_10k") < 0 ||
-        col("dsir_10k") > col("n_tokens") * 10000L).count() == 0L)
-    } finally out.unpersist()
+    withTempDir("graft-dsir") { dir =>
+      // counts: a -> raw 3 / tgt 2, b -> raw 3 / tgt 1
+      // per-token: a -> 6666, b -> 3333
+      Seq((0L, "a a b", "en"), (1L, "a b b", "de"))
+        .toDF("doc_id", "text", "lang")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = Pipeline.dsirWeight.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(rows(0L) == ((3L, 6666L + 6666L + 3333L)))
+      assert(rows(1L) == ((3L, 6666L + 3333L + 3333L)))
+      // corpus invariants: every doc scored, 0 <= score <= 10000 * n_tokens
+      val out = Pipeline.dsirWeight.fn(spark, sf).persist()
+      try {
+        assert(out.count() == spark.read.parquet(s"$sf/documents.parquet").count())
+        assert(out.filter(col("dsir_10k") < 0 ||
+          col("dsir_10k") > col("n_tokens") * 10000L).count() == 0L)
+      } finally out.unpersist()
+    }
   }
 
   test("dup-ngram mining counts document and occurrence frequency exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dupn").toString
-    // "a..h" occurs in doc0 (once), doc1 (once), doc3 (twice); every other
-    // 8-gram lives in a single document and must be filtered (n_docs < 2)
-    Seq((0L, "a b c d e f g h x"),
-        (1L, "z a b c d e f g h"),
-        (2L, "totally unrelated words only seven here"),
-        (3L, "a b c d e f g h a b c d e f g h"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = Pipeline.dupNgrams.fn(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSeq == Seq(("a b c d e f g h", 3L, 4L)), got.mkString(", "))
+    withTempDir("graft-dupn") { dir =>
+      // "a..h" occurs in doc0 (once), doc1 (once), doc3 (twice); every other
+      // 8-gram lives in a single document and must be filtered (n_docs < 2)
+      Seq((0L, "a b c d e f g h x"),
+          (1L, "z a b c d e f g h"),
+          (2L, "totally unrelated words only seven here"),
+          (3L, "a b c d e f g h a b c d e f g h"))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = Pipeline.dupNgrams.fn(spark, dir)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      assert(got.toSeq == Seq(("a b c d e f g h", 3L, 4L)), got.mkString(", "))
+    }
   }
 
   test("edit-distance verify covers exactly the LSH pairs with exact bounds") {
@@ -1037,30 +1055,31 @@ class QueriesSpec extends AnyFunSuite with Eventually {
       2L -> "a b c d e f g h Z p q r s t u v w",
       3L -> "a b c d e f g h K K K p q r s t u v w",
       4L -> "only unique words live here nothing repeats at all")
-    val dir = java.nio.file.Files.createTempDirectory("graft-spans").toString
-    docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // Independent brute force: mark gram positions occurring in >=2 docs,
-    // merge consecutive runs.
-    val grams = docs.map { case (id, text) =>
-      val w = text.split(" ")
-      id -> (1 to w.length - 7).map(i => i -> w.slice(i - 1, i + 7).mkString(" "))
-    }.toMap
-    val df = grams.values.flatten.map(_._2)
-      .groupBy(identity).collect { case (g, os) if grams.count(_._2.exists(_._2 == g)) >= 2 => g }
-      .toSet
-    val expected = grams.flatMap { case (id, ps) =>
-      val marked = ps.collect { case (pos, g) if df(g) => pos }.sorted
-      val runs = marked.foldLeft(List.empty[(Int, Int)]) {
-        case ((s, e) :: rest, p) if p == e + 1 => (s, p) :: rest
-        case (acc, p)                          => (p, p) :: acc
-      }
-      runs.map { case (s, e) => (id, s.toLong, (e - s + 1).toLong, (e - s + 8).toLong) }
-    }.toSet
-    val got = Pipeline.dupSpans.fn(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got == expected, s"only-got=${got -- expected}, only-expected=${expected -- got}")
-    assert(expected.exists(_._3 >= 2L) && expected.count(_._1 == 2L) == 2,
-      "fixture must exercise both a multi-gram span and split islands")
+    withTempDir("graft-spans") { dir =>
+      docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      // Independent brute force: mark gram positions occurring in >=2 docs,
+      // merge consecutive runs.
+      val grams = docs.map { case (id, text) =>
+        val w = text.split(" ")
+        id -> (1 to w.length - 7).map(i => i -> w.slice(i - 1, i + 7).mkString(" "))
+      }.toMap
+      val df = grams.values.flatten.map(_._2)
+        .groupBy(identity).collect { case (g, os) if grams.count(_._2.exists(_._2 == g)) >= 2 => g }
+        .toSet
+      val expected = grams.flatMap { case (id, ps) =>
+        val marked = ps.collect { case (pos, g) if df(g) => pos }.sorted
+        val runs = marked.foldLeft(List.empty[(Int, Int)]) {
+          case ((s, e) :: rest, p) if p == e + 1 => (s, p) :: rest
+          case (acc, p)                          => (p, p) :: acc
+        }
+        runs.map { case (s, e) => (id, s.toLong, (e - s + 1).toLong, (e - s + 8).toLong) }
+      }.toSet
+      val got = Pipeline.dupSpans.fn(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(got == expected, s"only-got=${got -- expected}, only-expected=${expected -- got}")
+      assert(expected.exists(_._3 >= 2L) && expected.count(_._1 == 2L) == 2,
+        "fixture must exercise both a multi-gram span and split islands")
+    }
   }
 
   test("connected components match a union-find reference on random graphs") {
@@ -1096,41 +1115,42 @@ class QueriesSpec extends AnyFunSuite with Eventually {
   test("reliable-checkpoint mode (graft.cc.checkpointDir) produces identical clusters") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
-    spark.conf.set("graft.cc.checkpointDir", ckDir)
-    try {
-      // two components: a 5-chain (min 0) and a triangle (min 10)
-      val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
-        (10L, 11L), (11L, 12L), (10L, 12L)).toDF("doc_a", "doc_b")
-      val (labels, _) = Dedup.ccFromPairs(spark, pairs)
-      val got = labels.collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      assert(got == Map(
-        0L -> ((0L, true)), 1L -> ((0L, false)), 2L -> ((0L, false)),
-        3L -> ((0L, false)), 4L -> ((0L, false)),
-        10L -> ((10L, true)), 11L -> ((10L, false)), 12L -> ((10L, false))))
-      // the reliable path actually wrote checkpoint data
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, "reliable checkpoint directory is empty — local path was used")
-      // Superseded generations' checkpoint dirs are deleted as the
-      // iteration advances (ADVICE r7 #5): only the FINAL generation's
-      // rdd-* dir may remain (edges + earlier generations are gone).
-      import scala.jdk.CollectionConverters._
-      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
-        .iterator().asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("rdd-"))
-        .toSeq
-      assert(rddDirs.size == 1,
-        s"expected exactly the final generation's checkpoint dir, got: $rddDirs")
-      // ...and the returned frame stays RECOMPUTABLE through that final
-      // checkpoint — the caveat reliable mode removes from the local path.
-      labels.unpersist(blocking = true)
-      val recomputed = labels.collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      assert(recomputed == got, "recompute after unpersist diverged")
-    } finally spark.conf.unset("graft.cc.checkpointDir")
+    withTempDir("graft-cc-ck") { ckDir =>
+      spark.conf.set("graft.cc.checkpointDir", ckDir)
+      try {
+        // two components: a 5-chain (min 0) and a triangle (min 10)
+        val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
+          (10L, 11L), (11L, 12L), (10L, 12L)).toDF("doc_a", "doc_b")
+        val (labels, _) = Dedup.ccFromPairs(spark, pairs)
+        val got = labels.collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+        assert(got == Map(
+          0L -> ((0L, true)), 1L -> ((0L, false)), 2L -> ((0L, false)),
+          3L -> ((0L, false)), 4L -> ((0L, false)),
+          10L -> ((10L, true)), 11L -> ((10L, false)), 12L -> ((10L, false))))
+        // the reliable path actually wrote checkpoint data
+        val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+          .filter(java.nio.file.Files.isRegularFile(_)).count()
+        assert(wrote > 0, "reliable checkpoint directory is empty — local path was used")
+        // Superseded generations' checkpoint dirs are deleted as the
+        // iteration advances (ADVICE r7 #5): only the FINAL generation's
+        // rdd-* dir may remain (edges + earlier generations are gone).
+        import scala.jdk.CollectionConverters._
+        val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+          .iterator().asScala
+          .filter(p => java.nio.file.Files.isDirectory(p) &&
+            p.getFileName.toString.startsWith("rdd-"))
+          .toSeq
+        assert(rddDirs.size == 1,
+          s"expected exactly the final generation's checkpoint dir, got: $rddDirs")
+        // ...and the returned frame stays RECOMPUTABLE through that final
+        // checkpoint — the caveat reliable mode removes from the local path.
+        labels.unpersist(blocking = true)
+        val recomputed = labels.collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+        assert(recomputed == got, "recompute after unpersist diverged")
+      } finally spark.conf.unset("graft.cc.checkpointDir")
+    }
   }
 
   test("compaction reduces the file count without losing rows") {
@@ -1319,21 +1339,22 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     val cap = Events.JourneyCap
     val big = (0 until cap + 25).map(i => (100L + i, i * 1000L, 1L, s"t$i"))
     val small = Seq((900L, 0L, 2L, "a"), (901L, 1000L, 2L, "b"), (902L, 2000L, 2L, "c"))
-    val d = java.nio.file.Files.createTempDirectory("graft-journey-cap").toString
-    (big ++ small).toDF("event_id", "us", "user_id", "event_type")
-      .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id", "event_type")
-      .write.mode("overwrite").parquet(s"$d/events.parquet")
-    val rows = SparkEntry.queries("q_user_journey")(spark, d)
-      .collect().map(r => r.getLong(r.fieldIndex("user_id")) ->
-        ((r.getLong(r.fieldIndex("n_events")),
-          r.getString(r.fieldIndex("path")),
-          r.getBoolean(r.fieldIndex("overflowed"))))).toMap
-    val (bigN, bigPath, bigOver) = rows(1L)
-    assert(bigN == cap + 25, "n_events must report the FULL count, not the cap")
-    assert(bigOver, "over-budget user must be flagged")
-    assert(bigPath == (0 until cap).map(i => s"t$i").mkString(">"),
-      "path must be the FIRST cap events under the total order")
-    assert(rows(2L) == ((3L, "a>b>c", false)), "small user must be untouched")
+    withTempDir("graft-journey-cap") { d =>
+      (big ++ small).toDF("event_id", "us", "user_id", "event_type")
+        .selectExpr("event_id", "timestamp_micros(us) AS ts", "user_id", "event_type")
+        .write.mode("overwrite").parquet(s"$d/events.parquet")
+      val rows = SparkEntry.queries("q_user_journey")(spark, d)
+        .collect().map(r => r.getLong(r.fieldIndex("user_id")) ->
+          ((r.getLong(r.fieldIndex("n_events")),
+            r.getString(r.fieldIndex("path")),
+            r.getBoolean(r.fieldIndex("overflowed"))))).toMap
+      val (bigN, bigPath, bigOver) = rows(1L)
+      assert(bigN == cap + 25, "n_events must report the FULL count, not the cap")
+      assert(bigOver, "over-budget user must be flagged")
+      assert(bigPath == (0 until cap).map(i => s"t$i").mkString(">"),
+        "path must be the FIRST cap events under the total order")
+      assert(rows(2L) == ((3L, "a>b>c", false)), "small user must be untouched")
+    }
   }
 
   test("q_shard_balance partitions the corpus into near-equal token shards") {

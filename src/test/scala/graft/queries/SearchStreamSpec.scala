@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,34 +30,35 @@ class SearchStreamSpec extends AnyFunSuite {
 
   test("stop after 200 points, restart to 500: exactly-once, golden-prefix-exact") {
     spark.sparkContext.setLogLevel("WARN")
-    val out = java.nio.file.Files.createTempDirectory("graft-search-stream").toString
+    withTempDir("graft-search-stream") { out =>
 
-    ReferenceOps.runSearchStream(spark, out, 200)
-    val first = readEvals(out)
-    assert(first.keySet == (1 to 200).toSet,
-      s"first run must emit idx 1..200 exactly once, got ${first.size} keys")
+      ReferenceOps.runSearchStream(spark, out, 200)
+      val first = readEvals(out)
+      assert(first.keySet == (1 to 200).toSet,
+        s"first run must emit idx 1..200 exactly once, got ${first.size} keys")
 
-    ReferenceOps.runSearchStream(spark, out, 500)
-    val all = readEvals(out)
-    // the parquet map would have collapsed a re-emitted duplicate silently;
-    // a RAW row count catches it
-    val rawCount = spark.read.parquet(s"$out/data").count()
-    assert(rawCount == 500L, s"sink must hold exactly 500 rows, got $rawCount")
-    assert(all.keySet == (1 to 500).toSet, "restart must resume at 201, not replay or skip")
-    first.foreach { case (i, v) =>
-      assert(all(i) == v, s"restart mutated already-committed idx $i")
-    }
+      ReferenceOps.runSearchStream(spark, out, 500)
+      val all = readEvals(out)
+      // the parquet map would have collapsed a re-emitted duplicate silently;
+      // a RAW row count catches it
+      val rawCount = spark.read.parquet(s"$out/data").count()
+      assert(rawCount == 500L, s"sink must hold exactly 500 rows, got $rawCount")
+      assert(all.keySet == (1 to 500).toSet, "restart must resume at 201, not replay or skip")
+      first.foreach { case (i, v) =>
+        assert(all(i) == v, s"restart mutated already-committed idx $i")
+      }
 
-    // every evaluation equals the golden stencil prefix shifted to the
-    // (10, 15) start, with the sphere cost — exact IEEE equality
-    val prefix = graft.SparkEntry.queries("q_stencil_prefix")(spark, "")
-      .collect()
-      .map(r => r.getInt(r.fieldIndex("idx")) ->
-        ((10.0 + r.getDouble(r.fieldIndex("x")), 15.0 + r.getDouble(r.fieldIndex("y")))))
-      .toMap
-    all.foreach { case (i, (x, y, cost)) =>
-      assert(prefix(i) == ((x, y)), s"idx $i point drifted from the golden prefix")
-      assert(cost == Array(x, y).map(v => v * v).sum, s"idx $i cost is not the sphere objective")
+      // every evaluation equals the golden stencil prefix shifted to the
+      // (10, 15) start, with the sphere cost — exact IEEE equality
+      val prefix = graft.SparkEntry.queries("q_stencil_prefix")(spark, "")
+        .collect()
+        .map(r => r.getInt(r.fieldIndex("idx")) ->
+          ((10.0 + r.getDouble(r.fieldIndex("x")), 15.0 + r.getDouble(r.fieldIndex("y")))))
+        .toMap
+      all.foreach { case (i, (x, y, cost)) =>
+        assert(prefix(i) == ((x, y)), s"idx $i point drifted from the golden prefix")
+        assert(cost == Array(x, y).map(v => v * v).sum, s"idx $i cost is not the sphere objective")
+      }
     }
   }
 
@@ -71,42 +73,43 @@ class SearchStreamSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val client = new graft.spark.SparkClient(spark)
     val waves = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Int], Int)]
-    try {
-      val objective = graft.search.Objective { _ =>
-        org.apache.spark.TaskContext.get() match {
-          case null => -1.0 // would mean driver-side evaluation — the failure this spec exists to catch
-          case tc   => tc.partitionId().toDouble
-        }
-      }
-      val q = spark.readStream.format("graft.sources.StencilSource")
-        .option("dims", 2).option("maxHalvings", 7)
-        .option("pointsPerBatch", 64).option("maxPoints", 128)
-        .load()
-        .selectExpr("idx", "offset[0] AS ox", "offset[1] AS oy")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val rows = batch.collect()
-          if (rows.nonEmpty) {
-            val pts: IndexedSeq[Array[Double]] = rows.toIndexedSeq
-              .map(r => Array(r.getDouble(1), r.getDouble(2)))
-            val id = client.submit(objective, pts)
-            var costs: Array[Double] = null
-            while (costs == null)
-              client.nextBatch(block = true).foreach {
-                case (rid, cs) => if (rid == id) costs = cs
-              }
-            waves.synchronized {
-              waves += ((batchId, costs.map(_.toInt).toSet, pts.length)): Unit
-            }
+    withTempDir("graft-occupancy-chk") { chk =>
+      try {
+        val objective = graft.search.Objective { _ =>
+          org.apache.spark.TaskContext.get() match {
+            case null => -1.0 // would mean driver-side evaluation — the failure this spec exists to catch
+            case tc   => tc.partitionId().toDouble
           }
-          ()
         }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-occupancy-chk").toString)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally client.shutdown()
+        val q = spark.readStream.format("graft.sources.StencilSource")
+          .option("dims", 2).option("maxHalvings", 7)
+          .option("pointsPerBatch", 64).option("maxPoints", 128)
+          .load()
+          .selectExpr("idx", "offset[0] AS ox", "offset[1] AS oy")
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+            val rows = batch.collect()
+            if (rows.nonEmpty) {
+              val pts: IndexedSeq[Array[Double]] = rows.toIndexedSeq
+                .map(r => Array(r.getDouble(1), r.getDouble(2)))
+              val id = client.submit(objective, pts)
+              var costs: Array[Double] = null
+              while (costs == null)
+                client.nextBatch(block = true).foreach {
+                  case (rid, cs) => if (rid == id) costs = cs
+                }
+              waves.synchronized {
+                waves += ((batchId, costs.map(_.toInt).toSet, pts.length)): Unit
+              }
+            }
+            ()
+          }
+          .option("checkpointLocation", chk)
+          .start()
+        try q.processAllAvailable()
+        finally q.stop()
+      } finally client.shutdown()
+    }
     assert(waves.exists(_._3 == 64), s"no full 64-point wave ran (waves: $waves)")
     waves.foreach { case (bid, parts, n) =>
       assert(!parts.contains(-1), s"wave $bid evaluated driver-side, not in tasks")

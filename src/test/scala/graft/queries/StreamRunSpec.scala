@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,41 +44,40 @@ class StreamRunSpec extends AnyFunSuite {
       spark.sparkContext.setLogLevel("WARN")
       assert(Events.eventReadConfs.map(_._1).toSet == Set(Nanos, Ntz))
       val saved = explicitConfs
-      val work = java.nio.file.Files.createTempDirectory("graft-stream-run").toFile
-      try {
-        // two single-file inputs: maxFilesPerTrigger=1 makes them batches 0 and 1
-        import spark.implicits._
-        val in = new java.io.File(work, "in"); in.mkdirs()
-        Events.stageSingleFile(Seq(1L, 2L).toDF("x"), work, in, "b0", 1600000000000L)
-        Events.stageSingleFile(Seq(3L).toDF("x"), work, in, "b1", 1600000060000L)
-        // prior state: two keys set to non-run values, three keys unset
-        spark.conf.set(Width, "3")
-        spark.conf.set(Ntz, "true")
-        Seq(Provider, NoData, Nanos).foreach(spark.conf.unset)
-        val before = explicitConfs
-        var batch0Width: String = null
-        val err = intercept[Exception] {
-          StreamRun(width = Some(2), rocksDb = true, eventReads = true,
-              noDataBatches = false, trigger = trigger).run(spark) {
-            spark.readStream.schema("x LONG").option("maxFilesPerTrigger", "1")
-              .parquet(in.toString)
-          }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            if (batchId == 1) throw new IllegalStateException("boom on batch 1")
-            batch0Width = batch.sparkSession.conf.get(Width)
-          }.option("checkpointLocation", s"$work/chk"))
-        }
-        assert(batch0Width == "2", "batch 0 must run under the run's state width")
-        assert(causes(err).exists(c => Option(c.getMessage).exists(_.contains("boom on batch 1"))),
-          s"the batch-1 failure must reach the caller, got $err")
-        assert(spark.streams.active.isEmpty, "the failed run left a streaming query active")
-        assert(explicitConfs == before, s"scoped confs not restored: $before -> $explicitConfs")
-        assert(before(Width).contains("3") && before(Provider).isEmpty)
-      } finally {
-        saved.foreach {
+      withTempDir("graft-stream-run") { work =>
+        try {
+          // two single-file inputs: maxFilesPerTrigger=1 makes them batches 0 and 1
+          import spark.implicits._
+          val in = s"$work/in"
+          graft.sources.FileSources.stageFiles(Seq(1L, 2L).toDF("x"), work, in, "b0",
+            1600000000000L)
+          graft.sources.FileSources.stageFiles(Seq(3L).toDF("x"), work, in, "b1", 1600000060000L)
+          // prior state: two keys set to non-run values, three keys unset
+          spark.conf.set(Width, "3")
+          spark.conf.set(Ntz, "true")
+          Seq(Provider, NoData, Nanos).foreach(spark.conf.unset)
+          val before = explicitConfs
+          var batch0Width: String = null
+          val err = intercept[Exception] {
+            StreamRun(width = Some(2), rocksDb = true, eventReads = true,
+                noDataBatches = false, trigger = trigger).run(spark) {
+              spark.readStream.schema("x LONG").option("maxFilesPerTrigger", "1")
+                .parquet(in)
+            }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+              if (batchId == 1) throw new IllegalStateException("boom on batch 1")
+              batch0Width = batch.sparkSession.conf.get(Width)
+            }.option("checkpointLocation", s"$work/chk"))
+          }
+          assert(batch0Width == "2", "batch 0 must run under the run's state width")
+          assert(causes(err).exists(c => Option(c.getMessage).exists(_.contains("boom on batch 1"))),
+            s"the batch-1 failure must reach the caller, got $err")
+          assert(spark.streams.active.isEmpty, "the failed run left a streaming query active")
+          assert(explicitConfs == before, s"scoped confs not restored: $before -> $explicitConfs")
+          assert(before(Width).contains("3") && before(Provider).isEmpty)
+        } finally saved.foreach {
           case (k, Some(v)) => spark.conf.set(k, v)
           case (k, None)    => spark.conf.unset(k)
         }
-        graft.sources.FileSources.deleteRecursively(work)
       }
     }
 }

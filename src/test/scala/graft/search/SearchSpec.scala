@@ -173,6 +173,21 @@ class SearchSpec extends AnyFunSuite {
     assert(res.best.point.forall(v => v == math.rint(v)))
   }
 
+  test("x0 lands on the integers of an integer dimension whose lattice step does not divide 1") {
+    // x0 is snapped to the lattice and then rounded, as every trial point
+    // is; rounding first left it at 10.001953125 (step 0.75) and
+    // 10.00078125 (step 0.3)
+    for (step <- Seq(0.75, 0.3)) {
+      val res = Search.minimize(sphere, x0, Array(step, 1.0), opts = SearchOptions(
+        stopratio = stopratio, integerDimensions = Seq(0), seed = Some(59)))
+      val off = res.evaluations.map(_.point(0)).filter(v => v != math.rint(v))
+      val x0Dim0 = res.evaluations.head.point(0)
+      assert(x0Dim0 == 10.0, s"step $step: x0 at $x0Dim0")
+      assert(off.isEmpty, s"step $step: ${off.size} of ${res.evaluations.size} evaluations " +
+        s"off the integers on dim 0, e.g. ${off.take(3).mkString(", ")}")
+    }
+  }
+
   test("maxTime=0 degenerate: evaluates only x0 (BASELINE.md)") {
     val res = run(opts = SearchOptions(stopratio = stopratio, maxTime = Some(0.0), seed = Some(53)))
     assert(res.evaluations.size == 1, s"got ${res.evaluations.size}")

@@ -1,0 +1,133 @@
+package graft.sources
+
+import graft.TempDirs.withTempDir
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.io.File
+
+/** The write-once contract of [[FileSources.writeOnce]]: a cache counts as
+  * complete only when its whole body returned, whatever Spark wrote on the
+  * way; scratch space never outlives the body; and the key covers the build
+  * that wrote the cache, so a rebuilt library evicts and rewrites it.
+  */
+class WriteOnceSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[2]")
+    .appName("graft-write-once-test")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def names(dir: String): Set[String] =
+    Option(new File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  test("a body that writes its data and then throws runs again on the next call") {
+    spark.sparkContext.setLogLevel("WARN")
+    withTempDir("graft-write-once") { tmp =>
+      val out = s"$tmp/cache_1"
+      var runs = 0
+      val e = intercept[IllegalStateException] {
+        FileSources.writeOnce(out) { (o, _) =>
+          runs += 1
+          spark.range(10).write.mode("overwrite").parquet(o) // Spark drops _SUCCESS here
+          throw new IllegalStateException("a later step of the body failed")
+        }
+      }
+      assert(e.getMessage.contains("later step"))
+      assert(!new File(out).exists(), "the torn directory must be deleted")
+      FileSources.writeOnce(out) { (o, _) =>
+        runs += 1
+        spark.range(7).write.mode("overwrite").parquet(o)
+      }
+      assert(runs == 2, "the torn directory was served as a complete cache")
+      assert(spark.read.parquet(out).count() == 7)
+    }
+  }
+
+  test("a body that writes only subdirectories runs once across two calls") {
+    withTempDir("graft-write-once") { tmp =>
+      val out = s"$tmp/cache_2"
+      var runs = 0
+      def call(): Unit = FileSources.writeOnce(out) { (o, _) =>
+        runs += 1
+        spark.range(5).write.mode("overwrite").parquet(s"$o/small")
+        spark.range(5).write.mode("overwrite").parquet(s"$o/compacted")
+      }
+      call()
+      call()
+      assert(runs == 1, s"the body ran $runs times")
+      assert(spark.read.parquet(s"$out/compacted").count() == 5)
+    }
+  }
+
+  test("no scratch dir or raw staging dir outlives the body, on success or on a throw") {
+    withTempDir("graft-write-once") { tmp =>
+      // distinct tags: a same-tag sibling with another hex key is evicted
+      import spark.implicits._
+      val chunks = Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)).toDF("x", "chunk")
+      val scratches = Seq.newBuilder[String]
+      FileSources.writeOnce(s"$tmp/staged_1") { (o, scratch) =>
+        scratches += scratch
+        assert(new File(scratch).isDirectory && names(scratch).isEmpty)
+        FileSources.stageFiles(chunks, scratch, o, "chunk", chunked = true)
+      }
+      val staged = new File(s"$tmp/staged_1").listFiles().filter(_.getName.endsWith(".parquet"))
+        .sortBy(_.getName)
+      assert(staged.map(_.getName).toSeq ==
+        Seq("chunk_000.parquet", "chunk_001.parquet", "chunk_002.parquet"))
+      assert(staged.map(_.lastModified).toSeq ==
+        Seq(1600000000000L, 1600000060000L, 1600000120000L))
+      assert(spark.read.parquet(staged(1).getPath).as[Long].collect().toSeq == Seq(3L))
+      intercept[IllegalStateException] {
+        FileSources.writeOnce(s"$tmp/thrown_1") { (o, scratch) =>
+          scratches += scratch
+          FileSources.stageFiles(chunks.filter($"chunk" =!= 1), scratch, o, "chunk", chunked = true)
+          throw new IllegalStateException("failed after staging")
+        }
+      }
+      assert(scratches.result().forall(s => !new File(s).exists()))
+      assert(names(tmp) == Set("staged_1"), s"left behind: ${names(tmp)}")
+    }
+  }
+
+  test("a partial directory left by a killed run is cleared before the body runs") {
+    withTempDir("graft-write-once") { tmp =>
+      val out = s"$tmp/cache_5"
+      new File(s"$out/stale").mkdirs()
+      new File(s"$out.scratch/stale").mkdirs()
+      FileSources.writeOnce(out) { (o, scratch) =>
+        assert(!new File(o).exists(), s"stale entries in $o: ${names(o)}")
+        assert(names(scratch).isEmpty, s"stale entries in $scratch: ${names(scratch)}")
+        new File(o).mkdirs(): Unit
+      }
+      assert(!names(out).contains("stale"))
+      assert(names(tmp) == Set("cache_5"))
+    }
+  }
+
+  test("a cache written by an older build is evicted on the first write under the new one") {
+    withTempDir("graft-write-once-data") { data =>
+      java.nio.file.Files.writeString(new File(data, "src.bin").toPath, "source")
+      val out = FileSources.cacheDir("wotest", data, "src.bin")
+      val older = out.stripSuffix(FileSources.buildFingerprint) +
+        (if (FileSources.buildFingerprint == "0" * 16) "1" * 16 else "0" * 16)
+      try {
+        assert(out.endsWith("b" + FileSources.buildFingerprint),
+          s"the key $out does not cover the build ${FileSources.buildFingerprint}")
+        // an older build's cache, and the scratch its killed run left
+        new File(s"$older/part-0.parquet").mkdirs()
+        new File(s"$older.scratch/in").mkdirs()
+        var runs = 0
+        FileSources.writeOnce(out) { (o, _) => runs += 1; new File(o).mkdirs(): Unit }
+        assert(runs == 1)
+        assert(!new File(older).exists() && !new File(s"$older.scratch").exists(),
+          "the older build's cache survived the new build's first write")
+        FileSources.writeOnce(out) { (_, _) => runs += 1 }
+        assert(runs == 1)
+      } finally Seq(out, older, s"$older.scratch")
+        .foreach(p => FileSources.deleteRecursively(new File(p)))
+    }
+  }
+}

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -28,15 +29,8 @@ class CheckpointCompatSpec extends AnyFunSuite {
   private def stage(in: java.io.File, name: String, mtime: Long,
       rows: Seq[(Long, Long)]): Unit = {
     import spark.implicits._
-    val raw = new java.io.File(in.getParentFile, name + ".raw")
-    rows.toDF("user_id", "cents").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(raw.toString)
-    val part = raw.listFiles().filter(_.getName.endsWith(".parquet")).head
-    val dest = new java.io.File(in, name + ".parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    require(dest.setLastModified(mtime))
-    graft.sources.FileSources.deleteRecursively(raw)
+    graft.sources.FileSources.stageFiles(rows.toDF("user_id", "cents"),
+      in.getParent, in.getPath, name, mtime)
   }
 
   private def runPhase(in: java.io.File, chk: String, name: String)(
@@ -53,39 +47,40 @@ class CheckpointCompatSpec extends AnyFunSuite {
 
   test("re-spelled restart carries state; a fresh checkpoint visibly loses it") {
     spark.sparkContext.setLogLevel("WARN")
-    val work = java.nio.file.Files.createTempDirectory("graft-ckpt-compat").toFile
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val chk = s"$work/chk"
+    withTempDir("graft-ckpt-compat") { work =>
+      val in = new java.io.File(work, "in")
+      val chk = s"$work/chk"
 
-    stage(in, "half_a", 1600000000000L, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
-    val a = runPhase(in, chk, "ckpt_compat_a") { src =>
-      src.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
-    }
-    assert(a == Map(1L -> ((2L, 30L)), 2L -> ((1L, 5L))))
+      stage(in, "half_a", 1600000000000L, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
+      val a = runPhase(in, chk, "ckpt_compat_a") { src =>
+        src.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
+      }
+      assert(a == Map(1L -> ((2L, 30L)), 2L -> ((1L, 5L))))
 
-    stage(in, "half_b", 1600000060000L, Seq((1L, 100L), (3L, 7L)))
-    // the query-shape-preserving re-spelling: pruned projection + expr route
-    val b = runPhase(in, chk, "ckpt_compat_b") { src =>
-      src.select(col("user_id"), col("cents"))
-        .groupBy("user_id")
-        .agg(expr("count(1)").as("n"), expr("sum(cents)").as("cents"))
-    }
-    assert(b == Map(1L -> ((3L, 130L)), 2L -> ((1L, 5L)), 3L -> ((1L, 7L))),
-      "restart from the checkpoint must resume from restored state")
+      stage(in, "half_b", 1600000060000L, Seq((1L, 100L), (3L, 7L)))
+      // the query-shape-preserving re-spelling: pruned projection + expr route
+      val b = runPhase(in, chk, "ckpt_compat_b") { src =>
+        src.select(col("user_id"), col("cents"))
+          .groupBy("user_id")
+          .agg(expr("count(1)").as("n"), expr("sum(cents)").as("cents"))
+      }
+      assert(b == Map(1L -> ((3L, 130L)), 2L -> ((1L, 5L)), 3L -> ((1L, 7L))),
+        "restart from the checkpoint must resume from restored state")
 
-    // negative control: same re-spelled query, FRESH checkpoint — the file
-    // source re-reads everything, so counts match only because the input
-    // is still on disk; delete half_a first to model real state loss.
-    assert(new java.io.File(in, "half_a.parquet").delete())
-    val lost = runPhase(in, s"$work/chk_fresh", "ckpt_compat_lost") { src =>
-      src.select(col("user_id"), col("cents"))
-        .groupBy("user_id")
-        .agg(expr("count(1)").as("n"), expr("sum(cents)").as("cents"))
+      // negative control: same re-spelled query, FRESH checkpoint — the file
+      // source re-reads everything, so counts match only because the input
+      // is still on disk; delete half_a first to model real state loss.
+      assert(new java.io.File(in, "half_a.parquet").delete())
+      val lost = runPhase(in, s"$work/chk_fresh", "ckpt_compat_lost") { src =>
+        src.select(col("user_id"), col("cents"))
+          .groupBy("user_id")
+          .agg(expr("count(1)").as("n"), expr("sum(cents)").as("cents"))
+      }
+      assert(lost == Map(1L -> ((1L, 100L)), 3L -> ((1L, 7L))),
+        "a lost checkpoint must visibly under-count — otherwise the positive " +
+          "assertion above proves nothing")
     }
-    assert(lost == Map(1L -> ((1L, 100L)), 3L -> ((1L, 7L))),
-      "a lost checkpoint must visibly under-count — otherwise the positive " +
-        "assertion above proves nothing")
   }
 
   /** The q_tws_restart contract's negative control: same dance over the
@@ -135,23 +130,24 @@ class CheckpointCompatSpec extends AnyFunSuite {
 
   test("transformWithState restart carries ValueState; a fresh checkpoint visibly loses it") {
     spark.sparkContext.setLogLevel("WARN")
-    val work = java.nio.file.Files.createTempDirectory("graft-tws-compat").toFile
-    val in = new java.io.File(work, "in"); in.mkdirs()
+    withTempDir("graft-tws-compat") { work =>
+      val in = new java.io.File(work, "in")
 
-    stage(in, "half_a", 1600000000000L, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
-    val a = runTwsPhase(in, s"$work/chk", s"$work/emit")
-    assert(a == Map(1L -> ((2L, 30L)), 2L -> ((1L, 5L))))
+      stage(in, "half_a", 1600000000000L, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
+      val a = runTwsPhase(in, s"$work/chk", s"$work/emit")
+      assert(a == Map(1L -> ((2L, 30L)), 2L -> ((1L, 5L))))
 
-    stage(in, "half_b", 1600000060000L, Seq((1L, 100L), (3L, 7L)))
-    val b = runTwsPhase(in, s"$work/chk", s"$work/emit")
-    assert(b == Map(1L -> ((3L, 130L)), 2L -> ((1L, 5L)), 3L -> ((1L, 7L))),
-      "restart from the checkpoint must resume from restored RocksDB ValueState")
+      stage(in, "half_b", 1600000060000L, Seq((1L, 100L), (3L, 7L)))
+      val b = runTwsPhase(in, s"$work/chk", s"$work/emit")
+      assert(b == Map(1L -> ((3L, 130L)), 2L -> ((1L, 5L)), 3L -> ((1L, 7L))),
+        "restart from the checkpoint must resume from restored RocksDB ValueState")
 
-    // negative control: fresh checkpoint + real input loss
-    assert(new java.io.File(in, "half_a.parquet").delete())
-    val lost = runTwsPhase(in, s"$work/chk_fresh", s"$work/emit_fresh")
-    assert(lost == Map(1L -> ((1L, 100L)), 3L -> ((1L, 7L))),
-      "a lost checkpoint must visibly under-count — otherwise the positive " +
-        "assertion above proves nothing")
+      // negative control: fresh checkpoint + real input loss
+      assert(new java.io.File(in, "half_a.parquet").delete())
+      val lost = runTwsPhase(in, s"$work/chk_fresh", s"$work/emit_fresh")
+      assert(lost == Map(1L -> ((1L, 100L)), 3L -> ((1L, 7L))),
+        "a lost checkpoint must visibly under-count — otherwise the positive " +
+          "assertion above proves nothing")
+    }
   }
 }

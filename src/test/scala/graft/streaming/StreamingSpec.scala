@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.TempDirs.withTempDir
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -191,30 +192,31 @@ class StreamingSpec extends AnyFunSuite {
     // offset log prevents replay (no duplicates) and the _spark_metadata
     // commit log prevents loss (no torn batches).
     val src = graft.queries.Events.prepareWmChunks(spark, sf)
-    val out = java.nio.file.Files.createTempDirectory("graft-restart").toString
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "user_id LONG, event_type STRING, ts TIMESTAMP")
-    def start() = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/chk")
-      .start()
-    val q1 = start()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (q1.recentProgress.map(_.numInputRows).sum == 0 && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    q1.stop()
-    assert(q1.recentProgress.nonEmpty, "first run never committed a batch in 30s")
-    val q2 = start()
-    try q2.processAllAvailable()
-    finally q2.stop()
-    val got = spark.read.parquet(s"$out/data").count()
-    val expect = spark.read.parquet(src).count()
-    assert(got == expect, s"sink has $got rows, input has $expect — lost or duplicated")
+    withTempDir("graft-restart") { out =>
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id LONG, event_type STRING, ts TIMESTAMP")
+      def start() = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .writeStream
+        .format("parquet")
+        .option("path", s"$out/data")
+        .option("checkpointLocation", s"$out/chk")
+        .start()
+      val q1 = start()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (q1.recentProgress.map(_.numInputRows).sum == 0 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      q1.stop()
+      assert(q1.recentProgress.nonEmpty, "first run never committed a batch in 30s")
+      val q2 = start()
+      try q2.processAllAvailable()
+      finally q2.stop()
+      val got = spark.read.parquet(s"$out/data").count()
+      val expect = spark.read.parquet(src).count()
+      assert(got == expect, s"sink has $got rows, input has $expect — lost or duplicated")
+    }
   }
 
   test("interval-join watermarks evict both sides' buffered state") {
@@ -434,35 +436,36 @@ class StreamingSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     assert(chunkFiles.length == 4)
     val schema = spark.read.parquet(chunks).schema
-    val root = Files.createTempDirectory("graft_restart").toString
-    val (src, data, chk) = (s"$root/src", s"$root/data", s"$root/chk")
-    Files.createDirectories(Paths.get(src))
-    def runOnce(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .select(col("user_id"), col("event_id"))
-        .writeStream.format("parquet")
-        .option("path", data).option("checkpointLocation", chk)
-        .outputMode("append").start()
-      try q.processAllAvailable()
-      finally q.stop()
+    withTempDir("graft_restart") { root =>
+      val (src, data, chk) = (s"$root/src", s"$root/data", s"$root/chk")
+      Files.createDirectories(Paths.get(src))
+      def runOnce(): Unit = {
+        val q = spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src)
+          .select(col("user_id"), col("event_id"))
+          .writeStream.format("parquet")
+          .option("path", data).option("checkpointLocation", chk)
+          .outputMode("append").start()
+        try q.processAllAvailable()
+        finally q.stop()
+      }
+      // phase 1: only the first two chunks exist; the query commits them,
+      // then the process "dies" (q.stop)
+      chunkFiles.take(2).foreach(f => Files.copy(f.toPath,
+        Paths.get(src, f.getName), StandardCopyOption.REPLACE_EXISTING))
+      runOnce()
+      // phase 2: the remaining chunks arrive and a NEW query (fresh
+      // instance, same checkpoint) resumes — the commit log must make the
+      // union exactly-once: no chunk replayed, none skipped
+      chunkFiles.drop(2).foreach(f => Files.copy(f.toPath,
+        Paths.get(src, f.getName), StandardCopyOption.REPLACE_EXISTING))
+      runOnce()
+      val got = spark.read.parquet(data)
+        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s")).collect()(0)
+      val want = spark.read.parquet(chunks)
+        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s")).collect()(0)
+      assert(got.getLong(0) == want.getLong(0), "row count drifted across restart")
+      assert(got.getLong(1) == want.getLong(1), "content drifted across restart")
     }
-    // phase 1: only the first two chunks exist; the query commits them,
-    // then the process "dies" (q.stop)
-    chunkFiles.take(2).foreach(f => Files.copy(f.toPath,
-      Paths.get(src, f.getName), StandardCopyOption.REPLACE_EXISTING))
-    runOnce()
-    // phase 2: the remaining chunks arrive and a NEW query (fresh
-    // instance, same checkpoint) resumes — the commit log must make the
-    // union exactly-once: no chunk replayed, none skipped
-    chunkFiles.drop(2).foreach(f => Files.copy(f.toPath,
-      Paths.get(src, f.getName), StandardCopyOption.REPLACE_EXISTING))
-    runOnce()
-    val got = spark.read.parquet(data)
-      .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s")).collect()(0)
-    val want = spark.read.parquet(chunks)
-      .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s")).collect()(0)
-    assert(got.getLong(0) == want.getLong(0), "row count drifted across restart")
-    assert(got.getLong(1) == want.getLong(1), "content drifted across restart")
   }
 }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.TempDirs.withTempDir
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
@@ -96,9 +97,11 @@ class ProfileSpec extends AnyFunSuite {
   }
 
   test("--gen refuses K = 43 before writing anything") {
-    val out = Files.createTempDirectory("graft-profile-gen").resolve("out")
-    for (k <- Seq("43", "0"))
-      intercept[IllegalArgumentException](Profile.main(Array("--gen", sf, out.toString, k)))
-    assert(!Files.exists(out))
+    withTempDir("graft-profile-gen") { dir =>
+      val out = java.nio.file.Paths.get(dir, "out")
+      for (k <- Seq("43", "0"))
+        intercept[IllegalArgumentException](Profile.main(Array("--gen", sf, out.toString, k)))
+      assert(!Files.exists(out))
+    }
   }
 }
