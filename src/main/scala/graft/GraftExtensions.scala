@@ -30,6 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.polyHashDesc)
     ext.injectFunction(GraftExtensions.dotProductDesc)
+    ext.injectFunction(GraftExtensions.sortedIntersectSizeDesc)
     ext.injectFunction(GraftExtensions.simHashDesc)
   }
 }
@@ -52,6 +53,12 @@ object GraftExtensions {
     FunctionIdentifier("dot_product"),
     info("dot_product", "dot_product(a, b) - in-order dot product of two numeric arrays"),
     (exprs: Seq[Expression]) => graft.functions.DotProduct(exprs(0), exprs(1)))
+
+  private[graft] val sortedIntersectSizeDesc: Desc = (
+    FunctionIdentifier("sorted_intersect_size"),
+    info("sorted_intersect_size",
+      "sorted_intersect_size(a, b) - common elements of two ascending distinct bigint arrays"),
+    (exprs: Seq[Expression]) => graft.functions.SortedIntersectSize(exprs(0), exprs(1)))
 
   private[graft] val simHashDesc: Desc = (
     FunctionIdentifier("simhash64"),

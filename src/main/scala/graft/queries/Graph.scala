@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.SortedIntersect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -130,27 +131,27 @@ object Graph {
     * primitive, and the classic test of whether a join engine survives a
     * wedge explosion. The scale-critical choice is the ORIENTATION: each
     * undirected edge is directed from its lower-(degree, id) endpoint to
-    * the higher, so every triangle is counted exactly once as
-    * a→b, a→c, b→c with a ≺ b ≺ c, and the wedge-building self-join on
-    * the source vertex fans out per-vertex by OUT-degree, which the
-    * degree ordering caps at O(√|E|) — the hub that dominates an
-    * id-ordered orientation (its wedge count is quadratic in its full
-    * degree) contributes almost nothing as a source. The count is
-    * orientation-invariant, so the oracle states the same quantity with
-    * the plain id ordering — the equality IS the proof the orientation
-    * trick is sound. Edges materialize via the copurchase in-row
-    * expansion (one groupBy(order), per-basket pair fan-out bounded by
-    * basket size), never an order-keyed self-join.
+    * the higher, so every triangle a ≺ b ≺ c is counted exactly once, at
+    * its edge a→b, as the common out-neighbor c of a and b; the degree
+    * ordering caps every out-list at O(√|E|), so the hub that dominates
+    * an id-ordered orientation contributes a short list as a source. The
+    * count is orientation-invariant, so the oracle states the same
+    * quantity with the plain id ordering — the equality IS the proof the
+    * orientation trick is sound. Edges materialize via the copurchase
+    * in-row expansion (one groupBy(order), per-basket pair fan-out
+    * bounded by basket size), never an order-keyed self-join.
     *
     * Scale shape: one exchange to build edges, one key-sized degree
-    * aggregate, one groupBy(source) exchange for the adjacency lists
-    * (wedges then expand IN-ROW, bounded by C(outdeg, 2) with the
-    * orientation's √|E| cap — they never shuffle), and one
-    * AQE-broadcastable membership join on the packed pair key. The
-    * (deg, id) composite packs into one long (deg · 2³² + id) so the
-    * ordering is a single integer compare in codegen; degrees and ids
-    * are both far below 2³² at any SF (and a 100 TB graph re-packs
-    * into the 128-bit struct compare instead).
+    * aggregate, one groupBy(source) exchange for the sorted out-lists,
+    * then ONE in-row explode to the |E| oriented edges, which never
+    * shuffle: each probes the broadcast out-list of its target and adds
+    * one sorted-list merge (`sorted_intersect_size`) to a partial sum.
+    * Work is Σ over edges of |out(s)| + |out(t)| primitive compares; no
+    * wedge is ever materialized. The (deg, id) composite packs into one
+    * long (deg · 2³² + id) so the ordering and the merge are single
+    * integer compares in codegen; degrees and ids are both far below 2³²
+    * at any SF (and a 100 TB graph re-packs into the 128-bit struct
+    * compare instead).
     */
   val triangles: QueryDef = QueryDef(
     """WITH os AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -185,82 +186,41 @@ object Graph {
         when(col("ru") < col("rv"), col("u")).otherwise(col("v")).as("s"),
         when(col("ru") < col("rv"), col("rv")).otherwise(col("ru")).as("rt"),
         when(col("ru") < col("rv"), col("v")).otherwise(col("u")).as("t"))
-    // Wedges via IN-ROW expansion of the out-adjacency list, not a
-    // self-join (r15 rework; re-measured back-to-back on one box in r16:
-    // self-join 7.67 s median vs in-row 6.21 — the r15 claim's direction
-    // holds under a contemporaneous comparison): one groupBy(s) builds
-    // each source's rank-sorted neighbor array and the pairs expand
-    // in-partition — the same single exchange the self-join needed for
-    // its build side, but no second probe pass over the exchange and no
-    // join hash table; the orientation bound caps the per-row fan-out at
-    // C(outdeg, 2) with outdeg ≤ O(√|E|). The 41M-wedge stream at sf0.1
-    // never leaves its partition. Keys stay PACKED into one long
-    // (b·2³² + c — partkeys are far below 2³² at any SF; a 100 TB graph
-    // re-packs into the 128-bit struct compare instead).
-    //
-    // The expansion is CHUNKED (r16): the r15 spelling built one
-    // C(outdeg, 2)-long array per adjacency row (flatten ∘ transform²)
-    // before exploding — a megabyte-class transient per hub row. Now an
-    // outer posexplode picks the wedge center b and the inner transform
-    // packs only b's tail, so the largest transient is outdeg-long and
-    // the two Generates chain back-to-back with no exchange between them
-    // (plan-pinned; whether they also land in one codegen span follows
-    // AQE's build-side pick and is deliberately not pinned). Measured
-    // 5.92 → 5.26 s with a tighter band (5.65-6.76 → 5.20-5.39), count
-    // byte-identical. The r15 bench-suspect diagnosis rode this harness:
-    // under 32 induced hog threads BOTH spellings degrade ≈2× (11.5 vs
-    // 10.9 s) with GC at 4% of task CPU and zero spill — the judge-box
-    // amplification is generic CPU contention on the suite's most
-    // CPU-parallel row (≈9 effective cores), not allocation pressure.
-    // Widen.byKey (optimization r16, guide §2.2): the adjacency exchange
-    // at the full configured width instead of AQE's byte-coalesced pick —
-    // the 41M-wedge expansion reading it ran as 12 skewed tasks holding
-    // 20.3 s of work (StageProbe), i.e. ~8 effective cores of 32. Same
-    // single exchange the groupBy needed; only its width is pinned.
-    // The adjacency element is the bare rank long, not a (rt, t) struct:
-    // rt = deg·2³² + t already carries the target id in its low 32 bits,
-    // so collect_list/array_sort operate on a PRIMITIVE long array
-    // (UnsafeArrayData, no per-element struct allocation) and the wedge
-    // pack extracts t with one mask — measured r16: the struct spelling
-    // cost the wedge stage ~2× in task CPU and GC (guide §2.3 narrower
-    // types; §1.2 per-task work).
-    // directedW is the ONE repartition-by-source exchange both remaining
-    // directed consumers read (optimization r17): the adjacency aggregate
-    // below and the membership broadcast build. Before, the membership
-    // side re-derived directed from scratch — a third distinct-final pass
-    // over |E| plus both orientation joins, its own 8-task stage in
-    // StageProbe; now ReusedExchange serves it the repartitioned rows and
-    // the rebuild is a projection.
+    // Forward counting (Schank & Wagner, WEA 2005): a triangle a ≺ b ≺ c
+    // is counted once, at its edge a→b, as c ∈ out(a) ∩ out(b). One
+    // groupBy(s) builds each source's rank-sorted out-list; exploding it
+    // once yields the |E| oriented edges (s→t, out(s)), and a join on t
+    // brings out(t) beside it, so the count is one merge of two sorted
+    // lists per edge (sorted_intersect_size, a codegen'd while loop over
+    // the unsafe arrays). The list element is the bare rank long: rank =
+    // deg·2³² + id is unique per vertex, so merging ranks counts the same
+    // common neighbors as merging ids, and collect_list/array_sort stay
+    // on a primitive long array. An earlier spelling materialized every
+    // wedge as its own row and probed a packed edge-key broadcast — 3.9 M
+    // rows at sf0.01, 41 M at sf0.1; it and its measurement history are
+    // in Graph.scala at commit da59d41.
+    // directedW is the ONE repartition-by-source exchange both adjacency
+    // consumers read (the exploded stream and the broadcast build side
+    // reuse it). Widen.byKey pins it at the full configured width: the
+    // merge work per adjacency row grows with its list lengths, a cost
+    // AQE's byte-based coalescing cannot see.
     val directedW = Widen.byKey(directed, col("s"))
     val adj = directedW.groupBy(col("s"))
       .agg(array_sort(collect_list(col("rt"))).as("ts"))
-    val ts = col("ts")
     val IdMask = 4294967295L // low 32 bits of a rank long = the vertex id
-    val centers = adj.filter(size(ts) >= 2)
-      .select(ts, posexplode(ts).as(Seq("i", "b")))
-      .filter(col("i") < size(ts) - 1)
-    val tailPairs = transform(
-      sequence(col("i") + 1, size(ts) - 1),
-      j => col("b").bitwiseAND(lit(IdMask)) * 4294967296L +
-        element_at(ts, j + 1).bitwiseAND(lit(IdMask)))
-    val wedges = centers.select(explode(tailPairs).as("bc"))
-    // The packed edge-key side is HINTED broadcast (r16 — guide §3.1
-    // "estimates are often badly wrong ... use an explicit broadcast
-    // hint"): Catalyst's stats cannot see through the Generate, so the
-    // 41M-row wedge stream ESTIMATES smaller than the |E|-long edge side
-    // — unhinted, the planner picked the wedge stream as the build side
-    // and the driver spent ~20 s per run collecting and serializing a
-    // 41M-entry hash relation (caught by a thread dump: broadcast
-    // exchange stuck in LongToUnsafeRowMap.write; wall 5.7 → 30 s). The
-    // hint pins the side that is bounded by construction: |E|·8 bytes,
-    // vs the C(outdeg,2)-amplified wedge side. On a graph whose edge
-    // list outgrows executor memory, drop the hint for the shuffle-join
-    // fallback exactly as the bfs frontier note documents. (The r15
-    // SHUFFLE_HASH measurement stands: denying the broadcast entirely
-    // measured ~40% slower.)
-    val nTriangles = wedges
-      .join(broadcast(directedW.select(expr("s * 4294967296 + t").as("bc"))), "bc")
-      .agg(count(lit(1)).as("n_triangles"))
+    val outEdges = adj
+      .select(col("ts"), explode(col("ts")).as("rt"))
+      .select(col("ts"), col("rt").bitwiseAND(lit(IdMask)).as("t"))
+    // The adjacency side is HINTED broadcast: |V| rows holding |E| longs
+    // in total, bounded by construction, while Catalyst's estimate of the
+    // exploded stream cannot see through the Generate and may pick the
+    // wrong build side. On a graph whose adjacency outgrows executor
+    // memory, drop the hint for the shuffle-join fallback exactly as the
+    // bfs frontier note documents.
+    val nTriangles = outEdges
+      .join(broadcast(adj.select(col("s").as("t"), col("ts").as("tt"))), "t")
+      .agg(coalesce(sum(SortedIntersect.sortedIntersectSize(spark, "ts", "tt")), lit(0L))
+        .as("n_triangles"))
     // n_edges = Σdeg / 2 (every edge contributes to exactly two vertex
     // degrees) — derived from the degree aggregate already in the plan
     // instead of a FIFTH pass over the edge subtree counting rows
@@ -306,7 +266,7 @@ object Graph {
         .groupBy(col("l_orderkey"))
         .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
       // The pair fan-out packs (u, v) into ONE long (u·2³² + v — the same
-      // packing the wedge probe uses; valid while partkey < 2³², which
+      // packing as the triangle ranks; valid while partkey < 2³², which
       // TPC-H crosses only near SF ~21k — a graph beyond that re-packs
       // into the 128-bit struct compare exactly as the triangles comment
       // documents; ADVICE r16 #1), so the distinct dedups an 8-byte key

@@ -43,13 +43,7 @@ private[queries] object Pairs {
   /** The raw ordered-pair (i < j) expansion over a sorted array column,
     * with the pair combiner pluggable — callers must still guard
     * `size(arr) >= 2` before exploding (`sequence(0, -1)` DESCENDS).
-    * [[ordered]] combines into a two-field struct. ONE deliberate
-    * non-caller: Graph's triangle wedges (r16) expand in two CHUNKED
-    * levels (posexplode center + per-center tail) precisely to avoid the
-    * single C(n,2)-long transient this one-shot expansion materializes —
-    * its inner `sequence(i + 1, size - 1)` carries its own guard
-    * (`i < size - 1` filtered two lines above; see Graph.scala). Audit
-    * both sites when touching the sequence() semantics.
+    * [[ordered]] combines into a two-field struct.
     */
   def orderedExpr(arr: Column, combine: (Column, Column) => Column): Column =
     flatten(transform(sequence(lit(0), size(arr) - 2), i =>
@@ -89,7 +83,7 @@ private[queries] object Pairs {
   *   2. AQE's byte-based partition coalescing packs the exchange feeding
   *      an expansion into a few partitions (the adjacency lists and
   *      baskets are small BYTES but explode 35x in ROWS — StageProbe
-  *      measured q_triangles' wedge stage as 12 skewed tasks holding
+  *      measured q_triangles' former wedge stage as 12 skewed tasks holding
   *      20.3 s of work, effective parallelism ~8 of 32). [[Widen.byKey]]
   *      spells that exchange as an explicit repartition at the CONFIGURED
   *      shuffle width — the width the groupBy exchange would have had

@@ -913,29 +913,21 @@ object Relational {
     val tbl = mkTbl()
     val cols = Seq("o_orderkey", "o_custkey")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    // Best-effort reclaim of ORPHANED siblings (ADVICE r13 #3): the finally
-    // below only cleans up in-process — a JVM killed between CREATE and the
-    // finally leaves its fingerprinted table behind, and since fingerprinted
-    // names never collide, no future DROP-then-CREATE would ever reclaim it.
-    // Mirror writeOnce's stale-sibling rule: same dir prefix, DIFFERENT
-    // fingerprint suffix → stale by construction (either an orphan, or a
-    // concurrent run over a REGENERATED input whose own writeOnce semantics
-    // already accept stale-sibling eviction). Same-name tables are left to
-    // the DROP-then-CREATE below.
+    // Best-effort reclaim of ORPHANED siblings: the finally below only
+    // cleans up in-process — a JVM killed between CREATE and the finally
+    // leaves its fingerprinted table behind, and since fingerprinted names
+    // never collide, no future DROP-then-CREATE would ever reclaim it.
+    // writeOnce's stale-sibling rule decides (same dir prefix, DIFFERENT
+    // hex suffix → stale by construction: an orphan, or a concurrent run
+    // over a REGENERATED input). Same-name tables are left to the
+    // DROP-then-CREATE below. Catalog identifiers come back LOWERCASED
+    // from SHOW TABLES, so the live name is lowercased to match.
     locally {
-      // Catalog identifiers come back LOWERCASED from SHOW TABLES, so the
-      // prefix must be lowercased too or a mixed-case dir never matches
-      // and the reclaim silently no-ops (code-review r14).
-      val prefix = s"orders_${dir.replaceAll("[^A-Za-z0-9]", "_")}_"
-        .toLowerCase(java.util.Locale.ROOT)
-      val live = tbl.toLowerCase(java.util.Locale.ROOT)
-      val suffix = "[0-9a-f]+".r
+      val live = tbl.stripPrefix(s"$db.").toLowerCase(java.util.Locale.ROOT)
       scala.util.Try {
         spark.sql(s"SHOW TABLES IN $db").collect().foreach { r =>
           val name = r.getAs[String]("tableName")
-          if (name.startsWith(prefix) &&
-              suffix.matches(name.stripPrefix(prefix)) &&
-              s"$db.$name" != live)
+          if (graft.sources.FileSources.isStaleSibling(name, live))
             scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS $db.$name")): Unit
         }
       }: Unit

@@ -126,14 +126,8 @@ object FileSources {
     val dir = new java.io.File(out)
     if (!new java.io.File(dir, CompleteMarker).exists()) {
       val scratch = new java.io.File(s"$out.scratch")
-      // Siblings must match (tag, dir) EXACTLY: prefix + a hex key and
-      // nothing else. A bare startsWith would let a dataset at `.../sf0.1`
-      // delete the in-use dir of one at `.../sf0.1_v2` (whose sanitized
-      // name extends the shorter one) from a concurrent JVM.
-      val prefix = out.substring(out.lastIndexOf('/') + 1, out.lastIndexOf('_') + 1)
-      val sibling = (java.util.regex.Pattern.quote(prefix) + "[0-9a-f]+(\\.scratch)?").r
       Option(dir.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && sibling.matches(f.getName) && f.getName != dir.getName)
+        .filter(f => f.isDirectory && isStaleSibling(f.getName, dir.getName))
         .foreach(deleteRecursively)
       deleteRecursively(dir)
       scratch.mkdirs()
@@ -143,6 +137,22 @@ object FileSources {
       dir.mkdirs()
       java.nio.file.Files.createFile(new java.io.File(dir, CompleteMarker).toPath): Unit
     }
+  }
+
+  /** The stale-sibling rule every keyed artifact shares, cache dirs here
+    * and the fingerprinted CBO tables in Relational: `name` is stale iff it
+    * is `live`'s prefix (everything up to its last `_`) followed by a
+    * DIFFERENT pure-hex key, optionally `.scratch`-suffixed. The match is
+    * exact, not a bare startsWith, which would let a dataset at `.../sf0.1`
+    * evict the in-use artifact of one at `.../sf0.1_v2` (whose sanitized
+    * name extends the shorter one) from a concurrent JVM. A `live` name
+    * without `_` has no siblings. Case-sensitive: a caller whose names
+    * come back lowercased passes `live` lowercased.
+    */
+  private[graft] def isStaleSibling(name: String, live: String): Boolean = {
+    val cut = live.lastIndexOf('_') + 1
+    cut > 0 && name != live && name.startsWith(live.substring(0, cut)) &&
+      name.substring(cut).matches("[0-9a-f]+(\\.scratch)?")
   }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = {

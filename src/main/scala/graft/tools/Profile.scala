@@ -38,7 +38,7 @@ import graft.Bench.{d3, jsonString}
   *     i·KeyStride and suffixes every document token with "_i", so
   *     graphs/corpora are disjoint across copies (no cross-copy
   *     near-duplicates or hub vertices: honest weak scaling, |E| and the
-  *     wedge stream scale ×K, LSH buckets stay copy-local). NOT test data:
+  *     triangle count scale ×K, LSH buckets stay copy-local). NOT test data:
   *     no oracle runs on it — profiling one input at two core counts is all
   *     a scaling ratio needs.
   *

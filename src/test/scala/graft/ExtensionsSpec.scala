@@ -26,16 +26,20 @@ class ExtensionsSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val reg = spark.sessionState.functionRegistry
     Seq(GraftExtensions.polyHashDesc, GraftExtensions.dotProductDesc,
+      GraftExtensions.sortedIntersectSizeDesc,
       GraftExtensions.simHashDesc).foreach { case (id, info, builder) =>
       reg.registerFunction(id, info, builder)
     }
     val r = spark.sql(
       """SELECT poly_hash('abc') AS h,
         |       dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
-        |       simhash64(array('a', 'b')) AS s""".stripMargin).collect()(0)
+        |       simhash64(array('a', 'b')) AS s,
+        |       sorted_intersect_size(array(1, 3, 5, 8), array(3, 4, 5, 9)) AS k
+        |""".stripMargin).collect()(0)
     assert(r.getLong(0) == graft.functions.PolyHash.hash(UTF8String.fromString("abc")))
     assert(r.getDouble(1) == 11.0)
     assert(r.getSeq[Long](2).length == 2)
+    assert(r.getInt(3) == 2)
   }
 
   test("StencilSource: unbounded table refuses to plan without a pushed limit") {

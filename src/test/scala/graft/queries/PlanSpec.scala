@@ -636,17 +636,18 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Generate"), s"edges must build via in-row pair expansion:\n$p")
   }
 
-  test("q_triangles: wedges expand in-row over the adjacency aggregate, no extra exchange") {
-    // r15 rework, r16 chunking: the wedge stage is two fused Generates
-    // (posexplode picks the center, explode emits its packed tail pairs)
-    // sitting directly on the groupBy(s) adjacency aggregate — the
-    // 41M-wedge stream must never shuffle. Pinned by WALKING the executed
-    // plan tree, not scanning the flat printout (ADVICE r15: a substring
-    // scan can match aggregates/exchanges from a sibling subtree — e.g.
-    // the broadcast build side of the membership join — and a bare
-    // "HashAggregate" also matches "ObjectHashAggregate").
+  test("q_triangles: one explode of the adjacency feeds a broadcast merge sum") {
+    // Forward counting: the adjacency aggregate explodes ONCE into the |E|
+    // oriented edges, each probes the broadcast adjacency of its target
+    // and adds one sorted_intersect_size merge to the partial sum; no
+    // wedge is materialized and the exploded stream never shuffles.
+    // Pinned by WALKING the final AQE plan, not by scanning the flat
+    // printout: a substring scan can match aggregates or exchanges of a
+    // sibling subtree, e.g. the broadcast build side.
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
     import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val df = SparkEntry.queries("q_triangles")(spark, sf)
     df.collect() // AQE: pin the FINAL plan, not the pre-execution sketch
     val root = df.queryExecution.executedPlan match {
@@ -658,60 +659,55 @@ class PlanSpec extends AnyFunSuite {
       case _ => p.children
     }
     def walk(p: SparkPlan): Vector[SparkPlan] = p +: kids(p).flatMap(walk).toVector
-    // The invariant is "the wedge stream never SHUFFLES". A broadcast of
-    // the wedge side is legitimate — at sf0.001 both join sides are tiny
-    // and AQE's build-side pick between them is runtime-stat-dependent
-    // (observed flipping run-to-run), while at bench/production SF the
-    // 41M-wedge side can only stream. So broadcast exchanges pass; only
-    // a hash/range repartition of the exploded rows fails.
-    def isShuffle(p: SparkPlan): Boolean = {
-      val n = p.getClass.getSimpleName
-      n.contains("ShuffleExchange") || n.contains("ShuffleQueryStage") ||
-        n.contains("AQEShuffleRead")
+    def name(p: SparkPlan): String = p.getClass.getSimpleName
+    def isShuffle(p: SparkPlan): Boolean = name(p).contains("ShuffleExchange") ||
+      name(p).contains("ShuffleQueryStage") || name(p).contains("AQEShuffleRead")
+    def isExchange(p: SparkPlan): Boolean =
+      name(p).contains("Exchange") || name(p).contains("QueryStage")
+    def isAdjacency(p: SparkPlan): Boolean =
+      name(p).contains("ObjectHashAggregate") && p.simpleString(100).contains("collect_list")
+    // Only Generates downstream of the adjacency count: the edge build
+    // below it packs basket pairs by design, and it is visible whenever
+    // the memoized edge frame is not cached.
+    val overAdj = walk(root).collect {
+      case g: GenerateExec if walk(g).drop(1).exists(isAdjacency) => g
     }
-    val all = walk(root)
-    val gen = all.collectFirst {
-      case g: GenerateExec if g.generator.toString.contains("4294967296") => g
-    }.getOrElse(fail(s"packed wedge explode missing:\n$root"))
-    // Producer side: descending from the packed explode, the outer
-    // posexplode Generate then the adjacency ObjectHashAggregate must
-    // appear before any exchange — a regression back to the self-join
-    // (or a repartition of the adjacency) puts an exchange first.
-    val below = walk(gen).drop(1).map(p => (p, p.getClass.getSimpleName))
-    val outerGen = below.indexWhere(_._1.isInstanceOf[GenerateExec])
-    val agg = below.indexWhere(_._2.contains("ObjectHashAggregate"))
-    val exch = below.indexWhere(t => isShuffle(t._1))
-    assert(outerGen >= 0 && (agg < 0 || outerGen < agg),
-      s"outer posexplode Generate must sit between the packed explode and the aggregate:\n$root")
-    // the two Generates chain directly — no exchange of ANY kind between
-    // them (the chunking is one back-to-back expansion, not two stages)
-    assert(!below.take(outerGen).exists(t =>
-        t._2.contains("Exchange") || t._2.contains("QueryStage")),
-      s"the chunked Generates must chain without an exchange between them:\n$root")
-    assert(agg >= 0, s"adjacency collect_list aggregate missing below the explode:\n$root")
-    assert(exch < 0 || agg < exch,
-      s"wedge stream shuffles before the adjacency aggregate:\n$root")
-    // Consumer side: on the ANCESTOR PATH from the packed explode to the
-    // partial count aggregate (HashAggregate, Object-variant excluded)
-    // there must be no exchange — a repartition of the wedge stream or a
-    // shuffle membership join lands exactly there. The membership join's
-    // broadcast exchange hangs off the OTHER child of the join, which the
-    // path walk correctly ignores.
+    assert(overAdj.size == 1, s"expected one Generate over the adjacency:\n$root")
+    val gen = overAdj.head
+    val packer = gen.generator.toString
+    assert(!packer.contains("4294967296") && !packer.contains("sequence"),
+      s"the adjacency Generate packs pairs:\n$root")
+    val below = walk(gen).drop(1)
+    assert(!below.take(below.indexWhere(isAdjacency)).exists(isExchange),
+      s"an exchange sits between the explode and the adjacency aggregate:\n$root")
+    // On the ancestor path from the explode, the join with the adjacency
+    // and then the partial sum come before any shuffle.
     def pathTo(p: SparkPlan): Option[List[SparkPlan]] =
       if (p eq gen) Some(Nil)
       else kids(p).view.flatMap(c => pathTo(c).map(p :: _)).headOption
     val up = pathTo(root)
-      .getOrElse(fail(s"wedge explode unreachable from root:\n$root"))
+      .getOrElse(fail(s"the explode is unreachable from the root:\n$root"))
       .reverse // nearest ancestor first
-    val upNames = up.map(_.getClass.getSimpleName)
-    val aggUp = upNames.indexWhere(n => n.contains("HashAggregate") && !n.contains("Object"))
+    val sumUp = up.indexWhere(p => name(p) == "HashAggregateExec" &&
+      p.simpleString(100).contains("partial_sum"))
     val exchUp = up.indexWhere(isShuffle)
-    assert(aggUp >= 0, s"count aggregate missing above the wedge explode:\n$root")
-    assert(exchUp < 0 || aggUp < exchUp,
-      s"exploded wedge stream shuffles before the count:\n$root")
-    // (codegen fusion deliberately NOT pinned: whether the Generates land
-    // inside a WholeStageCodegen span follows AQE's build-side pick, which
-    // is runtime-stat-dependent at this SF — see the isShuffle note)
+    assert(sumUp >= 0, s"partial sum missing above the explode:\n$root")
+    assert(exchUp < 0 || sumUp < exchUp, s"the exploded edges shuffle before the sum:\n$root")
+    assert(up.take(sumUp + 1).exists(_.simpleString(100).contains("sorted_intersect_size")),
+      s"the sum does not merge the sorted out-lists:\n$root")
+    val joinUp = up.indexWhere(p => name(p).contains("Join"))
+    assert(joinUp >= 0 && joinUp < sumUp, s"no join between the explode and the sum:\n$root")
+    val join = up(joinUp) match {
+      case j: BroadcastHashJoinExec => j
+      case j => fail(s"the adjacency join is ${name(j)}, not a broadcast hash join:\n$root")
+    }
+    val build = walk(join.buildSide match {
+      case BuildLeft => join.left
+      case BuildRight => join.right
+    })
+    assert(!build.exists(_ eq gen), s"the exploded edges are the build side:\n$root")
+    assert(build.exists(p => name(p).contains("Broadcast") && isExchange(p)) &&
+      build.exists(isAdjacency), s"the adjacency does not arrive through a broadcast:\n$root")
   }
 
   test("q_typed_agg: the custom Aggregator still partial-merges map-side") {

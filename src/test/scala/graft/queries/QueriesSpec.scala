@@ -823,6 +823,42 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     assert(got == expected)
   }
 
+  test("q_triangles counts (n_triangles, n_edges) exactly on hand-built graphs") {
+    import spark.implicits._
+    spark.sparkContext.setLogLevel("WARN")
+    // brute force over the same co-purchase graph: parts sharing an order
+    // are adjacent; every vertex triple with all three edges is a triangle
+    def bruteForce(lines: Seq[(Long, Long)]): (Long, Long) = {
+      val edges = lines.groupBy(_._1).values.flatMap { ls =>
+        val ps = ls.map(_._2).distinct.sorted
+        for (i <- ps.indices; j <- i + 1 until ps.size) yield (ps(i), ps(j))
+      }.toSet
+      val vs = edges.flatMap(e => Seq(e._1, e._2)).toSeq.sorted
+      val tris = for {
+        (a, i) <- vs.zipWithIndex; b <- vs.drop(i + 1) if edges((a, b))
+        c <- vs.dropWhile(_ <= b) if edges((a, c)) && edges((b, c))
+      } yield 1L
+      (tris.sum, edges.size.toLong)
+    }
+    val rnd = new scala.util.Random(7)
+    val graphs = Seq(
+      "K5" -> (1L to 5L).map(p => (1L, p)),
+      "three overlapping baskets" -> Seq(
+        1L -> Seq(1L, 2L, 3L, 4L, 2L), 2L -> Seq(3L, 4L, 5L, 6L), 3L -> Seq(1L, 5L, 7L, 3L)
+      ).flatMap { case (o, ps) => ps.map(p => (o, p)) },
+      "single-part orders" -> Seq((1L, 1L), (2L, 2L), (3L, 1L)),
+      "random baskets" -> (1L to 40L).flatMap(o =>
+        Seq.fill(1 + rnd.nextInt(5))((o, 1L + rnd.nextInt(30).toLong))))
+    val want = graphs.map { case (g, lines) => g -> bruteForce(lines) }
+    assert(want.take(3).map(_._2) == Seq((10L, 10L), (13L, 15L), (0L, 0L)))
+    for (((g, lines), (_, expected)) <- graphs.zip(want)) withTempDir("graft-triangles") { dir =>
+      lines.toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+      val r = SparkEntry.queries("q_triangles")(spark, dir).collect()
+      assert(r.length == 1, g)
+      assert((r(0).getLong(0), r(0).getLong(1)) == expected, g)
+    }
+  }
+
   test("connected components converge in O(log d) generations on a 200-node chain") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -130,4 +130,40 @@ class WriteOnceSpec extends AnyFunSuite {
         .foreach(p => FileSources.deleteRecursively(new File(p)))
     }
   }
+
+  test("the stale-sibling rule: a different hex key is stale, the live name and a longer dataset name are not") {
+    val live = "graft_x_tmp_sf0_1_3fa9b00c"
+    assert(FileSources.isStaleSibling("graft_x_tmp_sf0_1_0badf00d", live))
+    assert(FileSources.isStaleSibling("graft_x_tmp_sf0_1_0badf00d.scratch", live))
+    assert(FileSources.isStaleSibling(s"$live.scratch", live))
+    assert(!FileSources.isStaleSibling(live, live))
+    assert(!FileSources.isStaleSibling("graft_x_tmp_sf0_1_v2_0badf00d", live))
+    assert(!FileSources.isStaleSibling("graft_x_tmp_sf0_1_0BADF00D", live))
+    assert(!FileSources.isStaleSibling("graft_x_tmp_sf0_1_", live))
+    assert(!FileSources.isStaleSibling("0badf00d", "3fa9b00c"))
+  }
+
+  test("q_catalog_stats drops an orphan graft_cbo table; the live table and a _v2 dataset's survive") {
+    import spark.implicits._
+    withTempDir("graft-cbo") { dir =>
+      Seq((1L, 10L), (2L, 10L), (3L, 20L)).toDF("o_orderkey", "o_custkey")
+        .write.parquet(s"$dir/orders.parquet")
+      val prefix = s"orders_${dir.replaceAll("[^A-Za-z0-9]", "_")}_".toLowerCase(java.util.Locale.ROOT)
+      val orphan = s"${prefix}0badf00d"
+      val v2 = s"${prefix}v2_0badf00d"
+      spark.sql("CREATE DATABASE IF NOT EXISTS graft_cbo")
+      def tables() = spark.sql("SHOW TABLES IN graft_cbo").collect()
+        .map(_.getAs[String]("tableName")).filter(_.startsWith(prefix)).toSet
+      try {
+        Seq(orphan, v2).foreach(n =>
+          spark.sql(s"CREATE TABLE graft_cbo.$n USING parquet LOCATION '$dir/orders.parquet'"))
+        assert(tables() == Set(orphan, v2))
+        val rows = graft.SparkEntry.queries("q_catalog_stats")(spark, dir).collect()
+        // the live table outlived the reclaim: ANALYZE and read-back completed on it
+        assert(rows.map(r => (r.getString(0), r.getLong(4))).toSet ==
+          Set(("o_orderkey", 3L), ("o_custkey", 3L)))
+        assert(tables() == Set(v2), s"left behind: ${tables()}")
+      } finally tables().foreach(n => spark.sql(s"DROP TABLE IF EXISTS graft_cbo.$n"))
+    }
+  }
 }
