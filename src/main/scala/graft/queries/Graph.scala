@@ -142,16 +142,18 @@ object Graph {
     * bounded by basket size), never an order-keyed self-join.
     *
     * Scale shape: one exchange to build edges, one key-sized degree
-    * aggregate, one groupBy(source) exchange for the sorted out-lists,
-    * then ONE in-row explode to the |E| oriented edges, which never
-    * shuffle: each probes the broadcast out-list of its target and adds
-    * one sorted-list merge (`sorted_intersect_size`) to a partial sum.
-    * Work is Σ over edges of |out(s)| + |out(t)| primitive compares; no
-    * wedge is ever materialized. The (deg, id) composite packs into one
-    * long (deg · 2³² + id) so the ordering and the merge are single
-    * integer compares in codegen; degrees and ids are both far below 2³²
-    * at any SF (and a 100 TB graph re-packs into the 128-bit struct
-    * compare instead).
+    * aggregate broadcast to both orientation joins, one groupBy(source)
+    * exchange for the sorted out-lists, then the |E| oriented edges, which
+    * never shuffle again: each probes the ONE broadcast adjacency twice,
+    * for the out-list of its source and of its target, and adds one
+    * sorted-list merge (`sorted_intersect_size`) to the single final
+    * aggregate that also counts the edges. Work is Σ over edges of
+    * |out(s)| + |out(t)| primitive compares; no wedge is ever
+    * materialized. The (deg, id) composite packs into one long
+    * ([[IdPack]], deg · 2³² + id) so the ordering and the merge are single
+    * integer compares in codegen; ids are checked as they enter the graph
+    * and degrees as they are packed (a 100 TB graph re-packs into the
+    * 128-bit struct compare instead).
     */
   val triangles: QueryDef = QueryDef(
     """WITH os AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -164,75 +166,63 @@ object Graph {
       |          JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v""".stripMargin) {
     (spark, dir) =>
     val edges = coEdges(spark, dir)
-    // ONE pass builds the degree table (optimization r17, guide §2.4): the
-    // r16 spelling UNIONED two projections of the edge stream (u-side ∪
-    // v-side) — under cold-cache exchange reuse each union arm re-runs the
-    // distinct-final aggregate over |E|, so the degree build cost two full
-    // passes. The in-row explode doubles each edge inside one scan instead
-    // (StageProbe before: two 32-task edge passes feeding deg; after: one).
-    // degFull keeps the raw count so n_edges below derives from it for free.
-    val degFull = edges
-      .select(explode(array(col("u"), col("v"))).as("x"))
-      .groupBy(col("x")).agg(count(lit(1)).as("d"))
-    val deg = degFull.select(col("x"), expr("d * 4294967296 + x").as("rank"))
+    // The rank side (IdPack.rank: deg·2³² + id) is vertex-sized and HINTED
+    // broadcast, so both orientation joins read ONE degree aggregate
+    // through one reused broadcast (left to AQE, each join got its own
+    // final aggregate); it is smaller than the adjacency broadcast below,
+    // so it adds no size limit of its own.
+    val ranks = broadcast(degrees(edges)
+      .select(col("x"), IdPack.rank(col("deg"), col("x")).as("rank")))
     // Re-orient each edge low-rank → high-rank; u≠v so ranks never tie.
-    // The deg side is vertex-sized — unhinted, AQE broadcasts it at test
-    // SFs and falls back to a key shuffle when a web-scale vertex set
-    // wouldn't fit (the starWide dims rule).
+    // A vertex is named by its rank from here on: rank = deg·2³² + id is
+    // unique per vertex, so the adjacency keys, the list elements and the
+    // merge all stay on primitive longs, and nothing unpacks the id.
     val directed = edges
-      .join(deg.select(col("x").as("u"), col("rank").as("ru")), "u")
-      .join(deg.select(col("x").as("v"), col("rank").as("rv")), "v")
-      .select(
-        when(col("ru") < col("rv"), col("u")).otherwise(col("v")).as("s"),
-        when(col("ru") < col("rv"), col("rv")).otherwise(col("ru")).as("rt"),
-        when(col("ru") < col("rv"), col("v")).otherwise(col("u")).as("t"))
+      .join(ranks.select(col("x").as("u"), col("rank").as("ru")), "u")
+      .join(ranks.select(col("x").as("v"), col("rank").as("rv")), "v")
+      .select(least(col("ru"), col("rv")).as("s"), greatest(col("ru"), col("rv")).as("t"))
     // Forward counting (Schank & Wagner, WEA 2005): a triangle a ≺ b ≺ c
     // is counted once, at its edge a→b, as c ∈ out(a) ∩ out(b). One
-    // groupBy(s) builds each source's rank-sorted out-list; exploding it
-    // once yields the |E| oriented edges (s→t, out(s)), and a join on t
-    // brings out(t) beside it, so the count is one merge of two sorted
-    // lists per edge (sorted_intersect_size, a codegen'd while loop over
-    // the unsafe arrays). The list element is the bare rank long: rank =
-    // deg·2³² + id is unique per vertex, so merging ranks counts the same
-    // common neighbors as merging ids, and collect_list/array_sort stay
-    // on a primitive long array. An earlier spelling materialized every
-    // wedge as its own row and probed a packed edge-key broadcast — 3.9 M
-    // rows at sf0.01, 41 M at sf0.1; it and its measurement history are
-    // in Graph.scala at commit da59d41.
-    // directedW is the ONE repartition-by-source exchange both adjacency
-    // consumers read (the exploded stream and the broadcast build side
-    // reuse it). Widen.byKey pins it at the full configured width: the
-    // merge work per adjacency row grows with its list lengths, a cost
-    // AQE's byte-based coalescing cannot see.
+    // groupBy(s) builds each source's sorted out-list; each oriented edge
+    // s→t then looks up out(s) and out(t) in that one adjacency, so the
+    // count is one merge of two sorted lists per edge
+    // (sorted_intersect_size, a codegen'd while loop over the unsafe
+    // arrays). directedW is the ONE repartition-by-source exchange; the
+    // adjacency aggregate and the edge probes read the same columns of it,
+    // so the exchange is reused. Widen.byKey pins it at the full
+    // configured width: the merge work per edge grows with its list
+    // lengths, a cost AQE's byte-based coalescing cannot see.
     val directedW = Widen.byKey(directed, col("s"))
-    val adj = directedW.groupBy(col("s"))
-      .agg(array_sort(collect_list(col("rt"))).as("ts"))
-    val IdMask = 4294967295L // low 32 bits of a rank long = the vertex id
-    val outEdges = adj
-      .select(col("ts"), explode(col("ts")).as("rt"))
-      .select(col("ts"), col("rt").bitwiseAND(lit(IdMask)).as("t"))
-    // The adjacency side is HINTED broadcast: |V| rows holding |E| longs
-    // in total, bounded by construction, while Catalyst's estimate of the
-    // exploded stream cannot see through the Generate and may pick the
-    // wrong build side. On a graph whose adjacency outgrows executor
-    // memory, drop the hint for the shuffle-join fallback exactly as the
-    // bfs frontier note documents.
-    val nTriangles = outEdges
-      .join(broadcast(adj.select(col("s").as("t"), col("ts").as("tt"))), "t")
-      .agg(coalesce(sum(SortedIntersect.sortedIntersectSize(spark, "ts", "tt")), lit(0L))
-        .as("n_triangles"))
-    // n_edges = Σdeg / 2 (every edge contributes to exactly two vertex
-    // degrees) — derived from the degree aggregate already in the plan
-    // instead of a FIFTH pass over the edge subtree counting rows
-    // (optimization r17; the degree exchange is reused, so this consumer
-    // reads vertex-sized data). coalesce: sum over an empty graph is NULL
-    // where count(*) was 0.
-    nTriangles.crossJoin(broadcast(degFull.agg(
-      coalesce(expr("sum(d) div 2"), lit(0L)).as("n_edges"))))
+    // The adjacency is HINTED broadcast: |V| rows holding |E| longs in
+    // total, bounded by construction. On a graph whose adjacency outgrows
+    // executor memory, drop the hint for the shuffle-join fallback exactly
+    // as the bfs frontier note documents.
+    val adj = broadcast(directedW.groupBy(col("s"))
+      .agg(array_sort(collect_list(col("t"))).as("out")))
+    // Both probes rename the key and the list, so their build sides are
+    // one plan up to names and the second reuses the first's broadcast.
+    // Every source has an out-list, so the s-probe is inner. A sink t has
+    // none: the t-probe is left outer, its merge is null, and sum skips it
+    // while count(*) still counts the edge.
+    directedW
+      .join(adj.select(col("s").as("src"), col("out").as("ts")), col("s") === col("src"))
+      .join(adj.select(col("s").as("t"), col("out").as("tt")), Seq("t"), "left_outer")
+      .agg(
+        coalesce(sum(SortedIntersect.sortedIntersectSize(spark, "ts", "tt")), lit(0L))
+          .as("n_triangles"),
+        count(lit(1)).as("n_edges"))
   }
 
-  /** Memoized co-occurrence edge set, shared by the three consumers inside
-    * [[triangles]] (degree build, orientation join, edge count) — without
+  /** Vertex degrees `(x, deg)` of an undirected half-edge list `(u, v)`:
+    * one edge pass, each edge doubled in-row (a two-arm union re-ran the
+    * edge build once per arm).
+    */
+  private def degrees(edges: DataFrame): DataFrame =
+    edges.select(explode(array(col("u"), col("v"))).as("x"))
+      .groupBy(col("x")).agg(count(lit(1)).as("deg"))
+
+  /** Memoized co-occurrence edge set, shared by the consumers inside
+    * [[triangles]] (degree build and orientation join) — without
     * it each consumer replays the basket groupBy + pair fan-out +
     * distinct. Same single-key SessionMemo policy as AnnIvf's quantizer:
     * one dir per session, unpersist on dir switch, and a cold Bench run
@@ -258,35 +248,27 @@ object Graph {
       // aggregate's exchange is spelled as an explicit full-width
       // repartition — same single shuffle, but pinned against AQE's
       // byte-based coalescing, which packed the C(basket,2) pair
-      // expansion reading it into 4 tasks (StageProbe: 2.4 s of work).
+      // expansion reading it into 4 tasks (2.4 s of work in the stage table
+      // of graft.tools.Profile).
+      // The partkeys become vertex ids here, so they are checked here, in
+      // the codegen'd scan projection, for the pair packing below.
       val baskets = Widen.byKey(
           spark.read.parquet(t(dir, "lineitem"))
-            .select(col("l_orderkey"), col("l_partkey")),
+            .select(col("l_orderkey"), IdPack.checkedId(col("l_partkey")).as("l_partkey")),
           col("l_orderkey"))
         .groupBy(col("l_orderkey"))
         .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
-      // The pair fan-out packs (u, v) into ONE long (u·2³² + v — the same
-      // packing as the triangle ranks; valid while partkey < 2³², which
-      // TPC-H crosses only near SF ~21k — a graph beyond that re-packs
-      // into the 128-bit struct compare exactly as the triangles comment
-      // documents; ADVICE r16 #1), so the distinct dedups an 8-byte key
-      // instead of a
-      // two-field struct row: narrower exchange bytes and a cheaper hash
-      // (guide §2.3 "narrower types"). Unpacked right after the distinct;
-      // consumers see the same (u, v) schema as before.
+      // The pair fan-out packs (u, v) into ONE long (IdPack, u·2³² + v), so
+      // the distinct dedups an 8-byte key instead of a two-field struct
+      // row: narrower exchange bytes and a cheaper hash (guide §2.3
+      // "narrower types"). Unpacked right after the distinct; consumers
+      // see (u, v).
       val packed = baskets.filter(size(col("ps")) >= 2)
-        .select(explode(Pairs.orderedExpr(col("ps"),
-          (a, b) => a * lit(4294967296L) + b)).as("p"))
+        .select(explode(Pairs.orderedExpr(col("ps"), IdPack.pack)).as("p"))
         .distinct()
-      // shiftrightUNSIGNED (code-review r16): u in [2³¹, 2³²) makes the
-      // packed long wrap negative (still bijective), and an arithmetic
-      // shift would sign-extend u into garbage; the logical shift decodes
-      // the full documented sub-2³² range.
-      val edges = packed
-        .select(shiftrightunsigned(col("p"), 32).as("u"),
-          col("p").bitwiseAND(lit(4294967295L)).as("v"))
+      packed
+        .select(IdPack.hi(col("p")).as("u"), IdPack.lo(col("p")).as("v"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      edges
     }
 
   /** Bounded-frontier reachability — the BFS primitive behind blast-radius
@@ -337,8 +319,8 @@ object Graph {
     // ONE scan per hop (optimization r17, guide §2.4): the r15 spelling
     // probed the half list TWICE per hop (u-direction ∪ v-direction), and
     // under cold-cache exchange reuse each probe re-runs the distinct-final
-    // aggregate over |E| — five edge passes per execution (StageProbe
-    // before: five 32-task stages of 3-9 s task time each). The in-row
+    // aggregate over |E| — five edge passes per execution (Profile's stage
+    // table before: five 32-task stages of 3-9 s task time each). The in-row
     // explode emits both directions of each half-edge inside one scan, so
     // each hop is ONE broadcast-probe pass — three edge passes total
     // (seed, hop 1, hop 2). Looking a frontier up on the exploded two-row
@@ -383,11 +365,7 @@ object Graph {
       |       CAST(min(deg) AS BIGINT) AS min_deg,
       |       CAST(max(deg) AS BIGINT) AS max_deg
       |FROM d GROUP BY 1""".stripMargin) { (spark, dir) =>
-    val half = coEdges(spark, dir)
-    // in-row doubling, not a two-arm union: one edge pass feeds the degree
-    // count (optimization r17 — same rework as the triangles degree build)
-    half.select(explode(array(col("u"), col("v"))).as("x"))
-      .groupBy(col("x")).agg(count(lit(1)).as("deg"))
+    degrees(coEdges(spark, dir))
       .groupBy(floor(sqrt(col("deg").cast("double"))).as("bucket"))
       .agg(count(lit(1)).as("n_vertices"),
         min(col("deg")).as("min_deg"), max(col("deg")).as("max_deg"))

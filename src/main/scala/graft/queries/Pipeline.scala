@@ -394,7 +394,7 @@ object Pipeline {
         i => concat_ws(" ", slice(col("words"), i, lit(width))))
       // Widen.scan (optimization r16, guide §2.5): the single-row-group
       // corpus scan is one task, so the gram expansion + poly_hash ran
-      // single-threaded (0.66 s while 31 cores idled — TaskMetricsProbe);
+      // single-threaded (0.66 s while 31 cores idled — Profile's stage table);
       // at warehouse scale the corpus is many files and this is a no-op.
       Widen.scan(spark, spark.read.parquet(t(dir, "documents")))
         .select(col("doc_id"), words.as("words"))

@@ -68,9 +68,9 @@ private[queries] object Pairs {
   *   1. Every test table is ONE parquet row group, so a scan is one task
   *      regardless of split math (splits are byte ranges; only the range
   *      containing the row group does work). A shingle/gram expansion
-  *      sitting directly on such a scan runs single-threaded —
-  *      TaskMetricsProbe measured q_dup_ngrams holding 0.66 s one-task
-  *      stages while 31 cores idled. [[Widen.scan]] round-robins the scan
+  *      sitting directly on such a scan runs single-threaded — the
+  *      stage table of graft.tools.Profile shows q_dup_ngrams holding
+  *      0.66 s one-task stages while 31 cores idled. [[Widen.scan]] round-robins the scan
   *      output across the default parallelism ONLY when the scan PLANS
   *      fewer partitions than the session has cores (code-review r16:
   *      planned splits, not file count — 8 big multi-row-group files
@@ -82,8 +82,8 @@ private[queries] object Pairs {
   *
   *   2. AQE's byte-based partition coalescing packs the exchange feeding
   *      an expansion into a few partitions (the adjacency lists and
-  *      baskets are small BYTES but explode 35x in ROWS — StageProbe
-  *      measured q_triangles' former wedge stage as 12 skewed tasks holding
+  *      baskets are small BYTES but explode 35x in ROWS — Profile's stage
+  *      table measured q_triangles' former wedge stage as 12 skewed tasks holding
   *      20.3 s of work, effective parallelism ~8 of 32). [[Widen.byKey]]
   *      spells that exchange as an explicit repartition at the CONFIGURED
   *      shuffle width — the width the groupBy exchange would have had

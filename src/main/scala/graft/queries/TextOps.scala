@@ -408,7 +408,7 @@ object TextOps {
 
   /** Returns (merge table, final symbol frame). Optimization r16 note
     * (guide §1.2): the row's wall cost is driver-side per-round Catalyst
-    * work, not compute — TaskMetricsProbe measured <1 s of task time
+    * work, not compute — Profile's stage table shows <1 s of task time
     * under ~2.4 s of wall. A lazy-checkpoint respelling (one blocking
     * action per round instead of two) was tried and REVERTED: each
     * round's adjacency reads `syms` twice, and a lazy checkpoint

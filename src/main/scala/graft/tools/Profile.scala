@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.Bench
 import graft.Bench.{d3, jsonString}
+import graft.queries.IdPack
 
 /** The one profiling main: per-run wall times AND what each run posted to
   * Spark's listener bus, measured under graft.Bench's own session and run
@@ -172,14 +173,14 @@ object Profile {
   }
 
   /** Copy i shifts keys by i·KeyStride, far above any sf0.1 key. The graph
-    * rows pack two partkeys into one long (u·2³² + v, Graph.scala), so a
+    * rows pack two partkeys into one long (u·2³² + v, [[IdPack]]), so a
     * shifted key must stay below 2³²: with source keys below KeyStride,
     * K·KeyStride ≤ 2³² guarantees it (K ≤ 42).
     */
   private val KeyStride = 100000000L
 
   private def gen(src: String, out: String, k: Int): Unit = {
-    require(k >= 1 && k.toLong * KeyStride <= (1L << 32),
+    require(k >= 1 && k.toLong * KeyStride <= IdPack.IdBound,
       s"K=$k: need 1 <= K and K * $KeyStride <= 2^32, or shifted keys overflow the u*2^32+v packing")
     val spark = Bench.benchSession(Bench.envCpus)
     def copies(df: DataFrame, shift: DataFrame => Int => DataFrame): DataFrame =

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `tools/Profile.scala`, `graft.spark` reads no conf or environment
   * variable, graft has no code in `org.apache.spark.sql`, no option splits
   * a `SparkClient` wave, `Bench.envCpus` is the one reader of
-  * `SPARK_GRAFT_CPUS`, and `FileSources` alone decides the key and the
-  * completion marker of an on-disk cache.
+  * `SPARK_GRAFT_CPUS`, `FileSources` alone decides the key and the
+  * completion marker of an on-disk cache, and `IdPack` alone holds the
+  * 2³² id packing.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
@@ -85,6 +86,12 @@ class OnePathSpec extends AnyFunSuite {
 
   test("Bench is the only reader of SPARK_GRAFT_CPUS") {
     assert(filesWith("\"SPARK_GRAFT_CPUS\"") == Seq("graft/Bench.scala"))
+  }
+
+  test("the 2^32 id packing constants appear only in IdPack.scala") {
+    assert(sources.exists(_._1.endsWith("graft/queries/IdPack.scala")))
+    for (literal <- Seq("4294967296", "4294967295"))
+      assert(filesWith(literal, "graft/queries/IdPack.scala").isEmpty, literal)
   }
 
   test("no tool waits on Spark with Thread.sleep") {

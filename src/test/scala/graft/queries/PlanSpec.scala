@@ -631,24 +631,31 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_triangles: wedge joins are equi-joins, never cartesian") {
+    // "Wedge joins" are the joins that close triangles: the orientation
+    // joins and the two adjacency probes.
     val p = plan("q_triangles")
     assert(!p.contains("CartesianProduct"), s"triangle join must stay keyed:\n$p")
     assert(p.contains("Generate"), s"edges must build via in-row pair expansion:\n$p")
   }
 
-  test("q_triangles: one explode of the adjacency feeds a broadcast merge sum") {
-    // Forward counting: the adjacency aggregate explodes ONCE into the |E|
-    // oriented edges, each probes the broadcast adjacency of its target
-    // and adds one sorted_intersect_size merge to the partial sum; no
-    // wedge is materialized and the exploded stream never shuffles.
+  test("q_triangles builds its adjacency, degree table and final aggregate once each") {
+    // Forward counting: the oriented edges probe ONE broadcast adjacency
+    // twice (out-list of the source, out-list of the target), and one
+    // final aggregate yields both the merge sum and the edge count.
     // Pinned by WALKING the final AQE plan, not by scanning the flat
-    // printout: a substring scan can match aggregates or exchanges of a
-    // sibling subtree, e.g. the broadcast build side.
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    // printout: a reused exchange is a leaf of the walk, so each operator
+    // found is one that actually executes. The plan pinned is the one
+    // Bench and perfbench time: their cache sweep leaves the memoized edge
+    // frame unpersisted, and in-plan exchange reuse shares the subtrees
+    // (over a cached scan it does not: each reference of the frame is its
+    // own relation copy).
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Final}
     import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec}
     val df = SparkEntry.queries("q_triangles")(spark, sf)
+    Graph.edgeCache.getOrElseUpdate(spark, sf)(fail("no memoized edge frame")).unpersist(true)
     df.collect() // AQE: pin the FINAL plan, not the pre-execution sketch
     val root = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -659,55 +666,34 @@ class PlanSpec extends AnyFunSuite {
       case _ => p.children
     }
     def walk(p: SparkPlan): Vector[SparkPlan] = p +: kids(p).flatMap(walk).toVector
-    def name(p: SparkPlan): String = p.getClass.getSimpleName
-    def isShuffle(p: SparkPlan): Boolean = name(p).contains("ShuffleExchange") ||
-      name(p).contains("ShuffleQueryStage") || name(p).contains("AQEShuffleRead")
-    def isExchange(p: SparkPlan): Boolean =
-      name(p).contains("Exchange") || name(p).contains("QueryStage")
-    def isAdjacency(p: SparkPlan): Boolean =
-      name(p).contains("ObjectHashAggregate") && p.simpleString(100).contains("collect_list")
-    // Only Generates downstream of the adjacency count: the edge build
-    // below it packs basket pairs by design, and it is visible whenever
-    // the memoized edge frame is not cached.
-    val overAdj = walk(root).collect {
-      case g: GenerateExec if walk(g).drop(1).exists(isAdjacency) => g
+    def finalAgg(p: SparkPlan): Option[BaseAggregateExec] = p match {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.mode == Final) => Some(a)
+      case _ => None
     }
-    assert(overAdj.size == 1, s"expected one Generate over the adjacency:\n$root")
-    val gen = overAdj.head
-    val packer = gen.generator.toString
-    assert(!packer.contains("4294967296") && !packer.contains("sequence"),
-      s"the adjacency Generate packs pairs:\n$root")
-    val below = walk(gen).drop(1)
-    assert(!below.take(below.indexWhere(isAdjacency)).exists(isExchange),
-      s"an exchange sits between the explode and the adjacency aggregate:\n$root")
-    // On the ancestor path from the explode, the join with the adjacency
-    // and then the partial sum come before any shuffle.
-    def pathTo(p: SparkPlan): Option[List[SparkPlan]] =
-      if (p eq gen) Some(Nil)
-      else kids(p).view.flatMap(c => pathTo(c).map(p :: _)).headOption
-    val up = pathTo(root)
-      .getOrElse(fail(s"the explode is unreachable from the root:\n$root"))
-      .reverse // nearest ancestor first
-    val sumUp = up.indexWhere(p => name(p) == "HashAggregateExec" &&
-      p.simpleString(100).contains("partial_sum"))
-    val exchUp = up.indexWhere(isShuffle)
-    assert(sumUp >= 0, s"partial sum missing above the explode:\n$root")
-    assert(exchUp < 0 || sumUp < exchUp, s"the exploded edges shuffle before the sum:\n$root")
-    assert(up.take(sumUp + 1).exists(_.simpleString(100).contains("sorted_intersect_size")),
-      s"the sum does not merge the sorted out-lists:\n$root")
-    val joinUp = up.indexWhere(p => name(p).contains("Join"))
-    assert(joinUp >= 0 && joinUp < sumUp, s"no join between the explode and the sum:\n$root")
-    val join = up(joinUp) match {
-      case j: BroadcastHashJoinExec => j
-      case j => fail(s"the adjacency join is ${name(j)}, not a broadcast hash join:\n$root")
+    def isAdjacency(p: SparkPlan): Boolean = finalAgg(p).exists(
+      _.aggregateExpressions.exists(_.aggregateFunction.prettyName == "collect_list"))
+    def isDegree(p: SparkPlan): Boolean = finalAgg(p).exists(a => a.groupingExpressions.nonEmpty &&
+      a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Count]))
+    val plan = walk(root)
+    assert(!plan.exists(_.getClass.getSimpleName.contains("CartesianProduct")),
+      s"the triangle joins must stay keyed:\n$root")
+    assert(plan.count(isAdjacency) == 1, s"expected one adjacency aggregate:\n$root")
+    assert(plan.count(isDegree) == 1, s"expected one degree aggregate:\n$root")
+    val merges = plan.flatMap(finalAgg).filter(_.aggregateExpressions.exists(
+      _.aggregateFunction.toString.contains("sorted_intersect_size")))
+    assert(merges.size == 1 &&
+      merges.head.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Count]),
+      s"expected one final aggregate holding the merge sum and the edge count:\n$root")
+    assert(!plan.exists { case g: GenerateExec => walk(g).exists(isAdjacency); case _ => false },
+      s"a Generate sits above the adjacency:\n$root")
+    val adjBroadcast = plan.collect {
+      case b: BroadcastExchangeLike if walk(b).exists(isAdjacency) => b
     }
-    val build = walk(join.buildSide match {
-      case BuildLeft => join.left
-      case BuildRight => join.right
-    })
-    assert(!build.exists(_ eq gen), s"the exploded edges are the build side:\n$root")
-    assert(build.exists(p => name(p).contains("Broadcast") && isExchange(p)) &&
-      build.exists(isAdjacency), s"the adjacency does not arrive through a broadcast:\n$root")
+    assert(adjBroadcast.size == 1, s"the adjacency does not arrive through one broadcast:\n$root")
+    assert(plan.exists {
+      case r: ReusedExchangeExec => r.child eq adjBroadcast.head
+      case _ => false
+    }, s"the second probe does not reuse the adjacency broadcast:\n$root")
   }
 
   test("q_typed_agg: the custom Aggregator still partial-merges map-side") {

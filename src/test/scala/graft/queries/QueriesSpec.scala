@@ -859,6 +859,24 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     }
   }
 
+  test("the graph rows refuse a partkey the 2^32 id packing cannot hold") {
+    import spark.implicits._
+    spark.sparkContext.setLogLevel("WARN")
+    // Each bad partkey shares an order with good ones, so it would reach
+    // the pair packing, where u·2³² + v decodes as a different edge.
+    val cases = Seq("partkey 2^32 + 1" -> 4294967297L, "negative partkey" -> -3L)
+    for ((name, bad) <- cases) withTempDir("graft-idpack") { dir =>
+      Seq((1L, 1L), (1L, 2L), (1L, bad), (2L, 2L), (2L, 3L), (2L, bad))
+        .toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+      for (q <- Seq("q_triangles", "q_bfs_reach", "q_degree_hist")) {
+        val e = intercept[Exception](SparkEntry.queries(q)(spark, dir).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains("a vertex id must lie in [0, 2^32)")),
+          s"$q, $name: $e")
+      }
+    }
+  }
+
   test("connected components converge in O(log d) generations on a 200-node chain") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

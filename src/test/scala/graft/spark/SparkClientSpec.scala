@@ -235,7 +235,7 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     }
   }
 
-  test("once estimated, a microsecond objective packs a coalesced job down to its widest wave") {
+  test("once estimated, a microsecond objective packs a coalesced job into one task") {
     val slots = spark.sparkContext.defaultParallelism
     // one-point waves and waves of several points alike pack into one task
     Seq(Seq(1, 1, 1, 1), Seq(1, 5, 2, 7, 3)).foreach { sizes =>
