@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -52,16 +50,5 @@ object PolyHash {
       i += Character.charCount(cp)
     }
     acc
-  }
-
-  /** Register `poly_hash` for SQL and Column use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head), "built-in")
-
-  /** Column form over a column name (session must be registered first). */
-  def polyHash(spark: SparkSession, colName: String): Column = {
-    register(spark)
-    expr(s"poly_hash($colName)")
   }
 }

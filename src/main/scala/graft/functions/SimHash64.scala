@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** 64-bit SimHash signature of a token array, returned as `[lo, hi]` — two
@@ -89,16 +87,5 @@ object SimHash64 {
       j += 1
     }
     new GenericArrayData(Array(lo, hi))
-  }
-
-  /** Register `simhash64` for SQL and Column use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-
-  /** Column form over an arbitrary tokens expression. */
-  def simhash64(spark: SparkSession, tokensSql: String): Column = {
-    register(spark)
-    expr(s"simhash64($tokensSql)")
   }
 }

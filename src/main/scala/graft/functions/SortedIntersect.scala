@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Number of elements two ascending, duplicate-free `array<bigint>` values
@@ -53,16 +51,5 @@ object SortedIntersect {
       else { common += 1; i += 1; j += 1 }
     }
     common
-  }
-
-  /** Register `sorted_intersect_size` for SQL and Column use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size", exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
-
-  /** Column form over two column/SQL expressions (registers on use). */
-  def sortedIntersectSize(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"sorted_intersect_size($a, $b)")
   }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** In-order dot product of two numeric arrays, accumulated in doubles:
@@ -70,16 +68,5 @@ object VectorOps {
       }
     }
     acc
-  }
-
-  /** Register `dot_product` for SQL and Column use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-
-  /** Column form over two column/SQL expressions (registers on use). */
-  def dotProduct(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"dot_product($a, $b)")
   }
 }

@@ -65,7 +65,6 @@ object AnnIngest {
     val out = FileSources.cacheDir("annstream", dir, "embeddings.parquet")
     FileSources.writeOnce(out) { (o, scratch) =>
       val in = s"$scratch/in"
-      graft.functions.VectorOps.register(spark)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"),
           org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("features"),
@@ -107,7 +106,6 @@ object AnnIngest {
         s"expected $ArrivalChunks arrival micro-batches, saw $batchDirs — " +
           "the ingest collapsed into a single batch and exercises nothing incremental")
     }
-    graft.functions.VectorOps.register(spark)
     val centDF = spark.read.parquet(s"$out/centroids")
     val ingested = spark.read.parquet(s"$out/ingest").drop("batch")
     val streamed = spark.read.parquet(s"$out/base").unionByName(ingested)

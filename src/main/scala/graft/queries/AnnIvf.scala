@@ -129,7 +129,6 @@ object AnnIvf {
       spark: SparkSession,
       dir: String,
       nCells: Int): (DataFrame, DataFrame) = fitCache.getOrElseUpdate(spark, (dir, nCells)) {
-    graft.functions.VectorOps.register(spark)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"),
         array_to_vector(col("embedding")).as("features"),

@@ -2,11 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
-/** The one set-and-restore path for session confs (code-review r13 #4):
-  * every scoped conf goes through [[withConfs]], so the restore-Some /
-  * unset-None branch lives in one place. Callers: [[StreamRun]] (event
-  * read confs, state width, state-store provider and no-data batches of
-  * every streaming run), Graph's PageRank loop and TextOps' BPE loop
+/** The one set-and-restore path for session confs (code-review r13 #4),
+  * and the only code outside session builders that writes one: every
+  * scoped conf goes through [[withConfs]], so the restore-Some /
+  * unset-None branch lives in one place. Callers: [[StreamRun]] (state
+  * width, state-store provider and no-data batches of every streaming
+  * run), Graph's PageRank loop and TextOps' BPE loop
   * (shuffle width), Dedup's connected-components loop (shuffle width),
   * Relational (runtime-filter and ndv confs) and Events' variant-shred row.
   */

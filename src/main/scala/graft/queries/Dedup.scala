@@ -139,22 +139,15 @@ object Dedup {
       bf.writeTo(bos)
       bos.toByteArray
     }
-    // Per-call unique registration, dropped the moment the frame is built:
-    // Dataset construction analyzes eagerly, so the UnresolvedFunction is
-    // resolved to THIS call's filter bytes before the drop — concurrent
-    // calls with different filters can no longer race on a shared
-    // session-global name, and no registry residue outlives the call
-    // (ADVICE r7 #2).
-    val fnName = s"graft_bloom_probe_${java.util.UUID.randomUUID().toString.replace("-", "_")}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName,
-      exprs => BloomFilterMightContain(Literal.create(bytes, BinaryType), exprs.head),
-      "built-in")
-    try docs.filter(col("source") === "src0")
-      .select(col("doc_id"), md5(col("text")).as("content_hash"))
-      .withColumn("maybe_seen", expr(s"$fnName(xxhash64(content_hash))"))
-    finally spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)): Unit
+    // Per-call unique probe function, resolved to THIS call's filter bytes
+    // when the frame is built and dropped right after (ADVICE r7 #2).
+    graft.GraftExtensions.withTempFunctions(spark,
+      Seq(exprs => BloomFilterMightContain(Literal.create(bytes, BinaryType), exprs.head))) {
+      fnNames =>
+        docs.filter(col("source") === "src0")
+          .select(col("doc_id"), md5(col("text")).as("content_hash"))
+          .withColumn("maybe_seen", expr(s"${fnNames.head}(xxhash64(content_hash))"))
+    }
   }
 
   /** PARTITIONED Bloom-filter family — the 10^10-key form of
@@ -189,7 +182,7 @@ object Dedup {
       buckets: Int = 16,
       expectedItems: Long = 100000L,
       numBits: Long = 960000L): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
     import org.apache.spark.sql.types.BinaryType
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val docs = spark.read.parquet(t(dir, "documents"))
@@ -200,7 +193,7 @@ object Dedup {
     try {
       val perBucketItems = math.max(expectedItems / buckets, 1L)
       val perBucketBits = math.max(numBits / buckets, 64L)
-      val fnNames = (0 until buckets).map { b =>
+      val probes = (0 until buckets).map { b =>
         val bf = corpusHashes.filter(col("b") === b)
           .stat.bloomFilter("h", perBucketItems, perBucketBits)
         val bytes = {
@@ -208,15 +201,9 @@ object Dedup {
           bf.writeTo(bos)
           bos.toByteArray
         }
-        val fnName =
-          s"graft_bloom_part_${b}_${java.util.UUID.randomUUID().toString.replace("-", "_")}"
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          fnName,
-          exprs => BloomFilterMightContain(Literal.create(bytes, BinaryType), exprs.head),
-          "built-in")
-        fnName
+        (exprs: Seq[Expression]) => BloomFilterMightContain(Literal.create(bytes, BinaryType), exprs.head)
       }
-      try {
+      graft.GraftExtensions.withTempFunctions(spark, probes) { fnNames =>
         val batch = docs.filter(col("source") === "src0")
           .select(col("doc_id"), md5(col("text")).as("content_hash"))
           .withColumn("hh", xxhash64(col("content_hash")))
@@ -228,9 +215,6 @@ object Dedup {
         // function to ITS bucket's filter bytes before the registry drop
         batch.select(col("doc_id"), col("content_hash"),
           probe.as("maybe_seen"))
-      } finally fnNames.foreach { fn =>
-        spark.sessionState.functionRegistry.dropFunction(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(fn)): Unit
       }
     } finally corpusHashes.unpersist(): Unit
   }
@@ -842,7 +826,6 @@ object Dedup {
     * cap; dropped-bucket counts are surfaced by [[dropMetrics]].
     */
   private def simhashSigs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SimHash64.register(spark)
     // Deliberately NOT Widen.scan'd (optimization r16): the one-pass
     // simhash64 projection is cheaper than the text repartition the
     // widening would add — measured 0.45 -> 0.71 s WITH the widen (and
@@ -1005,7 +988,6 @@ object Dedup {
       |               / sqrt(a.norm2 * b.norm2), 4) AS cosine
       |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id) v
       |WHERE cosine > 0.4""".stripMargin) { (spark, dir) =>
-    graft.functions.VectorOps.register(spark)
     val emb = spark.read.parquet(t(dir, "embeddings"))
     def dot(x: String, y: String): Column = expr(s"dot_product($x, $y)")
     val okCells = emb.groupBy(col("label")).agg(count(lit(1)).as("cell_n"))
@@ -1060,7 +1042,6 @@ object Dedup {
       |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
       |  GROUP BY b.vec_id, b.label) m
       |WHERE max_prior_sim > $semanticTau""".stripMargin) { (spark, dir) =>
-    graft.functions.VectorOps.register(spark)
     val emb = spark.read.parquet(t(dir, "embeddings"))
     def dot(x: String, y: String): Column = expr(s"dot_product($x, $y)")
     val okCells = emb.groupBy(col("label")).agg(count(lit(1)).as("cell_n"))

@@ -41,32 +41,6 @@ object Events {
        |         count(*) AS n, $fixedSumSql AS sum_value
        |  FROM events GROUP BY event_type, hour_bucket) w""".stripMargin
 
-  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-  private val NtzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-
-  /** Defensive conf pins for reading events.parquet, valid for EVERY
-    * physical `ts` encoding the generator has shipped: NANOS columns read
-    * as raw longs (the legacy flag; without it Spark rejects the schema),
-    * and MICROS/MILLIS columns with isAdjustedToUTC=false read as
-    * TimestampType rather than TIMESTAMP_NTZ (`unix_micros` on that read
-    * returns the stored int64 verbatim — verified timezone-independent,
-    * Spark applies no zone shift to int64 parquet timestamps). Every
-    * session this library constructs pins both at construction (VERDICT
-    * r7 #3); this remains as a fallback for externally-built sessions.
-    */
-  private[graft] def pinEventReadConfs(spark: SparkSession): Unit = {
-    if (!spark.conf.getOption(NanosKey).contains("true")) spark.conf.set(NanosKey, "true")
-    if (!spark.conf.getOption(NtzKey).contains("false")) spark.conf.set(NtzKey, "false")
-  }
-
-  /** The event read confs as a set-and-restore scope (ADVICE r6 #4): the
-    * STREAMING rows pin them through [[StreamRun]], whose execution
-    * completes inside the scope, so restoring breaks nothing downstream.
-    */
-  private[graft] val eventReadConfs: Seq[(String, String)] =
-    Seq(NanosKey -> "true", NtzKey -> "false")
-
-
   /** Schema-adaptive normalization of `ts` to the canonical `tus` column:
     * microseconds since epoch as BIGINT, == DuckDB `epoch_us(ts)` exactly.
     *   - LongType        → parquet TIMESTAMP(NANOS) read via nanosAsLong;
@@ -74,8 +48,10 @@ object Events {
     *                       as DuckDB truncates nanos parquet on read;
     *   - TimestampType   → MICROS/MILLIS int64; `unix_micros` returns the
     *                       stored value (no zone shift on int64 parquet);
-    *   - TimestampNTZType→ externally-read frames only (our readers pin
-    *                       [[NtzKey]] off); interpret the wall-clock as
+    *   - TimestampNTZType→ MICROS/MILLIS int64 with isAdjustedToUTC=false
+    *                       read by a session that leaves
+    *                       `spark.sql.parquet.inferTimestampNTZ.enabled`
+    *                       at its default; interpret the wall-clock as
     *                       UTC, matching DuckDB's naive `epoch_us`. The
     *                       cast to TIMESTAMP applies the session zone and
     *                       `from_utc_timestamp(·, current_timezone())` is
@@ -113,24 +89,23 @@ object Events {
   }
 
   /** Batch read of events.parquet with `ts` normalized to `tus` (micros
-    * BIGINT). The conf pins are deliberately NOT restored when they fire:
-    * the returned frame is lazy, and the parquet scan re-reads conf when
-    * the plan executes (file-source readers capture SQLConf at physical
-    * planning, i.e. action time), so a restore would make later execution
-    * of the returned frame fail. The fully-executed streaming queries scope
-    * [[eventReadConfs]] through [[StreamRun]] instead and leak nothing.
+    * BIGINT). It reads under the session's confs and sets none. The one
+    * event-read rule: the session builder pins
+    * `spark.sql.legacy.parquet.nanosAsLong=true` and
+    * `spark.sql.parquet.inferTimestampNTZ.enabled=false` (Bench,
+    * perfbench), and [[normalizeTs]] maps every `ts` type either setting
+    * yields to the same `tus`. The one case that needs the pin: a
+    * TIMESTAMP(NANOS) file read in a session built without `nanosAsLong`,
+    * which Spark rejects at schema resolution.
     */
-  private[graft] def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    pinEventReadConfs(spark)
+  private[graft] def readEvents(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(spark.read.parquet(t(dir, "events")))
-  }
 
   /** File-source stream over events.parquet with the same `tus`
-    * normalization as [[readEvents]] — schema resolved under the pinned
-    * confs, one file per micro-batch. The one event-stream reader: the
-    * gate rows run it under [[StreamRun]]'s `eventReads` scope, and the
-    * graft.streaming operators (Sessionize, SessionizeTws, FunnelTws) call
-    * it after [[pinEventReadConfs]]. `maxFilesPerTrigger=1` cannot split a
+    * normalization and read rule as [[readEvents]], one file per
+    * micro-batch. The one event-stream reader: the gate rows and the
+    * graft.streaming operators (Sessionize, SessionizeTws, FunnelTws) all
+    * read through it. `maxFilesPerTrigger=1` cannot split a
     * batch while events.parquet is one file, which holds at every testdata
     * scale (the single-file rows check it with requireSingleEventsFile).
     */
@@ -161,7 +136,7 @@ object Events {
     * On bounded input this must hash-match the batch oracle exactly.
     */
   val streamWindows: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    StreamRun(mode = "complete", eventReads = true).memory(spark, "graft_stream_windows") {
+    StreamRun(mode = "complete").memory(spark, "graft_stream_windows") {
       windowAgg(eventsStream(spark, dir))
     }
   }
@@ -268,7 +243,7 @@ object Events {
     // data batch per file + the watermark-commit batch) and self-terminates
     // — a deterministic batch count with no 100 ms poll loop in the timed
     // path.
-    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+    StreamRun(trigger = Trigger.AvailableNow())
       .memory(spark, "graft_session_window_stream") {
         eventsStream(spark, dir)
           .select(col("user_id"), timestamp_micros(col("tus")).as("tts"), col("value"))
@@ -314,10 +289,7 @@ object Events {
 
   val sessionizeStream: QueryDef = QueryDef(sessionizeStreamOracle) {
     (spark, dir) =>
-    // the eventReads scope wraps the whole execution: Sessionize.sessions
-    // pins the confs itself (for direct callers), but the scope's restore
-    // here means this query leaves no session-conf residue either way.
-    StreamRun(eventReads = true)
+    StreamRun()
       .memory(spark, "graft_sessionize_stream")(graft.streaming.Sessionize.sessions(spark, dir))
       .select(col("user_id"), col("n"), col("start_us"), col("end_us"),
         round(col("sum_fixed") / 10000.0, 2).as("sum_value"))
@@ -332,7 +304,7 @@ object Events {
     * move a single session boundary.
     */
   val sessionizeTws: QueryDef = QueryDef(sessionizeStreamOracle) { (spark, dir) =>
-    StreamRun(rocksDb = true, eventReads = true)
+    StreamRun(rocksDb = true)
       .memory(spark, "graft_sessionize_tws")(graft.streaming.SessionizeTws.sessions(spark, dir))
       .select(col("user_id"), col("n"), col("start_us"), col("end_us"),
         round(col("sum_fixed") / 10000.0, 2).as("sum_value"))
@@ -380,7 +352,7 @@ object Events {
     */
   val streamDedup: QueryDef = QueryDef(
     "SELECT DISTINCT user_id, event_type FROM events") { (spark, dir) =>
-    StreamRun(eventReads = true).memory(spark, "graft_stream_dedup") {
+    StreamRun().memory(spark, "graft_stream_dedup") {
       eventsStream(spark, dir).select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
     }
@@ -882,7 +854,7 @@ object Events {
     // and any append-mode AGGREGATION over the join (streamJoinAgg's
     // windows finalize only when a later batch observes the advanced
     // watermark — skipping the no-data batch there would emit nothing).
-    StreamRun(width = Some(streamPartitions), eventReads = true,
+    StreamRun(width = Some(streamPartitions),
         noDataBatches = !skipNoDataBatch).memory(spark, sinkName) {
       project(side("click", "c").join(
         side("purchase", "p"),
@@ -1265,7 +1237,7 @@ object Events {
       |             max(value) AS max_value
       |      FROM events GROUP BY user_id) u
       |  ON e.user_id = u.user_id""".stripMargin) { (spark, dir) =>
-    StreamRun(eventReads = true).memory(spark, "graft_stream_static") {
+    StreamRun().memory(spark, "graft_stream_static") {
       val users = readEvents(spark, dir)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_user"), max(col("value")).as("max_value"))
@@ -1301,7 +1273,7 @@ object Events {
     import graft.sources.FileSources
     val out = FileSources.cacheDir("streamsink", dir, "events.parquet")
     FileSources.writeOnce(out) { (o, _) =>
-      StreamRun(eventReads = true).run(spark) {
+      StreamRun().run(spark) {
         eventsStream(spark, dir).select(col("event_id"), col("event_type"))
       }(_.format("parquet").option("path", s"$o/data").option("checkpointLocation", s"$o/chk"))
     }
@@ -1763,7 +1735,7 @@ object Events {
       "the cross-batch per-user ordering precondition only holds when the " +
         "whole stream is one micro-batch")
     import spark.implicits._
-    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+    StreamRun(trigger = Trigger.AvailableNow())
       .memory(spark, "graft_funnel_stream") {
         eventsStream(spark, dir)
           .select(col("user_id"), col("event_type"), col("tus"))
@@ -1785,7 +1757,7 @@ object Events {
     requireSingleEventsFile(dir, "streaming funnel",
       "the cross-batch per-user ordering precondition only holds when the " +
         "whole stream is one micro-batch")
-    StreamRun(rocksDb = true, eventReads = true, trigger = Trigger.AvailableNow())
+    StreamRun(rocksDb = true, trigger = Trigger.AvailableNow())
       .memory(spark, "graft_funnel_tws")(graft.streaming.FunnelTws.stages(spark, dir))
   }
 
@@ -1990,9 +1962,7 @@ object Events {
        |                   CAST(epoch_us(ts) AS VARCHAR) || '|' ||
        |                   CAST(CAST(floor(value * 100 + 0.5) AS BIGINT) AS VARCHAR) AS s
        |            FROM events) r) f""".stripMargin) { (spark, dir) =>
-    import graft.functions.PolyHash
-    PolyHash.register(spark)
-    StreamRun(mode = "complete", eventReads = true, trigger = Trigger.AvailableNow())
+    StreamRun(mode = "complete", trigger = Trigger.AvailableNow())
       .memory(spark, "graft_stream_checksum") {
         eventsStream(spark, dir)
           .select(concat_ws("|",
@@ -2032,7 +2002,7 @@ object Events {
     import graft.sources.FileSources
     val out = FileSources.cacheDir("foreachbatch", dir, "events.parquet")
     FileSources.writeOnce(out) { (o, _) =>
-      StreamRun(eventReads = true, trigger = Trigger.AvailableNow()).run(spark) {
+      StreamRun(trigger = Trigger.AvailableNow()).run(spark) {
         eventsStream(spark, dir).select(col("event_id"), col("event_type"))
       }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         StreamRun.writeBatch(batch.groupBy(col("event_type"))
@@ -2481,7 +2451,7 @@ object Events {
     import graft.sources.FileSources
     val out = FileSources.cacheDir("statereader", dir, "events.parquet")
     FileSources.writeOnce(out) { (o, _) =>
-      StreamRun(mode = "update", eventReads = true, trigger = Trigger.AvailableNow()).run(spark) {
+      StreamRun(mode = "update", trigger = Trigger.AvailableNow()).run(spark) {
         eventsStream(spark, dir)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -2522,7 +2492,7 @@ object Events {
       |         CAST(count(*) AS BIGINT) AS n_buckets
       |  FROM b GROUP BY 1) g, wm
       |WHERE g.w_start_us + 7200000000 <= wm.w""".stripMargin) { (spark, dir) =>
-    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+    StreamRun(trigger = Trigger.AvailableNow())
       .memory(spark, "graft_stream_chained") {
         eventsStream(spark, dir)
           .select(timestamp_micros(col("tus")).as("tts"), col("event_type"))
@@ -2580,7 +2550,7 @@ object Events {
         .filter(col("event_type") === tpe)
         .select(timestamp_micros(col("tus")).as("tts"), col("event_type"), col("value"))
         .withWatermark("tts", delay)
-    StreamRun(eventReads = true, trigger = Trigger.AvailableNow())
+    StreamRun(trigger = Trigger.AvailableNow())
       .memory(spark, "graft_stream_union") {
         branch("click", "10 minutes")
           .unionByName(branch("view", "30 minutes"))
@@ -2705,7 +2675,6 @@ object Events {
       |       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
       |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    pinEventReadConfs(spark)
     val out = FileSources.cacheDir("ckptrestart", dir, "events.parquet")
     FileSources.writeOnce(out) { (o, scratch) =>
       // the staged halves and the checkpoint live in writeOnce's scratch
@@ -2791,7 +2760,6 @@ object Events {
     s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n, $fixedSumSql AS sum_value
        |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
-    pinEventReadConfs(spark)
     val out = FileSources.cacheDir("twsrestart", dir, "events.parquet")
     FileSources.writeOnce(out) { (o, scratch) =>
       val in = s"$scratch/in"

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.functions.SortedIntersect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -208,7 +207,7 @@ object Graph {
       .join(adj.select(col("s").as("src"), col("out").as("ts")), col("s") === col("src"))
       .join(adj.select(col("s").as("t"), col("out").as("tt")), Seq("t"), "left_outer")
       .agg(
-        coalesce(sum(SortedIntersect.sortedIntersectSize(spark, "ts", "tt")), lit(0L))
+        coalesce(sum(expr("sorted_intersect_size(ts, tt)")), lit(0L))
           .as("n_triangles"),
         count(lit(1)).as("n_edges"))
   }
@@ -239,9 +238,15 @@ object Graph {
   // persisted blocks the identical edge-build exchange subtrees dedup via
   // ReusedExchange inside each execution anyway — measured 6.9/5.1 s
   // (triangles/bfs with a re-arm forcing cache re-materialization +
-  // InMemory scans) vs 6.1/2.9 s (unpersisted + exchange reuse). The
-  // persist still pays off where nothing sweeps: Verify and user sessions
-  // run the three graph rows back-to-back against a warm frame.
+  // InMemory scans) vs 6.1/2.9 s (unpersisted + exchange reuse). Where
+  // nothing sweeps (Verify, user sessions) the persist pays off even though
+  // no exchange above the cached frame is reused: sf0.1, local[4], bench
+  // confs, 4 alternating rounds, the three graph rows totalled 2.11-2.96 s
+  // warm (q_triangles first, building the cache) against 2.99-4.03 s with
+  // the cache swept before each row. Per row, warm vs swept: q_triangles
+  // 1.22-1.65 vs 0.94-1.39 s, q_bfs_reach 0.74-1.12 vs 1.40-1.90 s,
+  // q_degree_hist 0.10-0.19 vs 0.52-0.75 s; only q_triangles gains from
+  // the swept plan.
   private def coEdges(spark: SparkSession, dir: String): DataFrame =
     edgeCache.getOrElseUpdate(spark, dir) {
       // Widen.byKey (optimization r16, guide §2.2/§2.5): the basket

@@ -96,7 +96,7 @@ object Pipeline {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("lang")).orderBy(col("fp"), col("doc_id"))
     spark.read.parquet(t(dir, "documents"))
-      .select(col("doc_id"), col("lang"), PolyHash.polyHash(spark, "text").as("fp"))
+      .select(col("doc_id"), col("lang"), expr("poly_hash(text)").as("fp"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= Quota)
       .drop("rn")
@@ -205,7 +205,7 @@ object Pipeline {
     spark.read.parquet(t(dir, "documents"))
       .select(col("doc_id"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        PolyHash.polyHash(spark, "text").as("fp"))
+        expr("poly_hash(text)").as("fp"))
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .filter(col("cum_tokens") <= TokenBudget)
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("cum_tokens"))
@@ -235,7 +235,6 @@ object Pipeline {
        |                       c -> CAST(ascii(c) AS BIGINT))),
        |                   (a, b) -> (a * 31 + b) % ${PolyHash.P}) AS fp_redacted
        |FROM documents""".stripMargin) { (spark, dir) =>
-    PolyHash.register(spark)
     spark.read.parquet(t(dir, "documents"))
       .select(col("doc_id"),
         size(regexp_extract_all(col("text"), lit(PiiPattern), lit(0)))
@@ -280,7 +279,7 @@ object Pipeline {
     spark.read.parquet(t(dir, "documents"))
       .select(col("doc_id"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        PolyHash.polyHash(spark, "text").as("fp"))
+        expr("poly_hash(text)").as("fp"))
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .select(col("doc_id"), col("lang"), col("n_tokens"),
         expr(s"(cum_tokens - n_tokens) div $PackCapacity").as("pack_id"))
@@ -387,7 +386,6 @@ object Pipeline {
 
   private def posGrams(spark: SparkSession, dir: String, width: Int = DupNGram): DataFrame = {
     val df = gramFrameCache.getOrElseUpdate(spark, (dir, width)) {
-      graft.functions.PolyHash.register(spark)
       val words = split(col("text"), " ")
       val grams = transform(
         sequence(lit(1), size(col("words")) - (width - 1)),
@@ -691,7 +689,7 @@ object Pipeline {
        |       CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(n_tok) AS BIGINT) AS n_tokens
        |FROM f GROUP BY 1, 2""".stripMargin) { (spark, dir) =>
-    val bucket = PolyHash.polyHash(spark, "text") % 100
+    val bucket = expr("poly_hash(text)") % 100
     spark.read.parquet(t(dir, "documents"))
       .select(col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),
@@ -772,7 +770,6 @@ object Pipeline {
        |FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
        |WHERE v1.doc_id IS NULL OR v2.doc_id IS NULL OR v1.fp1 <> v2.fp2""".stripMargin) {
     (spark, dir) =>
-    PolyHash.register(spark)
     val docs = spark.read.parquet(t(dir, "documents")).select(col("doc_id"), col("text"))
     val v1 = docs.filter(col("doc_id") % 7 =!= 3)
       .select(col("doc_id").as("id1"), expr("poly_hash(text)").as("fp1"))
@@ -1146,7 +1143,6 @@ object Pipeline {
        |SELECT lang, source, CAST(noisy_n AS BIGINT) AS noisy_n, CAST(rank AS INT) AS rank
        |FROM k WHERE rank <= $DpTopK""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PolyHash.register(spark)
     val byLang = Window.partitionBy(col("lang"))
       .orderBy(col("noisy_n").desc, col("source"))
     spark.read.parquet(t(dir, "documents"))
@@ -1255,7 +1251,7 @@ object Pipeline {
     val w = Window.partitionBy(col("source")).orderBy(col("fp"), col("doc_id"))
     val kept = docs
       .select(col("doc_id"), col("source"), col("n_chars"),
-        PolyHash.polyHash(spark, "text").as("fp"))
+        expr("poly_hash(text)").as("fp"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= DomainCap) // -> WindowGroupLimit
       .groupBy(col("source"))
@@ -1383,7 +1379,7 @@ object Pipeline {
     val nPart = spark.sessionState.conf.numShufflePartitions
     val f = spark.read.parquet(t(dir, "documents"))
       .select(col("doc_id"), col("n_chars").as("w"),
-        PolyHash.polyHash(spark, "text").as("fp"))
+        expr("poly_hash(text)").as("fp"))
     val ranged = f.repartitionByRange(nPart, col("fp"), col("doc_id"))
       .sortWithinPartitions(col("fp"), col("doc_id"))
       .withColumn("pid", spark_partition_id())

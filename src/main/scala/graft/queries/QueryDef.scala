@@ -12,10 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * search), and a strict field would force that work at registry
   * construction — every Bench child JVM would pay for a full driver-side
   * search just to look up an unrelated query's function.
+  *
+  * `fn` registers graft's SQL functions ([[graft.GraftExtensions.register]])
+  * before it runs the row body, so a body may call them by name in any
+  * session and never sets the session up itself.
   */
 final class QueryDef(
-    val fn: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracleThunk: Option[() => String]) {
+  val fn: (SparkSession, String) => DataFrame = { (spark, dir) =>
+    graft.GraftExtensions.register(spark)
+    body(spark, dir)
+  }
   lazy val oracle: Option[String] = oracleThunk.map(_())
 }
 

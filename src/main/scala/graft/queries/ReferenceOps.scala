@@ -323,7 +323,6 @@ object ReferenceOps {
   val batchEval: QueryDef = QueryDef(
     """SELECT vec_id, round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 6) AS cost
       |FROM embeddings""".stripMargin) { (spark, dir) =>
-    graft.functions.VectorOps.register(spark)
     spark.read.parquet(t(dir, "embeddings"))
       .select(col("vec_id"),
         round(expr("dot_product(embedding, embedding)"), 6).as("cost"))

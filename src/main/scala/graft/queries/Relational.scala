@@ -639,14 +639,13 @@ object Relational {
        |                   l_returnflag || '|' || l_linestatus || '|' ||
        |                   CAST(CAST(l_quantity AS BIGINT) AS VARCHAR) AS s
        |            FROM lineitem) r) f""".stripMargin) { (spark, dir) =>
-    import graft.functions.PolyHash
     val rows = spark.read.parquet(t(dir, "lineitem"))
       .select(concat_ws("|",
         col("l_orderkey").cast("string"), col("l_partkey").cast("string"),
         col("l_suppkey").cast("string"), col("l_linenumber").cast("string"),
         col("l_returnflag"), col("l_linestatus"),
         col("l_quantity").cast("long").cast("string")).as("s"))
-    rows.select(PolyHash.polyHash(spark, "s").as("fp"))
+    rows.select(expr("poly_hash(s)").as("fp"))
       .agg(count(lit(1)).as("n_rows"), expr("bit_xor(fp)").as("xor_fp"),
         min(col("fp")).as("min_fp"), max(col("fp")).as("max_fp"))
   }
@@ -1183,12 +1182,11 @@ object Relational {
        |SELECT user_id, event_id, event_type FROM r WHERE rn = 1""".stripMargin) {
     (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.PolyHash
     val w = Window.partitionBy(col("user_id")).orderBy(col("fp"), col("event_id"))
     Events.readEvents(spark, dir) // conf-pin rule, ts unused
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("event_id").cast("string").as("s"))
-      .withColumn("fp", PolyHash.polyHash(spark, "s"))
+      .withColumn("fp", expr("poly_hash(s)"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_id"), col("event_type"))

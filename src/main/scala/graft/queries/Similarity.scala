@@ -60,7 +60,6 @@ object Similarity {
        |    WHERE q.vec_id < $nQueries) s) r
        |WHERE rank <= $topK""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorOps.register(spark)
     val emb = spark.read.parquet(t(dir, "embeddings"))
     val e = emb.select(col("vec_id"), col("embedding"),
       dot("embedding", "embedding").as("norm2"))
@@ -137,7 +136,6 @@ object Similarity {
          |  FROM cand) r
          |WHERE rank <= $topK""".stripMargin) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
-      graft.functions.VectorOps.register(spark)
       val emb = spark.read.parquet(t(dir, "embeddings"))
       val sig = (0 until planes).map { p =>
         val ws = (0 until dims).map(w => s"${weight(p, w)}D").mkString("array(", ", ", ")")
@@ -226,7 +224,6 @@ object Similarity {
          |  FROM sc) r
          |WHERE rank <= $graphK""".stripMargin) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
-      graft.functions.VectorOps.register(spark)
       val emb = spark.read.parquet(t(dir, "embeddings"))
       val sig = (0 until planes).map { p =>
         val ws = (0 until dims).map(w => s"${weight(p, w)}D").mkString("array(", ", ", ")")
@@ -582,7 +579,6 @@ object Similarity {
        |           PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
        |  FROM s2) r WHERE rank <= $topK""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorOps.register(spark)
     val e = spark.read.parquet(t(dir, "embeddings"))
       .select(col("vec_id"), col("embedding"),
         expr("dot_product(embedding, embedding)").as("norm2"),
@@ -625,7 +621,6 @@ object Similarity {
   private[queries] def quantizedVecs(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorOps.register(spark)
     val cells = spark.read.parquet(t(dir, "embeddings"))
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "raw")))
       .select(col("vec_id"), col("dim"), col("raw").cast("double").as("v"))
@@ -893,7 +888,6 @@ object Similarity {
     */
   private def ragExactHits(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorOps.register(spark)
     val e = spark.read.parquet(t(dir, "embeddings"))
       .select(col("vec_id"), col("embedding"), dot("embedding", "embedding").as("norm2"))
     val q = e.filter(col("vec_id") % RagStride === 0)
@@ -916,7 +910,6 @@ object Similarity {
     */
   private def ragStages(spark: SparkSession, dir: String, hits: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PolyHash.register(spark)
     val byScore = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("doc_id"))
     val docs = spark.read.parquet(t(dir, "documents"))

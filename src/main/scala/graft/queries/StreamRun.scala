@@ -23,8 +23,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *   session's width.
   * @param rocksDb run on the RocksDB state-store provider, which
   *   `transformWithState` requires; every other run keeps the default store
-  * @param eventReads pin the events.parquet read confs
-  *   ([[Events.eventReadConfs]]) while the frame is built and run
   * @param noDataBatches `false` skips the trailing no-data micro-batch —
   *   only for queries that emit nothing at watermark eviction
   * @param trigger the trigger; its kind decides the wait
@@ -33,13 +31,11 @@ private[graft] final case class StreamRun(
     mode: String = "append",
     width: Option[Int] = Some(4),
     rocksDb: Boolean = false,
-    eventReads: Boolean = false,
     noDataBatches: Boolean = true,
     trigger: Trigger = Trigger.ProcessingTime(0L)) {
 
   private def confs: Seq[(String, String)] =
-    (if (eventReads) Events.eventReadConfs else Nil) ++
-      width.map(n => "spark.sql.shuffle.partitions" -> n.toString) ++
+    width.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq ++
       (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" -> StreamRun.RocksDb)
        else Nil) ++
       (if (noDataBatches) Nil

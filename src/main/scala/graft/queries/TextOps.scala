@@ -199,7 +199,7 @@ object TextOps {
        |                   (a, b) -> (a * 31 + b) % ${PolyHash.P}) AS fp
        |FROM documents""".stripMargin) { (spark, dir) =>
     spark.read.parquet(t(dir, "documents"))
-      .select(col("doc_id"), PolyHash.polyHash(spark, "text").as("fp"))
+      .select(col("doc_id"), expr("poly_hash(text)").as("fp"))
   }
 
   /** TF-IDF top-3 terms per document. IDF is log2-quantized in pure integer
@@ -1003,7 +1003,6 @@ object TextOps {
          |       CAST(coalesce(c.n, 0) AS BIGINT) AS n
          |FROM spine LEFT JOIN c ON c.lang = spine.lang AND c.bucket = spine.bucket""".stripMargin) {
       (spark, dir) =>
-      PolyHash.register(spark)
       val counts = spark.read.parquet(t(dir, "documents"))
         .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
         .filter(col("tok") =!= "")
@@ -1052,7 +1051,6 @@ object TextOps {
       |       CAST(count(DISTINCT w) AS BIGINT) AS distinct_raw,
       |       CAST(count(DISTINCT nw) AS BIGINT) AS distinct_norm
       |FROM n GROUP BY source""".stripMargin) { (spark, dir) =>
-    graft.functions.NfcNormalize.register(spark)
     spark.read.parquet(t(dir, "documents"))
       .select(col("source"),
         // Explicit escapes, NOT literal glyphs: the decomposed arm is

@@ -50,10 +50,6 @@ object FunnelTws {
     */
   def stages(spark: SparkSession, dir: String): Dataset[StageRow] = {
     import spark.implicits._
-    // conf pins as in SessionizeTws.sessions: set for direct callers, not
-    // restored here because the returned stream is lazy — the gate row
-    // runs under StreamRun's eventReads scope, which restores them
-    graft.queries.Events.pinEventReadConfs(spark)
     graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("event_type"), col("tus"))
       .as[FunnelEvent]

@@ -76,10 +76,6 @@ object Sessionize {
     */
   def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
     import spark.implicits._
-    // The one event-stream reader (schema-adaptive ts → micros `tus`); the
-    // read confs are pinned here for direct callers (the gate row wraps the
-    // whole execution in a set-and-restore).
-    graft.queries.Events.pinEventReadConfs(spark)
     graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("tus"), col("value"),
         timestamp_micros(col("tus")).as("event_time"))

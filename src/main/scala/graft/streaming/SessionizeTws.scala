@@ -84,7 +84,6 @@ object SessionizeTws {
     */
   def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
     import spark.implicits._
-    graft.queries.Events.pinEventReadConfs(spark)
     graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("tus"), col("value"),
         timestamp_micros(col("tus")).as("event_time"))

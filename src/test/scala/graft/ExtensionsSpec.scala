@@ -5,13 +5,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions descriptor plumbing: the exact (identifier, info,
-  * builder) triples the installer injects are registered into a session's
-  * function registry — the same call `injectFunction` performs at session
-  * build — and then exercised through PURE SQL, no Scala Column API.
-  * (The builder-side `withExtensions` wiring itself is Spark's code and
-  * cannot be re-tested here: `getOrCreate()` returns the suite-shared
-  * session, ignoring new extensions by design.)
+/** GraftExtensions descriptor plumbing: every (identifier, info, builder)
+  * entry of the one table the installer injects is registered into a fresh
+  * session's function registry — the same call `injectFunction` performs
+  * at session build — and then exercised through PURE SQL, no Scala
+  * Column API. (The builder-side `withExtensions` wiring itself is Spark's
+  * code and cannot be re-tested here: `getOrCreate()` returns the
+  * suite-shared session, ignoring new extensions by design.)
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -24,22 +24,24 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("injected function descriptors evaluate through pure SQL") {
     spark.sparkContext.setLogLevel("WARN")
-    val reg = spark.sessionState.functionRegistry
-    Seq(GraftExtensions.polyHashDesc, GraftExtensions.dotProductDesc,
-      GraftExtensions.sortedIntersectSizeDesc,
-      GraftExtensions.simHashDesc).foreach { case (id, info, builder) =>
+    assert(GraftExtensions.functions.map(_._1.funcName).toSet ==
+      Set("poly_hash", "dot_product", "sorted_intersect_size", "simhash64", "nfc_normalize"))
+    val session = spark.newSession()
+    val reg = session.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, info, builder) =>
       reg.registerFunction(id, info, builder)
     }
-    val r = spark.sql(
+    val r = session.sql(
       """SELECT poly_hash('abc') AS h,
         |       dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
         |       simhash64(array('a', 'b')) AS s,
-        |       sorted_intersect_size(array(1, 3, 5, 8), array(3, 4, 5, 9)) AS k
-        |""".stripMargin).collect()(0)
+        |       sorted_intersect_size(array(1, 3, 5, 8), array(3, 4, 5, 9)) AS k,
+        |""".stripMargin + "       nfc_normalize('cafe\u0301') AS n").collect()(0)
     assert(r.getLong(0) == graft.functions.PolyHash.hash(UTF8String.fromString("abc")))
     assert(r.getDouble(1) == 11.0)
     assert(r.getSeq[Long](2).length == 2)
     assert(r.getInt(3) == 2)
+    assert(r.getString(4) == "caf\u00e9")
   }
 
   test("StencilSource: unbounded table refuses to plan without a pushed limit") {

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard for the one-path rule: streaming runs start only in
-  * `queries/StreamRun.scala`, session confs are scoped only through
-  * `queries/Confs.scala`, listener-based profiling lives only in
+  * `queries/StreamRun.scala`, session confs are written only through
+  * `queries/Confs.scala`, SQL functions are registered only by
+  * `GraftExtensions.scala`, listener-based profiling lives only in
   * `tools/Profile.scala`, `graft.spark` reads no conf or environment
   * variable, graft has no code in `org.apache.spark.sql`, no option splits
   * a `SparkClient` wave, `Bench.envCpus` is the one reader of
@@ -42,6 +43,22 @@ class OnePathSpec extends AnyFunSuite {
   test("shuffle width is never set by hand outside Confs.scala") {
     assert(filesWith("spark.conf.set(\"spark.sql.shuffle.partitions\"", "queries/Confs.scala").isEmpty)
     assert(filesWith("spKey", "queries/Confs.scala").isEmpty)
+  }
+
+  test("session confs are written only in Confs.scala") {
+    for (token <- Seq("conf.set(", "conf.unset("))
+      assert(filesWith(token, "queries/Confs.scala").isEmpty, token)
+  }
+
+  test("SQL functions are registered only in GraftExtensions.scala") {
+    assert(sources.exists(_._1.endsWith("graft/GraftExtensions.scala")))
+    for (token <- Seq("createOrReplaceTempFunction", "registerFunction", "injectFunction"))
+      assert(filesWith(token, "graft/GraftExtensions.scala").isEmpty, token)
+  }
+
+  test("the event-read conf pins stay gone") {
+    for (token <- Seq("pinEventReadConfs", "eventReadConfs", "eventReads"))
+      assert(filesWith(token).isEmpty, token)
   }
 
   test("the retired scoping wrappers stay gone") {

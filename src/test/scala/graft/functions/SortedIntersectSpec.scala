@@ -70,7 +70,7 @@ class SortedIntersectSpec extends AnyFunSuite {
       StructField("a", ArrayType(LongType)), StructField("b", ArrayType(LongType))))
     // an RDD source, so the optimizer cannot fold the projection on the driver
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    SortedIntersect.register(spark)
+    graft.GraftExtensions.register(spark)
     def run(confs: (String, String)*): Seq[Any] = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try df.selectExpr("sorted_intersect_size(a, b)").collect().map(_.get(0)).toSeq

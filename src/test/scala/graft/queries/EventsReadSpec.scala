@@ -114,6 +114,30 @@ class EventsReadSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unsupported"))
   }
 
+  // The event-read confs are pinned only where a session is built. A
+  // session that leaves them unset (NTZ inference on, no nanosAsLong) reads
+  // the MICROS testdata as TIMESTAMP_NTZ, which normalizeTs maps to the same
+  // `tus`; the rows must agree and no row may set either key. None of the
+  // four rows is served from an on-disk cache.
+  test("event rows in a session without the event-read pins match the pinned session") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$dir/events.parquet").exists())
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.inferTimestampNTZ.enabled")
+    val bare = spark.newSession()
+    keys.foreach(bare.conf.unset)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    for (name <- Seq("q_window_sessions", "q_stream_windows", "q_sessionize_stream",
+        "q_funnel_tws")) {
+      val row = graft.SparkEntry.queries(name)
+      val pinned = rows(row(spark, dir))
+      assert(pinned.nonEmpty, name)
+      assert(rows(row(bare, dir)) == pinned, s"$name differs without the pins")
+      assert(keys.forall(k => !bare.conf.getAll.contains(k)), s"$name set an event-read conf")
+    }
+  }
+
   // ADVICE r11: the day/hour bucketing rows use `tus div N` (truncating)
   // against a DuckDB `//` (flooring) oracle — identical iff tus ≥ 0. The
   // precondition is documented at normalizeTs; this canary makes a

@@ -131,8 +131,9 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     assert(PolyHash.hash(UTF8String.fromString("abc")) == 96354L)
     assert(PolyHash.hash(UTF8String.fromString("")) == 0L)
     import spark.implicits._
+    graft.GraftExtensions.register(spark)
     val df = Seq("abc", "", "key agg row").toDF("s")
-      .select(PolyHash.polyHash(spark, "s").as("fp"))
+      .select(org.apache.spark.sql.functions.expr("poly_hash(s)").as("fp"))
     val got = df.collect().map(_.getLong(0)).toSeq
     assert(got.head == 96354L)
     assert(got(1) == 0L)
@@ -154,7 +155,7 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     assert(NfcNormalize.normalize(ascii) eq ascii)
     // codegen path agrees with the interpreted call
     import spark.implicits._
-    NfcNormalize.register(spark)
+    graft.GraftExtensions.register(spark)
     val got = Seq("cafe\u0301", "caf\u00e9", "x")
       .toDF("s")
       .selectExpr("nfc_normalize(s) AS n", "length(s) AS l",
@@ -926,7 +927,7 @@ class QueriesSpec extends AnyFunSuite with Eventually {
 
   test("pii scrub counts and redacts exactly, and is identity on clean docs") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, expr}
     withTempDir("graft-pii") { dir =>
       Seq((0L, "hello customer alice more text"),
           (1L, "no match here"),
@@ -945,7 +946,7 @@ class QueriesSpec extends AnyFunSuite with Eventually {
         assert(out.filter(col("n_pii") > 0).count() > 0L)
         val clean = out.filter(col("n_pii") === 0L)
         val docs = spark.read.parquet(s"$sf/documents.parquet")
-          .select(col("doc_id"), PolyHash.polyHash(spark, "text").as("fp_orig"))
+          .select(col("doc_id"), expr("poly_hash(text)").as("fp_orig"))
         assert(clean.join(docs, "doc_id")
           .filter(col("fp_redacted") =!= col("fp_orig")).count() == 0L)
       } finally out.unpersist()

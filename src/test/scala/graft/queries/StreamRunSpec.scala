@@ -23,10 +23,8 @@ class StreamRunSpec extends AnyFunSuite {
   private val Width = "spark.sql.shuffle.partitions"
   private val Provider = "spark.sql.streaming.stateStore.providerClass"
   private val NoData = "spark.sql.streaming.noDataMicroBatches.enabled"
-  private val Nanos = "spark.sql.legacy.parquet.nanosAsLong"
-  private val Ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
   // every key a run with all scopes on pins
-  private val scoped = Seq(Width, Provider, NoData, Nanos, Ntz)
+  private val scoped = Seq(Width, Provider, NoData)
 
   private def explicitConfs: Map[String, Option[String]] = {
     val all = spark.conf.getAll
@@ -42,7 +40,6 @@ class StreamRunSpec extends AnyFunSuite {
     test(s"a foreachBatch failure on batch 1 propagates, stops the query and " +
         s"restores every scoped conf ($wait)") {
       spark.sparkContext.setLogLevel("WARN")
-      assert(Events.eventReadConfs.map(_._1).toSet == Set(Nanos, Ntz))
       val saved = explicitConfs
       withTempDir("graft-stream-run") { work =>
         try {
@@ -52,15 +49,14 @@ class StreamRunSpec extends AnyFunSuite {
           graft.sources.FileSources.stageFiles(Seq(1L, 2L).toDF("x"), work, in, "b0",
             1600000000000L)
           graft.sources.FileSources.stageFiles(Seq(3L).toDF("x"), work, in, "b1", 1600000060000L)
-          // prior state: two keys set to non-run values, three keys unset
+          // prior state: one key set to a non-run value, two keys unset
           spark.conf.set(Width, "3")
-          spark.conf.set(Ntz, "true")
-          Seq(Provider, NoData, Nanos).foreach(spark.conf.unset)
+          Seq(Provider, NoData).foreach(spark.conf.unset)
           val before = explicitConfs
           var batch0Width: String = null
           val err = intercept[Exception] {
-            StreamRun(width = Some(2), rocksDb = true, eventReads = true,
-                noDataBatches = false, trigger = trigger).run(spark) {
+            StreamRun(width = Some(2), rocksDb = true, noDataBatches = false,
+                trigger = trigger).run(spark) {
               spark.readStream.schema("x LONG").option("maxFilesPerTrigger", "1")
                 .parquet(in)
             }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
