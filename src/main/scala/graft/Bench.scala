@@ -113,6 +113,32 @@ object Bench {
     case c => c.toString
   } + "\""
 
+  /** A round's result capture keeps only the last [[TailChars]]
+    * characters of stdout; the total line and the launcher's trailer after
+    * the per-query line (sbt's `[success] Total time: ...` is about 75)
+    * take at most [[TrailerChars]] of them.
+    */
+  private[graft] val TailChars = 2000
+  private[graft] val TrailerChars = 220
+
+  /** The parseable per-query record, printed last but one: the full map
+    * (in the first line and the sidecar) overflows the captured tail, so
+    * this line carries the heaviest rows first, whole entries only, cut so
+    * the line fits in the tail ahead of the total line and trailer.
+    */
+  private[graft] def perQueryLine(medians: Seq[(String, Double)]): String = {
+    val head = """{"metric":"per_query","values":{"""
+    val budget = TailChars - TrailerChars - head.length - "}}".length
+    val entries = medians.sortBy { case (n, v) => (-v, n) }
+      .map { case (n, v) => s""""$n":${d3(v)}""" }
+    val lengths = entries.scanLeft(-1)(_ + _.length + 1).tail // with separating commas
+    entries.take(lengths.takeWhile(_ <= budget).length).mkString(head, ",", "}}")
+  }
+
+  /** The LAST stdout line: short, so it is always whole in the captured tail. */
+  private[graft] def totalLine(total: Double, sfDir: String, suspectCount: Int): String =
+    s"""{"metric":"total","value":${d3(total)},"unit":"sec","sf":"$sfDir","suspect_count":$suspectCount}"""
+
   /** Core count for every harness main (Bench, Verify, Profile, PlanDump). */
   private[graft] def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
@@ -328,18 +354,8 @@ object Bench {
         """distortion bands vs committed pins with targeted re-run; this total is """ +
         """ONE sample - round gating uses the median of >=3 run totals (r14 #5)"}"""
     println(json)
-    // Driver-parseable per-query record (VERDICT r16 #2: PERF's per_query
-    // map came up empty both optimization rounds because the only line
-    // carrying it — the full record above — overflows the driver's bounded
-    // tail capture). One compact {"metric":"per_query","values":{...}} line
-    // printed LAST-BUT-ONE: names + 3-decimal seconds only, no calib/rerun
-    // metadata, so as much of the map as possible lands inside the tail
-    // while the short total line below stays the final, always-complete
-    // record. The full map remains in the committed sidecar either way.
-    println(s"""{"metric":"per_query","values":$qs}""")
-    // Compact trailing record: the driver's tail capture is bounded, so the
-    // LAST stdout line must be a short, complete JSON object on its own.
-    println(s"""{"metric":"total","value":${d3(total)},"unit":"sec","sf":"$sfDir","suspect_count":${suspects.size}}""")
+    println(perQueryLine(names.map(n => n -> merged.getOrElse(n, -1.0))))
+    println(totalLine(total, sfDir, suspects.size))
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"/tmp/graft_bench_$tag.json"), json)

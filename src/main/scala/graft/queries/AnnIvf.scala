@@ -58,20 +58,17 @@ object AnnIvf {
     * cache each row refit the same seeded model and re-assigned the corpus
     * (~3 × 2.2 s at sf0.1) for byte-identical state; in production the
     * fitted coarse quantizer is likewise built once and reused by every
-    * query — refitting per query would be the bug, not the baseline. Same
-    * sweep-tolerant policy as Pipeline's gram frame: Bench drops all
-    * caches between timed runs, so a timed row still pays the full fit
-    * exactly once, and correctness never depends on the cache being warm
-    * (the fit is seeded and layout-free, so a re-fit reproduces the same
-    * cells in-session).
+    * query — refitting per query would be the bug, not the baseline.
+    * Keyed by nCells. Re-armed like Pipeline's gram frame: after a cache
+    * sweep (Bench drops all caches between timed runs) the assigned frame
+    * is re-persisted on next use, because the three rows are separate
+    * actions; a timed row still pays the full fit exactly once (the fit is
+    * seeded and layout-free, so a re-fit reproduces the same cells). The
+    * release unpersists the assigned frame only — the centroid table is a
+    * literal.
     */
-  // Bounded to one (dir, nCells) per session (VERDICT r10 #6): switching
-  // dirs unpersists the previous dir's assignment frame instead of pinning
-  // every visited dir's frames for the session's lifetime. The release
-  // unpersists the assigned frame only — the centroid table is a literal.
   private[queries] val fitCache =
-    new SessionMemo[(String, Int), (DataFrame, DataFrame)](_._1.unpersist(false),
-      sameGroup = (a, b) => a._1 == b._1) // group by dir: nCells variants coexist
+    new SessionMemo[(DataFrame, DataFrame)](_._1.unpersist(false))
 
   /** One KMeans fit + full-corpus cell assignment + per-query probe-cell
     * selection — the coarse-quantizer machinery shared by the float scoring
@@ -128,17 +125,18 @@ object AnnIvf {
   private def fitAssign(
       spark: SparkSession,
       dir: String,
-      nCells: Int): (DataFrame, DataFrame) = fitCache.getOrElseUpdate(spark, (dir, nCells)) {
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"),
-        array_to_vector(col("embedding")).as("features"),
-        expr("dot_product(embedding, embedding)").as("norm2"))
+      nCells: Int): (DataFrame, DataFrame) =
+    fitCache.getOrElseUpdate(spark, dir, Seq("embeddings.parquet"), nCells.toString) {
+      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding"),
+          array_to_vector(col("embedding")).as("features"),
+          expr("dot_product(embedding, embedding)").as("norm2"))
 
-    val model = fitModel(emb, nCells)
-    val assigned = model.transform(emb)
-      .select(col("vec_id"), col("embedding"), col("norm2"), col("prediction").as("cell"))
-    (assigned, centroidsOf(spark, model))
-  }
+      val model = fitModel(emb, nCells)
+      val assigned = model.transform(emb)
+        .select(col("vec_id"), col("embedding"), col("norm2"), col("prediction").as("cell"))
+      (assigned, centroidsOf(spark, model))
+    }
 
   /** The seeded, layout-free KMeans fit shared by [[fitAssign]] and
     * [[AnnIngest]]'s frozen base-corpus quantizer. `emb` must carry

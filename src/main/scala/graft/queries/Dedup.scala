@@ -584,8 +584,8 @@ object Dedup {
     * is checkpointed too, so the whole LSH candidate pipeline is computed
     * and rendered exactly once, not once per round.
     *
-    * Superseded generations' checkpoint blocks are freed via their RDD ids
-    * (`SparkContext.getPersistentRDDs` — `unpersist()` on a
+    * Superseded generations are freed through [[Checkpoints.release]],
+    * the release path the PageRank and BPE loops share (`unpersist()` on a
     * locally-checkpointed Dataset cannot release them). The returned frame
     * is a persisted, already-materialized table of only the pair-graph
     * members; callers may `unpersist()` it after consumption — nothing
@@ -639,67 +639,32 @@ object Dedup {
       spark: SparkSession,
       pairs: DataFrame,
       onEdgesMaterialized: () => Unit = () => ()): (DataFrame, Int) = {
-    val sc = spark.sparkContext
     // Reliable-checkpoint mode (real clusters: a localCheckpoint dies with
     // its executor): when the `graft.cc.checkpointDir` session conf is set,
     // every generation goes through HDFS-backed Dataset.checkpoint()
-    // against that directory instead. Superseded generations' checkpoint
-    // directories are deleted as the iteration advances (only the FINAL
-    // generation's files survive, backing the returned recomputable frame)
-    // — without that, a long-lived session running clusters repeatedly
-    // accumulates checkpoint files unboundedly (ADVICE r7 #5).
+    // against that directory instead. Superseded generations go through
+    // Checkpoints.release as the iteration advances, which deletes their
+    // checkpoint files too — without that, a long-lived session running
+    // clusters repeatedly accumulates checkpoint files unboundedly (ADVICE
+    // r7 #5). The FINAL generation's files are kept: they back the
+    // returned recomputable frame, and deleting them would reintroduce the
+    // non-recomputable-return caveat reliable mode exists to remove. So a
+    // repeated run leaves one rdd-* dir per run under the context's one
+    // checkpoint dir, until the caller deletes `graft.cc.checkpointDir`.
     val reliableDir = spark.conf.getOption("graft.cc.checkpointDir").filter(_.nonEmpty)
     reliableDir.foreach { d =>
-      if (!sc.getCheckpointDir.contains(d)) sc.setCheckpointDir(d)
+      // Spark keeps `<qualified d>/<uuid>`: setting d again would mint a
+      // fresh uuid dir per run.
+      val sc = spark.sparkContext
+      val dir = new org.apache.hadoop.fs.Path(d)
+      val qualified = dir.getFileSystem(sc.hadoopConfiguration).makeQualified(dir)
+      if (!sc.getCheckpointDir.exists(c => new org.apache.hadoop.fs.Path(c).getParent == qualified))
+        sc.setCheckpointDir(d)
     }
-    // A generation's checkpoint resources are identified by walking the
-    // checkpointed Dataset's OWN execution-RDD lineage — not by diffing
-    // sc.getPersistentRDDs around the call, which would mis-attribute (and
-    // later free) anything a CONCURRENT query persisted on the shared
-    // SparkContext in that window (ADVICE r6 #2). Local mode collects
-    // storage-backed RDD ids (localCheckpoint persists the pre-checkpoint
-    // RDD at a shallow, bounded depth in the new plan's lineage); reliable
-    // mode collects the generation's checkpoint DIRECTORIES so superseded
-    // generations can be deleted instead of accumulating unboundedly under
-    // the checkpoint dir across repeated cluster runs (ADVICE r7 #5). The
-    // FINAL generation's directory is deliberately kept — deleting it would
-    // reintroduce the non-recomputable-return caveat reliable mode exists
-    // to remove; it is released when the caller tears down the checkpoint
-    // dir (or by the next run's supersession if the dir is reused).
-    final case class Gen(rddIds: Set[Int], files: Set[String])
-    def checkpointed(df: DataFrame): (DataFrame, Gen) =
-      if (reliableDir.isDefined) {
-        val cp = df.checkpoint(true)
-        def cpFiles(r: org.apache.spark.rdd.RDD[_]): Set[String] =
-          r.getCheckpointFile.toSet ++
-            r.dependencies.iterator.flatMap(d => cpFiles(d.rdd))
-        (cp, Gen(Set.empty, cpFiles(cp.queryExecution.toRdd)))
-      } else {
-        val cp = df.localCheckpoint(true)
-        def persisted(r: org.apache.spark.rdd.RDD[_]): Set[Int] = {
-          val own =
-            if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Set(r.id)
-            else Set.empty[Int]
-          own ++ r.dependencies.iterator.flatMap(d => persisted(d.rdd))
-        }
-        (cp, Gen(persisted(cp.queryExecution.toRdd), Set.empty))
-      }
-    def free(g: Gen): Unit = {
-      g.rddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      if (g.files.nonEmpty) {
-        val conf = spark.sessionState.newHadoopConf()
-        g.files.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          try p.getFileSystem(conf).delete(p, true): Unit
-          catch { case e: java.io.IOException =>
-            // best-effort: a failed delete is residue, never corruption
-            System.err.println(s"[cc] failed to delete superseded checkpoint $f: ${e.getMessage}")
-          }
-        }
-      }
-    }
+    def checkpointed(df: DataFrame): DataFrame =
+      if (reliableDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
 
-    val (edges, edgeGen) = checkpointed(
+    val edges = checkpointed(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     onEdgesMaterialized()
@@ -727,7 +692,7 @@ object Dedup {
     }
     if (edges.isEmpty) {
       // The empty frame is built from the SCHEMA, not derived from `edges`:
-      // free(edgeGen) below deletes the checkpoint files backing `edges`
+      // releasing `edges` below deletes the checkpoint files backing it
       // under reliable mode, and a frame derived from it would survive only
       // because the optimizer happens to fold Filter(false) to a
       // LocalRelation — the exact non-recomputable-return hazard reliable
@@ -740,7 +705,7 @@ object Dedup {
           org.apache.spark.sql.types.StructField("cluster_id", srcType),
           org.apache.spark.sql.types.StructField("keep",
             org.apache.spark.sql.types.BooleanType))))
-      free(edgeGen)
+      Checkpoints.release(edges)
       (out, 0)
     } else Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       // The GENERATION LOOP runs at a narrow shuffle width (r16, the
@@ -760,7 +725,7 @@ object Dedup {
       // least(self, min neighbor), which one aggregation over the
       // symmetric edge set computes directly — replacing the identity
       // init (a distinct shuffle) plus the first two-join propagate.
-      var (labels, labelGen) = checkpointed(
+      var labels = checkpointed(
         edges.groupBy(col("dst"))
           .agg(min(col("src")).as("nbr_min"))
           .select(col("dst").as("doc_id"),
@@ -779,11 +744,10 @@ object Dedup {
         val stepped =
           if (generations < 2) propagate(propagate(labels))
           else jump(propagate(labels))
-        val (next, nextGen) = checkpointed(stepped)
+        val next = checkpointed(stepped)
         val nextSum = labelSum(next)
-        free(labelGen)
+        Checkpoints.release(labels)
         labels = next
-        labelGen = nextGen
         converged = nextSum == prevSum
         prevSum = nextSum
         generations += 1
@@ -795,8 +759,8 @@ object Dedup {
       out.count() // materialize before freeing the generations beneath it
       // Final generation: free its block storage (local mode) but KEEP its
       // checkpoint files (reliable mode) — `out` recomputes through them.
-      free(labelGen.copy(files = Set.empty))
-      free(edgeGen)
+      if (reliableDir.isEmpty) Checkpoints.release(labels)
+      Checkpoints.release(edges)
       (out, generations)
     }
   }

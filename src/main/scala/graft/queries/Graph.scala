@@ -223,13 +223,10 @@ object Graph {
   /** Memoized co-occurrence edge set, shared by the consumers inside
     * [[triangles]] (degree build and orientation join) — without
     * it each consumer replays the basket groupBy + pair fan-out +
-    * distinct. Same single-key SessionMemo policy as AnnIvf's quantizer:
-    * one dir per session, unpersist on dir switch, and a cold Bench run
-    * still pays the build exactly once. Production keeps the
-    * materialized edge list beside the graph for the same reason.
+    * distinct. Production keeps the materialized edge list beside the
+    * graph for the same reason.
     */
-  private[queries] val edgeCache =
-    new SessionMemo[String, DataFrame](_.unpersist(false))
+  private[queries] val edgeCache = new SessionMemo[DataFrame](_.unpersist(false))
 
   // DELIBERATELY no re-arm of the storage level after Bench's cache sweep
   // (unlike AnnIvf's quantizer and Pipeline's gram frame, whose consumers
@@ -248,7 +245,7 @@ object Graph {
   // q_degree_hist 0.10-0.19 vs 0.52-0.75 s; only q_triangles gains from
   // the swept plan.
   private def coEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate(spark, dir) {
+    edgeCache.getOrElseUpdate(spark, dir, Seq("lineitem.parquet"), "edges") {
       // Widen.byKey (optimization r16, guide §2.2/§2.5): the basket
       // aggregate's exchange is spelled as an explicit full-width
       // repartition — same single shuffle, but pinned against AQE's

@@ -1,29 +1,34 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Session-scoped single-key memo for expensive persisted frames
-  * (VERDICT r10 #6): the IVF coarse quantizer and the shared gram frame
-  * were memoized in unbounded TrieMaps keyed by (session, dir, …), so a
-  * long-lived session touching many sf dirs pinned every dir's persisted
-  * DataFrames forever. This memo keeps AT MOST ONE key per SparkSession:
-  * fetching a new key first evicts the session's other entries and runs
-  * the caller's `release` on each (unpersist — the frames are persisted,
-  * never lineage-truncated, so a stale downstream plan that still
-  * references an evicted frame recomputes it instead of failing).
-  *
-  * The single-key policy matches the access pattern — Verify/Bench/user
-  * sessions work one sf dir at a time with occasional dir switches — and
-  * makes the storage bound independent of how many dirs a session visits.
+/** Session-scoped memo for expensive persisted frames, with one key rule:
+  * every entry is keyed by the data it was built from — its `dir` and the
+  * fingerprints of its source files there
+  * ([[graft.sources.FileSources.sourcesFingerprint]], the source half of
+  * every on-disk cache key too) — plus a `tag` naming the frame within
+  * that data. Entries sharing `(dir, fingerprints)` form one group and
+  * coexist; fetching a key of another group first evicts the session's
+  * other groups and runs the caller's `release` on each entry. So a dir
+  * switch and a source regenerated at the same dir both evict the stale
+  * group instead of serving it, and a long-lived session holds at most
+  * one group per memo however many dirs it visits. A regenerated source
+  * also evicts the stale groups OTHER sessions hold over the same dir:
+  * Spark's cache manager is shared by a context's sessions, and a stale
+  * persisted frame would answer any session's plan over that path. The
+  * frames are persisted, never lineage-truncated, so a stale downstream
+  * plan that still references an evicted frame recomputes it instead of
+  * failing.
   */
-private[queries] final class SessionMemo[K, V](
-    release: V => Unit,
-    sameGroup: (K, K) => Boolean = (a: K, b: K) => a == b) {
+private[queries] final class SessionMemo[V](release: V => Unit) {
+  import SessionMemo.Key
+
   private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, K), V]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, Key), V]
 
   /** The whole check-evict-build sequence runs under one lock (ADVICE
-    * r11): without it, two concurrent calls for different dirs on the
+    * r11): without it, two concurrent calls for different groups on the
     * same session could each evict-and-unpersist the frame the other
     * just obtained, or build the same frame twice — the TrieMap only
     * made the individual ops atomic. Contention is irrelevant here
@@ -32,38 +37,57 @@ private[queries] final class SessionMemo[K, V](
     * build. Correctness under a lost race was already soft (persisted
     * frames recompute), the lock removes the wasted work too.
     */
-  def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V =
+  def getOrElseUpdate(spark: SparkSession, dir: String, sources: Seq[String], tag: String)(
+      build: => V): V = {
+    val key = Key(dir, graft.sources.FileSources.sourcesFingerprint(dir, sources), tag)
     cache.synchronized {
       cache.get((spark, key)) match {
         case Some(v) => v
         case None =>
-          // Evict only entries OUTSIDE the new key's group (by default the
-          // exact key): the gram cache groups by dir so DupNGram and FineGram
-          // frames for ONE dir coexist — alternating widths within a sweep
-          // must not thrash the shared frame; only a dir switch evicts.
           cache.keys.toSeq
-            .filter { case (s, k) => (s eq spark) && k != key && !sameGroup(k, key) }
+            .filter { case (s, k) =>
+              if (s eq spark) k.group != key.group
+              else k.dir == key.dir && k.sourcesFp != key.sourcesFp
+            }
             .foreach(k => cache.remove(k).foreach(release))
           cache.getOrElseUpdate((spark, key), build)
       }
     }
+  }
 
   /** Test hook: live keys for a session. */
-  private[queries] def keysFor(spark: SparkSession): Seq[K] =
+  private[queries] def keysFor(spark: SparkSession): Seq[Key] =
     cache.keys.collect { case (s, k) if s eq spark => k }.toSeq
 }
 
-/** Shared helper for iterative driver loops (BPE, PageRank): release the
-  * block-manager storage behind an eager `localCheckpoint`.
-  * `Dataset.unpersist` only consults the cache manager, which never saw
-  * these blocks (localCheckpoint persists the internal RDD directly), so
-  * reach into the plan's `LogicalRDD` leaf and unpersist that RDD. Only
-  * safe for frames nothing will touch again: the lineage was truncated,
-  * so released blocks cannot be recomputed.
+private[queries] object SessionMemo {
+
+  /** A memo entry's key: the data it was built from, then its `tag`. */
+  final case class Key(dir: String, sourcesFp: String, tag: String) {
+    def group: (String, String) = (dir, sourcesFp)
+  }
+}
+
+/** The one release path of the iterative loops (PageRank, BPE,
+  * connected components) for a superseded round materialized by an eager
+  * `localCheckpoint` or `checkpoint`: the round's plan is a `LogicalRDD`
+  * leaf over the checkpointed RDD, so unpersist that RDD (`Dataset
+  * .unpersist` only consults the cache manager, which never saw these
+  * blocks) and, when it was reliably checkpointed, delete its checkpoint
+  * files. Only safe for frames nothing will touch again: the lineage was
+  * truncated, so a released round cannot be recomputed.
   */
 private[queries] object Checkpoints {
-  def release(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
+  def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }.foreach { rdd =>
+      rdd.unpersist(false)
+      rdd.getCheckpointFile.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        try p.getFileSystem(rdd.context.hadoopConfiguration).delete(p, true): Unit
+        catch { case e: java.io.IOException =>
+          // best-effort: a failed delete is residue, never corruption
+          System.err.println(s"[checkpoints] failed to delete superseded checkpoint $f: ${e.getMessage}")
+        }
+      }
+    }
 }

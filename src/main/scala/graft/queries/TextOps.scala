@@ -339,7 +339,7 @@ object TextOps {
     * argmax a 1-row driver collect per round (k=1 driver aggregate —
     * justified, it IS the merge-table entry). Each round's symbol table is
     * an eager localCheckpoint; once round r+1 materializes, round r's
-    * blocks are explicitly released (see [[releaseCheckpoint]] — Dataset
+    * blocks are explicitly released (see [[Checkpoints.release]] — Dataset
     * .unpersist cannot do it, the blocks never went through the cache
     * manager), so at any moment at most two vocabulary-sized frames are
     * resident and repeated bench iterations accumulate nothing. The train
@@ -402,11 +402,8 @@ object TextOps {
     * across calls: the final syms frame is lineage-truncated, so it could
     * not survive a Bench cache sweep, and a timed q_bpe_apply run must
     * pay the full train cost honestly (the shared-gram-frame rule).
-    */
-  /** See [[Checkpoints.release]] — shared with the PageRank loop. */
-  private def releaseCheckpoint(df: DataFrame): Unit = Checkpoints.release(df)
-
-  /** Returns (merge table, final symbol frame). Optimization r16 note
+    *
+    * Optimization r16 note
     * (guide §1.2): the row's wall cost is driver-side per-round Catalyst
     * work, not compute — Profile's stage table shows <1 s of task time
     * under ~2.4 s of wall. A lazy-checkpoint respelling (one blocking
@@ -494,7 +491,7 @@ object TextOps {
           // next is eagerly materialized above; the previous round's
           // checkpoint blocks are now unreachable — free them instead of
           // waiting for the context cleaner.
-          releaseCheckpoint(syms)
+          Checkpoints.release(syms)
           syms = next
         }
       }
@@ -513,7 +510,7 @@ object TextOps {
     // the checkpointed scaffolding — so the final symbol frame can be
     // released immediately (the apply path, which does need it, keeps it)
     val (merges, finalSyms) = bpeTrainRun(spark, dir)
-    releaseCheckpoint(finalSyms)
+    Checkpoints.release(finalSyms)
     merges.toDF("round", "a", "b", "cnt")
   }
 

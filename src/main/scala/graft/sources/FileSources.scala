@@ -19,11 +19,21 @@ object FileSources {
     cacheDir(s"roundtrip_$fmt", dir, "documents.parquet")
 
   /** Source-file fingerprint shared by every cache/table-identity consumer
-    * (cacheDir here; the CBO table name in Relational): one formula, so a
-    * future scheme change (e.g. content hashing) updates every consumer.
+    * ([[sourcesFingerprint]] here; the CBO table name in Relational): one
+    * formula, so a future scheme change (e.g. content hashing) updates
+    * every consumer.
     */
   private[graft] def fingerprint(src: java.io.File): String =
     java.lang.Long.toHexString(src.length * 31 + src.lastModified)
+
+  /** The identity of the data a derived result reads: the hex fingerprint
+    * of each of `sources` (file names under `dir`). The source half of
+    * every reuse key, on disk ([[cacheDir]]) and in memory
+    * (`graft.queries.SessionMemo`), so a regenerated source mints a new
+    * key for both.
+    */
+  private[graft] def sourcesFingerprint(dir: String, sources: Seq[String]): String =
+    sources.map(s => fingerprint(new java.io.File(s"$dir/$s"))).mkString
 
   /** Fingerprint of the COMPILED LIBRARY itself (SHA-256 over every
     * `.class` file under `graft/` at this code source, names + bytes,
@@ -88,10 +98,8 @@ object FileSources {
     * it — the inputs AND the code — and never fails the correctness gate
     * on a correct implementation or makes Bench measure old data.
     */
-  private[graft] def cacheDir(tag: String, dir: String, sources: String*): String = {
-    val fp = sources.map(s => fingerprint(new java.io.File(s"$dir/$s"))).mkString
-    s"${datasetPath(tag, dir)}_${fp}b$buildFingerprint"
-  }
+  private[graft] def cacheDir(tag: String, dir: String, sources: String*): String =
+    s"${datasetPath(tag, dir)}_${sourcesFingerprint(dir, sources)}b$buildFingerprint"
 
   /** The completion marker [[writeOnce]] drops after its body returns. Not
     * Spark's `_SUCCESS`: a write job leaves that as soon as IT commits, so

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -30,51 +30,69 @@ object Sessionize {
     * bits would depend on micro-batch boundaries and the hash gate would
     * flap; integer sums cannot.
     */
-  final case class OpenSession(startUs: Long, endUs: Long, n: Long, sumFixed: Long)
+  final case class OpenSession(startUs: Long, endUs: Long, n: Long, sumFixed: Long) {
+    def closed(userId: Long): Session = Session(userId, startUs, endUs, n, sumFixed)
+
+    /** The close time, event-time ms: the session closes once the
+      * watermark strictly passes its end + gap.
+      */
+    def closeMs: Long = endUs / 1000L + gapMicros / 1000L
+  }
   final case class Session(
       user_id: Long, start_us: Long, end_us: Long, n: Long, sum_fixed: Long)
 
   private def fixed(v: Double): Long = math.floor(v * 10000 + 0.5).toLong
 
-  /** State transition: absorb new events (sorted by time), splitting into
-    * closed sessions whenever a gap exceeds gapMicros; keep the open tail in
-    * state with an event-time timeout at tail.end + gap.
+  /** THE transition, shared by both state APIs ([[updateState]] on
+    * flatMapGroupsWithState, [[SessionizeTws]] on transformWithState — one
+    * function so the twins that pin the same oracle cannot drift): absorb
+    * a batch's events (sorted by time) into the open session `open`,
+    * splitting into closed sessions whenever a gap exceeds gapMicros.
+    * Returns the open tail and the closed sessions; `events` is non-empty.
     */
-  def updateState(
+  def step(
       userId: Long,
-      events: Iterator[Event],
-      state: GroupState[OpenSession]): Iterator[Session] = {
-    val sorted = events.toSeq.sortBy(_.tus)
-    if (sorted.isEmpty) {
-      // Timeout fired: the watermark passed the open session's close.
-      if (state.hasTimedOut && state.exists) {
-        val s = state.get
-        state.remove()
-        return Iterator(Session(userId, s.startUs, s.endUs, s.n, s.sumFixed))
-      }
-      return Iterator.empty
-    }
+      open: Option[OpenSession],
+      events: Iterator[Event]): (OpenSession, Vector[Session]) = {
     val closed = Vector.newBuilder[Session]
-    var cur = state.getOption.orNull
-    for (e <- sorted) {
+    var cur = open.orNull
+    for (e <- events.toSeq.sortBy(_.tus)) {
       if (cur == null) cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
       else if (e.tus - cur.endUs > gapMicros) {
-        closed += Session(userId, cur.startUs, cur.endUs, cur.n, cur.sumFixed)
+        closed += cur.closed(userId)
         cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
       } else cur = OpenSession(cur.startUs, math.max(cur.endUs, e.tus),
         cur.n + 1, cur.sumFixed + fixed(e.value))
     }
-    state.update(cur)
-    // Close when the watermark passes the session end + gap.
-    state.setTimeoutTimestamp(cur.endUs / 1000L + gapMicros / 1000L)
-    closed.result().iterator
+    (cur, closed.result())
   }
 
-  /** Streaming sessionization over the events parquet (bounded input used
-    * as a file-source stream). Returns the closed-sessions Dataset; callers
-    * start/await the query (see StreamingSpec).
+  /** flatMapGroupsWithState adapter over [[step]]: keep the open tail in
+    * state with an event-time timeout at its close.
     */
-  def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
+  def updateState(
+      userId: Long,
+      events: Iterator[Event],
+      state: GroupState[OpenSession]): Iterator[Session] =
+    if (!events.hasNext) {
+      // Timeout fired: the watermark passed the open session's close.
+      if (state.hasTimedOut && state.exists) {
+        val s = state.get
+        state.remove()
+        Iterator(s.closed(userId))
+      } else Iterator.empty
+    } else {
+      val (cur, closed) = step(userId, state.getOption, events)
+      state.update(cur)
+      state.setTimeoutTimestamp(cur.closeMs)
+      closed.iterator
+    }
+
+  /** The watermarked events stream both sessionizers group by user: the
+    * events parquet as a bounded file-source stream.
+    */
+  private[streaming] def byUser(
+      spark: SparkSession, dir: String): KeyValueGroupedDataset[Long, Event] = {
     import spark.implicits._
     graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("tus"), col("value"),
@@ -82,6 +100,15 @@ object Sessionize {
       .withWatermark("event_time", "0 seconds")
       .as[Event]
       .groupByKey(_.user_id)
+  }
+
+  /** Streaming sessionization over the events parquet. Returns the
+    * closed-sessions Dataset; callers start/await the query (see
+    * StreamingSpec).
+    */
+  def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
+    import spark.implicits._
+    byUser(spark, dir)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         updateState)
   }

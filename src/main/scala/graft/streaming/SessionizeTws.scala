@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.streaming.Sessionize.{Event, OpenSession, Session, gapMicros}
+import graft.streaming.Sessionize.{Event, OpenSession, Session}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{
   ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
   TimerValues, ValueState}
@@ -33,30 +32,19 @@ class SessionizeTws extends StatefulProcessor[Long, Event, Session] {
     open = getHandle.getValueState[OpenSession](
       "open", Encoders.product[OpenSession], TTLConfig.NONE)
 
-  private def fixed(v: Double): Long = math.floor(v * 10000 + 0.5).toLong
-
   override def handleInputRows(
       userId: Long,
       events: Iterator[Event],
       timerValues: TimerValues): Iterator[Session] = {
-    val sorted = events.toSeq.sortBy(_.tus)
-    if (sorted.isEmpty) return Iterator.empty
-    val closed = Vector.newBuilder[Session]
-    var cur = if (open.exists()) open.get() else null
-    for (e <- sorted) {
-      if (cur == null) cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
-      else if (e.tus - cur.endUs > gapMicros) {
-        closed += Session(userId, cur.startUs, cur.endUs, cur.n, cur.sumFixed)
-        cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
-      } else cur = OpenSession(cur.startUs, math.max(cur.endUs, e.tus),
-        cur.n + 1, cur.sumFixed + fixed(e.value))
-    }
+    if (!events.hasNext) return Iterator.empty
+    val (cur, closed) =
+      Sessionize.step(userId, if (open.exists()) Some(open.get()) else None, events)
     open.update(cur)
-    val close = cur.endUs / 1000L + gapMicros / 1000L
+    val close = cur.closeMs
     val timers = getHandle.listTimers().map(_.asInstanceOf[Long]).toSet
     timers.foreach(tv => if (tv != close) getHandle.deleteTimer(tv))
     if (!timers.contains(close)) getHandle.registerTimer(close)
-    closed.result().iterator
+    closed.iterator
   }
 
   override def handleExpiredTimer(
@@ -68,9 +56,9 @@ class SessionizeTws extends StatefulProcessor[Long, Event, Session] {
     // Strict close rule (matches the old API's timeout and the oracle):
     // emit only when the watermark passed end + gap. A stale timer from
     // before the session extended fails this and is ignored.
-    if (timerValues.getCurrentWatermarkInMs() > s.endUs / 1000L + gapMicros / 1000L) {
+    if (timerValues.getCurrentWatermarkInMs() > s.closeMs) {
       open.clear()
-      Iterator.single(Session(userId, s.startUs, s.endUs, s.n, s.sumFixed))
+      Iterator.single(s.closed(userId))
     } else Iterator.empty
   }
 }
@@ -84,12 +72,7 @@ object SessionizeTws {
     */
   def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
     import spark.implicits._
-    graft.queries.Events.eventsStream(spark, dir)
-      .select(col("user_id"), col("tus"), col("value"),
-        timestamp_micros(col("tus")).as("event_time"))
-      .withWatermark("event_time", "0 seconds")
-      .as[Event]
-      .groupByKey(_.user_id)
+    Sessionize.byUser(spark, dir)
       .transformWithState(new SessionizeTws, TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * variable, graft has no code in `org.apache.spark.sql`, no option splits
   * a `SparkClient` wave, `Bench.envCpus` is the one reader of
   * `SPARK_GRAFT_CPUS`, `FileSources` alone decides the key and the
-  * completion marker of an on-disk cache, and `IdPack` alone holds the
-  * 2³² id packing.
+  * completion marker of an on-disk cache, `IdPack` alone holds the 2³² id
+  * packing, `SessionMemo` alone keys in-memory memos, and only Bench sweeps
+  * persisted RDDs by hand.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
@@ -109,6 +110,19 @@ class OnePathSpec extends AnyFunSuite {
     assert(sources.exists(_._1.endsWith("graft/queries/IdPack.scala")))
     for (literal <- Seq("4294967296", "4294967295"))
       assert(filesWith(literal, "graft/queries/IdPack.scala").isEmpty, literal)
+  }
+
+  test("getPersistentRDDs appears in no main source but Bench.scala") {
+    assert(filesWith("getPersistentRDDs") == Seq("graft/Bench.scala"))
+  }
+
+  test("a memo key is SessionMemo's: the sameGroup lambdas stay gone") {
+    assert(filesWith("sameGroup").isEmpty)
+  }
+
+  test("FileSources.fingerprint( is called outside FileSources only by the CBO table") {
+    assert(filesWith("FileSources.fingerprint(") == Seq("graft/queries/Relational.scala"))
+    assert(sources.map(_._2.split("FileSources\\.fingerprint\\(", -1).length - 1).sum == 1)
   }
 
   test("no tool waits on Spark with Thread.sleep") {

@@ -655,7 +655,8 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec}
     val df = SparkEntry.queries("q_triangles")(spark, sf)
-    Graph.edgeCache.getOrElseUpdate(spark, sf)(fail("no memoized edge frame")).unpersist(true)
+    Graph.edgeCache.getOrElseUpdate(spark, sf, Seq("lineitem.parquet"), "edges")(
+      fail("no memoized edge frame")).unpersist(true)
     df.collect() // AQE: pin the FINAL plan, not the pre-execution sketch
     val root = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan

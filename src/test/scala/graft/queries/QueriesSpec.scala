@@ -80,14 +80,14 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     // (alternating gram widths within a sweep must not thrash the cache),
     // but a dir switch evicts every entry of the previous dir
     SparkEntry.queries("q_dup_ngrams")(spark, sf).count()
-    assert(Pipeline.gramFrameCache.keysFor(spark).map(_._1).distinct == Seq(sf))
+    assert(Pipeline.gramFrameCache.keysFor(spark).map(_.dir).distinct == Seq(sf))
     SparkEntry.queries("q_dup_ngrams")(spark, sfB).count()
-    assert(Pipeline.gramFrameCache.keysFor(spark).map(_._1).distinct == Seq(sfB),
+    assert(Pipeline.gramFrameCache.keysFor(spark).map(_.dir).distinct == Seq(sfB),
       "gram frames for the first dir must be evicted on dir switch")
     SparkEntry.queries("q_ann_ivf")(spark, sf).count()
-    assert(AnnIvf.fitCache.keysFor(spark).map(_._1).distinct == Seq(sf))
+    assert(AnnIvf.fitCache.keysFor(spark).map(_.dir).distinct == Seq(sf))
     SparkEntry.queries("q_ann_ivf")(spark, sfB).count()
-    assert(AnnIvf.fitCache.keysFor(spark).map(_._1).distinct == Seq(sfB),
+    assert(AnnIvf.fitCache.keysFor(spark).map(_.dir).distinct == Seq(sfB),
       "IVF quantizer for the first dir must be evicted on dir switch")
     // and the evicted dir still works (recompute, not failure)
     assert(SparkEntry.queries("q_dup_ngrams")(spark, sf).count() > 0)
@@ -624,34 +624,105 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     assert(got == expected) // permutation of 0..n-1 in (lang, doc_id) order
   }
 
-  test("rank memo keys on the source fingerprint — regeneration mints fresh ranks") {
-    // ADVICE r15: the (dir, tag) memo key served pre-regeneration ranks if
-    // the dataset at `dir` was rebuilt mid-session. The key now folds in
-    // the documents-parquet fingerprint, so a rewrite at the SAME dir must
-    // produce ranks over the NEW rows, not the persisted stale frame.
-    import spark.implicits._
-    withTempDir("graft-rankfp") { dir =>
-      def write(rows: Seq[(Long, String)]): Unit = rows
-        .toDF("doc_id", "lang")
-        .withColumn("text", org.apache.spark.sql.functions.lit("w"))
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      write(Seq((10L, "en"), (11L, "de")))
-      val first = Pipeline.globalIndex.fn(spark, dir)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(first == Map(11L -> 0L, 10L -> 1L)) // (lang, doc_id) order: de < en
-      write(Seq((10L, "en"), (11L, "de"), (12L, "aa")))
-      val second = Pipeline.globalIndex.fn(spark, dir)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(second == Map(12L -> 0L, 11L -> 1L, 10L -> 2L),
-        "stale rank frame served after the source parquet was regenerated")
-      // code-review r15: the stale generation must be EVICTED, not just
-      // bypassed — grouped by dir alone the old persisted frame leaked for
-      // the session's lifetime, once per regeneration.
-      val liveGroups = Pipeline.rankMemo.keysFor(spark)
-        .map(_._1).filter(_.startsWith(dir)).toSet
-      assert(liveGroups.size <= 1,
-        s"regeneration left stale rank-frame generations alive: $liveGroups")
+  /** A temp copy of the sf0.001 tables. */
+  private def withSfCopy[A](f: String => A): A = withTempDir("graft-regen") { dir =>
+    for (file <- new java.io.File(sf).listFiles())
+      java.nio.file.Files.copy(file.toPath, java.nio.file.Paths.get(dir, file.getName))
+    f(dir)
+  }
+
+  /** Replaces `table` in `dir` by the sf0.001 rows matching `subset`, from
+    * outside the session as a data generator does: a Spark write to the
+    * path itself would refresh the session's cached plans over it.
+    */
+  private def regenerate(dir: String, table: String, subset: String): Unit = {
+    val staged = new java.io.File(dir, "_regen")
+    spark.read.parquet(s"$sf/$table.parquet").where(subset).coalesce(1)
+      .write.parquet(staged.getPath)
+    val part = staged.listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dir, s"$table.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.sources.FileSources.deleteRecursively(staged)
+  }
+
+  private def rowsOf(row: String, session: SparkSession, dir: String): Seq[String] =
+    SparkEntry.queries(row)(session, dir).collect().map(_.toString).sorted.toSeq
+
+  // One case per SessionMemo family. The row runs over a copy of the
+  // sf0.001 tables, then its memoized source is replaced at the SAME path
+  // by a subset of its rows: the warm session must answer as a fresh
+  // session does (a memo keyed without the source fingerprint serves the
+  // stale frame), must still run after Bench's cache sweep (a stale
+  // frame's plan reads files that are gone), and must hold only the new
+  // source's group.
+  for ((row, table, subset, memo) <- Seq(
+      ("q_triangles", "lineitem", "l_orderkey % 2 = 0", Graph.edgeCache),
+      ("q_gram_novelty", "documents", "doc_id % 2 = 0", Pipeline.gramFrameCache),
+      ("q_ann_ivf", "embeddings", "vec_id % 2 = 0", AnnIvf.fitCache),
+      ("q_global_index", "documents", "doc_id % 2 = 0", Pipeline.rankMemo)))
+    test(s"$row answers a source rewritten in place as a fresh session does") {
+      spark.sparkContext.setLogLevel("WARN")
+      withSfCopy { dir =>
+        val before = rowsOf(row, spark, dir)
+        regenerate(dir, table, subset)
+        val warm = rowsOf(row, spark, dir)
+        val fresh = rowsOf(row, spark.newSession(), dir)
+        assert(fresh != before, "the subset does not change the row's answer")
+        assert(warm == fresh, "the warm session served a frame of the overwritten source")
+        spark.catalog.clearCache()
+        assert(rowsOf(row, spark, dir) == fresh, "the row changed after the cache sweep")
+        val live = graft.sources.FileSources.sourcesFingerprint(dir, Seq(s"$table.parquet"))
+        assert(memo.keysFor(spark).map(_.group).distinct == Seq((dir, live)),
+          s"stale memo groups alive: ${memo.keysFor(spark)}")
+      }
     }
+
+  test("a regenerated source is not served from another session's memo") {
+    spark.sparkContext.setLogLevel("WARN")
+    // Spark's cache manager is shared by every session of a context, and a
+    // persisted frame over a path matches a new plan over that path: the
+    // stale frame one session still holds would answer another session
+    // that builds the same frame.
+    withSfCopy { dir =>
+      rowsOf("q_triangles", spark, dir)
+      regenerate(dir, "lineitem", "l_orderkey % 2 = 0")
+      val expected = withSfCopy { clean =>
+        regenerate(clean, "lineitem", "l_orderkey % 2 = 0")
+        rowsOf("q_triangles", spark.newSession(), clean)
+      }
+      assert(rowsOf("q_triangles", spark.newSession(), dir) == expected,
+        "a new session read the edge frame another session built before the rewrite")
+      assert(rowsOf("q_triangles", spark, dir) == expected)
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("iterative loops leave no superseded round's RDD persisted") {
+    import spark.implicits._
+    spark.sparkContext.setLogLevel("WARN")
+    // Each loop materializes every round by an eager checkpoint and frees
+    // the round it supersedes through Checkpoints.release; what a call may
+    // leave persisted is only what its result reads.
+    def persistedBy(body: => Unit): Set[Int] = {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      body
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    var cc: (org.apache.spark.sql.DataFrame, Int) = null
+    val ccLeft = persistedBy { cc = Dedup.ccFromPairs(spark, chain) }
+    assert(cc._2 > 2, s"the chain converged in ${cc._2} generations: no round was superseded")
+    // the returned frame's own cached blocks, nothing of the generations
+    assert(ccLeft.size == 1, s"ccFromPairs left ${ccLeft.size} RDDs persisted")
+    cc._1.unpersist(true)
+    // the final round, which the returned top-20 reads lazily
+    val prLeft = persistedBy { Graph.pagerank.fn(spark, sf).collect() }
+    assert(prLeft.size == 1, s"pagerank left ${prLeft.size} RDDs persisted")
+    // the merge table is a literal: nothing stays
+    val bpeLeft = persistedBy { TextOps.bpeTrain.fn(spark, sf).collect() }
+    assert(bpeLeft.isEmpty, s"bpeTrain left ${bpeLeft.size} RDDs persisted")
+    prLeft.foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
   }
 
   test("gram novelty counts distinct 8-grams first seen in each document") {
@@ -1191,13 +1262,19 @@ class QueriesSpec extends AnyFunSuite with Eventually {
         // iteration advances (ADVICE r7 #5): only the FINAL generation's
         // rdd-* dir may remain (edges + earlier generations are gone).
         import scala.jdk.CollectionConverters._
-        val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+        def rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
           .iterator().asScala
           .filter(p => java.nio.file.Files.isDirectory(p) &&
             p.getFileName.toString.startsWith("rdd-"))
           .toSeq
         assert(rddDirs.size == 1,
           s"expected exactly the final generation's checkpoint dir, got: $rddDirs")
+        // A second run keeps its own final generation beside the first
+        // run's, under the SAME checkpoint dir: the context's dir is set
+        // once, not re-minted per run.
+        Dedup.ccFromPairs(spark, pairs)._1.unpersist(true)
+        assert(rddDirs.size == 2 && rddDirs.map(_.getParent).distinct.size == 1,
+          s"expected one final rdd-* dir per run under one checkpoint dir, got: $rddDirs")
         // ...and the returned frame stays RECOMPUTABLE through that final
         // checkpoint — the caveat reliable mode removes from the local path.
         labels.unpersist(blocking = true)

@@ -24,13 +24,13 @@ class SessionMemoSpec extends AnyFunSuite {
   test("concurrent alternating keys: every build is live or released exactly once") {
     val builds = new AtomicInteger(0)
     val releases = new AtomicInteger(0)
-    val memo = new SessionMemo[String, Integer](release = _ => releases.incrementAndGet())
+    val memo = new SessionMemo[Integer](release = _ => releases.incrementAndGet())
     val threads = (0 until 8).map { t =>
       new Thread(() => {
         var i = 0
         while (i < 200) {
           val k = if ((i + t) % 2 == 0) "dirA" else "dirB"
-          val v = memo.getOrElseUpdate(spark, k) {
+          val v = memo.getOrElseUpdate(spark, k, Nil, "frame") {
             Integer.valueOf(builds.incrementAndGet())
           }
           assert(v ne null)
@@ -46,17 +46,16 @@ class SessionMemoSpec extends AnyFunSuite {
       s"accounting broken: builds=${builds.get()} releases=${releases.get()} live=$live")
   }
 
-  test("sameGroup keys coexist; a dir switch evicts the whole group") {
+  test("tags of one (dir, fingerprint) group coexist; a dir switch evicts them all") {
     val releases = new AtomicInteger(0)
-    val memo = new SessionMemo[(String, Int), String](
-      release = _ => releases.incrementAndGet(),
-      sameGroup = (a, b) => a._1 == b._1)
-    memo.getOrElseUpdate(spark, ("dirA", 3))("a3")
-    memo.getOrElseUpdate(spark, ("dirA", 5))("a5")
-    assert(memo.keysFor(spark).toSet == Set(("dirA", 3), ("dirA", 5)))
+    val memo = new SessionMemo[String](release = _ => releases.incrementAndGet())
+    def tags = memo.keysFor(spark).map(k => (k.dir, k.tag)).toSet
+    memo.getOrElseUpdate(spark, "dirA", Nil, "3")("a3")
+    memo.getOrElseUpdate(spark, "dirA", Nil, "5")("a5")
+    assert(tags == Set(("dirA", "3"), ("dirA", "5")))
     assert(releases.get() == 0)
-    memo.getOrElseUpdate(spark, ("dirB", 3))("b3")
-    assert(memo.keysFor(spark).toSet == Set(("dirB", 3)))
+    memo.getOrElseUpdate(spark, "dirB", Nil, "3")("b3")
+    assert(tags == Set(("dirB", "3")))
     assert(releases.get() == 2)
   }
 
