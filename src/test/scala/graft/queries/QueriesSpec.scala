@@ -677,6 +677,36 @@ class QueriesSpec extends AnyFunSuite with Eventually {
       }
     }
 
+  test("rank memo keys on the source fingerprint — regeneration mints fresh ranks") {
+    // A rank memo keyed by (dir, tag) alone would serve pre-regeneration
+    // ranks once the dataset at `dir` is rebuilt mid-session. The key folds
+    // in the documents-parquet fingerprint, so a rewrite at the SAME dir
+    // must produce ranks over the NEW rows, not the persisted stale frame.
+    import spark.implicits._
+    withTempDir("graft-rankfp") { dir =>
+      def write(rows: Seq[(Long, String)]): Unit = rows
+        .toDF("doc_id", "lang")
+        .withColumn("text", org.apache.spark.sql.functions.lit("w"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      write(Seq((10L, "en"), (11L, "de")))
+      val first = Pipeline.globalIndex.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(first == Map(11L -> 0L, 10L -> 1L)) // (lang, doc_id) order: de < en
+      write(Seq((10L, "en"), (11L, "de"), (12L, "aa")))
+      val second = Pipeline.globalIndex.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(second == Map(12L -> 0L, 11L -> 1L, 10L -> 2L),
+        "stale rank frame served after the source parquet was regenerated")
+      // The stale generation must be EVICTED, not just bypassed: grouped
+      // by dir alone the old persisted frame would leak for the session's
+      // lifetime, once per regeneration.
+      val liveGroups = Pipeline.rankMemo.keysFor(spark)
+        .map(_.group).filter(_._1.startsWith(dir)).toSet
+      assert(liveGroups.size <= 1,
+        s"regeneration left stale rank-frame generations alive: $liveGroups")
+    }
+  }
+
   test("a regenerated source is not served from another session's memo") {
     spark.sparkContext.setLogLevel("WARN")
     // Spark's cache manager is shared by every session of a context, and a

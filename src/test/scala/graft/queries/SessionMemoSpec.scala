@@ -46,7 +46,8 @@ class SessionMemoSpec extends AnyFunSuite {
       s"accounting broken: builds=${builds.get()} releases=${releases.get()} live=$live")
   }
 
-  test("tags of one (dir, fingerprint) group coexist; a dir switch evicts them all") {
+  test("sameGroup keys coexist; a dir switch evicts the whole group") {
+    // Keys of one (dir, fingerprint) group coexist under different tags.
     val releases = new AtomicInteger(0)
     val memo = new SessionMemo[String](release = _ => releases.incrementAndGet())
     def tags = memo.keysFor(spark).map(k => (k.dir, k.tag)).toSet
