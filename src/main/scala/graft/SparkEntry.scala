@@ -62,7 +62,7 @@ object SparkEntry {
     registry.map { case (k, q) => k -> q.fn }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    registry.collect { case (k, q) if q.oracle.isDefined => k -> q.oracle.get }
+    registry.map { case (k, q) => k -> q.oracle }
 }

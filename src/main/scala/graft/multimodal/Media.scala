@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with typed
@@ -22,10 +22,14 @@ import org.apache.spark.sql.functions._
   * bytes ARE the content, so that path is a real feature extractor, not a
   * decode stand-in. Everything around the decoders — the binary
   * column, metadata struct, per-partition batch shape, fixed-width feature
-  * schema, partition-preserving mapPartitions — is the real 100 TB-shape
+  * schema, partition-preserving typed maps — is the real 100 TB-shape
   * pipeline: payloads never leave the executor, features are fixed-width
   * arrays, and the decode loop is batched per partition exactly as a
   * Pandas-UDF/Arrow batch would be.
+  *
+  * Every media row reads its payloads through [[Media.payloads]] and
+  * decodes images through the one codec table [[Media.codecs]], whose
+  * source → format map [[Media.imageSources]] the SQL oracles spell too.
   */
 object Media {
 
@@ -252,8 +256,63 @@ object Media {
     PpmImage(w, h, raster)
   }
 
+  /** The sources whose payloads are stored as REAL images, one per
+    * container layout: `src0` as binary PPM (ASCII header + raw raster),
+    * `src1` as 24-bit BMP (little-endian structs + bottom-up padded BGR),
+    * `src4` as PNG through the JDK's ImageIO (chunked, CRC'd,
+    * zlib-compressed filtered scanlines). [[imageSources]] maps each to
+    * its format.
+    */
+  val PpmSource = "src0"
+  val BmpSource = "src1"
+  val PngSource = "src4"
+
+  /** One lossless image codec: content bytes into its container and back
+    * to the decoded RGB raster. `fixedLength` says the container's length
+    * is arithmetic in the content length (headers + raw raster); a
+    * compressed container's length depends on deflate, so rows report the
+    * decoded raster's size for it and never assert the container length.
+    */
+  final case class ImageCodec(
+      encode: Array[Byte] => Array[Byte],
+      decode: Array[Byte] => PpmImage,
+      fixedLength: Boolean) {
+    def roundTrip(content: Array[Byte]): PpmImage = decode(encode(content))
+  }
+
+  /** The image-codec table: every image format graft encodes and decodes.
+    * All four pack content into the same 32-wide raster, so they decode to
+    * identical pixels (`q_media_cross_codec`).
+    */
+  val codecs: Map[String, ImageCodec] = Map(
+    "ppm" -> ImageCodec(encodePpm, decodePpm, fixedLength = true),
+    "bmp" -> ImageCodec(encodeBmp, decodeBmp, fixedLength = true),
+    "png" -> ImageCodec(encodePng, decodePng, fixedLength = false),
+    "tiff" -> ImageCodec(encodeTiff, decodeTiff, fixedLength = false))
+
+  /** Each image source and the [[codecs]] format its payloads are stored in. */
+  val imageSources: Seq[(String, String)] =
+    Seq(PpmSource -> "ppm", BmpSource -> "bmp", PngSource -> "png")
+
   /** Raw media row: payload + metadata the source system would attach. */
   final case class MediaRow(doc_id: Long, format: String, media: Array[Byte])
+
+  /** The reader every media row starts from: the documents of `sources`
+    * (all of them when none is named) as [[MediaRow]]s whose payload is the
+    * UTF-8 bytes of `text` and whose format is the source's entry in
+    * [[imageSources]], or the source name for a source stored otherwise.
+    * Each row applies its own row filter on top.
+    */
+  def payloads(spark: SparkSession, dir: String, sources: String*): Dataset[MediaRow] = {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val format = imageSources.foldLeft(col("source")) { case (other, (source, fmt)) =>
+      when(col("source") === source, lit(fmt)).otherwise(other)
+    }
+    (if (sources.isEmpty) docs else docs.filter(col("source").isin(sources: _*)))
+      .select(col("doc_id"), format.as("format"), encode(col("text"), "UTF-8").as("media"))
+      .as[MediaRow]
+  }
 
   /** Extracted features: fixed-width, columnar-friendly. */
   final case class MediaFeatures(
@@ -315,22 +374,11 @@ object Media {
     }
   }
 
-  /** RESIZE STUB — a real implementation rescales pixel data; this folds the
-    * 16-bin histogram to `bins` (power-of-two <= 16), preserving mass.
-    */
-  def resizeStub(hist: Array[Double], bins: Int): Array[Double] = {
-    require(bins > 0 && 16 % bins == 0, s"bins must divide 16, got $bins")
-    val factor = 16 / bins
-    Array.tabulate(bins)(b => (0 until factor).map(k => hist(b * factor + k)).sum)
-  }
-
   /** REAL nearest-neighbor 2× downscale over a decoded raster: keep even
     * rows and even columns (the nearest-neighbor kernel at scale 1/2), and
     * report the output geometry plus the integer sum of kept RGB bytes —
     * content-exact, and invariant to BMP's within-pixel BGR→RGB flip
-    * because the sum folds all 3 bytes of each kept pixel. (The histogram
-    * fold in [[resizeStub]] remains the stand-in for formats without a
-    * codec; THIS path operates on actually-decoded pixels.)
+    * because the sum folds all 3 bytes of each kept pixel.
     */
   def halfResize(img: PpmImage): (Int, Int, Long) = {
     val ow = (img.width + 1) / 2
@@ -363,42 +411,22 @@ object Media {
       n_px_out: Long,
       sum_rgb_out: Long)
 
-  /** Decode + 2× downscale for the REAL-codec sources only (PPM + BMP):
-    * encode the payload, decode it through the actual header-parse +
-    * raster-read path, then [[halfResize]] the decoded pixels. Same
-    * per-partition batch shape as [[features]].
+  /** Decode + 2× downscale for the image sources: encode the payload,
+    * decode it through its real codec ([[codecs]]), then [[halfResize]]
+    * the decoded pixels.
     */
   def resizedFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("source").isin(PpmSource, BmpSource, PngSource))
-      .select(col("doc_id"),
-        when(col("source") === PpmSource, lit("ppm"))
-          .when(col("source") === BmpSource, lit("bmp"))
-          .otherwise(lit("png")).as("format"),
-        encode(col("text"), "UTF-8").as("media"))
-      .as[MediaRow]
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val img = r.format match {
-          case "ppm" => decodePpm(encodePpm(r.media)) // REAL decode
-          case "bmp" => decodeBmp(encodeBmp(r.media)) // REAL decode
-          case _     => decodePng(encodePng(r.media)) // REAL decode (ImageIO)
-        }
-        val (ow, oh, sum) = halfResize(img)
-        ResizeFeatures(r.doc_id, r.format, ow, oh, ow.toLong * oh, sum)
-      }
+    payloads(spark, dir, imageSources.map(_._1): _*).map { r =>
+      val (ow, oh, sum) = halfResize(codecs(r.format).roundTrip(r.media))
+      ResizeFeatures(r.doc_id, r.format, ow, oh, ow.toLong * oh, sum)
     }.toDF()
   }
 
   /** Frame-sampled features: one row per (doc, frame), bounded fan-out. */
   def frameFeatures(spark: SparkSession, dir: String, nFrames: Int = 4): DataFrame = {
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("source").as("format"),
-        encode(col("text"), "UTF-8").as("media"))
-      .as[MediaRow]
-    media.flatMap { r =>
+    payloads(spark, dir).flatMap { r =>
       frameSampleStub(r.media, nFrames).map { case (idx, frame) =>
         val (mean, _, _) = byteFeatures(frame)
         FrameFeatures(r.doc_id, idx, frame.length, math.rint(mean * 10000) / 10000)
@@ -406,64 +434,24 @@ object Media {
     }.toDF()
   }
 
-  /** The sources whose payloads are stored as REAL media: `src0` as binary
-    * PPM through [[decodePpm]], `src1` as 24-bit BMP through [[decodeBmp]]
-    * — two genuinely different container layouts (ASCII header + raw
-    * raster vs little-endian structs + bottom-up padded BGR) behind one
-    * feature contract. Every other source keeps the disclosed stub path.
-    */
-  val PpmSource = "src0"
-  val BmpSource = "src1"
-
-  /** The source whose payloads are stored as REAL PNGs through the JDK's
-    * ImageIO ([[encodePng]] / [[decodePng]]) — fifth container layout:
-    * chunked binary format with CRCs and zlib-compressed filtered
-    * scanlines, decoded by an actual production-grade codec.
-    */
-  val PngSource = "src4"
-
-  /** Build the media table from documents — `src0` payloads are genuine P6
-    * images, `src1` genuine 24-bit BMPs (encoded over the content bytes;
-    * format reported as "ppm"/"bmp"), the rest opaque UTF-8 blobs — then
-    * extract features per partition: a real header-parse + raster decode
-    * for the image rows, the disclosed stub for the rest.
+  /** Features of every document: the image sources' payloads are encoded
+    * as real images and decoded through their codec ([[codecs]]), the rest
+    * are opaque UTF-8 blobs whose bytes are the content; the
+    * [[byteFeatures]] kernel runs over the decoded pixels or the blob.
+    * `n_bytes` is the container size when its length is arithmetic (PPM/BMP
+    * headers + raw raster; a blob is its own bytes) and the decoded raster
+    * size otherwise (PNG), the content-defined quantity.
     */
   def features(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"),
-        when(col("source") === PpmSource, lit("ppm"))
-          .when(col("source") === BmpSource, lit("bmp"))
-          .when(col("source") === PngSource, lit("png"))
-          .otherwise(col("source"))
-          .as("format"),
-        encode(col("text"), "UTF-8").as("media"))
-      .as[MediaRow]
-    media.mapPartitions { rows =>
-      // one decoder init per partition (the expensive part for real codecs)
-      rows.map { r =>
-        val payload = r.format match {
-          case "ppm" => encodePpm(r.media)
-          case "bmp" => encodeBmp(r.media)
-          case "png" => encodePng(r.media)
-          case _     => r.media
-        }
-        val pixelBytes = r.format match {
-          case "ppm" => decodePpm(payload).raster // REAL decode
-          case "bmp" => decodeBmp(payload).raster // REAL decode
-          case "png" => decodePng(payload).raster // REAL decode (ImageIO)
-          case _     => payload
-        }
-        // n_bytes is the payload size for formats whose container length
-        // is arithmetic (PPM/BMP headers + raw raster; blobs are their own
-        // bytes); PNG's container length depends on deflate, so its row
-        // reports the DECODED raster size — the content-defined quantity —
-        // and the compressed length is never asserted.
-        val nBytes = if (r.format == "png") pixelBytes.length else payload.length
-        val (mean, entropy, hist) = byteFeatures(pixelBytes)
-        MediaFeatures(r.doc_id, r.format, nBytes,
-          math.rint(mean * 10000) / 10000, math.rint(entropy * 10000) / 10000, hist)
-      }
+    payloads(spark, dir).map { r =>
+      val codec = codecs.get(r.format)
+      val payload = codec.fold(r.media)(_.encode(r.media))
+      val pixelBytes = codec.fold(payload)(_.decode(payload).raster)
+      val nBytes = if (codec.forall(_.fixedLength)) payload.length else pixelBytes.length
+      val (mean, entropy, hist) = byteFeatures(pixelBytes)
+      MediaFeatures(r.doc_id, r.format, nBytes,
+        math.rint(mean * 10000) / 10000, math.rint(entropy * 10000) / 10000, hist)
     }.toDF()
   }
 
@@ -572,18 +560,10 @@ object Media {
     */
   def audioFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("source") === WavSource && length(col("text")) > 0)
-      .select(col("doc_id"), lit("wav").as("format"),
-        encode(col("text"), "UTF-8").as("media"))
-      .as[MediaRow]
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val clip = decodeWav(encodeWav(r.media)) // REAL decode
-        val (n, energy, crossings) = audioStats(clip.samples)
-        AudioFeatures(r.doc_id, n, n * 1000L / clip.sampleRate,
-          energy, crossings)
-      }
+    payloads(spark, dir, WavSource).filter(length(col("media")) > 0).map { r =>
+      val clip = decodeWav(encodeWav(r.media)) // REAL decode
+      val (n, energy, crossings) = audioStats(clip.samples)
+      AudioFeatures(r.doc_id, n, n * 1000L / clip.sampleRate, energy, crossings)
     }.toDF()
   }
 
@@ -693,12 +673,7 @@ object Media {
     */
   def videoFrameFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("source") === Y4mSource && length(col("text")) > 0)
-      .select(col("doc_id"), lit("y4m").as("format"),
-        encode(col("text"), "UTF-8").as("media"))
-      .as[MediaRow]
-    media.flatMap { r =>
+    payloads(spark, dir, Y4mSource).filter(length(col("media")) > 0).flatMap { r =>
       val clip = decodeY4m(encodeY4m(r.media)) // REAL decode
       val n = clip.frames.length.toLong
       clip.frames.zipWithIndex.collect {

@@ -81,6 +81,10 @@ object Dedup {
       .select(col("doc_id"), col("content_hash"))
   }
 
+  /** The whole prefilter's Bloom capacity, split evenly over the buckets. */
+  private val BloomItems = 100000L
+  private val BloomBits = 960000L
+
   /** Bloom-filter prefilter for incremental dedup — the 100 TB shape of
     * [[incremental]]. The exact anti-join shuffles the BATCH side against
     * the corpus hash set; once the corpus is petabyte-scale, the right
@@ -110,78 +114,32 @@ object Dedup {
     * `bloom_filter_agg` itself is not in the public registry in 4.1, and
     * `might_contain` requires a constant filter anyway.
     *
-    * Sizing limit: the serialized filter transits the driver, so the
-    * single-sketch form tops out around 10^9 corpus keys (~1.2 GB at
-    * 9.6 bits/key); a 10^10-key warehouse corpus needs a PARTITIONED
-    * filter family — bucket the corpus hashes (e.g. by hash prefix into
-    * 64 buckets), build one bounded sketch per bucket, and probe each
-    * batch row against its bucket's sketch via the same constant-literal
-    * expression keyed by the row's prefix. Same zero-shuffle probe, driver
-    * memory bounded per bucket — implemented as
-    * [[bloomPrefilterPartitioned]], gated by `q_bloom_partitioned`.
-    *
-    * Returns batch rows annotated with `maybe_seen`; `expectedItems`/
-    * `numBits` size the filter (1% FP at ~9.6 bits/item).
-    */
-  def bloomPrefilter(
-      spark: SparkSession,
-      dir: String,
-      expectedItems: Long = 100000L,
-      numBits: Long = 960000L): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    val docs = spark.read.parquet(t(dir, "documents"))
-    val bf = docs.filter(col("source") =!= "src0")
-      .select(xxhash64(md5(col("text"))).as("h"))
-      .stat.bloomFilter("h", expectedItems, numBits)
-    val bytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      bos.toByteArray
-    }
-    // Per-call unique probe function, resolved to THIS call's filter bytes
-    // when the frame is built and dropped right after (ADVICE r7 #2).
-    graft.GraftExtensions.withTempFunctions(spark,
-      Seq(exprs => BloomFilterMightContain(Literal.create(bytes, BinaryType), exprs.head))) {
-      fnNames =>
-        docs.filter(col("source") === "src0")
-          .select(col("doc_id"), md5(col("text")).as("content_hash"))
-          .withColumn("maybe_seen", expr(s"${fnNames.head}(xxhash64(content_hash))"))
-    }
-  }
-
-  /** PARTITIONED Bloom-filter family — the 10^10-key form of
-    * [[bloomPrefilter]] (that scaladoc's sizing-limit design, now
-    * implemented; VERDICT r8 next #5). The single sketch tops out where its
-    * serialized bytes strain the driver (~10^9 keys, ~1.2 GB at 9.6
-    * bits/key); the family buckets every corpus hash by `pmod(hash, n)`,
-    * builds one BOUNDED sketch per bucket, and probes each batch row
-    * against ITS bucket's sketch only, so driver transit and probe-literal
-    * size are bounded per bucket no matter how large the corpus grows
-    * (scale n with the corpus; 16 here exercises the machinery).
+    * Sizing limit: the serialized filter transits the driver, so one
+    * sketch tops out around 10^9 corpus keys (~1.2 GB at 9.6 bits/key); a
+    * 10^10-key warehouse corpus needs a PARTITIONED filter family, so
+    * `buckets` splits the corpus hashes by `pmod(hash, buckets)` into that
+    * many bounded sketches, each sized `BloomItems`/`BloomBits` over
+    * `buckets` (1% FP at ~9.6 bits/item), and each batch row probes only
+    * its bucket's sketch. Driver transit and probe-literal size are then
+    * bounded per bucket however large the corpus grows (scale `buckets`
+    * with the corpus); one bucket is the single-sketch form.
     *
     * Build: the corpus hash frame is persisted once and each bucket's
-    * sketch is a filtered treeAggregate over it — n light passes over
-    * cached hashes rather than n corpus scans. (With a grouped
-    * `bloom_filter_agg` this would be ONE pass; Spark 4.1 exposes no
-    * grouped form publicly, and n bounded scans of a cached LONG column is
-    * the honest public-API cost.) On a real cluster each sketch still
-    * builds distributed and ships driver-side ONE bucket at a time — peak
-    * driver memory is one bucket's sketch plus the assembled probe
-    * expression, never the whole family.
+    * sketch is a filtered treeAggregate over it — `buckets` light passes
+    * over cached hashes rather than that many corpus scans. (With a
+    * grouped `bloom_filter_agg` this would be ONE pass; Spark 4.1 exposes
+    * no grouped form publicly.) On a real cluster each sketch still builds
+    * distributed and ships driver-side ONE bucket at a time — peak driver
+    * memory is one bucket's sketch plus the assembled probe expression.
     *
     * Probe: a codegen'd CASE chain keyed by the row's bucket — bucket b
-    * probes constant-literal sketch b via the same
-    * `BloomFilterMightContain` mechanics as the single-sketch path. Zero
-    * shuffle, zero false negatives per bucket (a key is always probed
-    * against exactly the sketch it was inserted into).
+    * probes constant-literal sketch b. Zero shuffle, zero false negatives
+    * per bucket (a key is always probed against exactly the sketch it was
+    * inserted into).
+    *
+    * Returns batch rows annotated with `maybe_seen`.
     */
-  def bloomPrefilterPartitioned(
-      spark: SparkSession,
-      dir: String,
-      buckets: Int = 16,
-      expectedItems: Long = 100000L,
-      numBits: Long = 960000L): DataFrame = {
+  def bloomPrefilter(spark: SparkSession, dir: String, buckets: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
     import org.apache.spark.sql.types.BinaryType
     require(buckets > 0, s"buckets must be positive, got $buckets")
@@ -191,8 +149,8 @@ object Dedup {
         pmod(xxhash64(md5(col("text"))), lit(buckets)).as("b"))
       .persist()
     try {
-      val perBucketItems = math.max(expectedItems / buckets, 1L)
-      val perBucketBits = math.max(numBits / buckets, 64L)
+      val perBucketItems = math.max(BloomItems / buckets, 1L)
+      val perBucketBits = math.max(BloomBits / buckets, 64L)
       val probes = (0 until buckets).map { b =>
         val bf = corpusHashes.filter(col("b") === b)
           .stat.bloomFilter("h", perBucketItems, perBucketBits)
@@ -203,6 +161,8 @@ object Dedup {
         }
         (exprs: Seq[Expression]) => BloomFilterMightContain(Literal.create(bytes, BinaryType), exprs.head)
       }
+      // Per-call unique probe functions, resolved to THIS call's filter
+      // bytes when the frame is built and dropped right after (ADVICE r7 #2).
       graft.GraftExtensions.withTempFunctions(spark, probes) { fnNames =>
         val batch = docs.filter(col("source") === "src0")
           .select(col("doc_id"), md5(col("text")).as("content_hash"))
@@ -245,7 +205,7 @@ object Dedup {
       |                 WHERE c.source <> 'src0' AND md5(c.text) = b.content_hash) AS seen
       |  FROM (SELECT doc_id, md5(text) AS content_hash FROM documents
       |        WHERE source = 'src0') b) f""".stripMargin) { (spark, dir) =>
-    bloomGateFrame(spark, dir, bloomPrefilter(spark, dir))
+    bloomGateFrame(spark, dir, bloomPrefilter(spark, dir, buckets = 1))
   }
 
   /** The derived-boolean aggregation shared by [[bloomGate]] and
@@ -270,7 +230,7 @@ object Dedup {
           greatest(count(when(!col("truly_seen"), 1)) * 0.05, lit(1.0))).as("fp_ok"))
   }
 
-  /** Gate row for [[bloomPrefilterPartitioned]]: identical derived
+  /** Gate row for [[bloomPrefilter]] at 16 buckets: identical derived
     * guarantees as [[bloomGate]] — no false negatives (now a PER-BUCKET
     * property: each key probes exactly the sketch it was inserted into)
     * and a bounded false-positive fraction — over the 16-bucket family, so
@@ -288,7 +248,7 @@ object Dedup {
       |                 WHERE c.source <> 'src0' AND md5(c.text) = b.content_hash) AS seen
       |  FROM (SELECT doc_id, md5(text) AS content_hash FROM documents
       |        WHERE source = 'src0') b) f""".stripMargin) { (spark, dir) =>
-    bloomGateFrame(spark, dir, bloomPrefilterPartitioned(spark, dir))
+    bloomGateFrame(spark, dir, bloomPrefilter(spark, dir, buckets = 16))
   }
 
   /** Shared shingle prep: doc_id + distinct word-3-gram shingles.

@@ -1753,7 +1753,7 @@ object Events {
     * immediately). All three funnel rows hash against the ONE batch
     * oracle — API migration must not move a single stage entry.
     */
-  val funnelTws: QueryDef = QueryDef(funnelStream.oracle.get) { (spark, dir) =>
+  val funnelTws: QueryDef = QueryDef(funnelStream.oracle) { (spark, dir) =>
     requireSingleEventsFile(dir, "streaming funnel",
       "the cross-batch per-user ordering precondition only holds when the " +
         "whole stream is one micro-batch")

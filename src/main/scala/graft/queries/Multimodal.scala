@@ -10,6 +10,13 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  /** The oracles' spelling of [[Media.imageSources]]: the SQL list of the
+    * image sources, and the source → format CASE over column `c`.
+    */
+  private val imageSourceList = Media.imageSources.map { case (s, _) => s"'$s'" }.mkString(", ")
+  private def formatCase(c: String): String = Media.imageSources
+    .map { case (s, f) => s"WHEN $c = '$s' THEN '$f'" }.mkString("CASE ", " ", s" ELSE $c END")
+
   /** Metadata over opaque binary payloads: byte sizes and first-byte
     * diversity per source — the catalog-scan side of a media pipeline
     * (never decodes, reads only lengths).
@@ -58,8 +65,7 @@ object Multimodal {
     * is not portable across engines.
     */
   val mediaFeatures: QueryDef = {
-    val pad = s"CASE WHEN source IN ('${Media.PpmSource}', '${Media.BmpSource}', " +
-      s"'${Media.PngSource}') THEN 96 * hh - nb ELSE 0 END"
+    val pad = s"CASE WHEN source IN ($imageSourceList) THEN 96 * hh - nb ELSE 0 END"
     val binsSql = (0 until 16)
       .map { j =>
         val extra = if (j == 0) s" + $pad" else ""
@@ -68,10 +74,7 @@ object Multimodal {
       .mkString(",\n      |       ")
     QueryDef(
       s"""SELECT doc_id,
-         |       CASE WHEN source = '${Media.PpmSource}' THEN 'ppm'
-         |            WHEN source = '${Media.BmpSource}' THEN 'bmp'
-         |            WHEN source = '${Media.PngSource}' THEN 'png'
-         |            ELSE source END AS format,
+         |       ${formatCase("source")} AS format,
          |       CAST(CASE WHEN source = '${Media.PpmSource}'
          |            THEN 11 + len(CAST(hh AS VARCHAR)) + 96 * hh
          |            WHEN source = '${Media.BmpSource}'
@@ -124,8 +127,7 @@ object Multimodal {
   val mediaResize: QueryDef = QueryDef(
     s"""WITH m AS (SELECT doc_id, source, string_split(text, '') AS chs
        |           FROM documents
-       |           WHERE source IN ('${Media.PpmSource}', '${Media.BmpSource}',
-       |                            '${Media.PngSource}')),
+       |           WHERE source IN ($imageSourceList)),
        |g AS (SELECT doc_id, source, len(chs) AS nb,
        |             unnest([{'i': i, 'b': ascii(chs[i])}
        |                     for i in range(1, len(chs) + 1)]) AS u
@@ -136,9 +138,7 @@ object Multimodal {
        |                           THEN u.b ELSE 0 END) AS BIGINT) AS sum_rgb_out
        |      FROM g GROUP BY doc_id)
        |SELECT doc_id,
-       |       CASE WHEN source = '${Media.PpmSource}' THEN 'ppm'
-       |            WHEN source = '${Media.BmpSource}' THEN 'bmp'
-       |            ELSE 'png' END AS format,
+       |       ${formatCase("source")} AS format,
        |       CAST(16 AS INT) AS out_w,
        |       CAST((h + 1) // 2 AS INT) AS out_h,
        |       CAST(16 * ((h + 1) // 2) AS BIGINT) AS n_px_out,
@@ -228,22 +228,11 @@ object Multimodal {
        |FROM documents WHERE source = '${Media.PpmSource}'""".stripMargin) {
     (spark, dir) =>
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("source") === Media.PpmSource)
-      .select(col("doc_id"), lit("ppm").as("format"),
-        encode(col("text"), "UTF-8").as("media"))
-      .as[Media.MediaRow]
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val ppm = Media.decodePpm(Media.encodePpm(r.media)).raster
-        val bmp = Media.decodeBmp(Media.encodeBmp(r.media)).raster
-        val png = Media.decodePng(Media.encodePng(r.media)).raster
-        val tif = Media.decodeTiff(Media.encodeTiff(r.media)).raster
-        (r.doc_id,
-          if (java.util.Arrays.equals(ppm, bmp)) 1L else 0L,
-          if (java.util.Arrays.equals(ppm, png)) 1L else 0L,
-          if (java.util.Arrays.equals(ppm, tif)) 1L else 0L)
-      }
+    Media.payloads(spark, dir, Media.PpmSource).map { r =>
+      val ppm = Media.codecs(r.format).roundTrip(r.media).raster
+      def agrees(fmt: String): Long =
+        if (java.util.Arrays.equals(ppm, Media.codecs(fmt).roundTrip(r.media).raster)) 1L else 0L
+      (r.doc_id, agrees("bmp"), agrees("png"), agrees("tiff"))
     }.toDF("doc_id", "eq_bmp", "eq_png", "eq_tiff")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("eq_bmp")).as("n_agree_bmp"),
@@ -273,8 +262,7 @@ object Multimodal {
   val mediaPhash: QueryDef = QueryDef(
     s"""WITH m AS (SELECT doc_id, source, string_split(text, '') AS chs
        |           FROM documents
-       |           WHERE source IN ('${Media.PpmSource}', '${Media.BmpSource}',
-       |                            '${Media.PngSource}') AND len(text) > 0),
+       |           WHERE source IN ($imageSourceList) AND len(text) > 0),
        |g AS (SELECT doc_id, source, ((u.i - 1) % 96) // 6 AS k, u.b
        |      FROM (SELECT doc_id, source,
        |                   unnest([{'i': i, 'b': ascii(chs[i])}
@@ -284,47 +272,31 @@ object Multimodal {
        |       FROM g GROUP BY 1, 2, 3),
        |tot AS (SELECT doc_id, CAST(sum(s_k) AS BIGINT) AS s FROM sk GROUP BY 1)
        |SELECT sk.doc_id,
-       |       CASE WHEN sk.source = '${Media.PpmSource}' THEN 'ppm'
-       |            WHEN sk.source = '${Media.BmpSource}' THEN 'bmp'
-       |            ELSE 'png' END AS format,
+       |       ${formatCase("sk.source")} AS format,
        |       CAST(sum(CASE WHEN 16 * s_k >= s
        |                     THEN (CAST(1 AS BIGINT) << k) ELSE 0 END) AS BIGINT) AS phash
        |FROM sk JOIN tot ON sk.doc_id = tot.doc_id
        |GROUP BY 1, 2""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("source").isin(Media.PpmSource, Media.BmpSource, Media.PngSource) &&
-        length(col("text")) > 0)
-      .select(col("doc_id"),
-        when(col("source") === Media.PpmSource, lit("ppm"))
-          .when(col("source") === Media.BmpSource, lit("bmp"))
-          .otherwise(lit("png")).as("format"),
-        encode(col("text"), "UTF-8").as("media"))
-      .as[Media.MediaRow]
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val raster = r.format match {
-          case "ppm" => Media.decodePpm(Media.encodePpm(r.media)).raster
-          case "bmp" => Media.decodeBmp(Media.encodeBmp(r.media)).raster
-          case _     => Media.decodePng(Media.encodePng(r.media)).raster
-        }
-        val sk = new Array[Long](16)
-        var s = 0L
-        var i = 0
-        while (i < raster.length) {
-          val b = raster(i) & 0xff
-          sk((i % 96) / 6) += b
-          s += b
-          i += 1
-        }
-        var ph = 0L
-        var k = 0
-        while (k < 16) {
-          if (16L * sk(k) >= s) ph |= 1L << k
-          k += 1
-        }
-        (r.doc_id, r.format, ph)
+    val images = Media.payloads(spark, dir, Media.imageSources.map(_._1): _*)
+    images.filter(length(col("media")) > 0).map { r =>
+      val raster = Media.codecs(r.format).roundTrip(r.media).raster
+      val sk = new Array[Long](16)
+      var s = 0L
+      var i = 0
+      while (i < raster.length) {
+        val b = raster(i) & 0xff
+        sk((i % 96) / 6) += b
+        s += b
+        i += 1
       }
+      var ph = 0L
+      var k = 0
+      while (k < 16) {
+        if (16L * sk(k) >= s) ph |= 1L << k
+        k += 1
+      }
+      (r.doc_id, r.format, ph)
     }.toDF("doc_id", "format", "phash")
   }
 
@@ -346,7 +318,7 @@ object Multimodal {
     */
   val phashPairs: QueryDef = QueryDef(
     s"""WITH ph AS (
-       |${mediaPhash.oracle.get}
+       |${mediaPhash.oracle}
        |)
        |SELECT a.doc_id AS doc_a, a.format AS fmt_a,
        |       b.doc_id AS doc_b, b.format AS fmt_b,

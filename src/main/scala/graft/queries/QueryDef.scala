@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One verifiable query: a DataFrame program plus (when SQL-expressible) an
-  * equivalent ANSI SQL string the driver runs in DuckDB over the same
-  * parquet tables. Column names/types must line up exactly — the driver
-  * sorts columns by name and hashes values (see the builder contract).
+/** One verifiable query: a DataFrame program plus an equivalent ANSI SQL
+  * string the oracle check (`tools/oracle_check.py`) runs in DuckDB over
+  * the same parquet tables. Column names/types must line up exactly — the
+  * check sorts columns by name and compares values.
   *
   * The oracle is evaluated LAZILY: several oracles are VALUES literals
   * computed from deterministic in-process runs (stencil prefix, seeded
@@ -19,19 +19,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class QueryDef(
     body: (SparkSession, String) => DataFrame,
-    oracleThunk: Option[() => String]) {
+    oracleThunk: () => String) {
   val fn: (SparkSession, String) => DataFrame = { (spark, dir) =>
     graft.GraftExtensions.register(spark)
     body(spark, dir)
   }
-  lazy val oracle: Option[String] = oracleThunk.map(_())
+  lazy val oracle: String = oracleThunk()
 }
 
 object QueryDef {
   def apply(oracle: => String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    new QueryDef(fn, Some(() => oracle))
-  def rowsOnly(fn: (SparkSession, String) => DataFrame): QueryDef =
-    new QueryDef(fn, None)
+    new QueryDef(fn, () => oracle)
 }
 
 /** The in-row ordered-pair expansion shared by every bucket/basket family

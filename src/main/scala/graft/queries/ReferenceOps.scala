@@ -163,7 +163,7 @@ object ReferenceOps {
     * iterator emits; ExtensionsSpec pins the no-limit refusal and the
     * pushdown itself.
     */
-  val stencilSource: QueryDef = QueryDef(stencilPrefix.oracle.get) { (spark, _) =>
+  val stencilSource: QueryDef = QueryDef(stencilPrefix.oracle) { (spark, _) =>
     spark.read.format("graft.sources.StencilSource")
       .option("dims", 2).option("maxHalvings", 7)
       .load()
@@ -183,7 +183,7 @@ object ReferenceOps {
     * restarted query cannot diverge). ExtensionsSpec pins the per-batch
     * range mechanics directly.
     */
-  val stencilStream: QueryDef = QueryDef(stencilPrefix.oracle.get) { (spark, _) =>
+  val stencilStream: QueryDef = QueryDef(stencilPrefix.oracle) { (spark, _) =>
     StreamRun(width = None).memory(spark, "graft_stencil_stream") {
       spark.readStream.format("graft.sources.StencilSource")
         .option("dims", 2).option("maxHalvings", 7)
@@ -276,7 +276,7 @@ object ReferenceOps {
     val (_, _, _, (cx, cy)) = SearchStreamConf
     s"""SELECT idx, $cx + x AS x, $cy + y AS y,
        |       ($cx + x)*($cx + x) + ($cy + y)*($cy + y) AS cost
-       |FROM (${stencilPrefix.oracle.get}) sp""".stripMargin
+       |FROM (${stencilPrefix.oracle}) sp""".stripMargin
   }) { (spark, dir) =>
     import graft.sources.FileSources
     // The result reads no file (pure generator), so its key is the build

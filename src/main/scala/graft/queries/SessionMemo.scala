@@ -8,18 +8,18 @@ import org.apache.spark.sql.execution.LogicalRDD
   * fingerprints of its source files there
   * ([[graft.sources.FileSources.sourcesFingerprint]], the source half of
   * every on-disk cache key too) — plus a `tag` naming the frame within
-  * that data. Entries sharing `(dir, fingerprints)` form one group and
-  * coexist; fetching a key of another group first evicts the session's
-  * other groups and runs the caller's `release` on each entry. So a dir
-  * switch and a source regenerated at the same dir both evict the stale
-  * group instead of serving it, and a long-lived session holds at most
-  * one group per memo however many dirs it visits. A regenerated source
-  * also evicts the stale groups OTHER sessions hold over the same dir:
-  * Spark's cache manager is shared by a context's sessions, and a stale
-  * persisted frame would answer any session's plan over that path. The
-  * frames are persisted, never lineage-truncated, so a stale downstream
-  * plan that still references an evicted frame recomputes it instead of
-  * failing.
+  * that data. Entries of one session sharing `(dir, fingerprints)` form
+  * one group and coexist; a lookup first evicts every entry outside its
+  * own `(session, group)` and runs the caller's `release` on each. So the
+  * memo holds one session's group at a time: a dir switch, a source
+  * regenerated at the same dir, and a lookup from another session all
+  * release the entries they supersede, and an abandoned session's frames
+  * go with the next lookup from any other session instead of staying
+  * reachable. Spark's cache manager is shared by a context's sessions, so
+  * a stale persisted frame would otherwise answer any session's plan over
+  * its path. The frames are persisted, never lineage-truncated, so a
+  * stale downstream plan that still references an evicted frame
+  * recomputes it instead of failing.
   */
 private[queries] final class SessionMemo[V](release: V => Unit) {
   import SessionMemo.Key
@@ -45,10 +45,7 @@ private[queries] final class SessionMemo[V](release: V => Unit) {
         case Some(v) => v
         case None =>
           cache.keys.toSeq
-            .filter { case (s, k) =>
-              if (s eq spark) k.group != key.group
-              else k.dir == key.dir && k.sourcesFp != key.sourcesFp
-            }
+            .filter { case (s, k) => (s ne spark) || k.group != key.group }
             .foreach(k => cache.remove(k).foreach(release))
           cache.getOrElseUpdate((spark, key), build)
       }

@@ -22,7 +22,6 @@ object Similarity {
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
   private val dims = 64
-  private val nPlanes = 16
   private val nQueries = 5
   private val topK = 10
 
@@ -289,13 +288,11 @@ object Similarity {
     *
     * Scale shape: the posexplode shuffles N×D (label, dim, v) rows into ONE
     * map-side-combinable aggregation — no collect_list, no per-label state
-    * proportional to cell size. At warehouse scale the same result comes
-    * cheaper from an aggregateByKey of dense long arrays (one D-array per
-    * partition per label, i.e. MLlib Summarizer's shape), implemented as
-    * [[embedCentroidsTreeAgg]]; measured at sf0.1 the explode form is
-    * 1.35× the dense form (0.265 s vs 0.197 s medians — SCALE.md
-    * "Similarity search"), and both emit bit-identical cells (QueriesSpec),
-    * so large-D deployments can swap shapes freely.
+    * proportional to cell size. An aggregateByKey of dense long arrays (one
+    * D-array per partition per label, MLlib Summarizer's shape) shuffles
+    * `labels × D` longs instead; at D=64 and sf0.1 the explode form
+    * measured 1.35× it (0.265 s vs 0.197 s medians — SCALE.md "Similarity
+    * search"), a gap that widens with D.
     */
   val embedCentroids: QueryDef = QueryDef(
     """SELECT label, dim,
@@ -637,53 +634,6 @@ object Similarity {
       .agg(codesArr.as("codes"))
       .select(col("vec_id"), col("codes"), dot("codes", "codes").as("norm2"))
       .filter(col("norm2") > 0)
-  }
-
-  /** The MLlib-Summarizer-shaped alternative to [[embedCentroids]]: one
-    * fixed-point sum ARRAY per (partition, label) accumulated imperatively,
-    * merged via `aggregateByKey` — per-partition traffic is `labels × D`
-    * longs instead of `rows × D` exploded cells, the classic dense-vector
-    * summary shape. Emits the identical (label, dim, centroid) rows
-    * (QueriesSpec asserts bit-equality with the explode form).
-    *
-    * Measured at sf0.1 on local[32] (3-run median, this box): see SCALE.md
-    * "Embedding centroids" for the numbers backing the explode-vs-summarizer
-    * claim in [[embedCentroids]]'s scaladoc.
-    */
-  def embedCentroidsTreeAgg(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val src = spark.read.parquet(t(dir, "embeddings"))
-      .select(col("label"), col("embedding"))
-    val byLabel = src.rdd
-      .map(r => (r.getInt(0), r.getSeq[Float](1)))
-      .aggregateByKey((Array.emptyLongArray, 0L))(
-        { case ((acc, n), v) =>
-          val a = if (acc.isEmpty) new Array[Long](v.length) else acc
-          var i = 0
-          while (i < v.length) {
-            a(i) += math.floor(v(i).toDouble * 10000 + 0.5).toLong
-            i += 1
-          }
-          (a, n + 1)
-        },
-        { case ((a, na), (b, nb)) =>
-          if (a.isEmpty) (b, na + nb)
-          else if (b.isEmpty) (a, na + nb)
-          else {
-            var i = 0
-            while (i < a.length) { a(i) += b(i); i += 1 }
-            (a, na + nb)
-          }
-        })
-    byLabel
-      .flatMap { case (label, (sums, n)) =>
-        sums.iterator.zipWithIndex.map { case (s, d) =>
-          (label, d, s / (10000.0 * n))
-        }
-      }
-      .toDF("label", "dim", "centroid")
   }
 
   /** Higher-order array functions over the embedding column — the in-row

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.FileSources
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Source/sink round-trip queries: the aggregate over CSV- or JSON-round
@@ -17,33 +18,24 @@ object Sources {
       |       CAST(sum(length(text)) AS BIGINT) AS total_len
       |FROM documents GROUP BY lang""".stripMargin
 
-  val csvRoundtrip: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    FileSources.documentsViaCsv(spark, dir)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-        sum(length(col("text"))).as("total_len"))
-  }
+  /** A round-trip row: the `lang` aggregate [[oracle]] spells, over the
+    * documents `read` returns after their trip through a file format.
+    */
+  private def langRow(read: (SparkSession, String) => DataFrame): QueryDef =
+    QueryDef(oracle) { (spark, dir) =>
+      read(spark, dir)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
+          sum(length(col("text"))).as("total_len"))
+    }
 
-  val jsonRoundtrip: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    FileSources.documentsViaJson(spark, dir)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-        sum(length(col("text"))).as("total_len"))
-  }
+  val csvRoundtrip: QueryDef = langRow(FileSources.documentsViaCsv)
 
-  val orcRoundtrip: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    FileSources.documentsViaOrc(spark, dir)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-        sum(length(col("text"))).as("total_len"))
-  }
+  val jsonRoundtrip: QueryDef = langRow(FileSources.documentsViaJson)
 
-  val xmlRoundtrip: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    FileSources.documentsViaXml(spark, dir)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-        sum(length(col("text"))).as("total_len"))
-  }
+  val orcRoundtrip: QueryDef = langRow(FileSources.documentsViaOrc)
+
+  val xmlRoundtrip: QueryDef = langRow(FileSources.documentsViaXml)
 
   /** BINARY columns at rest — the storage leg of the multimodal contract:
     * payloads written as a parquet `binary` column, read back, and
@@ -76,23 +68,13 @@ object Sources {
           lit(0L), (acc, x) => acc + x), lit(0L)).as("sum_bytes"))
   }
 
-  val textRoundtrip: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    FileSources.documentsViaText(spark, dir)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-        sum(length(col("text"))).as("total_len"))
-  }
+  val textRoundtrip: QueryDef = langRow(FileSources.documentsViaText)
 
   /** Small-file compaction round-trip: the same loss-free aggregate over
     * the compacted copy (see FileSources.compactedDocuments); QueriesSpec
     * asserts the file count actually dropped 16 -> 2.
     */
-  val compactRoundtrip: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    FileSources.compactedDocuments(spark, dir)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-        sum(length(col("text"))).as("total_len"))
-  }
+  val compactRoundtrip: QueryDef = langRow(FileSources.compactedDocuments)
 
   /** Partition-pruned scan: only the lang=en directory is read (the plan's
     * PartitionFilters prove it — see PlanSpec); oracle filters the flat

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-format source/sink round-trips: the engine reads parquet natively;
@@ -211,57 +211,41 @@ object FileSources {
     deleteRecursively(raw)
   }
 
+  /** The schema every round trip reads documents back with. */
+  private val DocSchema = "doc_id LONG, lang STRING, source STRING, n_chars LONG, text STRING"
+
+  /** The write-once round trip every format row shares: documents,
+    * coalesced to 2 files, go through `write` (which picks the columns and
+    * the writer options of format `fmt`) into the `roundtrip_<fmt>` cache
+    * dir, and `read` reads that dir back.
+    */
+  private def roundTrip(spark: SparkSession, dir: String, fmt: String)(
+      write: DataFrame => DataFrameWriter[Row])(read: String => DataFrame): DataFrame = {
+    val out = roundtripDir(fmt, dir)
+    writeOnce(out) { (o, _) =>
+      write(spark.read.parquet(s"$dir/documents.parquet").coalesce(2))
+        .mode(SaveMode.Overwrite).format(fmt).save(o)
+    }
+    read(out)
+  }
+
   /** documents -> CSV -> read back. Text is single-line ASCII; quoting is
     * still enabled so embedded delimiters would survive.
     */
-  def documentsViaCsv(spark: SparkSession, dir: String): DataFrame = {
-    val out = roundtripDir("csv", dir)
-    writeOnce(out) { (o, _) =>
-      spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
-        .coalesce(2)
-        .write.mode(SaveMode.Overwrite)
-        .option("header", "true").option("quoteAll", "true")
-        .csv(o)
-    }
-    spark.read
-      .option("header", "true")
-      .schema("doc_id LONG, lang STRING, source STRING, n_chars LONG, text STRING")
-      .csv(out)
-  }
+  def documentsViaCsv(spark: SparkSession, dir: String): DataFrame =
+    roundTrip(spark, dir, "csv")(
+      _.select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
+        .write.option("header", "true").option("quoteAll", "true"))(
+      spark.read.option("header", "true").schema(DocSchema).csv(_))
 
   /** documents -> JSON lines -> read back with explicit schema. */
-  def documentsViaJson(spark: SparkSession, dir: String): DataFrame = {
-    val out = roundtripDir("json", dir)
-    writeOnce(out) { (o, _) =>
-      spark.read.parquet(s"$dir/documents.parquet")
-        .coalesce(2)
-        .write.mode(SaveMode.Overwrite).json(o)
-    }
-    spark.read
-      .schema("doc_id LONG, lang STRING, source STRING, n_chars LONG, text STRING")
-      .json(out)
-  }
+  def documentsViaJson(spark: SparkSession, dir: String): DataFrame =
+    roundTrip(spark, dir, "json")(_.write)(spark.read.schema(DocSchema).json(_))
 
   /** documents -> ORC -> read back (columnar sibling format). */
-  def documentsViaOrc(spark: SparkSession, dir: String): DataFrame = {
-    val out = roundtripDir("orc", dir)
-    writeOnce(out) { (o, _) =>
-      spark.read.parquet(s"$dir/documents.parquet")
-        .coalesce(2)
-        .write.mode(SaveMode.Overwrite).orc(o)
-    }
-    spark.read.orc(out)
-  }
+  def documentsViaOrc(spark: SparkSession, dir: String): DataFrame =
+    roundTrip(spark, dir, "orc")(_.write)(spark.read.orc(_))
 
-  /** documents -> line-oriented text (one -delimited record per
-    * line) -> parsed back in-plan. Exercises the `text` source/sink — the
-    * shape raw corpus drops actually arrive in (one document per line,
-    * fields split in the ingest query, schema applied by the pipeline,
-    * not the format). Safe here because the corpus text is single-line
-    * and delimiter-free; a production ingest uses the same plan with an
-    * escaped encoding.
-    */
   /** documents -> XML -> read back (Spark 4's BUILT-IN XML source — the
     * spark-xml connector merged upstream): one `<doc>` row element per
     * document under explicit rowTag, read back with an explicit schema.
@@ -276,39 +260,32 @@ object FileSources {
     * element to NULL, not "", so a zero-length text would round-trip as
     * NULL and diverge.
     */
-  def documentsViaXml(spark: SparkSession, dir: String): DataFrame = {
-    val out = roundtripDir("xml", dir)
-    writeOnce(out) { (o, _) =>
-      spark.read.parquet(s"$dir/documents.parquet")
-        .coalesce(2)
-        .write.mode(SaveMode.Overwrite)
-        .option("rowTag", "doc").option("rootTag", "docs")
-        .xml(o)
-    }
-    spark.read
-      .option("rowTag", "doc")
-      .option("ignoreSurroundingSpaces", "false")
-      .schema("doc_id LONG, lang STRING, source STRING, n_chars LONG, text STRING")
-      .xml(out)
-  }
+  def documentsViaXml(spark: SparkSession, dir: String): DataFrame =
+    roundTrip(spark, dir, "xml")(
+      _.write.option("rowTag", "doc").option("rootTag", "docs"))(
+      spark.read.option("rowTag", "doc").option("ignoreSurroundingSpaces", "false")
+        .schema(DocSchema).xml(_))
 
-  def documentsViaText(spark: SparkSession, dir: String): DataFrame = {
-    val out = roundtripDir("text", dir)
-    writeOnce(out) { (o, _) =>
-      spark.read.parquet(s"$dir/documents.parquet")
-        .select(concat_ws("", col("doc_id"), col("lang"), col("source"),
-          col("n_chars"), col("text")).as("value"))
-        .coalesce(2)
-        .write.mode(SaveMode.Overwrite).text(o)
+  /** documents -> line-oriented text (one U+0001-delimited record per
+    * line) -> parsed back in-plan. Exercises the `text` source/sink — the
+    * shape raw corpus drops actually arrive in (one document per line,
+    * fields split in the ingest query, schema applied by the pipeline,
+    * not the format). Safe here because the corpus text is single-line
+    * and delimiter-free; a production ingest uses the same plan with an
+    * escaped encoding.
+    */
+  def documentsViaText(spark: SparkSession, dir: String): DataFrame =
+    roundTrip(spark, dir, "text")(
+      _.select(concat_ws("", col("doc_id"), col("lang"), col("source"),
+        col("n_chars"), col("text")).as("value")).write) { out =>
+      val f = split(col("value"), "")
+      spark.read.text(out)
+        .select(element_at(f, 1).cast("long").as("doc_id"),
+          element_at(f, 2).as("lang"),
+          element_at(f, 3).as("source"),
+          element_at(f, 4).cast("long").as("n_chars"),
+          element_at(f, 5).as("text"))
     }
-    val f = split(col("value"), "")
-    spark.read.text(out)
-      .select(element_at(f, 1).cast("long").as("doc_id"),
-        element_at(f, 2).as("lang"),
-        element_at(f, 3).as("source"),
-        element_at(f, 4).cast("long").as("n_chars"),
-        element_at(f, 5).as("text"))
-  }
 
   /** Small-file compaction — the table-maintenance operator every 100 TB
     * lake runs continuously: a 16-way fragmented copy of documents (the

@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * a `SparkClient` wave, `Bench.envCpus` is the one reader of
   * `SPARK_GRAFT_CPUS`, `FileSources` alone decides the key and the
   * completion marker of an on-disk cache, `IdPack` alone holds the 2³² id
-  * packing, `SessionMemo` alone keys in-memory memos, and only Bench sweeps
-  * persisted RDDs by hand.
+  * packing, `SessionMemo` alone keys in-memory memos, only Bench sweeps
+  * persisted RDDs by hand, and the media rows read payloads through
+  * `Media.payloads` and decode images through `Media.codecs` alone.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
@@ -123,6 +124,33 @@ class OnePathSpec extends AnyFunSuite {
   test("FileSources.fingerprint( is called outside FileSources only by the CBO table") {
     assert(filesWith("FileSources.fingerprint(") == Seq("graft/queries/Relational.scala"))
     assert(sources.map(_._2.split("FileSources\\.fingerprint\\(", -1).length - 1).sum == 1)
+  }
+
+  test("only Media.payloads reads documents into MediaRow") {
+    val reads = sources.map { case (p, s) =>
+      p -> Seq("as[MediaRow]", "as[Media.MediaRow]")
+        .map(t => s.split(java.util.regex.Pattern.quote(t), -1).length - 1).sum
+    }.filter(_._2 > 0)
+    assert(reads == Seq("graft/multimodal/Media.scala" -> 1), reads)
+  }
+
+  test("decodeBmp is called only through Media's codec table") {
+    // code lines (comments dropped) naming decodeBmp: its definition and
+    // its codec-table entry
+    val uses = sources.map { case (p, s) =>
+      p -> s.linesIterator.map(_.trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+        .filter(_.contains("decodeBmp")).toSeq
+    }.filter(_._2.nonEmpty)
+    assert(uses.map(_._1) == Seq("graft/multimodal/Media.scala"), uses)
+    val lines = uses.head._2
+    assert(lines.size == 2 && lines.exists(_.startsWith("def decodeBmp(")) &&
+      lines.exists(_.contains("ImageCodec(encodeBmp, decodeBmp")), lines)
+  }
+
+  test("the folded Bloom, centroid and oracle-less forks stay gone") {
+    for (token <- Seq("bloomPrefilterPartitioned", "embedCentroidsTreeAgg", "rowsOnly"))
+      assert(filesWith(token).isEmpty, token)
   }
 
   test("no tool waits on Spark with Thread.sleep") {

@@ -727,6 +727,27 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     }
   }
 
+  test("an abandoned session's memo entry is released by the next session's lookup") {
+    spark.sparkContext.setLogLevel("WARN")
+    // A memo holds one session's group: the frame a newSession() built must
+    // not stay reachable once the session is dropped and another runs.
+    val other = spark.newSession()
+    rowsOf("q_triangles", other, sf)
+    val edges = Graph.edgeCache.getOrElseUpdate(other, sf, Seq("lineitem.parquet"), "edges")(
+      fail("q_triangles did not memoize its edge frame"))
+    def cacheEntry = spark.sharedState.cacheManager
+      .lookupCachedData(edges.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    val cached = cacheEntry
+    assert(cached.isDefined, "the edge frame is not persisted")
+    rowsOf("q_triangles", spark, sf)
+    assert(Graph.edgeCache.keysFor(other).isEmpty,
+      s"the abandoned session still holds ${Graph.edgeCache.keysFor(other)}")
+    // released: the cache entry the other session's frame made is gone
+    // (the root session's lookup persists its own anew)
+    assert(!cacheEntry.exists(_ eq cached.get),
+      "the abandoned session's edge frame was never unpersisted")
+  }
+
   test("iterative loops leave no superseded round's RDD persisted") {
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
@@ -860,18 +881,6 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     // measured 33/50 at sf0.001, floored conservatively
     val overlap = qn.map(r => (r.getLong(0), r.getLong(1))).count(fl.contains)
     assert(overlap >= 25, s"quantized/float top-10 overlap collapsed: $overlap/50")
-  }
-
-  test("centroid summarizer shape is bit-identical to the explode plan") {
-    // Both forms sum the same 1e-4 fixed-point longs and divide by the same
-    // BIGINTs, so every cell must match to the last IEEE bit — the property
-    // that lets either shape back the gate row interchangeably.
-    val a = Similarity.embedCentroids.fn(spark, sf)
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    val b = Similarity.embedCentroidsTreeAgg(spark, sf)
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    assert(a.keySet == b.keySet && a.nonEmpty)
-    a.foreach { case (k, v) => assert(v == b(k), s"cell $k: $v != ${b(k)}") }
   }
 
   test("stream dedup equals batch distinct on bounded input") {
@@ -1152,52 +1161,34 @@ class QueriesSpec extends AnyFunSuite with Eventually {
 
   test("bloom prefilter: zero false negatives vs the exact anti-join, low FP rate") {
     import org.apache.spark.sql.functions.col
-    val pre = Dedup.bloomPrefilter(spark, sf).persist()
+    // the exact anti-join defines ground truth: batch hashes absent from
+    // the corpus (incremental emits one row per truly-new content_hash)
+    val trulyNew = Dedup.incremental.fn(spark, sf)
+      .select(col("content_hash")).persist()
     try {
-      // the exact anti-join defines ground truth: batch hashes absent from
-      // the corpus (incremental emits one row per truly-new content_hash)
-      val trulyNew = Dedup.incremental.fn(spark, sf)
-        .select(col("content_hash")).persist()
-      try {
-        // no false negatives: every row the filter calls unseen IS new
-        val fn = pre.filter(!col("maybe_seen"))
-          .join(trulyNew, Seq("content_hash"), "left_anti").count()
-        assert(fn == 0L, s"$fn corpus-present rows escaped the bloom filter")
-        // false-positive rate among truly-new rows stays under the
-        // configured capacity's bound (oversized here -> near zero)
-        val newRows = pre.join(trulyNew, "content_hash").persist()
+      // one sketch (q_bloom_prefilter) and the 16-bucket family
+      // (q_bloom_partitioned) are held to the same bar
+      for (buckets <- Seq(1, 16)) {
+        val pre = Dedup.bloomPrefilter(spark, sf, buckets).persist()
         try {
-          val total = newRows.count()
-          val fp = newRows.filter(col("maybe_seen")).count()
-          assert(total > 0L)
-          assert(fp.toDouble / total <= 0.05, s"FP rate $fp/$total")
-        } finally newRows.unpersist()
-      } finally trulyNew.unpersist()
-    } finally pre.unpersist()
-  }
-
-  test("partitioned bloom family: per-bucket no-false-negatives, agrees with single sketch") {
-    import org.apache.spark.sql.functions.col
-    val pre = Dedup.bloomPrefilterPartitioned(spark, sf, buckets = 16).persist()
-    try {
-      val trulyNew = Dedup.incremental.fn(spark, sf)
-        .select(col("content_hash")).persist()
-      try {
-        // the Bloom guarantee must survive partitioning: a key is probed
-        // against exactly the sketch it was inserted into, so no
-        // corpus-present row may read unseen
-        val fn = pre.filter(!col("maybe_seen"))
-          .join(trulyNew, Seq("content_hash"), "left_anti").count()
-        assert(fn == 0L, s"$fn corpus-present rows escaped the partitioned family")
-        val newRows = pre.join(trulyNew, "content_hash").persist()
-        try {
-          val total = newRows.count()
-          val fp = newRows.filter(col("maybe_seen")).count()
-          assert(total > 0L)
-          assert(fp.toDouble / total <= 0.05, s"FP rate $fp/$total")
-        } finally newRows.unpersist()
-      } finally trulyNew.unpersist()
-    } finally pre.unpersist()
+          // no false negatives: every row the filter calls unseen IS new;
+          // partitioned, a key is probed against exactly the sketch it was
+          // inserted into, so the guarantee survives per bucket
+          val fn = pre.filter(!col("maybe_seen"))
+            .join(trulyNew, Seq("content_hash"), "left_anti").count()
+          assert(fn == 0L, s"$fn corpus-present rows escaped the bloom filter ($buckets buckets)")
+          // false-positive rate among truly-new rows stays under the
+          // configured capacity's bound (oversized here -> near zero)
+          val newRows = pre.join(trulyNew, "content_hash").persist()
+          try {
+            val total = newRows.count()
+            val fp = newRows.filter(col("maybe_seen")).count()
+            assert(total > 0L)
+            assert(fp.toDouble / total <= 0.05, s"FP rate $fp/$total ($buckets buckets)")
+          } finally newRows.unpersist()
+        } finally pre.unpersist()
+      }
+    } finally trulyNew.unpersist()
   }
 
   test("dup spans merge consecutive duplicated 8-grams into maximal per-doc spans") {
