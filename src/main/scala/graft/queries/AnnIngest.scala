@@ -77,21 +77,14 @@ object AnnIngest {
       assign(emb.filter(!arrivalPred)).write.parquet(s"$o/base")
       assign(emb).write.parquet(s"$o/batch") // batch twin, same frozen model
       AnnIvf.centroidsOf(spark, model).write.parquet(s"$o/centroids")
-      val baseMtime = 1600000000000L
       (0 until ArrivalChunks).foreach { c =>
         FileSources.stageFiles(
           emb.filter(arrivalPred && pmod(col("vec_id"), lit(ArrivalChunks)) === c)
             .select(col("vec_id"), col("embedding")),
-          scratch, in, s"arrivals_$c", baseMtime + c * 60000L)
+          scratch, in, s"arrivals_$c", c)
       }
       StreamRun(width = None, trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .run(spark) {
-          spark.readStream
-            .schema(org.apache.spark.sql.types.StructType.fromDDL(
-              "vec_id LONG, embedding ARRAY<FLOAT>"))
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in)
-        }(_.foreachBatch {
+        .run(spark)(FileSources.replay(spark, in))(_.foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
             StreamRun.writeBatch(assign(batch
               .withColumn("features",

@@ -237,17 +237,7 @@ object Dedup {
     * the scale path is held to the same bar as the single sketch it
     * replaces at 10^10 keys.
     */
-  val bloomGatePartitioned: QueryDef = QueryDef(
-    """SELECT CAST(count(*) AS BIGINT) AS n_batch,
-      |       CAST(count(*) FILTER (WHERE NOT seen) AS BIGINT) AS n_new,
-      |       TRUE AS no_false_neg,
-      |       TRUE AS fp_ok
-      |FROM (
-      |  SELECT doc_id,
-      |         EXISTS (SELECT 1 FROM documents c
-      |                 WHERE c.source <> 'src0' AND md5(c.text) = b.content_hash) AS seen
-      |  FROM (SELECT doc_id, md5(text) AS content_hash FROM documents
-      |        WHERE source = 'src0') b) f""".stripMargin) { (spark, dir) =>
+  val bloomGatePartitioned: QueryDef = QueryDef(bloomGate.oracle) { (spark, dir) =>
     bloomGateFrame(spark, dir, bloomPrefilter(spark, dir, buckets = 16))
   }
 

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.sources.FileSources
+import graft.streaming.RunningTotals
 
 /** Event-stream operators over the `events` table: tumbling-window
   * aggregation as a batch query, and the identical pipeline executed through
@@ -206,15 +208,25 @@ object Events {
   val sessionWindow: QueryDef = QueryDef(
     s"""SELECT user_id, start_us, end_us + 1800000000 AS end_gap_us, n, sum_value
       |FROM ($sessionCoreSql) g""".stripMargin) { (spark, dir) =>
-    readEvents(spark, dir)
+    sessionWindowAgg(readEvents(spark, dir))
+  }
+
+  /** The `session_window` body [[sessionWindow]] and [[sessionWindowStream]]
+    * share, as [[windowAgg]] is for the tumbling pair: 30-minute-gap
+    * sessions per user, reported as (user_id, start_us, end_gap_us, n,
+    * sum_value). The 0 s watermark drives the stream form's emission; the
+    * analyzer drops it from a batch plan.
+    */
+  private def sessionWindowAgg(events: DataFrame): DataFrame =
+    events
       .select(col("user_id"), timestamp_micros(col("tus")).as("tts"), col("value"))
+      .withWatermark("tts", "0 seconds")
       .groupBy(session_window(col("tts"), "30 minutes").as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
       .select(col("user_id"),
         unix_micros(col("sw.start")).as("start_us"),
         unix_micros(col("sw.end")).as("end_gap_us"),
         col("n"), col("sum_value"))
-  }
 
   /** The STREAMING form of [[sessionWindow]] — Spark's native session
     * windows as a stateful streaming aggregation (the state-store-backed
@@ -245,15 +257,7 @@ object Events {
     // path.
     StreamRun(trigger = Trigger.AvailableNow())
       .memory(spark, "graft_session_window_stream") {
-        eventsStream(spark, dir)
-          .select(col("user_id"), timestamp_micros(col("tus")).as("tts"), col("value"))
-          .withWatermark("tts", "0 seconds")
-          .groupBy(session_window(col("tts"), "30 minutes").as("sw"), col("user_id"))
-          .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
-          .select(col("user_id"),
-            unix_micros(col("sw.start")).as("start_us"),
-            unix_micros(col("sw.end")).as("end_gap_us"),
-            col("n"), col("sum_value"))
+        sessionWindowAgg(eventsStream(spark, dir))
       }
   }
 
@@ -448,14 +452,8 @@ object Events {
        |   AND s.i = w.i + 1)
        |SELECT user_id, event_type, r AS emit_tus FROM walk WHERE emit""".stripMargin) {
     (spark, dir) =>
-    val out = prepareWmChunks(spark, dir)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "user_id LONG, event_type STRING, ts TIMESTAMP")
     StreamRun().memory(spark, "graft_stream_dedup_wm") {
-      spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(out)
+      FileSources.replay(spark, prepareWmChunks(spark, dir))
         .withWatermark("ts", "48 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("emit_tus"))
@@ -483,21 +481,25 @@ object Events {
   private[graft] def prepareWmChunks(spark: SparkSession, dir: String): String =
     chunkedEvents("streamwm", dir)(wmChunkPrepFrame(spark, dir))
 
-  /** The write-once, multi-micro-batch input the chunked streaming rows
-    * share: `frame` (derived from events, with an integer `chunk` column)
-    * lands in a cache dir as ordered single files `chunk_000.parquet`, ...
-    * with fixed, strictly increasing mtimes, so the file stream source
-    * replays the chunks in order and the files are byte-stable across
-    * rebuilds.
+  /** The one events-keyed on-disk cache: `body(out, scratch)` runs
+    * through [[FileSources.writeOnce]] under the `tag` key of
+    * events.parquet in `dir`, and the cache dir comes back.
     */
-  private def chunkedEvents(tag: String, dir: String)(frame: => DataFrame): String = {
-    import graft.sources.FileSources
+  private def eventsCache(tag: String, dir: String)(body: (String, String) => Unit): String = {
     val out = FileSources.cacheDir(tag, dir, "events.parquet")
-    FileSources.writeOnce(out) { (o, scratch) =>
-      FileSources.stageFiles(frame, scratch, o, "chunk", chunked = true)
-    }
+    FileSources.writeOnce(out)(body)
     out
   }
+
+  /** The write-once, multi-micro-batch input the chunked streaming rows
+    * share: `frame` (derived from events, with an integer `chunk` column)
+    * lands in an [[eventsCache]] dir as staged files `chunk_000.parquet`,
+    * ... in chunk order, which [[FileSources.replay]] reads back one chunk
+    * per micro-batch; the files are byte-stable across rebuilds.
+    */
+  private def chunkedEvents(tag: String, dir: String)(frame: => DataFrame): String =
+    eventsCache(tag, dir)((o, scratch) =>
+      FileSources.stageFiles(frame, scratch, o, "chunk", chunked = true))
 
   /** Data-quality audit — the constraint gate a pipeline runs before
     * letting a drop into the corpus (dbt-test / Deequ style): one summary
@@ -568,27 +570,13 @@ object Events {
   val transformState: QueryDef = QueryDef(
     s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n, $fixedSumSql AS sum_value
        |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
-    val out = prepareTwsChunks(spark, dir)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "user_id LONG, value DOUBLE")
     import spark.implicits._
-    StreamRun(mode = "update", rocksDb = true).memory(spark, "graft_transform_state") {
-      spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(out)
-        .select(col("user_id"), floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new graft.streaming.RunningTotals,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF("user_id", "n", "sum_v4")
-    }
-      .groupBy(col("user_id"))
-      .agg(max(struct(col("n"), col("sum_v4"))).as("m"))
-      .select(col("user_id"), col("m.n").as("n"),
-        round(col("m.sum_v4") / 10000.0, 2).as("sum_value"))
+    RunningTotals.finalTotals(
+      StreamRun(mode = "update", rocksDb = true).memory(spark, "graft_transform_state") {
+        RunningTotals.over(FileSources.replay(spark, prepareTwsChunks(spark, dir))
+          .select(col("user_id"), floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
+          .as[(Long, Long)])
+      })
   }
 
   /** As-of join: each click matched to the user's most recent earlier
@@ -992,6 +980,19 @@ object Events {
           col("n_pairs"), col("n_users")))
   }
 
+  /** The click side `c`, purchase side `p` and NULL-guarded final
+    * watermark `wm` CTEs both outer interval-join oracles open with.
+    */
+  private val outerJoinCtes =
+    """WITH c AS (SELECT event_id, user_id, epoch_ns(ts) AS tns
+      |           FROM events WHERE event_type = 'click'),
+      |p AS (SELECT event_id, user_id, epoch_ns(ts) AS tns
+      |      FROM events WHERE event_type = 'purchase'),
+      |wm AS (SELECT CASE WHEN cm IS NULL OR pm IS NULL THEN NULL
+      |              ELSE least(cm, pm) - 3600000 END AS wm_ms
+      |       FROM (SELECT (SELECT max(tns // 1000000) FROM c) AS cm,
+      |                    (SELECT max(tns // 1000000) FROM p) AS pm)),""".stripMargin
+
   /** LEFT OUTER stream-stream interval join — attribution including the
     * clicks that never converted: matched pairs emit exactly as in
     * [[streamJoin]]; a click with NO purchase in its hour window emits a
@@ -1021,14 +1022,7 @@ object Events {
     * both engines agree on zero null rows.
     */
   val streamJoinOuter: QueryDef = QueryDef(
-    """WITH c AS (SELECT event_id, user_id, epoch_ns(ts) AS tns
-      |           FROM events WHERE event_type = 'click'),
-      |p AS (SELECT event_id, user_id, epoch_ns(ts) AS tns
-      |      FROM events WHERE event_type = 'purchase'),
-      |wm AS (SELECT CASE WHEN cm IS NULL OR pm IS NULL THEN NULL
-      |              ELSE least(cm, pm) - 3600000 END AS wm_ms
-      |       FROM (SELECT (SELECT max(tns // 1000000) FROM c) AS cm,
-      |                    (SELECT max(tns // 1000000) FROM p) AS pm)),
+    s"""$outerJoinCtes
       |j AS (
       |  SELECT c.event_id AS click_id, p.event_id AS purchase_id,
       |         c.user_id AS user_id,
@@ -1058,14 +1052,7 @@ object Events {
     * no null rows in either engine).
     */
   val streamJoinFull: QueryDef = QueryDef(
-    """WITH c AS (SELECT event_id, user_id, epoch_ns(ts) AS tns
-      |           FROM events WHERE event_type = 'click'),
-      |p AS (SELECT event_id, user_id, epoch_ns(ts) AS tns
-      |      FROM events WHERE event_type = 'purchase'),
-      |wm AS (SELECT CASE WHEN cm IS NULL OR pm IS NULL THEN NULL
-      |              ELSE least(cm, pm) - 3600000 END AS wm_ms
-      |       FROM (SELECT (SELECT max(tns // 1000000) FROM c) AS cm,
-      |                    (SELECT max(tns // 1000000) FROM p) AS pm)),
+    s"""$outerJoinCtes
       |j AS (
       |  SELECT c.event_id AS click_id, p.event_id AS purchase_id,
       |         coalesce(c.user_id, p.user_id) AS user_id,
@@ -1168,9 +1155,7 @@ object Events {
       |             CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
       |      FROM events) e
       |GROUP BY event_type""".stripMargin) { (spark, dir) =>
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("variantshred", dir, "events.parquet")
-    FileSources.writeOnce(out) { (o, _) =>
+    val out = eventsCache("variantshred", dir) { (o, _) =>
       Confs.withConfs(spark,
         "spark.sql.variant.writeShredding.enabled" -> "true",
         "spark.sql.variant.inferShreddingSchema" -> "true") {
@@ -1270,9 +1255,7 @@ object Events {
     """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
       |       CAST(sum(event_id) AS BIGINT) AS sum_id
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamsink", dir, "events.parquet")
-    FileSources.writeOnce(out) { (o, _) =>
+    val out = eventsCache("streamsink", dir) { (o, _) =>
       StreamRun().run(spark) {
         eventsStream(spark, dir).select(col("event_id"), col("event_type"))
       }(_.format("parquet").option("path", s"$o/data").option("checkpointLocation", s"$o/chk"))
@@ -1419,15 +1402,9 @@ object Events {
     * the log.
     */
   val cdcApplyStream: QueryDef = QueryDef(cdcOracle) { (spark, dir) =>
-    val out = prepareCdcChunks(spark, dir)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "user_id LONG, tus LONG, event_id LONG, event_type STRING, value DOUBLE")
     import spark.implicits._
     StreamRun(mode = "update", rocksDb = true).memory(spark, "graft_cdc_stream") {
-      spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(out)
+      FileSources.replay(spark, prepareCdcChunks(spark, dir))
         .select(col("user_id"), col("tus"), col("event_id"),
           col("event_type"), col("value"))
         .as[(Long, Long, Long, String, Double)]
@@ -1640,6 +1617,20 @@ object Events {
         .withColumn("max_share_ppm", expr("max_cnt * 1000000 div n_rows"))
   }
 
+  /** The view → click → purchase stage chain (`ev`, then the first-entry
+    * CTEs `v`, `c`, `p`) both funnel oracles open with.
+    */
+  private val funnelStagesSql =
+    """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
+      |v AS MATERIALIZED (SELECT user_id, min(tus) AS t1 FROM ev
+      |     WHERE event_type = 'view' GROUP BY 1),
+      |c AS MATERIALIZED (SELECT e.user_id, min(e.tus) AS t2
+      |     FROM ev e JOIN v ON e.user_id = v.user_id
+      |     WHERE e.event_type = 'click' AND e.tus > v.t1 GROUP BY 1),
+      |p AS MATERIALIZED (SELECT e.user_id, min(e.tus) AS t3
+      |     FROM ev e JOIN c ON e.user_id = c.user_id
+      |     WHERE e.event_type = 'purchase' AND e.tus > c.t2 GROUP BY 1)""".stripMargin
+
   /** Ordered funnel analysis (view → click → purchase) — the product-
     * analytics sequential-pattern query every event warehouse runs: a user
     * advances a stage only with an event STRICTLY LATER than their entry
@@ -1657,15 +1648,7 @@ object Events {
     * the event-type filter pushed to parquet.
     */
   val eventFunnel: QueryDef = QueryDef(
-    """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
-      |v AS MATERIALIZED (SELECT user_id, min(tus) AS t1 FROM ev
-      |     WHERE event_type = 'view' GROUP BY 1),
-      |c AS MATERIALIZED (SELECT e.user_id, min(e.tus) AS t2
-      |     FROM ev e JOIN v ON e.user_id = v.user_id
-      |     WHERE e.event_type = 'click' AND e.tus > v.t1 GROUP BY 1),
-      |p AS MATERIALIZED (SELECT e.user_id, min(e.tus) AS t3
-      |     FROM ev e JOIN c ON e.user_id = c.user_id
-      |     WHERE e.event_type = 'purchase' AND e.tus > c.t2 GROUP BY 1)
+    s"""$funnelStagesSql
       |SELECT (SELECT CAST(count(DISTINCT user_id) AS BIGINT) FROM ev) AS n_users,
       |       (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view,
       |       (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_view_click,
@@ -1716,15 +1699,7 @@ object Events {
     * batch CTE counts, and the hash gate would catch exactly that.
     */
   val funnelStream: QueryDef = QueryDef(
-    """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
-      |v AS MATERIALIZED (SELECT user_id, min(tus) AS t1 FROM ev
-      |     WHERE event_type = 'view' GROUP BY 1),
-      |c AS MATERIALIZED (SELECT e.user_id, min(e.tus) AS t2
-      |     FROM ev e JOIN v ON e.user_id = v.user_id
-      |     WHERE e.event_type = 'click' AND e.tus > v.t1 GROUP BY 1),
-      |p AS MATERIALIZED (SELECT e.user_id, min(e.tus) AS t3
-      |     FROM ev e JOIN c ON e.user_id = c.user_id
-      |     WHERE e.event_type = 'purchase' AND e.tus > c.t2 GROUP BY 1)
+    s"""$funnelStagesSql
       |SELECT user_id, CAST(1 AS BIGINT) AS stage, t1 AS tus FROM v
       |UNION ALL SELECT user_id, CAST(2 AS BIGINT), t2 FROM c
       |UNION ALL SELECT user_id, CAST(3 AS BIGINT), t3 FROM p""".stripMargin) {
@@ -1985,9 +1960,9 @@ object Events {
     * appending duplicates, which is precisely the contract Spark asks of
     * a foreachBatch body (batches can replay after failure; the sink
     * must be idempotent per batchId). The row re-aggregates what landed
-    * on disk across batch dirs; the oracle states the per-type totals
-    * from the canonical table, so a double-written batch or a lost one
-    * flips the hash.
+    * on disk across batch dirs; the oracle ([[streamFileSink]]'s) states
+    * the per-type totals from the canonical table, so a double-written
+    * batch or a lost one flips the hash.
     *
     * Scale shape: the foreachBatch body is a normal BATCH write per
     * micro-batch (full batch-engine surface available — merges, JDBC
@@ -1995,13 +1970,8 @@ object Events {
     * exactly as with built-in sinks. Write-once per source fingerprint,
     * like every file-producing row.
     */
-  val foreachBatchSink: QueryDef = QueryDef(
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-      |       CAST(sum(event_id) AS BIGINT) AS sum_id
-      |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("foreachbatch", dir, "events.parquet")
-    FileSources.writeOnce(out) { (o, _) =>
+  val foreachBatchSink: QueryDef = QueryDef(streamFileSink.oracle) { (spark, dir) =>
+    val out = eventsCache("foreachbatch", dir) { (o, _) =>
       StreamRun(trigger = Trigger.AvailableNow()).run(spark) {
         eventsStream(spark, dir).select(col("event_id"), col("event_type"))
       }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
@@ -2448,9 +2418,7 @@ object Events {
     """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
       |       CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_fixed
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("statereader", dir, "events.parquet")
-    FileSources.writeOnce(out) { (o, _) =>
+    val out = eventsCache("statereader", dir) { (o, _) =>
       StreamRun(mode = "update", trigger = Trigger.AvailableNow()).run(spark) {
         eventsStream(spark, dir)
           .groupBy(col("event_type"))
@@ -2639,6 +2607,14 @@ object Events {
         expr("IF(n_a = 0 OR n_b = 0, NULL, d_num * 1000000 div (n_a * n_b))"))
   }
 
+  /** The text of the numbered log files under `chk/sub` (a restart row's
+    * on-disk contract), skipping the binary .crc sidecars.
+    */
+  private def checkpointLog(chk: String, sub: String): String =
+    Option(new java.io.File(chk, sub).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.forall(_.isDigit))
+      .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
+
   /** Checkpoint compatibility across a code change — the strongest
     * previously-untested production claim in the streaming block
     * (VERDICT r14 #7a): a stateful stream stopped mid-corpus and
@@ -2674,33 +2650,24 @@ object Events {
     """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
       |       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
       |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("ckptrestart", dir, "events.parquet")
-    FileSources.writeOnce(out) { (o, scratch) =>
+    val out = eventsCache("ckptrestart", dir) { (o, scratch) =>
       // the staged halves and the checkpoint live in writeOnce's scratch
       val in = s"$scratch/in"
       val chk = s"$scratch/chk"
       val cents = expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents")
       val ev = spark.read.parquet(t(dir, "events"))
         .select(col("event_id"), col("user_id"), cents)
-      def stage(name: String, predicate: org.apache.spark.sql.Column, mtime: Long): Unit =
-        FileSources.stageFiles(ev.filter(predicate), scratch, in, name, mtime)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
       def runPhase(queryName: String)(spelling: DataFrame => DataFrame): Unit =
         StreamRun(mode = "complete", width = None).run(spark) {
-          spelling(spark.readStream.schema(schema).parquet(in))
+          spelling(FileSources.replay(spark, in))
         }(_.format("memory").queryName(queryName).option("checkpointLocation", chk))
-      val baseMtime = 1600000000000L
-      stage("half_even", col("event_id") % 2 === 0, baseMtime)
+      FileSources.stageFiles(ev.filter(col("event_id") % 2 === 0), scratch, in, "half_even")
       // phase A: the Column-DSL spelling ("the r(N-1) code")
       runPhase("graft_ckpt_phase_a") { src =>
         src.groupBy(col("user_id"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
       }
-      stage("half_odd", col("event_id") % 2 =!= 0, baseMtime + 60000L)
+      FileSources.stageFiles(ev.filter(col("event_id") % 2 =!= 0), scratch, in, "half_odd", 1)
       // phase B: the re-spelled query ("the shipped refactor") on the
       // SAME checkpoint — pruned projection + expr-route aggregates;
       // same grouping key, buffer types, and output schema.
@@ -2710,11 +2677,8 @@ object Events {
           .agg(expr("count(1)").as("n"), expr("sum(cents)").as("cents"))
       }
       // pin the state format the compatibility claim is made for
-      val offsetsDir = new java.io.File(chk, "offsets")
-      val offsetConfs = Option(offsetsDir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.forall(_.isDigit)) // skip binary .crc sidecars
-        .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
-      require(offsetConfs.contains("\"spark.sql.streaming.aggregation.stateFormatVersion\":\"2\""),
+      require(checkpointLog(chk, "offsets")
+          .contains("\"spark.sql.streaming.aggregation.stateFormatVersion\":\"2\""),
         "checkpoint offset log does not pin aggregation stateFormatVersion 2 — " +
           "the restart-compatibility contract changed underneath this row")
       spark.table("graft_ckpt_phase_b")
@@ -2759,16 +2723,12 @@ object Events {
   val twsRestart: QueryDef = QueryDef(
     s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n, $fixedSumSql AS sum_value
        |FROM events GROUP BY user_id""".stripMargin) { (spark, dir) =>
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("twsrestart", dir, "events.parquet")
-    FileSources.writeOnce(out) { (o, scratch) =>
+    val out = eventsCache("twsrestart", dir) { (o, scratch) =>
       val in = s"$scratch/in"
       val chk = s"$scratch/chk"
       val ev = spark.read.parquet(t(dir, "events"))
         .select(col("event_id"), col("user_id"),
           floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id LONG, v4 LONG")
       // Emissions land via foreachBatch as batchId-idempotent parquet
       // (the q_foreach_batch discipline): the memory sink REFUSES to
       // recover a non-complete-mode query from a checkpoint, and
@@ -2777,54 +2737,32 @@ object Events {
       // is the epoch in the offsets log), so the two phases' batches
       // never collide.
       val emit = s"$scratch/emit"
-      def runPhase(spelling: DataFrame => Dataset[(Long, Long, Long)]): Unit =
+      def runPhase(spelling: DataFrame => Dataset[(Long, Long)]): Unit =
         StreamRun(mode = "update", rocksDb = true).run(spark) {
-          spelling(spark.readStream.schema(schema).parquet(in))
-            .toDF("user_id", "n", "sum_v4")
+          RunningTotals.over(spelling(FileSources.replay(spark, in)))
         }(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
           StreamRun.writeBatch(batch, batchId, emit)
         }.option("checkpointLocation", chk))
       import spark.implicits._
-      val baseMtime = 1600000000000L
       FileSources.stageFiles(ev.filter(col("event_id") % 2 === 0)
-        .select(col("user_id"), col("v4")), scratch, in, "half_even", baseMtime)
+        .select(col("user_id"), col("v4")), scratch, in, "half_even")
       // phase A: the Column-DSL spelling ("the r(N-1) code")
-      runPhase { src =>
-        src.select(col("user_id"), col("v4")).as[(Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.RunningTotals,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-      }
+      runPhase(_.select(col("user_id"), col("v4")).as[(Long, Long)])
       FileSources.stageFiles(ev.filter(col("event_id") % 2 =!= 0)
-        .select(col("user_id"), col("v4")), scratch, in, "half_odd", baseMtime + 60000L)
+        .select(col("user_id"), col("v4")), scratch, in, "half_odd", 1)
       // phase B: the re-spelled query ("the shipped refactor") on the
       // SAME checkpoint — selectExpr-route projection; same key type,
       // same processor state schema, same output shape.
-      runPhase { src =>
-        src.selectExpr("user_id", "v4").as[(Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.RunningTotals,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-      }
+      runPhase(_.selectExpr("user_id", "v4").as[(Long, Long)])
       // pin the state machinery the compatibility claim is made for
-      val metaDir = new java.io.File(chk, "state/0/_metadata/v2")
-      val opMeta = Option(metaDir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.forall(_.isDigit)) // skip binary .crc sidecars
-        .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
+      val opMeta = checkpointLog(chk, "state/0/_metadata/v2")
       require(opMeta.contains("transformWithStateExec") &&
           opMeta.contains("ValueState") && opMeta.contains("totals"),
         "checkpoint operator metadata does not record the transformWithState " +
           "ValueState contract — the restart-compatibility claim changed underneath this row")
-      // n strictly increases per key, so the per-key max over both
-      // phases' emissions is the final state; phase A's batches cover
-      // users whose events all landed in the even half.
-      spark.read.parquet(emit)
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n"), col("sum_v4"))).as("m"))
-        .select(col("user_id"), col("m.n").as("n"),
-          round(col("m.sum_v4") / 10000.0, 2).as("sum_value"))
+      // the per-key max over both phases' emissions is the final state;
+      // phase A's batches cover users whose events all landed in the even half
+      RunningTotals.finalTotals(spark.read.parquet(emit))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$o/result")
     }
     spark.read.parquet(s"$out/result").select(col("user_id"), col("n"), col("sum_value"))

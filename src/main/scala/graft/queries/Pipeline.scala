@@ -482,22 +482,48 @@ object Pipeline {
     * the island merge is ONE shuffle on doc_id with an in-partition window
     * — no self-join, no interval logic, linear in marked positions.
     */
-  val dupSpans: QueryDef = QueryDef(
+  val dupSpans: QueryDef = spansDef(DupNGram, crossDoc = true)
+
+  /** The positional-gram CTEs the span oracles open with, at `width`: the
+    * split words `w`, the (doc_id, pos, gram) expansion `g0`, its distinct
+    * grams hashed `hd`, and the hashed positions `g`.
+    */
+  private def posGramsSql(width: Int): String =
     s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
        |g0 AS (
        |  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
        |    SELECT doc_id,
        |           unnest([{'pos': i,
-       |                    'gram': array_to_string(words[i:i+${DupNGram - 1}], ' ')}
-       |                   for i in range(1, len(words) - ${DupNGram - 2})]) AS u
+       |                    'gram': array_to_string(words[i:i+${width - 1}], ' ')}
+       |                   for i in range(1, len(words) - ${width - 2})]) AS u
        |    FROM w) x),
        |hd AS (SELECT gram, ${ghashSql("gram")} AS ghash
        |       FROM (SELECT DISTINCT gram FROM g0) d),
        |g AS (SELECT g0.doc_id AS doc_id, g0.pos AS pos, hd.ghash AS ghash
-       |      FROM g0 JOIN hd USING (gram)),
-       |dup AS (
-       |  SELECT ghash FROM (SELECT ghash, doc_id FROM g GROUP BY ghash, doc_id) gd
-       |  GROUP BY ghash HAVING count(*) >= 2),
+       |      FROM g0 JOIN hd USING (gram)),""".stripMargin
+
+  /** The dup CTE over `g`: the hashes in >= 2 distinct documents when
+    * `crossDoc`, else the hashes occurring >= 2 times anywhere.
+    */
+  private def dupSql(crossDoc: Boolean): String =
+    if (crossDoc)
+      """dup AS (
+        |  SELECT ghash FROM (SELECT ghash, doc_id FROM g GROUP BY ghash, doc_id) gd
+        |  GROUP BY ghash HAVING count(*) >= 2),""".stripMargin
+    else "dup AS (SELECT ghash FROM g GROUP BY ghash HAVING count(*) >= 2),"
+
+  /** [[dupSql]]'s Spark side over the positional gram frame `g`. */
+  private def dupHashes(g: DataFrame, crossDoc: Boolean): DataFrame =
+    (if (crossDoc) g.select(col("ghash"), col("doc_id")).distinct() else g.select(col("ghash")))
+      .groupBy(col("ghash")).agg(count(lit(1)).as("n"))
+      .filter(col("n") >= 2).select(col("ghash"))
+
+  /** The span row at gram `width` under the dup criterion `crossDoc` (see
+    * [[dupSql]]): marked positions merge into maximal runs per document.
+    */
+  private def spansDef(width: Int, crossDoc: Boolean): QueryDef = QueryDef(
+    s"""${posGramsSql(width)}
+       |${dupSql(crossDoc)}
        |p AS (SELECT doc_id, pos FROM g JOIN dup USING (ghash)),
        |runs AS (
        |  SELECT doc_id, pos,
@@ -505,21 +531,18 @@ object Pipeline {
        |  FROM p)
        |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
        |       CAST(count(*) AS BIGINT) AS n_grams,
-       |       CAST(count(*) + ${DupNGram - 1} AS BIGINT) AS span_words
+       |       CAST(count(*) + ${width - 1} AS BIGINT) AS span_words
        |FROM runs GROUP BY doc_id, grp""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val g = posGrams(spark, dir)
-    val dup = g.select(col("ghash"), col("doc_id")).distinct()
-      .groupBy(col("ghash")).agg(count(lit(1)).as("nd"))
-      .filter(col("nd") >= 2).select(col("ghash"))
+    val g = posGrams(spark, dir, width)
     val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    g.join(dup, Seq("ghash"), "left_semi")
+    g.join(dupHashes(g, crossDoc), Seq("ghash"), "left_semi")
       .select(col("doc_id"), col("pos"))
       .withColumn("grp", col("pos") - row_number().over(byPos))
       .groupBy(col("doc_id"), col("grp"))
       .agg(min(col("pos")).as("span_start"), count(lit(1)).as("n_grams"))
       .select(col("doc_id"), col("span_start"), col("n_grams"),
-        (col("n_grams") + (DupNGram - 1)).as("span_words"))
+        (col("n_grams") + (width - 1)).as("span_words"))
   }
 
   /** Fine-grained repeated-span extraction — [[dupSpans]] with BOTH of its
@@ -550,42 +573,7 @@ object Pipeline {
     */
   private val FineGram = 4
 
-  val dupSpansFine: QueryDef = QueryDef(
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-       |g0 AS (
-       |  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
-       |    SELECT doc_id,
-       |           unnest([{'pos': i,
-       |                    'gram': array_to_string(words[i:i+${FineGram - 1}], ' ')}
-       |                   for i in range(1, len(words) - ${FineGram - 2})]) AS u
-       |    FROM w) x),
-       |hd AS (SELECT gram, ${ghashSql("gram")} AS ghash
-       |       FROM (SELECT DISTINCT gram FROM g0) d),
-       |g AS (SELECT g0.doc_id AS doc_id, g0.pos AS pos, hd.ghash AS ghash
-       |      FROM g0 JOIN hd USING (gram)),
-       |dup AS (SELECT ghash FROM g GROUP BY ghash HAVING count(*) >= 2),
-       |p AS (SELECT doc_id, pos FROM g JOIN dup USING (ghash)),
-       |runs AS (
-       |  SELECT doc_id, pos,
-       |         pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-       |  FROM p)
-       |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-       |       CAST(count(*) AS BIGINT) AS n_grams,
-       |       CAST(count(*) + ${FineGram - 1} AS BIGINT) AS span_words
-       |FROM runs GROUP BY doc_id, grp""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val g = posGrams(spark, dir, FineGram)
-    val dup = g.groupBy(col("ghash")).agg(count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") >= 2).select(col("ghash"))
-    val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    g.join(dup, Seq("ghash"), "left_semi")
-      .select(col("doc_id"), col("pos"))
-      .withColumn("grp", col("pos") - row_number().over(byPos))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("pos")).as("span_start"), count(lit(1)).as("n_grams"))
-      .select(col("doc_id"), col("span_start"), col("n_grams"),
-        (col("n_grams") + (FineGram - 1)).as("span_words"))
-  }
+  val dupSpansFine: QueryDef = spansDef(FineGram, crossDoc = false)
 
   /** Fixed-window document chunking with overlap — the context-window
     * splitter every retrieval / eval / long-doc-training pipeline runs
@@ -813,21 +801,8 @@ object Pipeline {
     * tokens (the packing rows' bound, not corpus-sized).
     */
   val scrubSpans: QueryDef = QueryDef(
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-       |g0 AS (
-       |  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
-       |    SELECT doc_id,
-       |           unnest([{'pos': i,
-       |                    'gram': array_to_string(words[i:i+${DupNGram - 1}], ' ')}
-       |                   for i in range(1, len(words) - ${DupNGram - 2})]) AS u
-       |    FROM w) x),
-       |hd AS (SELECT gram, ${ghashSql("gram")} AS ghash
-       |       FROM (SELECT DISTINCT gram FROM g0) d),
-       |g AS (SELECT g0.doc_id AS doc_id, g0.pos AS pos, hd.ghash AS ghash
-       |      FROM g0 JOIN hd USING (gram)),
-       |dup AS (
-       |  SELECT ghash FROM (SELECT ghash, doc_id FROM g GROUP BY ghash, doc_id) gd
-       |  GROUP BY ghash HAVING count(*) >= 2),
+    s"""${posGramsSql(DupNGram)}
+       |${dupSql(crossDoc = true)}
        |m AS (SELECT doc_id, pos FROM g JOIN dup USING (ghash)),
        |wp AS (
        |  SELECT doc_id, u.pos AS pos, u.word AS word FROM (
@@ -850,10 +825,7 @@ object Pipeline {
        |FROM cov GROUP BY doc_id""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
     val g = posGrams(spark, dir)
-    val dup = g.select(col("ghash"), col("doc_id")).distinct()
-      .groupBy(col("ghash")).agg(count(lit(1)).as("nd"))
-      .filter(col("nd") >= 2).select(col("ghash"))
-    val marked = g.join(dup, Seq("ghash"), "left_semi")
+    val marked = g.join(dupHashes(g, crossDoc = true), Seq("ghash"), "left_semi")
       .select(col("doc_id"), col("pos"), lit(1).as("flag"))
     val wp = spark.read.parquet(t(dir, "documents"))
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p0", "word")))

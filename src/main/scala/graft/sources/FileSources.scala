@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * Also the one owner of graft's on-disk caches: every derived dataset a
   * row reuses is written through [[writeOnce]] under a [[cacheDir]] key,
   * so the key, the completion marker and the scratch space are decided
-  * here and nowhere else.
+  * here and nowhere else. Likewise for staged stream inputs: [[stageFiles]]
+  * lays them out and [[replay]] is their one reader.
   */
 object FileSources {
 
@@ -168,18 +169,19 @@ object FileSources {
     f.delete(): Unit
   }
 
-  /** Lands `df` in `dest` as single parquet files with pinned, strictly
-    * increasing mtimes: the input a file stream source replays as
-    * deterministic micro-batches, since it takes files oldest-first.
-    * Unchunked, the frame lands as ONE file `$name.parquet` at `mtime`.
+  /** Lands `df` in `dest` as single parquet files that [[replay]] reads
+    * back as deterministic micro-batches. A file's `position` is its place
+    * in replay order: the file stream source takes files oldest-first, so
+    * position p gets the pinned mtime of the base plus p minutes.
+    * Unchunked, the frame lands as ONE file `$name.parquet` at `position`.
     * `chunked`, `df` carries an integer `chunk` column and lands as one
-    * file per chunk value, `${name}_000.parquet`, ... in chunk order, a
-    * minute apart from `mtime` on (one shuffle partition per chunk value,
-    * so the dynamic-partitioned write leaves exactly one data file under
-    * each `chunk=` dir). The raw write goes under `scratch`.
+    * file per chunk value, `${name}_000.parquet`, ... in chunk order, at
+    * positions `position`, `position + 1`, ... (one shuffle partition per
+    * chunk value, so the dynamic-partitioned write leaves exactly one data
+    * file under each `chunk=` dir). The raw write goes under `scratch`.
     */
   private[graft] def stageFiles(df: DataFrame, scratch: String, dest: String, name: String,
-      mtime: Long = 1600000000000L, chunked: Boolean = false): Unit = {
+      position: Int = 0, chunked: Boolean = false): Unit = {
     val raw = new java.io.File(scratch, s"$name.raw")
     val write = if (chunked) df.repartition(col("chunk")).write.partitionBy("chunk")
       else df.coalesce(1).write
@@ -205,11 +207,20 @@ object FileSources {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       // The stream source orders files by mtime; a silently-failed set
       // would replay batches out of order — fail loudly instead.
-      require(to.setLastModified(mtime + i * 60000L),
+      require(to.setLastModified(1600000000000L + (position + i) * 60000L),
         s"failed to set mtime on $to — batch order would be undefined")
     }
     deleteRecursively(raw)
   }
+
+  /** The one reader of a dir [[stageFiles]] filled: a file stream over
+    * `dir`, one file per micro-batch in position order, under the schema
+    * the staged files carry (Spark wrote them, so it is the staged frame's
+    * schema with every field nullable).
+    */
+  private[graft] def replay(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
 
   /** The schema every round trip reads documents back with. */
   private val DocSchema = "doc_id LONG, lang STRING, source STRING, n_chars LONG, text STRING"

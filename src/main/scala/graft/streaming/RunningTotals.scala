@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions.{col, max, round, struct}
 import org.apache.spark.sql.streaming.{
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -41,4 +42,28 @@ class RunningTotals extends StatefulProcessor[Long, (Long, Long), (Long, Long, L
     totals.update((n, s))
     Iterator.single((key, n, s))
   }
+}
+
+object RunningTotals {
+
+  private val longs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+
+  /** `rows` (user_id, v4) keyed by user through the processor: the update
+    * stream of each key's cumulative (user_id, n, sum_v4).
+    */
+  def over(rows: Dataset[(Long, Long)]): DataFrame =
+    rows.groupByKey(_._1)(Encoders.scalaLong)
+      .transformWithState(new RunningTotals, TimeMode.None(), OutputMode.Update())(longs)
+      .toDF("user_id", "n", "sum_v4")
+
+  /** The final state in `emitted` (rows of [[over]]): per key the emission
+    * with the largest n (n strictly increases), reported as (user_id, n,
+    * sum_value = sum_v4 / 1e4 rounded to 2 places). A reporting step over
+    * the sink, not part of the streaming computation.
+    */
+  def finalTotals(emitted: DataFrame): DataFrame =
+    emitted.groupBy(col("user_id"))
+      .agg(max(struct(col("n"), col("sum_v4"))).as("m"))
+      .select(col("user_id"), col("m.n").as("n"),
+        round(col("m.sum_v4") / 10000.0, 2).as("sum_value"))
 }

@@ -12,8 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `SPARK_GRAFT_CPUS`, `FileSources` alone decides the key and the
   * completion marker of an on-disk cache, `IdPack` alone holds the 2³² id
   * packing, `SessionMemo` alone keys in-memory memos, only Bench sweeps
-  * persisted RDDs by hand, and the media rows read payloads through
-  * `Media.payloads` and decode images through `Media.codecs` alone.
+  * persisted RDDs by hand, the media rows read payloads through
+  * `Media.payloads` and decode images through `Media.codecs` alone, a
+  * staged stream input is read back only through `FileSources.replay`, and
+  * `RunningTotals` alone builds its processor.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
@@ -151,6 +153,25 @@ class OnePathSpec extends AnyFunSuite {
   test("the folded Bloom, centroid and oracle-less forks stay gone") {
     for (token <- Seq("bloomPrefilterPartitioned", "embedCentroidsTreeAgg", "rowsOnly"))
       assert(filesWith(token).isEmpty, token)
+  }
+
+  private def count(path: String, token: String): Int =
+    sources.collect { case (p, s) if p.endsWith(path) =>
+      s.split(java.util.regex.Pattern.quote(token), -1).length - 1 }.sum
+
+  test("a staged stream input is read through FileSources.replay: Events streams only eventsStream") {
+    assert(count("graft/queries/Events.scala", "readStream") == 1)
+    assert(sources.exists { case (p, s) =>
+      p.endsWith("graft/queries/Events.scala") && s.contains("normalizeTs(spark.readStream")
+    })
+    assert(count("graft/queries/AnnIngest.scala", "readStream") == 0)
+    for (file <- Seq("graft/queries/Events.scala", "graft/queries/AnnIngest.scala"))
+      assert(count(file, "StructType.fromDDL") == 0, file)
+  }
+
+  test("only RunningTotals.scala constructs the RunningTotals processor") {
+    for (token <- Seq("new RunningTotals", "new graft.streaming.RunningTotals"))
+      assert(filesWith(token, "graft/streaming/RunningTotals.scala").isEmpty, token)
   }
 
   test("no tool waits on Spark with Thread.sleep") {

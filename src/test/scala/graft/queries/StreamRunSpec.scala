@@ -46,9 +46,8 @@ class StreamRunSpec extends AnyFunSuite {
           // two single-file inputs: maxFilesPerTrigger=1 makes them batches 0 and 1
           import spark.implicits._
           val in = s"$work/in"
-          graft.sources.FileSources.stageFiles(Seq(1L, 2L).toDF("x"), work, in, "b0",
-            1600000000000L)
-          graft.sources.FileSources.stageFiles(Seq(3L).toDF("x"), work, in, "b1", 1600000060000L)
+          graft.sources.FileSources.stageFiles(Seq(1L, 2L).toDF("x"), work, in, "b0", 0)
+          graft.sources.FileSources.stageFiles(Seq(3L).toDF("x"), work, in, "b1", 1)
           // prior state: one key set to a non-run value, two keys unset
           spark.conf.set(Width, "3")
           Seq(Provider, NoData).foreach(spark.conf.unset)

@@ -92,6 +92,34 @@ class WriteOnceSpec extends AnyFunSuite {
     }
   }
 
+  test("replay reads staged files one micro-batch each, in position order, under the staged schema") {
+    import org.apache.spark.sql.{DataFrame, Dataset, Row}
+    import org.apache.spark.sql.types.StructType
+    spark.sparkContext.setLogLevel("WARN")
+    withTempDir("graft-replay") { tmp =>
+      val schema = StructType.fromDDL(
+        "id LONG, v DOUBLE, s STRING, t TIMESTAMP, a ARRAY<FLOAT>")
+      def frame(id: Long): DataFrame = spark.createDataFrame(
+        java.util.List.of(Row(id, id * 0.5, s"s$id",
+          java.sql.Timestamp.valueOf("2020-01-01 00:00:00"), Seq(id.toFloat))), schema)
+      val in = s"$tmp/in"
+      // positions run against name order: c replays first, a last
+      for ((name, id, position) <- Seq(("a", 1L, 2), ("b", 2L, 1), ("c", 3L, 0)))
+        FileSources.stageFiles(frame(id), tmp, in, name, position)
+      val replayed = FileSources.replay(spark, in)
+      assert(replayed.schema == schema)
+      val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+      graft.queries.StreamRun(width = None,
+          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .run(spark)(replayed)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          batches.synchronized {
+            batches += batchId -> batch.collect().map(_.getLong(0)).toSeq
+          }: Unit
+        }.option("checkpointLocation", s"$tmp/chk"))
+      assert(batches.toSeq == Seq(0L -> Seq(3L), 1L -> Seq(2L), 2L -> Seq(1L)))
+    }
+  }
+
   test("a partial directory left by a killed run is cleared before the body runs") {
     withTempDir("graft-write-once") { tmp =>
       val out = s"$tmp/cache_5"

@@ -26,11 +26,11 @@ class CheckpointCompatSpec extends AnyFunSuite {
   private val schema = StructType(Seq(
     StructField("user_id", LongType), StructField("cents", LongType)))
 
-  private def stage(in: java.io.File, name: String, mtime: Long,
+  private def stage(in: java.io.File, name: String, position: Int,
       rows: Seq[(Long, Long)]): Unit = {
     import spark.implicits._
     graft.sources.FileSources.stageFiles(rows.toDF("user_id", "cents"),
-      in.getParent, in.getPath, name, mtime)
+      in.getParent, in.getPath, name, position)
   }
 
   private def runPhase(in: java.io.File, chk: String, name: String)(
@@ -51,14 +51,14 @@ class CheckpointCompatSpec extends AnyFunSuite {
       val in = new java.io.File(work, "in")
       val chk = s"$work/chk"
 
-      stage(in, "half_a", 1600000000000L, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
+      stage(in, "half_a", 0, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
       val a = runPhase(in, chk, "ckpt_compat_a") { src =>
         src.groupBy(col("user_id"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
       }
       assert(a == Map(1L -> ((2L, 30L)), 2L -> ((1L, 5L))))
 
-      stage(in, "half_b", 1600000060000L, Seq((1L, 100L), (3L, 7L)))
+      stage(in, "half_b", 1, Seq((1L, 100L), (3L, 7L)))
       // the query-shape-preserving re-spelling: pruned projection + expr route
       val b = runPhase(in, chk, "ckpt_compat_b") { src =>
         src.select(col("user_id"), col("cents"))
@@ -133,11 +133,11 @@ class CheckpointCompatSpec extends AnyFunSuite {
     withTempDir("graft-tws-compat") { work =>
       val in = new java.io.File(work, "in")
 
-      stage(in, "half_a", 1600000000000L, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
+      stage(in, "half_a", 0, Seq((1L, 10L), (1L, 20L), (2L, 5L)))
       val a = runTwsPhase(in, s"$work/chk", s"$work/emit")
       assert(a == Map(1L -> ((2L, 30L)), 2L -> ((1L, 5L))))
 
-      stage(in, "half_b", 1600000060000L, Seq((1L, 100L), (3L, 7L)))
+      stage(in, "half_b", 1, Seq((1L, 100L), (3L, 7L)))
       val b = runTwsPhase(in, s"$work/chk", s"$work/emit")
       assert(b == Map(1L -> ((3L, 130L)), 2L -> ((1L, 5L)), 3L -> ((1L, 7L))),
         "restart from the checkpoint must resume from restored RocksDB ValueState")
