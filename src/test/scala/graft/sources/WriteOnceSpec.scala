@@ -9,7 +9,10 @@ import java.io.File
 /** The write-once contract of [[FileSources.writeOnce]]: a cache counts as
   * complete only when its whole body returned, whatever Spark wrote on the
   * way; scratch space never outlives the body; and the key covers the build
-  * that wrote the cache, so a rebuilt library evicts and rewrites it.
+  * that wrote the cache, so a rebuilt library evicts and rewrites it. Also
+  * the staged-input contract: [[FileSources.replay]] reads what
+  * [[FileSources.stageFiles]] laid out, one file per micro-batch in
+  * position order.
   */
 class WriteOnceSpec extends AnyFunSuite {
 
