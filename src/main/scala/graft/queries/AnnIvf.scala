@@ -44,14 +44,6 @@ object AnnIvf {
   // assigns the full corpus in one distributed pass.
   private val trainCap = 100000L
 
-  /** Candidate pool at probe width `maxProbe`, each neighbor tagged with the
-    * best (lowest) probe rank of a cell it was found in. Narrower probe
-    * widths are in-plan subsets: `filter(probe_rn <= p)` followed by the
-    * same top-k window reproduces an nProbe = p run exactly, because the
-    * model is shared — one KMeans fit, one assignment pass — instead of
-    * refitting per width. That is what makes the probe4-vs-probe2
-    * monotonicity property gateable in a single plan (ADVICE r4 #4).
-    */
   /** Memoized coarse quantizer — one KMeans fit + one full-corpus cell
     * assignment per (session, dir, nCells), shared by all three IVF rows
     * (`q_ann_ivf`, `q_ann_ivf_probe4`, `q_ann_ivf_quantized`). Before this
@@ -177,7 +169,15 @@ object AnnIvf {
       .withColumn("cnorm2", expr("dot_product(cvec, cvec)"))
   }
 
-  /** The query set defaults to the IvfParams contract (`vec_id <
+  /** Candidate pool at probe width `maxProbe`, each neighbor tagged with the
+    * best (lowest) probe rank of a cell it was found in. Narrower probe
+    * widths are in-plan subsets: `filter(probe_rn <= p)` followed by the
+    * same top-k window reproduces an nProbe = p run exactly, because the
+    * model is shared — one KMeans fit, one assignment pass — instead of
+    * refitting per width. That is what makes the probe4-vs-probe2
+    * monotonicity property gateable in a single plan (ADVICE r4 #4).
+    *
+    * The query set defaults to the IvfParams contract (`vec_id <
     * nQueries`); [[Similarity.ragRetrieveIvf]] passes its own stride
     * predicate — the probe machinery is query-set-agnostic by
     * construction (any frame of (query vectors) works; r15).

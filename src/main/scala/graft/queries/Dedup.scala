@@ -267,13 +267,6 @@ object Dedup {
       |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents) d
       |  WHERE len(words) >= 3)""".stripMargin
 
-  /** MinHash + LSH near-dup pairs: 8 minhashes over shingle hashes, 4 bands
-    * of 2, candidates from band-bucket cohabitation (bucket size capped at
-    * 50 — a degenerate band can never go quadratic), then exact Jaccard
-    * verification at >= 0.8. Pairs expand in-row from each bucket's doc
-    * list, so the only shuffles are the band groupBy, the pair distinct,
-    * and the verify join.
-    */
   /** doc_id -> hashed-shingle array: the shared projection feeding both the
     * MinHash banding and the n-gram inverted index (one shingle scan, one
     * md5 pass — [[dropMetricsQ]] persists it so its two consumers share the
@@ -282,10 +275,6 @@ object Dedup {
   private def hashedShingles(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"), transform(col("shingles"), s => tokHash(s)).as("hs"))
 
-  /** doc_id -> (j, band) rows for the MinHash LSH banding over a
-    * [[hashedShingles]] frame; shared by the query and the dropped-bucket
-    * metric so both see the same buckets.
-    */
   /** (doc_id, mins) signature frame — the 8 permuted minima, shared by the
     * banding path and the estimator-quality audit row.
     */
@@ -296,6 +285,10 @@ object Dedup {
     hashes.select(col("doc_id"), array(mins: _*).as("mins"))
   }
 
+  /** doc_id -> (j, band) rows for the MinHash LSH banding over a
+    * [[hashedShingles]] frame; shared by the query and the dropped-bucket
+    * metric so both see the same buckets.
+    */
   private def minhashBands(hashes: DataFrame): DataFrame =
     bandsOfSigs(minhashSigs(hashes))
 
@@ -345,47 +338,65 @@ object Dedup {
        |  WHERE jaccard >= 0.8)""".stripMargin
   }
 
-  /** The verified MinHash pair set plus the persisted shingle table backing
-    * both verify sides. Callers that consume the pairs eagerly (clusters)
-    * unpersist `sh` when done; minhashLsh returns the pairs lazily and
-    * leaves `sh` cached for the plan's consumption.
+  /** The persisted [[shingleDF]] frame by dir. Re-armed like Pipeline's
+    * gram frame: if an external cache sweep (Bench drops ALL caches
+    * between timed runs) has unpersisted it, it is re-persisted on next
+    * use, because its consumers are separate rows that cannot share the
+    * build any other way; a timed run still pays the full build exactly
+    * once.
     */
-  /** LSH candidate pairs + the persisted shingle table — the machinery
+  private[queries] val shingleCache = new SessionMemo[DataFrame](_.unpersist(false))
+
+  /** The memoized shingle frame: the one persisted `sh` feeding the
+    * minhashes and both verify sides of every MinHash-family row.
+    */
+  private def shingles(spark: SparkSession, dir: String): DataFrame = {
+    val sh = shingleCache.getOrElseUpdate(spark, dir, Seq("documents.parquet"), "shingles") {
+      shingleDF(spark, dir)
+    }
+    if (sh.storageLevel == org.apache.spark.storage.StorageLevel.NONE) sh.persist()
+    sh
+  }
+
+  /** LSH candidate pairs over the memoized shingle frame — the machinery
     * shared by Jaccard verification ([[minhashPairsDF]]) and containment
     * scoring ([[dedupContainment]]): identical buckets, identical caps,
     * identical pair expansion, so the two similarity notions are measured
     * over the SAME candidate set.
     */
-  private def candidatePairsDF(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val sh = shingleDF(spark, dir).persist() // feeds minhashes + both verify sides
-    (candidatePairsFrom(sh), sh)
-  }
-
-  /** Band-bucket candidate pairs from an already-persisted shingle frame. */
-  private def candidatePairsFrom(sh: DataFrame): DataFrame = {
-    val bands = minhashBands(hashedShingles(sh))
+  private def candidatePairsDF(spark: SparkSession, dir: String): DataFrame = {
+    val bands = minhashBands(hashedShingles(shingles(spark, dir)))
     val buckets = bands.groupBy(col("j"), col("band"))
       .agg(array_sort(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")).between(2, 50))
     Pairs.ordered(buckets, "ds", "doc_a", "doc_b").distinct()
   }
 
-  private def minhashPairsDF(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (cand, sh) = candidatePairsDF(spark, dir)
+  /** The verified MinHash pair set: the LSH candidates whose exact shingle
+    * Jaccard is >= 0.8.
+    */
+  private def minhashPairsDF(spark: SparkSession, dir: String): DataFrame = {
+    val sh = shingles(spark, dir)
     val x = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sa"))
     val y = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sb"))
-    val pairs = cand.join(x, "doc_a").join(y, "doc_b")
+    candidatePairsDF(spark, dir).join(x, "doc_a").join(y, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         round(size(array_intersect(col("sa"), col("sb"))).cast("double") /
           size(array_union(col("sa"), col("sb"))), 4).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
-    (pairs, sh)
   }
 
+  /** MinHash + LSH near-dup pairs: 8 minhashes over shingle hashes, 4 bands
+    * of 2, candidates from band-bucket cohabitation (bucket size capped at
+    * 50 — a degenerate band can never go quadratic), then exact Jaccard
+    * verification at >= 0.8. Pairs expand in-row from each bucket's doc
+    * list, so the only shuffles are the band groupBy, the pair distinct,
+    * and the verify join.
+    */
   val minhashLsh: QueryDef = QueryDef(
     s"""WITH $minhashPairsCtes
        |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin) { (spark, dir) =>
-    minhashPairsDF(spark, dir)._1
+    minhashPairsDF(spark, dir)
   }
 
   /** Estimator-quality audit for the MinHash machinery — per LSH candidate
@@ -428,10 +439,9 @@ object Dedup {
        |JOIN mh x ON x.doc_id = cand.doc_a JOIN mh y ON y.doc_id = cand.doc_b
        |JOIN sh sx ON sx.doc_id = cand.doc_a JOIN sh sy ON sy.doc_id = cand.doc_b""".stripMargin) {
     (spark, dir) =>
-    val sh = shingleDF(spark, dir).persist()
+    val sh = shingles(spark, dir)
     val mh = minhashSigs(hashedShingles(sh))
-    val cand = candidatePairsFrom(sh)
-    cand
+    candidatePairsDF(spark, dir)
       .join(mh.select(col("doc_id").as("doc_a"), col("mins").as("ma")), "doc_a")
       .join(mh.select(col("doc_id").as("doc_b"), col("mins").as("mb")), "doc_b")
       .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sa")), "doc_a")
@@ -473,10 +483,10 @@ object Dedup {
        |WHERE len(list_intersect(x.shingles, y.shingles)) * 1000000
        |      // least(len(x.shingles), len(y.shingles)) >= 600000""".stripMargin) {
     (spark, dir) =>
-    val (cand, sh) = candidatePairsDF(spark, dir)
+    val sh = shingles(spark, dir)
     val x = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sa"))
     val y = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sb"))
-    cand.join(x, "doc_a").join(y, "doc_b")
+    candidatePairsDF(spark, dir).join(x, "doc_a").join(y, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("sa"), col("sb"))).cast("long").as("n_common"),
         size(col("sa")).cast("long").as("n_a"),
@@ -567,11 +577,7 @@ object Dedup {
        |       least(src, min(dst)) AS cluster_id,
        |       least(src, min(dst)) = src AS keep
        |FROM reach GROUP BY src""".stripMargin) { (spark, dir) =>
-    val (pairsAll, sh) = minhashPairsDF(spark, dir)
-    val pairs = pairsAll.select(col("doc_a"), col("doc_b"))
-    // The edge checkpoint materializes the whole LSH pipeline; sh's cache
-    // can go the moment that happens (nothing recomputes through it).
-    ccFromPairs(spark, pairs, onEdgesMaterialized = () => { sh.unpersist(); () })._1
+    ccFromPairs(spark, minhashPairsDF(spark, dir).select(col("doc_a"), col("doc_b")))._1
   }
 
   /** Connected components over an undirected `(doc_a, doc_b)` pair graph —
@@ -581,14 +587,8 @@ object Dedup {
     * materialized generations it took to converge (1 = the fused first
     * round sufficed). See [[clusters]]'s scaladoc for the algorithm,
     * checkpointing, and memory-release contract.
-    *
-    * `onEdgesMaterialized` fires once the edge set is checkpointed —
-    * callers use it to release caches the edge pipeline was reading.
     */
-  private[graft] def ccFromPairs(
-      spark: SparkSession,
-      pairs: DataFrame,
-      onEdgesMaterialized: () => Unit = () => ()): (DataFrame, Int) = {
+  private[graft] def ccFromPairs(spark: SparkSession, pairs: DataFrame): (DataFrame, Int) = {
     // Reliable-checkpoint mode (real clusters: a localCheckpoint dies with
     // its executor): when the `graft.cc.checkpointDir` session conf is set,
     // every generation goes through HDFS-backed Dataset.checkpoint()
@@ -617,7 +617,6 @@ object Dedup {
     val edges = checkpointed(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
-    onEdgesMaterialized()
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum(col("cluster_id")), lit(0L))).collect()(0).getLong(0)
     def propagate(l: DataFrame): DataFrame = {
@@ -820,6 +819,13 @@ object Dedup {
     }
   }
 
+  /** doc_id -> distinct hashed-shingle set; shared by the query and the
+    * dropped-posting metric.
+    */
+  private def ngramHsets(spark: SparkSession, dir: String): DataFrame =
+    hashedShingles(shingleDF(spark, dir))
+      .select(col("doc_id"), array_distinct(col("hs")).as("hs"))
+
   /** N-gram Jaccard dedup with a df-capped inverted index over *hashed*
     * shingles: candidate pairs share at least one rare shingle hash
     * (document frequency in [2, 5]); verified at exact Jaccard >= 0.5 on the
@@ -829,13 +835,6 @@ object Dedup {
     * -vocabulary corpus); and pairs are expanded in-row from each bucket's
     * (<= 5)-doc list — no posting-list self-join shuffle at all.
     */
-  /** doc_id -> distinct hashed-shingle set; shared by the query and the
-    * dropped-posting metric.
-    */
-  private def ngramHsets(spark: SparkSession, dir: String): DataFrame =
-    hashedShingles(shingleDF(spark, dir))
-      .select(col("doc_id"), array_distinct(col("hs")).as("hs"))
-
   val ngramJaccard: QueryDef = QueryDef(
     s"""WITH $shingleSql,
        |hsets AS (
@@ -1095,16 +1094,13 @@ object Dedup {
        |  FROM pairs
        |  JOIN documents da ON da.doc_id = pairs.doc_a
        |  JOIN documents db ON db.doc_id = pairs.doc_b) v""".stripMargin) { (spark, dir) =>
-    val (pairs, sh) = minhashPairsDF(spark, dir)
+    val pairs = minhashPairsDF(spark, dir)
     // Widen.scan (optimization r16, guide §2.5): the O(len²) Levenshtein
     // DP runs in the stage of this scan — single-threaded on the
     // one-row-group test input without the widening guard.
     val docs = Widen.scan(spark, spark.read.parquet(t(dir, "documents")))
     val da = docs.select(col("doc_id").as("doc_a"), col("text").as("ta"))
     val db = docs.select(col("doc_id").as("doc_b"), col("text").as("tb"))
-    // sh stays cached for the plan's three consumers (bands + both verify
-    // sides), as in [[minhashLsh]]; `_ = sh` documents the shared ownership.
-    val _ = sh
     broadcast(pairs.select(col("doc_a"), col("doc_b")))
       .join(da, "doc_a").join(db, "doc_b")
       .select(col("doc_a"), col("doc_b"),

@@ -751,30 +751,6 @@ object Events {
         round(expr("percentile(value, 0.99)"), 4).as("p99"))
   }
 
-  /** Stream-stream interval join — click-to-purchase attribution: every
-    * purchase a user makes within one hour of a click, emitted as the
-    * (click, purchase) pair with the lag in whole seconds. The last big
-    * Structured Streaming primitive in the surface: BOTH sides are
-    * unbounded streams, so each buffers keyed state and the time-interval
-    * condition plus per-side watermarks bound that state — rows older than
-    * `watermark - interval` are evicted, which is what makes the operator
-    * viable on an unbounded 100 TB/day ingest (an un-watermarked
-    * stream-stream join grows state forever).
-    *
-    * On bounded input an INNER interval join emits exactly the batch join
-    * result regardless of arrival order (watermarks only bound state and
-    * late data), so the DuckDB batch join is a hash-exact oracle.
-    *
-    * Timestamp basis: the watermark/time-constraint columns are
-    * `timestamp_micros(tus)` and the emitted lag is micros arithmetic
-    * (`div 1000000`), equal to the oracle's `epoch_ns … // 1000000000`
-    * exactly (micros × 1000 = nanos, both floor-divide to whole seconds).
-    */
-  /** The interval-join pipeline shared by [[streamJoin]] (inner) and
-    * [[streamJoinOuter]] (left outer): both sides of the same bounded file
-    * stream, per-side 1-hour watermarks, the `[c_tsw, c_tsw + 1h]` time
-    * condition, run to completion into a memory sink named `sinkName`.
-    */
   /** Fail-fast guard shared by every streaming row whose cross-batch
     * correctness rests on the events table being ONE data file (so the
     * whole stream is a single micro-batch): the interval joins (watermark
@@ -806,6 +782,11 @@ object Events {
     coalesce(col("c_user_id"), col("p_user_id")).as("user_id"),
     expr("(p_tus - c_tus) div 1000000").as("lag_s"))
 
+  /** The interval-join pipeline shared by [[streamJoin]] (inner) and
+    * [[streamJoinOuter]] (left outer): both sides of the same bounded file
+    * stream, per-side 1-hour watermarks, the `[c_tsw, c_tsw + 1h]` time
+    * condition, run to completion into a memory sink named `sinkName`.
+    */
   private def runIntervalJoin(
       spark: SparkSession,
       dir: String,
@@ -853,6 +834,25 @@ object Events {
     }
   }
 
+  /** Stream-stream interval join — click-to-purchase attribution: every
+    * purchase a user makes within one hour of a click, emitted as the
+    * (click, purchase) pair with the lag in whole seconds. The last big
+    * Structured Streaming primitive in the surface: BOTH sides are
+    * unbounded streams, so each buffers keyed state and the time-interval
+    * condition plus per-side watermarks bound that state — rows older than
+    * `watermark - interval` are evicted, which is what makes the operator
+    * viable on an unbounded 100 TB/day ingest (an un-watermarked
+    * stream-stream join grows state forever).
+    *
+    * On bounded input an INNER interval join emits exactly the batch join
+    * result regardless of arrival order (watermarks only bound state and
+    * late data), so the DuckDB batch join is a hash-exact oracle.
+    *
+    * Timestamp basis: the watermark/time-constraint columns are
+    * `timestamp_micros(tus)` and the emitted lag is micros arithmetic
+    * (`div 1000000`), equal to the oracle's `epoch_ns … // 1000000000`
+    * exactly (micros × 1000 = nanos, both floor-divide to whole seconds).
+    */
   val streamJoin: QueryDef = QueryDef(
     """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
       |       c.user_id AS user_id,

@@ -845,37 +845,6 @@ object Pipeline {
           .cast("long").as("scrubbed_fp"))
   }
 
-  /** Distributed global row numbering — contiguous 0-based sequence ids over
-    * the corpus in (lang, doc_id) order, the "assign training-example ids /
-    * shard offsets" step that precedes sharded dataset writes. The naive
-    * Spark spelling (`row_number() OVER (ORDER BY ...)` with no PARTITION BY)
-    * collapses the whole corpus into ONE task — the classic global-sort
-    * bottleneck. This is the two-phase shape that scales instead:
-    *
-    *   1. `repartitionByRange` on the order key — each partition holds a
-    *      contiguous key range, ranges ascend with partition id (Spark's
-    *      RangePartitioner contract) — then `sortWithinPartitions`;
-    *   2. `monotonically_increasing_id` right after the sort — its
-    *      per-partition counter increments by one per row in partition
-    *      order, so `mid - min(mid over the partition)` IS the local rank
-    *      (the DataFrame zipWithIndex idiom). Crucially this needs NO
-    *      window: a `row_number() OVER (PARTITION BY pid)` here would
-    *      demand hash-clustering on pid that the range exchange cannot
-    *      prove, re-shuffling the whole corpus a second time (observed in
-    *      the first cut of this plan);
-    *   3. per-partition (count, min mid) — one tiny agg of #partitions
-    *      rows — prefix-summed into start offsets and broadcast back;
-    *   4. global_id = partition offset + (mid - partition base).
-    *
-    * The only data-sized movement is the range exchange itself; everything
-    * after is partition-local projection plus a broadcast of #partitions
-    * rows. The frame is persisted so phases 3 and 4 see the SAME partition
-    * assignment and mids (both `spark_partition_id` and the id generator
-    * are non-deterministic expressions, which also stops Catalyst from
-    * reordering them across the sort). The offsets prefix sum runs in a
-    * single-partition window over #partitions rows — bounded by cluster
-    * width, not data.
-    */
   /** [[globalRank]]'s persisted ranged frames by tag: one sweep's four
     * rank frames (globalIndex, shardBalance, two epochShuffle epochs)
     * share one group. Not re-armed after a cache sweep: the row's one plan
@@ -916,6 +885,37 @@ object Pipeline {
       .drop("pid", "mid", "base", "offset")
   }
 
+  /** Distributed global row numbering — contiguous 0-based sequence ids over
+    * the corpus in (lang, doc_id) order, the "assign training-example ids /
+    * shard offsets" step that precedes sharded dataset writes. The naive
+    * Spark spelling (`row_number() OVER (ORDER BY ...)` with no PARTITION BY)
+    * collapses the whole corpus into ONE task — the classic global-sort
+    * bottleneck. This is the two-phase shape that scales instead:
+    *
+    *   1. `repartitionByRange` on the order key — each partition holds a
+    *      contiguous key range, ranges ascend with partition id (Spark's
+    *      RangePartitioner contract) — then `sortWithinPartitions`;
+    *   2. `monotonically_increasing_id` right after the sort — its
+    *      per-partition counter increments by one per row in partition
+    *      order, so `mid - min(mid over the partition)` IS the local rank
+    *      (the DataFrame zipWithIndex idiom). Crucially this needs NO
+    *      window: a `row_number() OVER (PARTITION BY pid)` here would
+    *      demand hash-clustering on pid that the range exchange cannot
+    *      prove, re-shuffling the whole corpus a second time (observed in
+    *      the first cut of this plan);
+    *   3. per-partition (count, min mid) — one tiny agg of #partitions
+    *      rows — prefix-summed into start offsets and broadcast back;
+    *   4. global_id = partition offset + (mid - partition base).
+    *
+    * The only data-sized movement is the range exchange itself; everything
+    * after is partition-local projection plus a broadcast of #partitions
+    * rows. The frame is persisted so phases 3 and 4 see the SAME partition
+    * assignment and mids (both `spark_partition_id` and the id generator
+    * are non-deterministic expressions, which also stops Catalyst from
+    * reordering them across the sort). The offsets prefix sum runs in a
+    * single-partition window over #partitions rows — bounded by cluster
+    * width, not data.
+    */
   val globalIndex: QueryDef = QueryDef(
     """SELECT doc_id,
       |       CAST(row_number() OVER (ORDER BY lang, doc_id) - 1 AS BIGINT)

@@ -193,43 +193,6 @@ object ReferenceOps {
     }
   }
 
-  /** The reference's ACTUAL workload as ONE structured-streaming program
-    * (search.py:205-358's driver loop re-composed from this engine's two
-    * flagship surfaces): the DSv2 stencil micro-batch stream feeds
-    * [[graft.spark.SparkClient]] evaluation WAVES through `foreachBatch`,
-    * and each wave's evaluations land in a batchId-keyed exactly-once
-    * parquet sink — the [[Events.foreachBatchSink]] discipline (dynamic
-    * partition overwrite of the batch's own `batch=<id>` dir, so a
-    * replayed micro-batch overwrites itself, never appends beside
-    * itself). Points are the golden 500-step d=2 stencil prefix around
-    * the flagship start (10, 15) with unit steps — the first-wave
-    * geometry of [[searchEvals]]' reference run; costs are the sphere
-    * objective evaluated ON EXECUTORS by `Objective.applyBatch` inside a
-    * SparkClient wave (the same `runJob` path every convergence test
-    * exercises). The oracle derives (x, y, cost) in SQL from the
-    * SAME golden VALUES as [[stencilPrefix]]: identical IEEE double
-    * literals, identical add/multiply order on both engines.
-    *
-    * Restart story (pinned by SearchStreamSpec): the committed offset
-    * cursor is the only state, and any offset range replays bit-for-bit
-    * (pure generator), so a stream stopped after N points and restarted
-    * with a larger maxPoints resumes at N+1 — the sink holds every idx
-    * exactly once with no dedup anywhere.
-    *
-    * Scale shape: the per-batch `collect` is WAVE-sized by construction
-    * (pointsPerBatch = the reference client's feed granularity — a
-    * driver-side orchestration step, not a data-plane collect); the
-    * objective evaluation and the sink write are executor-side. Stated
-    * honestly: `foreachBatch` SERIALIZES waves — one wave is in flight
-    * per micro-batch, and a wave is one SparkClient task, so each
-    * `pointsPerBatch`-point wave runs on one core in one `applyBatch`
-    * call (SearchStreamSpec pins this). Raising pointsPerBatch makes
-    * waves bigger, not wider; the batch path
-    * ([[searchEvals]]/q_search_e2e) is where concurrent-wave occupancy
-    * lives. That is the right trade HERE: the stream buys exactly-once
-    * restartable evaluation accounting, not throughput; a slow objective
-    * belongs on the batch path, or vectorizes inside `applyBatch`.
-    */
   /** (dims, maxHalvings, pointsPerBatch, start point). dims and
     * maxHalvings are additionally PINNED BY THE ORACLE's shape (it reuses
     * [[stencilPrefix]]'s d=2/mh=7 golden VALUES and the x/y column pair) —
@@ -272,6 +235,43 @@ object ReferenceOps {
     } finally client.shutdown()
   }
 
+  /** The reference's ACTUAL workload as ONE structured-streaming program
+    * (search.py:205-358's driver loop re-composed from this engine's two
+    * flagship surfaces): the DSv2 stencil micro-batch stream feeds
+    * [[graft.spark.SparkClient]] evaluation WAVES through `foreachBatch`,
+    * and each wave's evaluations land in a batchId-keyed exactly-once
+    * parquet sink — the [[Events.foreachBatchSink]] discipline (dynamic
+    * partition overwrite of the batch's own `batch=<id>` dir, so a
+    * replayed micro-batch overwrites itself, never appends beside
+    * itself). Points are the golden 500-step d=2 stencil prefix around
+    * the flagship start (10, 15) with unit steps — the first-wave
+    * geometry of [[searchEvals]]' reference run; costs are the sphere
+    * objective evaluated ON EXECUTORS by `Objective.applyBatch` inside a
+    * SparkClient wave (the same `runJob` path every convergence test
+    * exercises). The oracle derives (x, y, cost) in SQL from the
+    * SAME golden VALUES as [[stencilPrefix]]: identical IEEE double
+    * literals, identical add/multiply order on both engines.
+    *
+    * Restart story (pinned by SearchStreamSpec): the committed offset
+    * cursor is the only state, and any offset range replays bit-for-bit
+    * (pure generator), so a stream stopped after N points and restarted
+    * with a larger maxPoints resumes at N+1 — the sink holds every idx
+    * exactly once with no dedup anywhere.
+    *
+    * Scale shape: the per-batch `collect` is WAVE-sized by construction
+    * (pointsPerBatch = the reference client's feed granularity — a
+    * driver-side orchestration step, not a data-plane collect); the
+    * objective evaluation and the sink write are executor-side. Stated
+    * honestly: `foreachBatch` SERIALIZES waves — one wave is in flight
+    * per micro-batch, and a wave is one SparkClient task, so each
+    * `pointsPerBatch`-point wave runs on one core in one `applyBatch`
+    * call (SearchStreamSpec pins this). Raising pointsPerBatch makes
+    * waves bigger, not wider; the batch path
+    * ([[searchEvals]]/q_search_e2e) is where concurrent-wave occupancy
+    * lives. That is the right trade HERE: the stream buys exactly-once
+    * restartable evaluation accounting, not throughput; a slow objective
+    * belongs on the batch path, or vectorizes inside `applyBatch`.
+    */
   val searchStream: QueryDef = QueryDef({
     val (_, _, _, (cx, cy)) = SearchStreamConf
     s"""SELECT idx, $cx + x AS x, $cy + y AS y,

@@ -879,6 +879,20 @@ object Similarity {
         col("tok"), col("cum_tok"))
   }
 
+  /** The assembled IVF context frame itself (query_id, rank, doc_id,
+    * cosine, tok, cum_tok) — the gate row [[ragRetrieveIvf]] reduces it
+    * to properties; AnnIvfSpec reads it directly to measure context recall
+    * and check the budget/dedup invariants row-by-row.
+    */
+  private[queries] def ragIvfContextForTest(spark: SparkSession, dir: String): DataFrame = {
+    val p = AnnIvf.IvfParams(topK = RagTopK)
+    val ivfHits = AnnIvf.topKOf(
+      AnnIvf.ivfCandidates(spark, dir, p, p.nProbe, col("vec_id") % RagStride === 0),
+      RagTopK)
+      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("cosine"))
+    ragStages(spark, dir, ivfHits)
+  }
+
   /** The warehouse-scale form of [[ragRetrieve]], delivered as its own
     * gated row (VERDICT r14 #3 — the exact row documented this swap; now
     * it is measured): stage 1 is the [[AnnIvf]] coarse-quantizer probe
@@ -919,20 +933,6 @@ object Similarity {
     * the 10^9-vector path; stages 2-3 stay per-query-windowed exactly
     * as the exact row (≤ [[RagTopK]] rows per window).
     */
-  /** The assembled IVF context frame itself (query_id, rank, doc_id,
-    * cosine, tok, cum_tok) — the gate row above reduces it to properties;
-    * AnnIvfSpec reads it directly to measure context recall and check the
-    * budget/dedup invariants row-by-row.
-    */
-  private[queries] def ragIvfContextForTest(spark: SparkSession, dir: String): DataFrame = {
-    val p = AnnIvf.IvfParams(topK = RagTopK)
-    val ivfHits = AnnIvf.topKOf(
-      AnnIvf.ivfCandidates(spark, dir, p, p.nProbe, col("vec_id") % RagStride === 0),
-      RagTopK)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("cosine"))
-    ragStages(spark, dir, ivfHits)
-  }
-
   val ragRetrieveIvf: QueryDef = QueryDef(
     s"""SELECT CAST((SELECT count(*) FROM embeddings WHERE vec_id % $RagStride = 0)
        |         AS BIGINT) AS n_queries,

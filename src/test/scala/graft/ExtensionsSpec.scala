@@ -1,7 +1,7 @@
 package graft
 
 import graft.TempDirs.withTempDir
-import org.apache.spark.sql.SparkSession
+import graft.TestSession.spark
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite-shared session, ignoring new extensions by design.)
   */
 class ExtensionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-extensions-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("injected function descriptors evaluate through pure SQL") {
     spark.sparkContext.setLogLevel("WARN")

@@ -14,15 +14,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * packing, `SessionMemo` alone keys in-memory memos, only Bench sweeps
   * persisted RDDs by hand, the media rows read payloads through
   * `Media.payloads` and decode images through `Media.codecs` alone, a
-  * staged stream input is read back only through `FileSources.replay`, and
-  * `RunningTotals` alone builds its processor.
+  * staged stream input is read back only through `FileSources.replay`,
+  * `RunningTotals` alone builds its processor, and no scaladoc block sits
+  * directly above another, where Scaladoc attaches it to nothing. In the
+  * test sources (this file aside), `TestSession` is the one session, so no
+  * test names `SparkSession.builder`, and only StreamRunSpec, which tests
+  * how `StreamRun` restores confs, writes a session conf by hand; every
+  * other test scopes its confs with `Confs.withConfs`.
   * Keeps hand-rolled copies from growing back.
   */
 class OnePathSpec extends AnyFunSuite {
 
-  private val root = java.nio.file.Paths.get("src/main/scala")
-
-  private lazy val sources: Seq[(String, String)] = {
+  private def scan(dir: String): Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get(dir)
     require(java.nio.file.Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
     val stream = java.nio.file.Files.walk(root)
     try {
@@ -31,6 +35,12 @@ class OnePathSpec extends AnyFunSuite {
         .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
     } finally stream.close()
   }
+
+  private lazy val sources: Seq[(String, String)] = scan("src/main/scala")
+
+  // this file names every token its pins ban
+  private lazy val testSources: Seq[(String, String)] =
+    scan("src/test/scala").filterNot(_._1.endsWith("graft/OnePathSpec.scala"))
 
   private def filesWith(token: String, except: String*): Seq[String] =
     sources.collect { case (p, s) if s.contains(token) && !except.exists(p.endsWith) => p }.sorted
@@ -172,6 +182,27 @@ class OnePathSpec extends AnyFunSuite {
   test("only RunningTotals.scala constructs the RunningTotals processor") {
     for (token <- Seq("new RunningTotals", "new graft.streaming.RunningTotals"))
       assert(filesWith(token, "graft/streaming/RunningTotals.scala").isEmpty, token)
+  }
+
+  test("no scaladoc block sits directly above another") {
+    val orphans = sources.flatMap { case (p, s) =>
+      s.linesIterator.map(_.trim).sliding(2).zipWithIndex.collect {
+        case (Seq(prev, line), i) if prev.endsWith("*/") && line.startsWith("/**") => s"$p:${i + 2}"
+      }
+    }
+    assert(orphans.isEmpty, orphans)
+  }
+
+  test("no test source builds a session: every suite runs on TestSession") {
+    assert(testSources.exists(_._1.endsWith("graft/TestSession.scala")))
+    assert(testSources.collect { case (p, s) if s.contains("SparkSession.builder") => p }.isEmpty)
+  }
+
+  test("among test sources only StreamRunSpec.scala sets or unsets a session conf") {
+    for (token <- Seq("spark.conf.set(", "conf.unset("))
+      assert(testSources.collect {
+        case (p, s) if s.contains(token) && !p.endsWith("graft/queries/StreamRunSpec.scala") => p
+      }.isEmpty, token)
   }
 
   test("no tool waits on Spark with Thread.sleep") {

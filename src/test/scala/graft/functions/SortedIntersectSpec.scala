@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
+import graft.TestSession.spark
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -15,13 +16,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * DataFrame.
   */
 class SortedIntersectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-sorted-intersect-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Ascending distinct longs: a narrow range makes overlaps likely, the
     * full range reaches the extremes and the sign boundary.
@@ -71,10 +65,8 @@ class SortedIntersectSpec extends AnyFunSuite {
     // an RDD source, so the optimizer cannot fold the projection on the driver
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     graft.GraftExtensions.register(spark)
-    def run(confs: (String, String)*): Seq[Any] = {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try df.selectExpr("sorted_intersect_size(a, b)").collect().map(_.get(0)).toSeq
-      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    def run(confs: (String, String)*): Seq[Any] = graft.queries.Confs.withConfs(spark, confs: _*) {
+      df.selectExpr("sorted_intersect_size(a, b)").collect().map(_.get(0)).toSeq
     }
     assert(run("spark.sql.codegen.wholeStage" -> "true") == want)
     assert(run("spark.sql.codegen.wholeStage" -> "false") == want)

@@ -1,7 +1,7 @@
 package graft.queries
 
+import graft.TestSession.spark
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** IVF ANN quality: recall@10 against the exact brute-force ranking, and
@@ -11,13 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class AnnIvfSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-ivf-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("IVF recall@10 vs brute force is substantial; candidates are pruned") {
     spark.sparkContext.setLogLevel("WARN")

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.TempDirs.withTempDir
+import graft.TestSession.spark
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the as-of carry's STRICT-less and NULL-coherence semantics on a
@@ -19,16 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - the tolerance variant additionally NULLs a match older than 1 h.
   */
 class AsofSemanticsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-asof-semantics-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val HourUs = 3600000000L
 

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.TempDirs.withTempDir
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.TestSession.spark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,16 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * test is the one that goes red, not 11 gate rows.
   */
 class EventsReadSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-events-read-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // Milli-aligned instants so the MILLIS encoding is lossless too; one sits
   // inside a US DST transition day to catch any zone-shift bug.
@@ -50,28 +41,26 @@ class EventsReadSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     withTempDir("graft-evread") { root =>
       val outKey = "spark.sql.parquet.outputTimestampType"
-      val prevOut = spark.conf.get(outKey)
-      try {
-        spark.conf.set(outKey, "TIMESTAMP_MICROS")
-        val microsDir = writeFixture(s"$root/micros") { df =>
-          df.select(col("event_id"), timestamp_micros(col("us")).as("ts"))
-        }
+      val (microsDir, ntzDir) = Confs.withConfs(spark, outKey -> "TIMESTAMP_MICROS") {
         // TIMESTAMP_NTZ columns write as INT64 micros with isAdjustedToUTC
         // = false — byte-compatible with the round-9 regenerated testdata.
-        // (Written under the UTC session zone pinned by this spec's builder,
-        // so the stored wall clock is the UTC rendering of each instant.)
-        val ntzDir = writeFixture(s"$root/ntz") { df =>
+        // (Written under the UTC session zone the test session pins, so
+        // the stored wall clock is the UTC rendering of each instant.)
+        (writeFixture(s"$root/micros") { df =>
+          df.select(col("event_id"), timestamp_micros(col("us")).as("ts"))
+        }, writeFixture(s"$root/ntz") { df =>
           df.select(col("event_id"),
             timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
-        }
-        spark.conf.set(outKey, "TIMESTAMP_MILLIS")
-        val millisDir = writeFixture(s"$root/millis") { df =>
+        })
+      }
+      val millisDir = Confs.withConfs(spark, outKey -> "TIMESTAMP_MILLIS") {
+        writeFixture(s"$root/millis") { df =>
           df.select(col("event_id"), timestamp_micros(col("us")).as("ts"))
         }
-        assert(tusVia(microsDir) == instantsUs.sorted, "MICROS path")
-        assert(tusVia(ntzDir) == instantsUs.sorted, "NTZ-encoded path")
-        assert(tusVia(millisDir) == instantsUs.sorted, "MILLIS path")
-      } finally spark.conf.set(outKey, prevOut)
+      }
+      assert(tusVia(microsDir) == instantsUs.sorted, "MICROS path")
+      assert(tusVia(ntzDir) == instantsUs.sorted, "NTZ-encoded path")
+      assert(tusVia(millisDir) == instantsUs.sorted, "MILLIS path")
     }
   }
 
@@ -88,22 +77,14 @@ class EventsReadSpec extends AnyFunSuite {
         df.select(col("event_id"),
           timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
       }
-      val tzKey = "spark.sql.session.timeZone"
-      val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-      val prevTz = spark.conf.get(tzKey)
-      try {
-        spark.conf.set(ntzKey, "true")
-        for (tz <- Seq("UTC", "America/New_York", "Asia/Kolkata")) {
-          spark.conf.set(tzKey, tz)
+      for (tz <- Seq("UTC", "America/New_York", "Asia/Kolkata"))
+        Confs.withConfs(spark, "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true",
+            "spark.sql.session.timeZone" -> tz) {
           val df = spark.read.parquet(s"$ntzDir/events.parquet")
           assert(df.schema("ts").dataType == TimestampNTZType, s"fixture not NTZ under $tz")
           val tus = Events.normalizeTs(df).select("tus").collect().map(_.getLong(0)).toSeq.sorted
           assert(tus == instantsUs.sorted, s"NTZ branch under session tz $tz: $tus")
         }
-      } finally {
-        spark.conf.set(tzKey, prevTz)
-        spark.conf.set(ntzKey, "false")
-      }
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.TestSession.spark
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** Property pin for the shared in-row pair expansion (code-review r12
@@ -10,17 +10,6 @@ import org.scalacheck.{Gen, Prop, Properties}
   * equals the naive reference (all i < j element pairs, bag semantics).
   */
 object PairsSpec extends Properties("graft.queries.Pairs") {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-pairs-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 
   private val arrays: Gen[List[List[Long]]] =
     Gen.listOfN(5, Gen.chooseNum(0, 5).flatMap(n =>

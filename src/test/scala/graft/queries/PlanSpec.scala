@@ -1,7 +1,7 @@
 package graft.queries
 
+import graft.TestSession.spark
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SimpleMode
 import org.apache.spark.sql.functions.{count, lit, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,16 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-plan-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def plan(name: String): String = {
     spark.sparkContext.setLogLevel("ERROR")
@@ -67,8 +57,7 @@ class PlanSpec extends AnyFunSuite {
     // At test scale Catalyst correctly auto-broadcasts the small side; turn
     // that off to expose the plan a warehouse-scale join would get — the
     // bucketed layout must make it a zero-Exchange SortMergeJoin.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Confs.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q_bucketed_join")
       assert(p.contains("SortMergeJoin"), p)
       val joinSection = p.substring(p.indexOf("SortMergeJoin"))
@@ -76,7 +65,7 @@ class PlanSpec extends AnyFunSuite {
       assert(!joinSection.contains("Exchange hashpartitioning(o_orderkey"), p)
       assert(p.contains("Bucketed: true"), p)
       assert(p.contains("SelectedBucketsCount: 8 out of 8"), p)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("q_embed_neardup never hints a broadcast of the corpus side") {
@@ -813,9 +802,7 @@ class PlanSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS graft_cbo.orders_pin")
     spark.sql(s"CREATE TABLE graft_cbo.orders_pin USING parquet LOCATION '$sf/orders.parquet'")
     spark.sql("ANALYZE TABLE graft_cbo.orders_pin COMPUTE STATISTICS FOR COLUMNS o_orderstatus")
-    val prev = spark.conf.getOption("spark.sql.cbo.enabled")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
+    try Confs.withConfs(spark, "spark.sql.cbo.enabled" -> "true") {
       val df = spark.sql("SELECT * FROM graft_cbo.orders_pin WHERE o_orderstatus = 'F'")
       val est = df.queryExecution.optimizedPlan.stats.rowCount
       val actual = df.count()
@@ -823,13 +810,7 @@ class PlanSpec extends AnyFunSuite {
       val e = est.get.toLong
       assert(e >= actual / 2 && e <= actual * 2,
         s"estimate $e vs actual $actual — stats not consumed or badly off")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.cbo.enabled", v)
-        case None    => spark.conf.unset("spark.sql.cbo.enabled")
-      }
-      spark.sql("DROP TABLE IF EXISTS graft_cbo.orders_pin")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS graft_cbo.orders_pin")
   }
 
   test("q_nested_fields: struct surgery is pure projection — one scan, zero exchanges") {
@@ -876,17 +857,14 @@ class PlanSpec extends AnyFunSuite {
     // split. This is the engine-level answer to join skew that the salted
     // join handles by hand — both live in the repertoire, this pin keeps
     // the automatic one honest.
-    val confs = Seq(
+    Confs.withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val left = spark.range(0, 200000)
         .select(when($"id" % 20 === 0, $"id" % 100).otherwise(lit(0L)).as("k"),
           $"id".as("v"))
@@ -896,9 +874,6 @@ class PlanSpec extends AnyFunSuite {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"expected AQE to mark the hot partition skew=true:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

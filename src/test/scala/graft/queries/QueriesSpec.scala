@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.TempDirs.withTempDir
+import graft.TestSession.spark
 import graft.SparkEntry
 import graft.functions.PolyHash
 import graft.multimodal.Media
@@ -21,16 +22,6 @@ class QueriesSpec extends AnyFunSuite with Eventually {
   implicit override val patienceConfig: PatienceConfig = PatienceConfig(timeout = Span(10, Seconds))
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-queries-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // Rows that start a streaming query (StreamRun) or scope confs around an
   // eager loop (Confs.withConfs): each must leave the session's explicit
@@ -91,6 +82,37 @@ class QueriesSpec extends AnyFunSuite with Eventually {
       "IVF quantizer for the first dir must be evicted on dir switch")
     // and the evicted dir still works (recompute, not failure)
     assert(SparkEntry.queries("q_dup_ngrams")(spark, sf).count() > 0)
+  }
+
+  test("the MinHash rows share one memoized shingle frame and never re-cache it") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.setLogLevel("WARN")
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-cache-log", null, null, false, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = "org.apache.spark.sql.execution.CacheManager"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    appender.start()
+    val config = new LoggerConfig(logger, Level.DEBUG, false)
+    config.addAppender(appender, Level.DEBUG, null)
+    ctx.getConfiguration.addLogger(logger, config)
+    ctx.updateLoggers()
+    try {
+      for (row <- Seq("q_dedup_minhash_lsh", "q_dedup_containment", "q_dedup_edit_verify",
+          "q_minhash_est_audit"))
+        assert(SparkEntry.queries(row)(spark, sf).count() > 0, row)
+    } finally {
+      ctx.getConfiguration.removeLogger(logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(!lines.asScala.exists(_.contains("already cached")), lines.asScala.mkString("\n"))
+    assert(Dedup.shingleCache.keysFor(spark).size == 1, Dedup.shingleCache.keysFor(spark))
   }
 
   test("halfResize keeps even rows/cols and sums kept RGB bytes (odd dims)") {
@@ -885,16 +907,11 @@ class QueriesSpec extends AnyFunSuite with Eventually {
 
   test("stream dedup equals batch distinct on bounded input") {
     val stream = Events.streamDedup.fn(spark, sf)
-    // The stream query restores the nanos-as-long flag on exit (ADVICE r6
-    // #4), so this batch comparison read sets it for itself and cleans up.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
-      val batch = spark.read.parquet(s"$sf/events.parquet")
-        .select("user_id", "event_type").distinct()
-      assert(stream.exceptAll(batch).count() == 0L &&
-        batch.exceptAll(stream).count() == 0L)
-      assert(stream.count() == batch.count())
-    } finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val batch = spark.read.parquet(s"$sf/events.parquet")
+      .select("user_id", "event_type").distinct()
+    assert(stream.exceptAll(batch).count() == 0L &&
+      batch.exceptAll(stream).count() == 0L)
+    assert(stream.count() == batch.count())
   }
 
   test("incremental dedup keeps only batch content unseen in the corpus") {
@@ -1281,8 +1298,7 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     withTempDir("graft-cc-ck") { ckDir =>
-      spark.conf.set("graft.cc.checkpointDir", ckDir)
-      try {
+      Confs.withConfs(spark, "graft.cc.checkpointDir" -> ckDir) {
         // two components: a 5-chain (min 0) and a triangle (min 10)
         val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
           (10L, 11L), (11L, 12L), (10L, 12L)).toDF("doc_a", "doc_b")
@@ -1320,7 +1336,7 @@ class QueriesSpec extends AnyFunSuite with Eventually {
         val recomputed = labels.collect()
           .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
         assert(recomputed == got, "recompute after unpersist diverged")
-      } finally spark.conf.unset("graft.cc.checkpointDir")
+      }
     }
   }
 
@@ -1452,16 +1468,13 @@ class QueriesSpec extends AnyFunSuite with Eventually {
 
   test("recursion past cteRecursionLevelLimit fails loudly, never truncates") {
     spark.sparkContext.setLogLevel("ERROR")
-    val key = "spark.sql.cteRecursionLevelLimit"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "5")
-    try {
+    Confs.withConfs(spark, "spark.sql.cteRecursionLevelLimit" -> "5") {
       val e = intercept[Exception] {
         SparkEntry.queries("q_recursive_cte")(spark, sf).collect()
       }
       assert(e.getMessage.toLowerCase.contains("recursion"),
         s"expected a recursion-limit error, got: ${e.getMessage.take(200)}")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("CSV parse modes agree on the malformed file: DROPMALFORMED keeps the good rows, FAILFAST throws") {

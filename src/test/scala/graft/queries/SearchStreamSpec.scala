@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.TempDirs.withTempDir
-import org.apache.spark.sql.SparkSession
+import graft.TestSession.spark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Restart-recovery pin for q_search_stream (VERDICT r12 #6): the streaming
@@ -12,14 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * the golden stencil prefix on every evaluation.
   */
 class SearchStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-search-stream-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def readEvals(out: String): Map[Int, (Double, Double, Double)] =
     spark.read.parquet(s"$out/data")

@@ -1,7 +1,7 @@
 package graft.queries
 
+import graft.TestSession.spark
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the ADVICE-r11 atomicity fix: SessionMemo's check-evict-build
@@ -13,13 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * breaks in either direction.
   */
 class SessionMemoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-session-memo-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("concurrent alternating keys: every build is live or released exactly once") {
     val builds = new AtomicInteger(0)

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.TempDirs.withTempDir
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import graft.TestSession.spark
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * — under both wait modes (the trigger decides which one runs).
   */
 class StreamRunSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streamrun-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val Width = "spark.sql.shuffle.partitions"
   private val Provider = "spark.sql.streaming.stateStore.providerClass"

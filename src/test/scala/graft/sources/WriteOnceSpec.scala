@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.TempDirs.withTempDir
-import org.apache.spark.sql.SparkSession
+import graft.TestSession.spark
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.File
@@ -15,13 +15,6 @@ import java.io.File
   * position order.
   */
 class WriteOnceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-write-once-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def names(dir: String): Set[String] =
     Option(new File(dir).list()).map(_.toSet).getOrElse(Set.empty)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import graft.TestSession.spark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ZonedParquetSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-zoned-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Reference Morton interleave: bit k of x to bit 2k, bit k of y to
     * bit 2k+1 — the definition the SQL expression must reproduce.

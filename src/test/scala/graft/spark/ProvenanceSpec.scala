@@ -1,7 +1,8 @@
 package graft.spark
 
+import graft.TestSession.spark
 import graft.search.{Objective, Search, SearchOptions, SearchResult, SerialClient}
-import org.apache.spark.sql.{Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -12,13 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * aggregate reads without an Exchange.
   */
 class ProvenanceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val res: SearchResult = {
     val client = new SerialClient

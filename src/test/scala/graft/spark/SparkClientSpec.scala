@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TestSession.spark
 import graft.search.{Objective, Search, SearchOptions}
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
@@ -7,7 +8,6 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 import org.apache.spark.{SparkContext, TaskContext, GraftListenerBus}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
@@ -118,13 +118,6 @@ object EvalThreadLog {
 class SparkClientSpec extends AnyFunSuite with Eventually {
 
   implicit override val patienceConfig: PatienceConfig = PatienceConfig(timeout = Span(10, Seconds))
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Jobs started under one client's job group. */
   private final class GroupJobs(group: String) extends SparkListener {
@@ -288,8 +281,8 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     val x0 = Array(10.0, 15.0)
     // x0 throws once a sibling wave is running; every other point hangs
     // until its task is interrupted. At most one wave in flight per core
-    // (the session may be local[2] when another suite built it) keeps a
-    // core for x0 whichever job Spark schedules first.
+    // (the test session's 4) keeps a core for x0 whichever job Spark
+    // schedules first.
     val faulty = Objective { x =>
       if (x.sameElements(x0)) {
         val sibling = JobGate.entered.tryAcquire(10, TimeUnit.SECONDS)

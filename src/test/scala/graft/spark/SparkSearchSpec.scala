@@ -1,8 +1,8 @@
 package graft.spark
 
+import graft.TestSession.spark
 import graft.SparkEntry
 import graft.search._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** JVM-global evaluation-concurrency gauge for the overlap test: objective
@@ -26,13 +26,6 @@ object ConcurrencyGauge {
   * flagship entry smoke.
   */
 class SparkSearchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val sphere = Objective(x => x.map(v => v * v).sum)
   private val x0 = Array(10.0, 15.0)

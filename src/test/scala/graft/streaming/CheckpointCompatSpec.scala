@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.TempDirs.withTempDir
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.TestSession.spark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,14 +15,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * loss rather than passing vacuously.
   */
 class CheckpointCompatSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-ckpt-compat-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val schema = StructType(Seq(
     StructField("user_id", LongType), StructField("cents", LongType)))
@@ -92,10 +85,8 @@ class CheckpointCompatSpec extends AnyFunSuite {
     */
   private def runTwsPhase(in: java.io.File, chk: String, emit: String): Map[Long, (Long, Long)] = {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.queries.Confs.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val src = spark.readStream.schema(schema).parquet(in.toString)
         .select(col("user_id"), col("cents")).as[(Long, Long)]
       val q = src.groupByKey(_._1)
@@ -117,9 +108,6 @@ class CheckpointCompatSpec extends AnyFunSuite {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
     // per-key max(n): n strictly increases across a key's emissions
     spark.read.parquet(emit).groupBy(col("user_id"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.TestSession.spark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, expr, timestamp_millis}
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,16 +22,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * less). A matched left row never re-emits at eviction.
   */
 class StreamOuterJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-stream-outer-join-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("left-outer interval join: null emission is strict upper-bound < watermark") {
     import spark.implicits._

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.TempDirs.withTempDir
+import graft.TestSession.spark
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.queries.Confs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful streaming sessionization vs its batch twin: every session the
@@ -12,16 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streaming-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   test("flatMapGroupsWithState sessions match the batch window sessions") {
     spark.sparkContext.setLogLevel("WARN")
@@ -166,20 +159,13 @@ class StreamingSpec extends AnyFunSuite {
     // state that outgrows the heap runs on RocksDB. The gate semantics
     // must be backend-invariant — run the exact streaming-dedup row under
     // RocksDB and compare to the batch DISTINCT.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Confs.withConfs(spark, RocksDb) {
       val stream = graft.queries.Events.streamDedup.fn(spark, sf)
       val batch = graft.queries.Events.readEvents(spark, sf)
         .select(col("user_id"), col("event_type")).distinct()
       assert(stream.count() == batch.count())
       assert(stream.exceptAll(batch).count() == 0L &&
         batch.exceptAll(stream).count() == 0L)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -281,11 +267,7 @@ class StreamingSpec extends AnyFunSuite {
     // advances the watermark past the close and the timer fires, emitting
     // the session with the batch-2 extension included. A per-batch
     // (instead of cross-batch) implementation would emit two sessions.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Confs.withConfs(spark, RocksDb) {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val mem = MemoryStream[(Long, Long)] // (user_id, tus)
       val q = mem.toDS()
@@ -314,9 +296,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(rows() == Set((1L, d, d + 1200000000L, 3L, 30000L)),
           s"timer must close the extended session exactly once: ${rows()}")
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -336,11 +315,7 @@ class StreamingSpec extends AnyFunSuite {
     // is THE SAME: no emission. Any premature session row here means a
     // stale timer leaked an emission. Only when the watermark finally
     // passes the EXTENDED close may the one merged session appear.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Confs.withConfs(spark, RocksDb) {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val mem = MemoryStream[(Long, Long)] // (user_id, tus)
       val q = mem.toDS()
@@ -377,9 +352,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(rows().filter(_._1 == 1L) == Set((1L, d, d + 20 * min, 2L, 20000L)),
           s"extended session must emit exactly once at its true close: ${rows()}")
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -394,11 +366,7 @@ class StreamingSpec extends AnyFunSuite {
     // and (c) earlier emissions stay in the update-mode sink unchanged —
     // the exact semantics the q_transform_state gate's max(struct)
     // final-state selection relies on.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Confs.withConfs(spark, RocksDb) {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val mem = MemoryStream[(Long, Long)]
       val q = mem.toDS().groupByKey(_._1)
@@ -420,9 +388,6 @@ class StreamingSpec extends AnyFunSuite {
         q.processAllAvailable()
         assert(rows().contains((2L, 2L, 9L)) && rows().contains((3L, 1L, -4L)))
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 

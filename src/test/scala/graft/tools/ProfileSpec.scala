@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.TempDirs.withTempDir
+import graft.TestSession.spark
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
@@ -18,16 +19,6 @@ import graft.{Bench, SparkEntry}
 class ProfileSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-profile-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def profileLines(
       rows: Seq[(String, (SparkSession, String) => DataFrame)], runs: Int): Seq[String] = {
