@@ -8,10 +8,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.util.LongAccumulator
 
 import graft.Bench
 import graft.Bench.{d3, jsonString}
 import graft.queries.IdPack
+import graft.search.{EvalClient, Objective, Search, SearchOptions, SerialClient}
+import graft.spark.SparkClient
 
 /** The one profiling main: per-run wall times AND what each run posted to
   * Spark's listener bus, measured under graft.Bench's own session and run
@@ -32,6 +35,17 @@ import graft.queries.IdPack
   *     key summed over them, and a stage table (id, tasks, task run ms,
   *     stage wall ms, name).
   *
+  *   Profile --search <runs>
+  *     The search table, the guard for objective-dominated searches: one
+  *     seeded `minimize` per cell and run over d ∈ {2, 8, 32} × batchsize
+  *     ∈ {1, 6, 64} × objective ∈ {µs, 10 ms per point} × {SerialClient,
+  *     SparkClient}. A 10 ms cell stops after about 128 points (`maxTasks`
+  *     waves); a µs cell runs to convergence. Prints a Markdown table: per
+  *     cell the evaluations of one run, evals/s (median and range over the
+  *     runs), the mean number of waves in flight at each submit, and the
+  *     objective share, time inside `applyBatch` over wall time (up to the
+  *     core count on SparkClient). The last line is the table's wall time.
+  *
   *   Profile --gen <srcSfDir> <outDir> <K>
   *     Writes a deterministic ×K scale-up of the three tables the
   *     amplifying rows read (lineitem, orders, documents) as K DISJOINT
@@ -50,12 +64,17 @@ import graft.queries.IdPack
 object Profile {
   def main(args: Array[String]): Unit = args.toSeq match {
     case Seq("--gen", src, out, k) => gen(src, out, k.toInt)
+    case Seq("--search", runs) =>
+      val spark = Bench.benchSession(Bench.envCpus)
+      try searchTable(spark, runs.toInt)(println)
+      finally spark.stop()
     case Seq(qs, runs, dirs @ _*) if dirs.nonEmpty && qs != "--gen" =>
       val spark = Bench.benchSession(Bench.envCpus)
       try profile(spark, qs.split(',').toSeq.map(q => q -> Bench.row(q)), runs.toInt, dirs)(println)
       finally spark.stop()
     case _ => sys.error(
-      "usage: Profile <q1,q2,...> <runs> <sfDir> [<sfDir> ...] | Profile --gen <srcSfDir> <outDir> <K>")
+      "usage: Profile <q1,q2,...> <runs> <sfDir> [<sfDir> ...] | Profile --search <runs> | " +
+        "Profile --gen <srcSfDir> <outDir> <K>")
   }
 
   /** Profiles every (sfDir, row) pair and hands each JSON line to `emit`.
@@ -170,6 +189,84 @@ object Profile {
         }
       }
     }
+  }
+
+  /** Points a 10 ms cell of the search table evaluates, about. */
+  private val CostlyPoints = 128
+
+  /** Sum of squares around 1/3 in every coordinate, computed after
+    * spinning for `spinMs` per point (a CPU-bound objective); the time
+    * inside `applyBatch` is added to `ns`.
+    */
+  private final class TableObjective(spinMs: Long, ns: LongAccumulator) extends Objective {
+    def apply(x: Array[Double]): Double = {
+      val until = System.nanoTime() + spinMs * 1000000L
+      while (System.nanoTime() < until) {}
+      var s = 0.0
+      var i = 0
+      while (i < x.length) { val d = x(i) - 1.0 / 3; s += d * d; i += 1 }
+      s
+    }
+    override def applyBatch(xs: IndexedSeq[Array[Double]]): Array[Double] = {
+      val t0 = System.nanoTime()
+      val out = super.applyBatch(xs)
+      ns.add(System.nanoTime() - t0)
+      out
+    }
+  }
+
+  /** Delegating client that counts the waves in flight at each submit. */
+  private final class InFlight(inner: EvalClient) extends EvalClient {
+    private val live = mutable.HashSet.empty[Long]
+    private var submits, sum = 0L
+    def mean: Double = if (submits == 0) 0.0 else sum.toDouble / submits
+    override def submit(objective: Objective, points: IndexedSeq[Array[Double]]): Long = {
+      val id = inner.submit(objective, points)
+      live += id
+      submits += 1
+      sum += live.size
+      id
+    }
+    override def hasResults: Boolean = inner.hasResults
+    override def nextBatch(block: Boolean): Seq[(Long, Array[Double])] = {
+      val out = inner.nextBatch(block)
+      out.foreach(r => live -= r._1)
+      out
+    }
+    override def capacityHint: Option[(Int, Int)] = inner.capacityHint
+    override def shutdown(): Unit = inner.shutdown()
+  }
+
+  /** Runs the search table (see the usage above) and hands each line to
+    * `emit`.
+    */
+  private[graft] def searchTable(spark: SparkSession, runs: Int)(emit: String => Unit): Unit = {
+    val ns = spark.sparkContext.longAccumulator("profile.search.objective.ns")
+    val start = System.nanoTime()
+    emit("| d | batch | objective | client | evals | evals/s | evals/s range | in flight | objective share |")
+    emit("| ---: | ---: | --- | --- | ---: | ---: | --- | ---: | ---: |")
+    for (d <- Seq(2, 8, 32); b <- Seq(1, 6, 64); spinMs <- Seq(0L, 10L); onSpark <- Seq(false, true)) {
+      val recs = (1 to runs).map { _ =>
+        val client = new InFlight(if (onSpark) new SparkClient(spark) else new SerialClient)
+        val opts = SearchOptions(stopratio = 1e-2, batchsize = Option.when(b > 1)(b), seed = Some(1),
+          maxTasks = Option.when(spinMs > 0)(math.max(1, CostlyPoints / b).toLong))
+        val ns0 = ns.sum
+        val t0 = System.nanoTime()
+        val res = try Search.minimize(new TableObjective(spinMs, ns), Array.fill(d)(3.0),
+          Array.fill(d)(1.0), client, opts)
+          finally client.shutdown()
+        val wallNs = (System.nanoTime() - t0).toDouble
+        (res.evaluations.size, res.evaluations.size / wallNs * 1e9, client.mean, (ns.sum - ns0) / wallNs)
+      }
+      val rates = recs.map(_._2)
+      val objective = if (spinMs > 0) s"$spinMs ms" else "us"
+      val clientName = if (onSpark) "SparkClient" else "SerialClient"
+      emit(f"| $d | $b | $objective | $clientName | ${recs.head._1} | ${Bench.median(rates)}%.1f | " +
+        f"${rates.min}%.1f..${rates.max}%.1f | ${Bench.median(recs.map(_._3))}%.2f | " +
+        f"${Bench.median(recs.map(_._4))}%.3f |")
+    }
+    emit(f"table wall time: ${(System.nanoTime() - start) / 1e9}%.1f s ($runs run(s) per cell, " +
+      s"${spark.sparkContext.defaultParallelism} cores)")
   }
 
   /** Copy i shifts keys by i·KeyStride, far above any sf0.1 key. The graph
