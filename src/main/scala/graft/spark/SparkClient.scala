@@ -1,136 +1,179 @@
 package graft.spark
 
 import graft.search.{EvalClient, Objective}
-import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.{GraftRpc, SparkContext, TaskContext}
 import org.apache.spark.sql.SparkSession
 
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, LinkedBlockingQueue, TimeUnit}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.LinkedBlockingQueue
+import java.util.concurrent.atomic.AtomicLong
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
-import scala.util.control.NonFatal
 
 /** Spark-backed evaluation client: submitted waves (one trial point, or
   * `batchsize` points — reference search.py:185-201) are evaluated by
-  * asynchronous Spark jobs; completed waves land on a completion queue the
-  * driver loop drains. This preserves the reference's occupancy model (dask
-  * futures continuously fed to a scheduler, clients.py:9-24) on Spark's job
-  * and task model, in three layers.
+  * long-lived Spark tasks that pull them from the driver; completed waves
+  * land on a completion queue the driver loop drains. This keeps the
+  * reference's occupancy model (dask workers kept alive and fed futures,
+  * clients.py:9-24) without a Spark job per wave.
   *
-  * Waves. A wave is the unit of evaluation: it is one RDD element, and
-  * `Objective.applyBatch` (the vectorized form) receives it whole, in one
-  * call, as the reference hands one batch to one future.
+  * Waves. A wave is the unit of evaluation: `Objective.applyBatch` (the
+  * vectorized form) receives it whole, in one call, as the reference hands
+  * one batch to one future.
   *
-  * Tasks. A job's waves, in wave order, are laid contiguously over `k`
-  * tasks, a rule from measured cost. Each task times its `applyBatch` calls
-  * and returns the nanos with the costs. The client keeps two running
-  * estimates: objective time per point, per `Objective` instance, and job
-  * overhead, the least of its jobs' wall time minus the longest task's
-  * objective time (a wait for a free core only adds to that sample, so the
-  * least one leaves the wait out). A job of `n` points in `waves` waves then
-  * runs in `k = clamp(ceil(n * perPoint / overhead), 1, waves)` tasks. A
-  * microsecond objective packs a job into one task, so per-task
-  * deserialization is paid once per job; an objective that costs more than
-  * the overhead keeps one task per wave. Until both estimates exist for an
-  * objective (cold start), every wave is its own task. The estimates are
-  * dropped by `shutdown()`.
+  * Evaluators. Each client registers one driver endpoint ([[GraftRpc]]).
+  * An evaluator is one Spark job whose tasks each loop: pull a wave from
+  * the endpoint, run `applyBatch` on it, push its costs back; the push
+  * carries the next pull. Messages hold Scala and JDK types only; the
+  * `Objective` travels in the task closure, so an evaluator serves one
+  * `Objective` instance and waves holding different instances never share
+  * a job. Completion order is free, as in the reference
+  * (search.py:299-345).
   *
-  * Jobs. At most `defaultParallelism` jobs are in flight (the figure
-  * `capacityHint` reports), one per `graft-spark-eval` thread. A thread
-  * whose job has ended takes *every* wave queued at that moment into one
-  * job. An idle thread, woken by a submit, takes its share of the queue,
-  * `ceil(queued / free slots)` waves, so a burst of submits while several
-  * threads are idle is spread over them, not folded into one job. So while
-  * fewer waves than free slots are queued each wave is its own job, and
-  * when the queue is deeper the per-job overhead is paid once per free
-  * slot, not once per wave. Folding a burst would report its waves to the
-  * search at once, and the greedy asynchronous acceptance converges less
-  * often the more completions arrive together. Only waves holding the same
-  * `Objective` instance share a job. Completion is reported per wave, in
-  * submission order within a job; completion order across jobs is free,
-  * as in the reference (search.py:299-345).
+  * Slots. Tasks hold at most `defaultParallelism` slots (the figure
+  * `capacityHint` reports), and only while the client has an undelivered
+  * wave. A queued wave goes to a waiting task of its objective; failing
+  * that, an evaluator of `min(queued waves, free slots)` tasks starts.
+  * While one is starting up, later waves of its objective wait for its
+  * first pull, or for the caller to block in `nextBatch`, before a top-up
+  * starts, so a burst of submits is served by one top-up, not one job per
+  * wave. A waiting pull is answered "stop" once every submitted wave has
+  * been delivered by `nextBatch`, so another Spark job run between two
+  * waves (a streaming sink write, say) finds its slots free; a waiting
+  * task is also stopped when another objective's wave has no slot. A
+  * search that keeps waves pending keeps its tasks.
   *
-  * A job is one `SparkContext.runJob` call whose task closure is declared
-  * here, not `mapPartitions(...).collect()`. Spark cleans every closure a
-  * job carries by parsing the bytecode of its declaring class, and
-  * `collect` adds two declared in `RDD` and `SparkContext`; with evaluation
-  * jobs this small that parsing was most of the driver's CPU. So one
-  * closure is cleaned per job, and the companion object that declares it
-  * is kept small.
+  * An evaluator is one `SparkContext.runJob` call whose task closure is
+  * declared here, not `mapPartitions(...).collect()`. Spark cleans every
+  * closure a job carries by parsing the bytecode of its declaring class,
+  * so one closure is cleaned per job, and the companion object that
+  * declares it is kept small. Each job is run on its own
+  * `graft-spark-eval` thread, which ends with the job.
   *
-  * Teardown: every job runs under this client's own job group with
-  * interrupt-on-cancel; a failed job fails every wave it carried, and
-  * `shutdown()` cancels the group, then stops and joins the pool.
+  * Failure and teardown: every job runs under this client's own job group
+  * with interrupt-on-cancel. A failed job fails every wave it had taken
+  * and not reported, and the queued waves of its objective; a retried
+  * task attempt re-runs its partition's wave.
+  * `shutdown()` answers every waiting pull with "stop", returns once every
+  * evaluator job has ended, so their task-end accumulators have been
+  * merged, and unregisters the endpoint. It cancels the job group only
+  * when a wave is still being evaluated (a hung or abandoned objective) or
+  * a job outlives the wait.
   */
 final class SparkClient(spark: SparkSession) extends EvalClient {
 
-  import SparkClient.{Packing, Wave}
+  import SparkClient.{Evaluator, Reply, Stop, Wave}
 
   private val sc = spark.sparkContext
   private[spark] val jobGroup = s"graft-spark-eval-${SparkClient.clients.incrementAndGet()}"
-  private val ids = new AtomicLong(0L)
-  private val pendingCount = new AtomicInteger(0)
-  private val jobsInFlight = new AtomicInteger(0)
-  private val queued = new java.util.ArrayDeque[Wave]()
-  private val packing = new Packing
   private val completed = new LinkedBlockingQueue[(Long, Try[Array[Double]])]()
-  private val threads = new ConcurrentLinkedQueue[Thread]()
-  private val pool = Executors.newFixedThreadPool(math.max(1, sc.defaultParallelism), { r =>
-    val t = new Thread(r, "graft-spark-eval")
-    t.setDaemon(true)
-    threads.add(t)
-    t
-  })
 
-  override def submit(objective: Objective, points: IndexedSeq[Array[Double]]): Long = {
-    val id = ids.incrementAndGet()
-    pendingCount.incrementAndGet()
-    queued.synchronized(queued.add(Wave(id, objective, points)))
-    pool.execute(() => drain())
-    id
+  // Guarded by this client's lock, taken by the caller's thread, the
+  // endpoint and the evaluator threads.
+  private var ids = 0L
+  /** Submitted waves not yet delivered by `nextBatch`. */
+  private var pending = 0
+  private var closed = false
+  private val queued = new java.util.ArrayDeque[Wave]()
+  private val evaluators = mutable.LinkedHashMap.empty[Long, Evaluator]
+
+  private val unregister = GraftRpc.serve(sc, jobGroup) {
+    case ((job: Long, part: Int, wave: Long, costs: Array[Double]), reply) => pull(job, part, wave, costs, reply)
+    case (other, _) => throw new IllegalArgumentException(s"unexpected message $other")
   }
 
-  /** The oldest queued wave and later ones holding the same objective,
-    * counted as one job in flight: all of them if `all`, else a free slot's
-    * share, `ceil(queued / free slots)`. Nothing once the client is shut
-    * down. */
-  private def take(all: Boolean): Seq[Wave] = queued.synchronized {
-    if (pool.isShutdown || queued.isEmpty) Nil
-    else {
-      val free = math.max(1, sc.defaultParallelism - jobsInFlight.get())
-      val limit = if (all) Int.MaxValue else (queued.size + free - 1) / free
-      val objective = queued.peekFirst().objective
-      val out = mutable.ArrayBuffer.empty[Wave]
-      val it = queued.iterator()
-      while (it.hasNext && out.size < limit) {
-        val w = it.next()
-        if (w.objective eq objective) { out += w; it.remove() }
+  override def submit(objective: Objective, points: IndexedSeq[Array[Double]]): Long = synchronized {
+    if (closed) throw new IllegalStateException("SparkClient is shut down")
+    ids += 1
+    pending += 1
+    queued.add(Wave(ids, objective, points.toArray))
+    dispatch()
+    ids
+  }
+
+  /** A task of evaluator `job`, partition `part`, pushes the costs of
+    * `wave` (none on its first pull) and waits for its next wave. */
+  private def pull(job: Long, part: Int, wave: Long, costs: Array[Double], reply: Reply): Unit =
+    synchronized {
+      evaluators.get(job) match {
+        case None => reply(Stop) // the job has ended: a killed task's last pull
+        case Some(ev) =>
+          ev.unstarted -= part
+          ev.taken.get(part) match {
+            case Some(w) if w.id == wave =>
+              ev.taken -= part
+              completed.put((w.id, Success(costs)))
+              ev.parked(part) = reply
+            // a retried attempt re-runs the wave its failed attempt held
+            case Some(w) => reply((w.id, w.points))
+            case None => ev.parked(part) = reply
+          }
+          dispatch()
       }
-      jobsInFlight.incrementAndGet()
-      out.toSeq
+    }
+
+  /** Hands queued waves to waiting tasks of their objective, stops waiting
+    * tasks nothing will feed and starts evaluators for the waves left: at
+    * once if no evaluator of their objective is starting up, else only
+    * when the caller is `waiting` for a completion. */
+  private def dispatch(waiting: Boolean = false): Unit = {
+    val it = queued.iterator()
+    while (it.hasNext) {
+      val w = it.next()
+      evaluators.valuesIterator.find(ev => (ev.objective eq w.objective) && ev.parked.nonEmpty)
+        .foreach { ev =>
+          val (part, reply) = ev.parked.head
+          ev.parked -= part
+          ev.taken(part) = w
+          reply((w.id, w.points))
+          it.remove()
+        }
+    }
+    val slots = sc.defaultParallelism
+    def live = evaluators.valuesIterator.map(_.live).sum
+    if (closed || pending == 0 || (!queued.isEmpty && live >= slots))
+      evaluators.valuesIterator.foreach(_.stopParked())
+    if (!closed) {
+      val byObjective = new java.util.IdentityHashMap[Objective, Integer]()
+      queued.forEach(w => byObjective.merge(w.objective, 1, (a, b) => a + b))
+      byObjective.forEach { (objective, waves) =>
+        val starting = evaluators.valuesIterator.filter(ev => (ev.objective eq objective) && ev.unstarted.nonEmpty).toSeq
+        val tasks = math.min(waves - starting.map(_.unstarted.size).sum, slots - live)
+        if (tasks > 0 && (starting.isEmpty || waiting)) start(objective, tasks)
+      }
     }
   }
 
-  /** Runs one job per take until the queue is empty: first a free slot's
-    * share, then, each time a job ends, every queued wave. Every submit
-    * schedules a drain after queueing its wave, so no wave is left behind. */
-  private def drain(): Unit = {
-    var waves = take(all = false)
-    while (waves.nonEmpty) {
-      val costs =
-        try Success(SparkClient.evaluate(sc, jobGroup, packing, waves))
-        catch {
-          case e: InterruptedException =>
-            // shutdown() interrupted the wait: make sure the job it was
-            // waiting on is cancelled even if it started after the cancel.
-            cancelJobs()
-            Failure(e)
-          case NonFatal(e) => Failure(e)
-        } finally jobsInFlight.decrementAndGet()
-      waves.indices.foreach(i => completed.put((waves(i).id, costs.map(_(i)))))
-      waves = take(all = true)
+  private def start(objective: Objective, tasks: Int): Unit = {
+    val ev = new Evaluator(SparkClient.jobs.incrementAndGet(), objective, tasks)
+    evaluators(ev.id) = ev
+    val endpoint = jobGroup
+    val t = new Thread(() => {
+      val result = Try {
+        sc.setJobGroup(jobGroup, s"graft SparkClient evaluator: $tasks task(s)", interruptOnCancel = true)
+        SparkClient.evaluate(sc, endpoint, ev.id, objective, tasks)
+      }
+      ended(ev, result)
+    }, "graft-spark-eval")
+    t.setDaemon(true)
+    ev.thread = t
+    t.start()
+  }
+
+  /** A finished evaluator fails the waves it took and did not report. A
+    * failed one also fails the queued waves of its objective: a job whose
+    * tasks fail before their first pull (an objective that does not
+    * deserialize, say) took none, and its waves would be queued forever. */
+  private def ended(ev: Evaluator, result: Try[Unit]): Unit = synchronized {
+    evaluators -= ev.id
+    val cause = result.failed.getOrElse(new IllegalStateException("an evaluator ended holding waves"))
+    ev.taken.valuesIterator.foreach(w => completed.put((w.id, Failure(cause))))
+    ev.taken.clear()
+    if (result.isFailure) queued.removeIf { w =>
+      (w.objective eq ev.objective) && { completed.put((w.id, Failure(cause))); true }
     }
+    ev.stopParked()
+    dispatch()
   }
 
   override def hasResults: Boolean = !completed.isEmpty
@@ -138,12 +181,15 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
   override def nextBatch(block: Boolean): Seq[(Long, Array[Double])] = {
     val out = mutable.ArrayBuffer.empty[(Long, Try[Array[Double]])]
     var first = completed.poll()
-    if (first == null && block && pendingCount.get() > 0) {
-      // Wait for the next completion; drain() posts one for every wave it
-      // takes, success or failure. pendingCount moves only on this
-      // caller's thread (submit and the decrements below), so it cannot
-      // drop during the wait, and the wait is unbounded: a job that never
-      // ends, or a wave left queued by shutdown(), blocks it.
+    val wait = first == null && block && synchronized {
+      dispatch(waiting = true)
+      pending > 0
+    }
+    if (wait) {
+      // Wait for the next completion: every wave taken by a task completes,
+      // success or failure. pending drops only on this caller's thread, so
+      // it cannot reach 0 during the wait, and the wait is unbounded: a wave
+      // never taken, such as one left queued by shutdown(), blocks it.
       first = completed.take()
     } else if (first == null && !block) {
       // Tiny pause so the driver loop does not hot-spin while waiting
@@ -154,11 +200,13 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
       var more = completed.poll()
       while (more != null) { out += more; more = completed.poll() }
     }
+    synchronized {
+      pending -= out.size
+      if (pending == 0) dispatch()
+    }
     out.map {
-      case (id, Success(costs)) => pendingCount.decrementAndGet(); (id, costs)
-      case (_, Failure(e)) =>
-        pendingCount.decrementAndGet()
-        throw new RuntimeException("objective evaluation job failed", e)
+      case (id, Success(costs)) => (id, costs)
+      case (_, Failure(e)) => throw new RuntimeException("objective evaluation job failed", e)
     }.toSeq
   }
 
@@ -167,81 +215,65 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
   private def cancelJobs(): Unit = if (!sc.isStopped) sc.cancelJobGroup(jobGroup)
 
   override def shutdown(): Unit = {
-    // Spark warns on cancelling a group with no active job, the normal case
-    if (jobsInFlight.get() > 0) cancelJobs()
-    pool.shutdownNow()
-    if (pool.awaitTermination(SparkClient.ShutdownWaitSeconds, TimeUnit.SECONDS))
-      threads.forEach(_.join())
-    packing.clear()
+    val (threads, evaluating) = synchronized {
+      closed = true
+      queued.clear()
+      dispatch()
+      (evaluators.valuesIterator.map(_.thread).toSeq, evaluators.valuesIterator.exists(_.taken.nonEmpty))
+    }
+    if (evaluating) cancelJobs()
+    threads.foreach(_.join(SparkClient.ShutdownWaitMs))
+    if (threads.exists(_.isAlive)) {
+      cancelJobs()
+      threads.foreach(_.join())
+    }
+    unregister()
   }
 }
 
 object SparkClient {
 
-  private final case class Wave(id: Long, objective: Objective, points: IndexedSeq[Array[Double]])
+  private final case class Wave(id: Long, objective: Objective, points: Array[Array[Double]])
+
+  private type Reply = Any => Unit
+
+  /** The answer to a pull that ends its task. */
+  private val Stop = (-1L, Array.empty[Array[Double]])
+
+  /** One evaluator job and its tasks, by partition: not yet pulled, waiting
+    * for a wave, evaluating one. */
+  private final class Evaluator(val id: Long, val objective: Objective, tasks: Int) {
+    var thread: Thread = _
+    val unstarted = mutable.BitSet(0 until tasks: _*)
+    val parked = mutable.LinkedHashMap.empty[Int, Reply]
+    val taken = mutable.HashMap.empty[Int, Wave]
+    private var stopped = 0
+    /** Tasks holding or about to hold a slot. */
+    def live: Int = tasks - stopped
+    def stopParked(): Unit = {
+      parked.valuesIterator.foreach(_(Stop))
+      stopped += parked.size
+      parked.clear()
+    }
+  }
 
   private val clients = new AtomicLong(0L)
+  private val jobs = new AtomicLong(0L)
 
-  /** Bound on how long `shutdown()` waits for the pool's threads. */
-  private val ShutdownWaitSeconds = 10L
+  /** Bound on how long `shutdown()` waits for an evaluator job to end
+    * before cancelling it. */
+  private val ShutdownWaitMs = 10000L
 
-  /** The running estimates behind the packing rule (see the class doc):
-    * objective nanos per point, per `Objective` instance, and the client's
-    * job overhead in nanos. */
-  private final class Packing {
-    private val pointNs = new java.util.IdentityHashMap[Objective, java.lang.Double]()
-    private var overheadNs = Long.MaxValue
-
-    /** Tasks for a job of `points` points in `waves` waves. */
-    def tasks(objective: Objective, points: Int, waves: Int): Int = synchronized {
-      val perPoint = pointNs.get(objective)
-      if (perPoint == null || overheadNs == Long.MaxValue) waves
-      else math.max(1, math.min(waves, math.ceil(perPoint * points / overheadNs).toInt))
-    }
-
-    /** Folds in one job: its points, each task's objective nanos and the
-      * job's wall nanos. The per-point time moves a quarter of the way to
-      * the job's. Wall time less the longest task's objective time is the
-      * overhead plus any wait for a free core; the wait only adds, so the
-      * overhead kept is the least such sample. */
-    def record(objective: Objective, points: Int, taskNs: Array[Long], wallNs: Long): Unit =
-      synchronized {
-        if (points > 0)
-          pointNs.merge(objective, taskNs.sum.toDouble / points, (old, sample) => old + (sample - old) / 4)
-        overheadNs = math.min(overheadNs, math.max(1L, wallNs - taskNs.max))
+  /** Runs evaluator `job` in `tasks` tasks, each pulling waves of
+    * `objective` from the driver endpoint `endpoint` until told to stop. */
+  private def evaluate(sc: SparkContext, endpoint: String, job: Long, objective: Objective, tasks: Int): Unit =
+    sc.runJob(sc.parallelize(0 until tasks, tasks), (ctx: TaskContext, _: Iterator[Int]) => {
+      val driver = new GraftRpc.Driver(endpoint)
+      val part = ctx.partitionId()
+      var next = driver.ask[(Long, Array[Array[Double]])]((job, part, -1L, Array.emptyDoubleArray))
+      while (next._1 >= 0) {
+        val costs = objective.applyBatch(ArraySeq.unsafeWrapArray(next._2))
+        next = driver.ask[(Long, Array[Array[Double]])]((job, part, next._1, costs))
       }
-
-    def clear(): Unit = synchronized { pointNs.clear(); overheadNs = Long.MaxValue }
-  }
-
-  /** Evaluates waves sharing one objective in one job under `group`, in as
-    * many tasks as `packing` rules; returns each wave's costs in wave order. */
-  private def evaluate(
-      sc: SparkContext,
-      group: String,
-      packing: Packing,
-      waves: Seq[Wave]): Seq[Array[Double]] = {
-    val objective = waves.head.objective
-    val points = waves.map(_.points.length).sum
-    val tasks = packing.tasks(objective, points, waves.length)
-    sc.setJobGroup(group, s"graft SparkClient: ${waves.length} wave(s), $tasks task(s)",
-      interruptOnCancel = true)
-    // runJob with this closure only, not mapPartitions(...).collect(): see
-    // the class doc. parallelize's positional split keeps each task's
-    // waves contiguous and in wave order.
-    val t0 = System.nanoTime()
-    val results = sc.runJob(sc.parallelize(waves.map(_.points.toArray), tasks),
-      (_: TaskContext, it: Iterator[Array[Array[Double]]]) => {
-        var ns = 0L
-        val costs = it.map { wave =>
-          val t = System.nanoTime()
-          val c = objective.applyBatch(ArraySeq.unsafeWrapArray(wave))
-          ns += System.nanoTime() - t
-          c
-        }.toArray
-        (costs, ns)
-      })
-    packing.record(objective, points, results.map(_._2), System.nanoTime() - t0)
-    results.flatMap(_._1).toSeq
-  }
+    })
 }

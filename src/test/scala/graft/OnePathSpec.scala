@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftExtensions.scala`, listener-based profiling lives only in
   * `tools/Profile.scala`, `graft.spark` reads no conf or environment
   * variable, graft has no code in `org.apache.spark.sql`, no option splits
-  * a `SparkClient` wave, `Bench.envCpus` is the one reader of
+  * a `SparkClient` wave, `SparkClient` runs one kind of Spark job (its
+  * evaluator) and no thread pool, `org.apache.spark.rpc` is named only in
+  * the `GraftRpc` shim, `Bench.envCpus` is the one reader of
   * `SPARK_GRAFT_CPUS`, `FileSources` alone decides the key and the
   * completion marker of an on-disk cache, `IdPack` alone holds the 2³² id
   * packing, `SessionMemo` alone keys in-memory memos, only Bench sweeps
@@ -98,6 +100,22 @@ class OnePathSpec extends AnyFunSuite {
   test("a wave is SparkClient's one task unit: no evalPartitions option comes back") {
     assert(sources.exists(_._1.endsWith("graft/spark/SparkClient.scala")))
     assert(filesWith("evalPartitions").isEmpty)
+  }
+
+  /** Lines of `path` with comments dropped. */
+  private def codeLines(path: String): Seq[String] =
+    sources.collect { case (p, s) if p.endsWith(path) => s.linesIterator.map(_.trim).toSeq }.flatten
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+
+  test("SparkClient starts no thread pool and one kind of job, its evaluator") {
+    val code = codeLines("graft/spark/SparkClient.scala")
+    assert(code.nonEmpty)
+    assert(!code.exists(_.contains("newFixedThreadPool")))
+    assert(code.count(_.contains("runJob(")) == 1, code.filter(_.contains("runJob(")))
+  }
+
+  test("org.apache.spark.rpc is named only in the GraftRpc shim") {
+    assert(filesWith("org.apache.spark.rpc", "org/apache/spark/GraftRpc.scala").isEmpty)
   }
 
   test("graft has no file in org.apache.spark.sql") {

@@ -6,17 +6,19 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-import org.apache.spark.{SparkContext, TaskContext, GraftListenerBus}
+import org.apache.spark.{Endpoints, GraftListenerBus, SparkContext, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, Semaphore, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** What a SparkClient may leave behind after `shutdown()`: active Spark jobs
-  * and live pool threads.
+  * and live evaluator threads.
   */
 object Leftovers {
   def activeJobs(sc: SparkContext): Seq[Int] = {
@@ -111,9 +113,10 @@ object EvalThreadLog {
   }
 }
 
-/** Dispatch and teardown of [[SparkClient]]: queued waves coalesce into one
-  * job per free slot without changing what each wave computes, and a failed
-  * search leaves no Spark job or pool thread behind.
+/** Dispatch and teardown of [[SparkClient]]: waves reach `applyBatch` whole
+  * through long-lived evaluator tasks, a search holds its task slots only
+  * while waves are pending, and a failed search leaves no Spark job, eval
+  * thread or driver endpoint behind.
   */
 class SparkClientSpec extends AnyFunSuite with Eventually {
 
@@ -130,41 +133,28 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
   private def wave(j: Int, n: Int): IndexedSeq[Array[Double]] =
     (0 until n).map(i => Array(j.toDouble, i.toDouble))
 
-  private def tasks(start: SparkListenerJobStart): Int = start.stageInfos.map(_.numTasks).sum
+  /** Submits `waves` at once and returns every wave's costs, by id. */
+  private def all(client: SparkClient, waves: Seq[(Known, IndexedSeq[Array[Double]])])
+      : (Map[Long, Array[Double]], Map[Long, (Known, IndexedSeq[Array[Double]])]) = {
+    val byId = waves.map(w => client.submit(w._1, w._2) -> w).toMap
+    (Iterator.continually(client.nextBatch(block = true)).flatten.take(byId.size).toMap, byId)
+  }
 
-  /** Evaluates `waves` one at a time, each once the last has completed. */
-  private def oneByOne(client: SparkClient, waves: Seq[(Objective, IndexedSeq[Array[Double]])])
-      : Seq[Array[Double]] =
-    waves.map { case (objective, points) =>
-      val id = client.submit(objective, points)
-      val (done, costs) = Iterator.continually(client.nextBatch(block = true)).flatten.next()
-      assert(done == id)
-      costs
-    }
-
-  /** Runs the `warm` waves one by one, then fills every slot with a held
-    * one-point wave, queues `queuedWaves` behind them, opens the gate and
-    * returns every queued and held wave's costs plus the job starts after
-    * the warm-up.
+  /** Fills every slot with a held one-point wave, queues `queuedWaves`
+    * behind them, opens the gate and returns every queued and held wave's
+    * costs.
     */
-  private def coalesce(
-      queuedWaves: Seq[(Known, IndexedSeq[Array[Double]])],
-      warm: Seq[(Known, IndexedSeq[Array[Double]])] = Nil)
-      : (Map[Long, Array[Double]], Map[Long, (Known, IndexedSeq[Array[Double]])],
-        Seq[SparkListenerJobStart]) = {
+  private def behindHeld(queuedWaves: Seq[(Known, IndexedSeq[Array[Double]])])
+      : (Map[Long, Array[Double]], Map[Long, (Known, IndexedSeq[Array[Double]])]) = {
     spark.sparkContext.setLogLevel("WARN")
     JobGate.reset()
     val slots = spark.sparkContext.defaultParallelism
     val client = new SparkClient(spark)
-    val jobs = new GroupJobs(client.jobGroup)
     val holder = new Tagged(0, hold = true)
     try {
-      oneByOne(client, warm)
-      GraftListenerBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(jobs)
       val held = (1 to slots).map { j =>
         val id = client.submit(holder, wave(100 + j, 1))
-        JobGate.entered.acquire() // its job holds a slot before the next
+        JobGate.entered.acquire() // a task holds it before the next
         id -> ((holder, wave(100 + j, 1)))
       }
       val queued = queuedWaves.map(w => client.submit(w._1, w._2) -> w)
@@ -172,11 +162,9 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
       val waves = (held ++ queued).toMap
       val costs = Iterator.continually(client.nextBatch(block = true))
         .flatten.take(waves.size).toMap
-      GraftListenerBus.drain(spark.sparkContext)
-      (costs, waves, jobs.starts.asScala.toSeq)
+      (costs, waves)
     } finally {
       JobGate.release.countDown()
-      spark.sparkContext.removeSparkListener(jobs)
       client.shutdown()
     }
   }
@@ -188,87 +176,26 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
       assert(costs(id).toSeq == objective.expected(points), s"wave $id costs do not match its points")
     }
 
-  test("queued waves coalesce into one job per free slot, each wave sliced as alone") {
-    val tagged = new Tagged(1, hold = false)
-    val sizes = Seq(1, 5, 2, 7, 3)
-    val queued = sizes.zipWithIndex.map { case (n, j) => tagged -> wave(j, n) }
-    val (costs, waves, starts) = coalesce(queued)
-    val slots = spark.sparkContext.defaultParallelism
-    val jobs = starts.size
-    assert(jobs == slots + 1, s"expected ${slots + 1} jobs, got $jobs")
-    // with no estimate yet (cold start) the coalesced job runs one task per
-    // wave, each wave in one applyBatch call as it would be alone
-    assert(starts.map(tasks).max == sizes.length, s"tasks per job: ${starts.map(tasks)}")
-    assertAligned(costs, waves)
-  }
-
-  test("a burst of submits to idle threads runs each wave as its own job") {
-    spark.sparkContext.setLogLevel("WARN")
-    JobGate.reset()
-    val sc = spark.sparkContext
-    val burst = sc.defaultParallelism - 1
-    val client = new SparkClient(spark)
-    val jobs = new GroupJobs(client.jobGroup)
-    sc.addSparkListener(jobs)
-    val holder = new Tagged(0, hold = true)
-    try {
-      // back to back, so an idle thread wakes only after later waves are
-      // queued; every job holds until all have started
-      val ids = (1 to burst).map(j => client.submit(holder, wave(j, 1)))
-      (1 to burst).foreach(_ => JobGate.entered.acquire())
-      GraftListenerBus.drain(sc)
-      assert(jobs.starts.size == burst, s"expected $burst jobs, got ${jobs.starts.size}")
-      JobGate.release.countDown()
-      val done = Iterator.continually(client.nextBatch(block = true)).flatten.take(burst).toMap
-      assert(done.keySet == ids.toSet)
-    } finally {
-      JobGate.release.countDown()
-      sc.removeSparkListener(jobs)
-      client.shutdown()
-    }
-  }
-
-  test("once estimated, a microsecond objective packs a coalesced job into one task") {
-    val slots = spark.sparkContext.defaultParallelism
-    // one-point waves and waves of several points alike pack into one task
-    Seq(Seq(1, 1, 1, 1), Seq(1, 5, 2, 7, 3)).foreach { sizes =>
-      val tagged = new Tagged(4, hold = false)
-      val queued = sizes.zipWithIndex.map { case (n, j) => tagged -> wave(j, n) }
-      val (costs, waves, starts) = coalesce(queued, warm = Seq(tagged -> wave(50, 6)))
-      // the queued waves shared one job; the held one-point waves ran one
-      // task each
-      assert(starts.size == slots + 1, s"expected ${slots + 1} jobs, got ${starts.size}")
-      assert(starts.map(tasks).max == 1, s"tasks per job: ${starts.map(tasks)}")
-      assertAligned(costs, waves)
-    }
-  }
-
-  test("once estimated, a costly objective's coalesced job keeps one task per wave") {
-    // Packing every job into one task would run these four one-point waves
-    // one after another. The warm waves also take the job overhead
-    // estimate past a cold JVM's first, slow jobs.
-    val slots = spark.sparkContext.defaultParallelism
+  test("four one-point waves of a 100 ms objective overlap") {
     val costly = new Tagged(5, hold = false, sleepMs = 100)
-    val queued = (0 until 4).map(j => costly -> wave(j, 1))
     ConcurrencyGauge.reset()
-    val (costs, waves, starts) =
-      coalesce(queued, warm = (0 until 8).map(j => costly -> wave(50 + j, 1)))
-    assert(starts.size == slots + 1, s"expected ${slots + 1} jobs, got ${starts.size}")
-    assert(starts.map(tasks).max == 4, s"tasks per job: ${starts.map(tasks)}")
-    assert(ConcurrencyGauge.maxSeen.get() >= 2,
-      s"no overlap: max in-flight evaluations = ${ConcurrencyGauge.maxSeen.get()}")
-    assertAligned(costs, waves)
+    val client = new SparkClient(spark)
+    try {
+      val (costs, waves) = all(client, (0 until 4).map(j => costly -> wave(j, 1)))
+      assert(ConcurrencyGauge.maxSeen.get() >= 2,
+        s"no overlap: max in-flight evaluations = ${ConcurrencyGauge.maxSeen.get()}")
+      assertAligned(costs, waves)
+    } finally client.shutdown()
   }
 
   test("waves holding different Objective instances never share a job") {
+    // Queued behind waves of a third objective that hold every slot, so a
+    // waiting task gives its slot up to another objective's waves.
     val a = new Tagged(1, hold = false)
     val b = new Tagged(2, hold = false)
     val queued = Seq(a, b, a, b, b, a).zipWithIndex
       .map { case (o, j) => o -> wave(j, 1 + j % 3) }
-    val (costs, waves, starts) = coalesce(queued)
-    val slots = spark.sparkContext.defaultParallelism
-    val jobs = starts.size
-    assert(jobs == slots + 2, s"expected ${slots + 2} jobs, got $jobs")
+    val (costs, waves) = behindHeld(queued)
     JobGate.tagsByStage.asScala.foreach { case (stage, tags) =>
       assert(tags.asScala.toSet.size == 1, s"stage $stage evaluated objectives ${tags.asScala.toSet}")
     }
@@ -316,15 +243,11 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
       val costs = Iterator.continually(client.nextBatch(block = true)).flatten.next()
       assert(costs._1 == id)
       assert(costs._2.toSeq == (700 to 706).map(_.toDouble))
+      // Submitted together, five waves of different sizes are pulled by
+      // the same tasks, and each still arrives whole, in its own call.
+      val (burst, waves) = all(client, Seq(1, 5, 2, 7, 3).zipWithIndex.map { case (n, j) => sizes -> wave(j, n) })
+      assertAligned(burst, waves)
     } finally client.shutdown()
-    // Packed: a coalesced job of five waves runs in one task, and each wave
-    // still arrives whole, in its own call.
-    val slots = spark.sparkContext.defaultParallelism
-    val queued = Seq(1, 5, 2, 7, 3).zipWithIndex.map { case (n, j) => sizes -> wave(j, n) }
-    val (packed, waves, starts) = coalesce(queued, warm = Seq(sizes -> wave(50, 6)))
-    assert(starts.size == slots + 1, s"expected ${slots + 1} jobs, got ${starts.size}")
-    assert(starts.map(tasks).max == 1, s"tasks per job: ${starts.map(tasks)}")
-    assertAligned(packed, waves)
   }
 
   test("an evaluation job has Spark clean one closure: graft's own") {
@@ -341,5 +264,62 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
       val cleaned = lines.filter(_.startsWith("Cleaning indylambda closure"))
       assert(cleaned.size == 1, s"closures cleaned for one evaluation job: ${cleaned.mkString("; ")}")
     } finally client.shutdown()
+  }
+
+  test("one SparkClient search runs at most defaultParallelism evaluator jobs") {
+    // A 10 ms objective keeps waves pending from the first submit to the
+    // last delivery, so the tasks started for the first waves serve the
+    // whole search.
+    spark.sparkContext.setLogLevel("WARN")
+    val sc = spark.sparkContext
+    val costly = Objective { x => Thread.sleep(10); x.map(v => v * v).sum }
+    val client = new SparkClient(spark)
+    val jobs = new GroupJobs(client.jobGroup)
+    sc.addSparkListener(jobs)
+    try {
+      val res = Search.minimize(costly, Array(10.0, 15.0), Array(1.0, 1.0), client,
+        SearchOptions(stopratio = 1e-2, maxTasks = Some(48), seed = Some(3)))
+      assert(res.evaluations.size == 48)
+      GraftListenerBus.drain(sc)
+      assert(jobs.starts.size <= sc.defaultParallelism,
+        s"${jobs.starts.size} evaluator jobs for one search on ${sc.defaultParallelism} slots")
+    } finally {
+      sc.removeSparkListener(jobs)
+      client.shutdown()
+    }
+  }
+
+  test("between two waves of a live client, with nothing pending, another Spark job runs") {
+    // Four waves at once fill every slot with evaluator tasks; once all are
+    // delivered, the tasks must give their slots up.
+    spark.sparkContext.setLogLevel("WARN")
+    val sc = spark.sparkContext
+    val tagged = new Tagged(6, hold = false)
+    val client = new SparkClient(spark)
+    try {
+      val (costs, waves) = all(client, (0 until sc.defaultParallelism).map(j => tagged -> wave(j, 2)))
+      assertAligned(costs, waves)
+      val other = Future(spark.range(0, 1000, 1, 2 * sc.defaultParallelism).count())(ExecutionContext.global)
+      val n = try Await.result(other, 60.seconds) catch {
+        case e: java.util.concurrent.TimeoutException => sc.cancelAllJobs(); throw e
+      }
+      assert(n == 1000)
+      val (next, nextWaves) = all(client, Seq(tagged -> wave(9, 3)))
+      assertAligned(next, nextWaves)
+    } finally client.shutdown()
+  }
+
+  test("after shutdown, no job is active and the endpoint is unregistered") {
+    val sc = spark.sparkContext
+    val tagged = new Tagged(7, hold = false)
+    val client = new SparkClient(spark)
+    val (costs, waves) = try {
+      assert(Endpoints.registered(sc, client.jobGroup))
+      all(client, (0 until 6).map(j => tagged -> wave(j, 1 + j % 2)))
+    } finally client.shutdown()
+    assertAligned(costs, waves)
+    assert(Leftovers.activeJobs(sc).isEmpty, "an evaluator job outlived shutdown()")
+    assert(Leftovers.evalThreads.isEmpty, "a graft-spark-eval thread outlived shutdown()")
+    assert(!Endpoints.registered(sc, client.jobGroup), "the endpoint outlived shutdown()")
   }
 }
