@@ -1301,6 +1301,14 @@ object Pipeline {
         col("n_rows"))
   }
 
+  /** [[samplePps]]' ranged frame, persisted so the offset scan and the
+    * running sums read one materialization of `pid` (`spark_partition_id`
+    * is non-deterministic). Re-armed after a cache sweep, as [[posGrams]]
+    * is, so a second run reads the first's cache instead of caching the
+    * same plan again.
+    */
+  private[queries] val ppsRanged = new SessionMemo[DataFrame](_.unpersist(false))
+
   val samplePps: QueryDef = QueryDef(
     s"""WITH f AS (
        |  SELECT doc_id, n_chars AS w,
@@ -1323,10 +1331,12 @@ object Pipeline {
     val f = spark.read.parquet(t(dir, "documents"))
       .select(col("doc_id"), col("n_chars").as("w"),
         expr("poly_hash(text)").as("fp"))
-    val ranged = f.repartitionByRange(nPart, col("fp"), col("doc_id"))
-      .sortWithinPartitions(col("fp"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
+    val ranged = ppsRanged.getOrElseUpdate(spark, dir, Seq("documents.parquet"), "ppsRanged") {
+      f.repartitionByRange(nPart, col("fp"), col("doc_id"))
+        .sortWithinPartitions(col("fp"), col("doc_id"))
+        .withColumn("pid", spark_partition_id())
+    }
+    if (ranged.storageLevel == org.apache.spark.storage.StorageLevel.NONE) ranged.persist()
     val localW = Window.partitionBy(col("pid"))
       .orderBy(col("fp"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -71,6 +71,7 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
   // Guarded by this client's lock, taken by the caller's thread, the
   // endpoint and the evaluator threads.
   private var ids = 0L
+  private var evaluatorIds = 0L
   /** Submitted waves not yet delivered by `nextBatch`. */
   private var pending = 0
   private var closed = false
@@ -145,7 +146,8 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
   }
 
   private def start(objective: Objective, tasks: Int): Unit = {
-    val ev = new Evaluator(SparkClient.jobs.incrementAndGet(), objective, tasks)
+    evaluatorIds += 1
+    val ev = new Evaluator(evaluatorIds, objective, tasks)
     evaluators(ev.id) = ev
     val endpoint = jobGroup
     val t = new Thread(() => {
@@ -258,7 +260,6 @@ object SparkClient {
   }
 
   private val clients = new AtomicLong(0L)
-  private val jobs = new AtomicLong(0L)
 
   /** Bound on how long `shutdown()` waits for an evaluator job to end
     * before cancelling it. */

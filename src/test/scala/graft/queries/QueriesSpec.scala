@@ -84,13 +84,13 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     assert(SparkEntry.queries("q_dup_ngrams")(spark, sf).count() > 0)
   }
 
-  test("the MinHash rows share one memoized shingle frame and never re-cache it") {
+  /** The lines Spark's CacheManager logs (DEBUG and up) while `body` runs. */
+  private def cacheManagerLog(body: => Unit): Seq[String] = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
     import scala.jdk.CollectionConverters._
-    spark.sparkContext.setLogLevel("WARN")
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val appender = new AbstractAppender("graft-cache-log", null, null, false, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
@@ -102,17 +102,35 @@ class QueriesSpec extends AnyFunSuite with Eventually {
     config.addAppender(appender, Level.DEBUG, null)
     ctx.getConfiguration.addLogger(logger, config)
     ctx.updateLoggers()
-    try {
-      for (row <- Seq("q_dedup_minhash_lsh", "q_dedup_containment", "q_dedup_edit_verify",
-          "q_minhash_est_audit"))
-        assert(SparkEntry.queries(row)(spark, sf).count() > 0, row)
-    } finally {
+    try body
+    finally {
       ctx.getConfiguration.removeLogger(logger)
       ctx.updateLoggers()
       appender.stop()
     }
-    assert(!lines.asScala.exists(_.contains("already cached")), lines.asScala.mkString("\n"))
+    lines.asScala.toSeq
+  }
+
+  test("the MinHash rows share one memoized shingle frame and never re-cache it") {
+    spark.sparkContext.setLogLevel("WARN")
+    val lines = cacheManagerLog {
+      for (row <- Seq("q_dedup_minhash_lsh", "q_dedup_containment", "q_dedup_edit_verify",
+          "q_minhash_est_audit"))
+        assert(SparkEntry.queries(row)(spark, sf).count() > 0, row)
+    }
+    assert(!lines.exists(_.contains("already cached")), lines.mkString("\n"))
     assert(Dedup.shingleCache.keysFor(spark).size == 1, Dedup.shingleCache.keysFor(spark))
+  }
+
+  test("q_sample_pps run twice caches its ranged frame once") {
+    spark.sparkContext.setLogLevel("WARN")
+    val counts = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val lines = cacheManagerLog {
+      for (_ <- 1 to 2) counts += SparkEntry.queries("q_sample_pps")(spark, sf).count()
+    }
+    assert(counts.distinct.size == 1 && counts.head > 0, counts)
+    assert(!lines.exists(_.contains("already cached")), lines.mkString("\n"))
+    assert(Pipeline.ppsRanged.keysFor(spark).size == 1, Pipeline.ppsRanged.keysFor(spark))
   }
 
   test("halfResize keeps even rows/cols and sums kept RGB bytes (odd dims)") {
