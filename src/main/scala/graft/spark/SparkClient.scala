@@ -58,7 +58,7 @@ import scala.util.{Failure, Success, Try}
   * evaluator job has ended, so their task-end accumulators have been
   * merged, and unregisters the endpoint. It cancels the job group only
   * when a wave is still being evaluated (a hung or abandoned objective) or
-  * a job outlives the wait.
+  * a job outlives a 10 s wait, and then waits at most 10 s more.
   */
 final class SparkClient(spark: SparkSession) extends EvalClient {
 
@@ -104,10 +104,10 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
             case Some(w) if w.id == wave =>
               ev.taken -= part
               completed.put((w.id, Success(costs)))
-              ev.parked(part) = reply
+              ev.park(part, reply)
             // a retried attempt re-runs the wave its failed attempt held
             case Some(w) => reply((w.id, w.points))
-            case None => ev.parked(part) = reply
+            case None => ev.park(part, reply)
           }
           dispatch()
       }
@@ -224,10 +224,9 @@ final class SparkClient(spark: SparkSession) extends EvalClient {
       (evaluators.valuesIterator.map(_.thread).toSeq, evaluators.valuesIterator.exists(_.taken.nonEmpty))
     }
     if (evaluating) cancelJobs()
-    threads.foreach(_.join(SparkClient.ShutdownWaitMs))
-    if (threads.exists(_.isAlive)) {
+    if (!SparkClient.joinAll(threads)) {
       cancelJobs()
-      threads.foreach(_.join())
+      SparkClient.joinAll(threads)
     }
     unregister()
   }
@@ -252,6 +251,13 @@ object SparkClient {
     private var stopped = 0
     /** Tasks holding or about to hold a slot. */
     def live: Int = tasks - stopped
+    /** Parks `reply` for `part`. Another attempt of the partition already
+      * waiting (a speculative copy, or a zombie racing its retry) is told
+      * to stop, or it would wait for its reply until Spark kills it. */
+    def park(part: Int, reply: Reply): Unit = {
+      parked.remove(part).foreach(_(Stop))
+      parked(part) = reply
+    }
     def stopParked(): Unit = {
       parked.valuesIterator.foreach(_(Stop))
       stopped += parked.size
@@ -261,9 +267,17 @@ object SparkClient {
 
   private val clients = new AtomicLong(0L)
 
-  /** Bound on how long `shutdown()` waits for an evaluator job to end
-    * before cancelling it. */
+  /** Bound on how long `shutdown()` waits for the evaluator jobs to end
+    * before cancelling them, and again for the cancelled jobs to end. */
   private val ShutdownWaitMs = 10000L
+
+  /** Joins `threads` against one deadline `ShutdownWaitMs` away; whether
+    * every one has ended. */
+  private def joinAll(threads: Seq[Thread]): Boolean = {
+    val deadline = System.nanoTime() + ShutdownWaitMs * 1000000L
+    threads.foreach(t => t.join(math.max(1L, (deadline - System.nanoTime()) / 1000000L)))
+    !threads.exists(_.isAlive)
+  }
 
   /** Runs evaluator `job` in `tasks` tasks, each pulling waves of
     * `objective` from the driver endpoint `endpoint` until told to stop. */

@@ -309,6 +309,34 @@ class SparkClientSpec extends AnyFunSuite with Eventually {
     } finally client.shutdown()
   }
 
+  test("a second attempt pulling for a waiting task's partition stops that task") {
+    // A speculative copy or a retry racing a zombie attempt pulls for a
+    // partition whose task is already waiting. Asked here from the driver,
+    // as the second attempt of evaluator 2's partition 0.
+    spark.sparkContext.setLogLevel("WARN")
+    JobGate.reset()
+    val sc = spark.sparkContext
+    val client = new SparkClient(spark)
+    try {
+      client.submit(new Tagged(8, hold = true), wave(0, 1)) // evaluator 1, keeps a wave pending
+      JobGate.entered.acquire()
+      val quick = new Tagged(9, hold = false)
+      val id = client.submit(quick, wave(1, 1)) // evaluator 2
+      assert(Iterator.continually(client.nextBatch(block = true)).flatten.next()._1 == id)
+      val second = Endpoints.ask(sc, client.jobGroup, (2L, 0, -1L, Array.emptyDoubleArray))
+      // The first attempt is told to stop, so evaluator 2's job ends, and
+      // with it the second attempt's wait.
+      val reply = Await.result(second, 30.seconds)
+      assert(reply.asInstanceOf[(Long, Array[Array[Double]])]._1 == -1L)
+      JobGate.release.countDown()
+      assert(Iterator.continually(client.nextBatch(block = true)).flatten.next()._2.toSeq == Seq(8e6))
+    } finally {
+      JobGate.release.countDown()
+      client.shutdown()
+    }
+    assert(Leftovers.activeJobs(sc).isEmpty, "an evaluator job outlived shutdown()")
+  }
+
   test("after shutdown, no job is active and the endpoint is unregistered") {
     val sc = spark.sparkContext
     val tagged = new Tagged(7, hold = false)
